@@ -1,17 +1,20 @@
 #!/usr/bin/env bash
 # Snapshot guardrail (r14 verdict ask #8, after the r13 red round): a
-# mechanical gate that MUST be green before any end-of-round snapshot
-# or substantial commit — compile, full test suite skipped by design
-# (it is the round driver's job), but the two runtime surfaces driven
-# end to end: Verify -> DuckDB compare at sf0.001.
+# mechanical gate that MUST be green before any substantial commit —
+# compile the program with its specs and the perfbench harness (both
+# reference program names, so a deletion that breaks either fails
+# here), full test suite skipped by design, and Verify -> DuckDB
+# compare at sf0.001 end to end.
 #
 # Usage: scripts/preflight.sh [sfDir]   (default /root/testdata/sf0.001)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.001}"
 OUT_DIR="$(mktemp -d /tmp/preflight.XXXXXX)"
-echo "[preflight] compile"
-sbt -batch compile
+echo "[preflight] compile program + specs"
+sbt -batch Test/compile
+echo "[preflight] compile perfbench"
+(cd perfbench && sbt -batch compile)
 echo "[preflight] verify dump at $SF_DIR"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"

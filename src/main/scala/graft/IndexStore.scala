@@ -18,29 +18,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    single index root — the nightly index-build job.
   *  - [[loadOrBuild]] is what the incremental queries' history accessors
   *    call: when an index root is configured (the `GRAFT_INDEX_DIR` env
-  *    var, or [[use]] from tests/probes) and the artifact exists there,
+  *    var, or [[use]] from tests) and the artifact exists there,
   *    the accessor READS it; otherwise it falls back to the in-session
-  *    build. The driver's Verify/Bench runs configure nothing, so their
-  *    plans and results are unchanged.
+  *    build. Verify and perfbench configure nothing, so their plans and
+  *    results are unchanged.
   *
   * Every artifact is bit-deterministic (md5/xxhash64 keys, exact
   * integer counts, IEEE doubles — all of which parquet round-trips
   * exactly) and consumers treat it as an unordered relation, so the
   * persisted path is row-identical to the in-session path;
-  * IndexLifecycleSpec pins that equality per consumer query, and
-  * `graft.IndexProbe` measures the cold-session read-back (a scoring
-  * session that builds nothing vs one that rebuilds history).
+  * IndexLifecycleSpec pins that equality per consumer query.
   */
 /** The md5-parity history/batch split shared by the whole incremental
-  * family. The shipped queries and their oracles pin the '40' prefix
-  * (≈ 25% batch share); `GRAFT_BATCH_THRESH` overrides it for SCALE
-  * PROBES ONLY (e.g. '08' ≈ 3% — the production nightly share), so the
-  * candidate-volume-∝-batch claim can be measured at two shares on one
-  * corpus (BASELINE.md round-11). Verify runs never set it: the DuckDB
-  * oracles embed '40' literally.
+  * family: the '40' prefix (≈ 25% batch share), which the DuckDB oracles
+  * embed literally.
   */
 object Incr {
-  val batchThresh: String = sys.env.getOrElse("GRAFT_BATCH_THRESH", "40")
+  val batchThresh: String = "40"
   val isBatchDoc: String =
     s"substr(md5(concat('incr|', cast(doc_id as string))), 1, 2) < '$batchThresh'"
   val isBatchVec: String =
@@ -50,13 +44,13 @@ object Incr {
 object IndexStore {
   @volatile private var rootOverride: Option[String] = None
 
-  /** The active index root: an explicit [[use]] override (tests, probes,
+  /** The active index root: an explicit [[use]] override (tests,
     * [[IndexBuild]]) or the `GRAFT_INDEX_DIR` environment variable.
     */
   def active: Option[String] = rootOverride.orElse(sys.env.get("GRAFT_INDEX_DIR"))
 
   /** Point in-process consumers at a persisted index root (None reverts
-    * to the environment). Spec/probe plumbing — a production job gets
+    * to the environment). Spec plumbing — a production job gets
     * the root from its environment.
     */
   def use(path: Option[String]): Unit = {
@@ -140,12 +134,12 @@ object IndexStore {
     * redundant _meta job costs ~0.5-1 s of cold-start).
     */
   private val metaChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String, String)]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
 
   private def checkMeta(s: SparkSession, root: String): Unit = {
-    if (metaChecked.contains((s, root, Incr.batchThresh))) return
+    if (metaChecked.contains((s, root))) return
     doCheckMeta(s, root)
-    metaChecked.add((s, root, Incr.batchThresh))
+    metaChecked.add((s, root))
   }
 
   private def doCheckMeta(s: SparkSession, root: String): Unit = {
@@ -157,7 +151,7 @@ object IndexStore {
       .where("key = 'batch_thresh'").head().getString(1)
     if (built != Incr.batchThresh)
       throw new IllegalStateException(
-        s"index root $root was built at GRAFT_BATCH_THRESH='$built' but " +
+        s"index root $root was built at batch threshold '$built' but " +
           s"this session scores at '${Incr.batchThresh}' — the artifacts' " +
           "history split would silently diverge from the batch split")
   }
@@ -383,15 +377,7 @@ object IndexStore {
 object IndexUpdate {
   def main(args: Array[String]): Unit = {
     val (sfDir, histRoot, outRoot) = (args(0), args(1), args(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val t0 = System.nanoTime()
     IndexStore.mergeAll(spark, sfDir, histRoot, outRoot)
     val sec = (System.nanoTime() - t0) / 1e9
@@ -408,15 +394,7 @@ object IndexUpdate {
 object IndexBuild {
   def main(args: Array[String]): Unit = {
     val (sfDir, root) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val t0 = System.nanoTime()
     IndexStore.writeAll(spark, sfDir, root)
     val sec = (System.nanoTime() - t0) / 1e9

@@ -1,39 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time and/or explain a single query in isolation.
-  * Usage: runMain graft.Probe <name> <sfDir> [explain] [force] [runs]
+  * Usage: runMain graft.Probe <name[,name...]> <sfDir> [explain] [show] [runs]
   *
-  * Default timing counts rows (`.count()`), matching Bench and the
-  * driver record — but Catalyst prunes columns nothing references, so a
-  * query whose cost lives in an unreferenced projection (e.g. a window
-  * column) under-measures. `force` hashes every output column into one
-  * aggregate (`xxhash64(struct(*))`), so the full result is computed
-  * without collecting it — use it for the honest cost of projection-
-  * heavy queries.
+  * Every timed run forces the whole result: it hashes every output column
+  * into one aggregate (`xxhash64(struct(*))`, as perfbench does), so a
+  * query whose cost lives in a column nothing else references is measured
+  * in full without collecting the rows.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    require(args.length >= 2, "usage: Probe <name[,name...]> <sfDir> [explain] [show] [runs]")
+    val (name, sfDir) = (args(0), args(1))
     val doExplain = args.contains("explain")
-    val force = args.contains("force")
-    val runs = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep TypedImperativeAggregate group-bys (TopKByValue — the ADC
-      // candidate cut, topk_per_group) on the HASH path: the default
-      // 128-key fallback degrades a pair-count-sized heap-agg input to a
-      // full in-partition sort spill; 64 k keys x ~1.2 KB heap state is
-      // ~80 MB/task, safe on this box and far above real group counts
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val runs = args.drop(2).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
+    val spark = Session.local()
     // warm the JVM + parquet footers so timings reflect the query
     Tables.all.foreach { t =>
       try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
@@ -46,13 +27,9 @@ object Probe {
       if (args.contains("show")) fn(spark, sfDir).show(20, false)
       (1 to runs).foreach { i =>
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val n =
-          if (force)
-            df.selectExpr("xxhash64(struct(*)) AS h").agg(Map("h" -> "count")).head().getLong(0)
-          else df.count()
-        val tag = if (force) " (forced)" else ""
-        println(f"[probe] $nm run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n rows$tag")
+        val n = fn(spark, sfDir)
+          .selectExpr("xxhash64(struct(*)) AS h").agg(Map("h" -> "count")).head().getLong(0)
+        println(f"[probe] $nm run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n rows")
       }
     }
     spark.stop()

@@ -232,27 +232,31 @@ object Cached {
   }
 }
 
+/** Stable scratch locations per corpus directory. Every writer into them
+  * uses mode("overwrite"), so one deterministic path per (kind, corpus)
+  * is idempotent across runs instead of leaking a temp dir per call.
+  */
+object Scratch {
+  /** `dir` with every character outside [A-Za-z0-9] replaced by `_` —
+    * also a valid SQL identifier suffix (metastore table names).
+    */
+  def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** `graft_<kind>_<tag>` under java.io.tmpdir, as an absolute path. */
+  def path(kind: String, dir: String): String =
+    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${kind}_${tag(dir)}").getAbsolutePath
+}
+
 /** Run independent one-time cache builds concurrently — Spark schedules
   * jobs submitted from multiple threads of one session side by side,
-  * and the Bench warmup phases were latency-bound on sequential job
+  * and the prewarm phases were latency-bound on sequential job
   * barriers, not on cluster capacity (r14 verdict ask #4). Callers
   * partition their builds into dependency-disjoint chains; the shared
   * upstream caches are built BEFORE the fan-out so no two threads race
   * on one Cached key (Cached.of tolerates the race, but the loser's
   * duplicate build would waste exactly the time this helper saves).
-  * The first failure rethrows so Bench's per-phase try/catch reports it.
+  * The first failure rethrows to the prewarm's caller.
   */
-/** Warm-up instrumentation gate (r17; r16 ADVICE): the per-item
-  * [dwarm]/[gwarm] stderr timing lines are dev diagnostics — on for
-  * graft.WarmProbe (which sets the system property) or when
-  * GRAFT_WARM_DEBUG is exported, silent in production bench/serve runs.
-  */
-object WarmLog {
-  def on: Boolean =
-    sys.props.contains("graft.warm.debug") || sys.env.contains("GRAFT_WARM_DEBUG")
-  def apply(msg: => String): Unit = if (on) System.err.println(msg)
-}
-
 object Par {
   def run(tasks: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()

@@ -1,7 +1,5 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry mirroring the reference's artisan command
   * (/root/reference/src/Commands/ImportParquetCommand.php:10-17):
   *
@@ -39,12 +37,7 @@ object Import {
 
     val columnMap: Seq[(String, String)] = parseMap(opt("map"))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Session.local()
     try {
       val res = Importer.importParquet(
         spark, path, table,

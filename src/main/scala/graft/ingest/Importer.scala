@@ -82,12 +82,15 @@ object Importer {
   }
 
   /** Full pipeline: scan -> project/rename -> (optionally) normalize ->
-    * sink. `sinkDir` receives one parquet "table" per target name; when
-    * `jdbcUrl` is set the same frame goes through the JDBC batch writer
+    * sink. `sinkDir` receives one parquet "table" per target name;
+    * `copyDir` writes the reference's primary path — COPY text format
+    * (tab / `\N` / escaped, see [[CopySink]]) — as one streamable
+    * part-file per partition; the two file sinks may be combined. When
+    * `jdbcUrl` is set the frame goes through the JDBC batch writer
     * instead (truncate flag maps to SaveMode.Overwrite + truncate, the
-    * reference's TRUNCATE-then-COPY); `copyDir` writes the reference's
-    * primary path — COPY text format (tab / `\N` / escaped, see
-    * [[CopySink]]) — as one streamable part-file per partition.
+    * reference's TRUNCATE-then-COPY) and no file sink may be given. An
+    * import with no sink at all is rejected: it would write nothing yet
+    * report every scanned row as imported.
     */
   def importParquet(
       spark: SparkSession,
@@ -101,6 +104,11 @@ object Importer {
       copyDir: Option[String] = None,
       batchSize: Int = 5000): ImportResult = {
     assertSafeTable(table)
+    val fileSinks = copyDir.isDefined || sinkDir.isDefined
+    require(jdbcUrl.isDefined || fileSinks,
+      "no sink: give sinkDir, copyDir or jdbcUrl")
+    require(!(jdbcUrl.isDefined && fileSinks),
+      "jdbcUrl cannot be combined with sinkDir/copyDir")
     val t0 = System.nanoTime()
     val raw = spark.read.parquet(path)
     val projected = project(raw, columnMap)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Tables}
+import graft.{Det, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,20 +27,17 @@ object Bucketed {
   /** Idempotence guard: (session, dir) pairs whose bucket tables exist. */
   private val prepared = java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
 
-  private def tag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Lay down orders + lineitem bucketed by order key (once per session
     * and scale factor).
     */
   def prepare(s: SparkSession, dir: String): (String, String) = synchronized {
-    val (ot, lt) = (s"graft_orders_${tag(dir)}", s"graft_lineitem_${tag(dir)}")
+    val tag = Scratch.tag(dir)
+    val (ot, lt) = (s"graft_orders_$tag", s"graft_lineitem_$tag")
     // mark prepared only AFTER both writes succeed — otherwise one
     // transient write failure (tmp full, co-tenant I/O error) would
     // poison every later call with names of tables that don't exist
     if (!prepared.contains((s, dir))) {
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_bucketed_${tag(dir)}").getAbsolutePath
+      val base = Scratch.path("bucketed", dir)
       Tables(s, dir, "orders").write.mode("overwrite")
         .option("path", s"$base/orders")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)

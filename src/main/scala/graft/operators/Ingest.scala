@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Tables}
+import graft.{Det, Scratch, Tables}
 import graft.ingest.Importer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,16 +37,6 @@ object Ingest {
   }
 
   /** R5/R6: nested -> JSON, timestamp -> micro-formatted string. */
-  /** Stable scratch path per (kind, sf-dir) under java.io.tmpdir. Every
-    * sink query writes mode("overwrite"), so reusing one deterministic
-    * directory is idempotent — and stops repeated Bench/Verify runs from
-    * accumulating orphan createTempDirectory dirs (one leaked per query
-    * per run before this).
-    */
-  private def tmpBase(kind: String, dir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${kind}_" + dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
   private val normalizeJsonTs: Q = (s, dir) => {
     val e = Tables(s, dir, "events")
     val pre = e.select(
@@ -61,7 +51,7 @@ object Ingest {
     * aggregate the re-read data.
     */
   private val sinkRoundtrip: Q = (s, dir) => {
-    val tmp = tmpBase("sink", dir)
+    val tmp = Scratch.path("sink", dir)
     Importer.importParquet(s, s"$dir/lineitem.parquet", "lineitem_sink",
       truncate = true, sinkDir = Some(tmp))
     s.read.parquet(s"$tmp/lineitem_sink")
@@ -76,7 +66,7 @@ object Ingest {
     */
   private val sinkRoundtripCsv: Q = (s, dir) => {
     val src = Tables(s, dir, "nation")
-    val tmp = tmpBase("csv", dir)
+    val tmp = Scratch.path("csv", dir)
     src.write.mode("overwrite").option("header", "true").csv(s"$tmp/nation")
     s.read.option("header", "true").schema(src.schema).csv(s"$tmp/nation")
       .groupBy("n_regionkey")
@@ -90,7 +80,7 @@ object Ingest {
     */
   private val sinkRoundtripJson: Q = (s, dir) => {
     val src = Tables(s, dir, "supplier")
-    val tmp = tmpBase("json", dir)
+    val tmp = Scratch.path("json", dir)
     src.write.mode("overwrite").json(s"$tmp/supplier")
     s.read.schema(src.schema).json(s"$tmp/supplier")
       .groupBy("s_nationkey")
@@ -105,7 +95,7 @@ object Ingest {
     */
   private val sinkRoundtripOrc: Q = (s, dir) => {
     val src = Tables(s, dir, "part")
-    val tmp = tmpBase("orc", dir)
+    val tmp = Scratch.path("orc", dir)
     src.write.mode("overwrite").orc(s"$tmp/part")
     s.read.orc(s"$tmp/part")
       .filter(col("p_size") <= 25)
@@ -121,7 +111,7 @@ object Ingest {
     * scanning one partition and the whole table.
     */
   private val sinkPartitioned: Q = (s, dir) => {
-    val tmp = tmpBase("part", dir)
+    val tmp = Scratch.path("part", dir)
     Tables(s, dir, "orders")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(s"$tmp/orders")
     s.read.parquet(s"$tmp/orders")
@@ -156,7 +146,7 @@ object Ingest {
     */
   private val scanMergeSchema: Q = (s, dir) => {
     val n = Tables(s, dir, "nation")
-    val tmp = tmpBase("evo", dir)
+    val tmp = Scratch.path("evo", dir)
     n.filter(col("n_nationkey") % 2 === 0)
       .select(col("n_nationkey"), col("n_name"))
       .write.mode("overwrite").parquet(s"$tmp/v1")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Tables}
+import graft.{Det, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,18 +37,13 @@ object Layout {
   private val prepared =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String, String)]()
 
-  private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
-
-  private def tmpBase(kind: String, dir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${kind}_${tag(dir)}").getAbsolutePath
-
   /** Lay down lineitem hive-partitioned by ship month (once per session+SF).
     * The one-time partitioned write is ingest-layout cost, same category as
     * [[Bucketed.prepare]]; every later month-constrained query prunes
     * directories instead of scanning the table.
     */
   def prepareMonthly(s: SparkSession, dir: String): String = synchronized {
-    val base = tmpBase("monthly", dir)
+    val base = Scratch.path("monthly", dir)
     if (!prepared.contains((s, dir, "monthly"))) {
       Tables(s, dir, "lineitem")
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
@@ -89,7 +84,7 @@ object Layout {
     * min-max stats are tight on BOTH dimensions.
     */
   def prepareZorder(s: SparkSession, dir: String): String = synchronized {
-    val base = tmpBase("zorder", dir)
+    val base = Scratch.path("zorder", dir)
     if (!prepared.contains((s, dir, "zorder"))) {
       Tables(s, dir, "part")
         .withColumn("zval", expr(zSql(zx, zy, sparkShl)))
@@ -106,7 +101,7 @@ object Layout {
     * full-range in every file.
     */
   def prepareLinear(s: SparkSession, dir: String): String = synchronized {
-    val base = tmpBase("linear", dir)
+    val base = Scratch.path("linear", dir)
     if (!prepared.contains((s, dir, "linear"))) {
       Tables(s, dir, "part")
         .withColumn("zval", expr(zSql(zx, zy, sparkShl)))
@@ -123,7 +118,7 @@ object Layout {
     * once per session as the input fixture for [[layout_compaction]].
     */
   def prepareFragmented(s: SparkSession, dir: String): String = synchronized {
-    val base = tmpBase("fragments", dir)
+    val base = Scratch.path("fragments", dir)
     if (!prepared.contains((s, dir, "fragments"))) {
       Tables(s, dir, "documents").repartition(64)
         .write.mode("overwrite").parquet(base)
@@ -132,7 +127,7 @@ object Layout {
     base
   }
 
-  /** One-time layouts built in Bench warm-up (ingest cost, not query cost). */
+  /** One-time layouts built before a timed run (ingest cost, not query cost). */
   def prewarm(s: SparkSession, dir: String): Unit = {
     prepareMonthly(s, dir); prepareZorder(s, dir); prepareLinear(s, dir)
     prepareFragmented(s, dir)
@@ -228,7 +223,7 @@ object Layout {
     */
   private val layoutCompaction: Q = (s, dir) => {
     val frag = s.read.parquet(prepareFragmented(s, dir))
-    val out = tmpBase("compacted", dir)
+    val out = Scratch.path("compacted", dir)
     frag.withColumn("bkt", pmod(col("doc_id"), lit(4)).cast("bigint"))
       .repartition(4, col("bkt"))
       .write.mode("overwrite").partitionBy("bkt").parquet(out)
@@ -264,9 +259,7 @@ object Layout {
   }
 
   /** Stable scratch root for the codec comparison (shared by query + spec). */
-  private[graft] def codecDir(dir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_codec_" + dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
+  private[graft] def codecDir(dir: String): String = Scratch.path("codec", dir)
 
   val queries: Map[String, Q] = Map(
     "layout_codec_zstd" -> codecZstd,

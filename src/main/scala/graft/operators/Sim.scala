@@ -143,9 +143,8 @@ object Sim {
   private val ivfTopk: Q = (s, dir) => ivfTopkAt(s, dir, 3)
 
   /** [[ivfTopk]] with the probe width as a parameter — the shipped
-    * query pins nprobe=3; `graft.AnnProbe` sweeps this to record the
-    * recall-vs-probed-fraction curve per corpus (BASELINE.md round-10:
-    * isotropic vs clustered).
+    * query pins nprobe=3; BASELINE.md round-10 records the
+    * recall-vs-probed-fraction curve per corpus (isotropic vs clustered).
     */
   private[graft] def ivfTopkAt(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val e = vectors(s, dir)
@@ -523,28 +522,6 @@ object Sim {
       }
     else vectors(s, dir).filter(expr(isBatchVecExpr))
 
-  /** Measured candidate-volume counters for the production incremental
-    * gate (printed by [[graft.IvfIncrProbe]]; BASELINE.md round-12):
-    * history/batch sizes, the frozen ⌊√n_hist⌋ cell budget, and the
-    * number of (batch rep × history rep) pairs the serving query
-    * actually scores — the quantity that must track batch·nprobe·√n_hist
-    * rather than batch·n_hist/10.
-    */
-  private[graft] def incrProbeStats(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    val nHist = vectors(s, dir).filter(not(expr(isBatchVecExpr))).count()
-    val nBatch = batchVectors(s, dir).count()
-    val nc = histNcells(s, dir)
-    val hreps = ivfHistReps(s, dir)
-    // the planner's bounded aggregate (probed × per-cell counts) — the
-    // same number the old formulation got by STREAMING the pair
-    // fan-out through a count (minutes at the 512 k probe)
-    val pairs = incrCandCounts(s, dir)
-      .agg(coalesce(sum(col("ncand")), lit(0L))).head().getLong(0)
-    Seq("n_hist" -> nHist, "n_batch" -> nBatch, "ncells" -> nc,
-      "hist_reps" -> hreps.count(), "batch_reps" -> incrBreps(s, dir).count(),
-      "scored_pairs" -> pairs)
-  }
-
   /** Content-collapsed batch reps: probing runs in the quantizer's
     * ×2^20 integer space (the space the cells were trained in);
     * scoring stays in float space.
@@ -557,8 +534,8 @@ object Sim {
       .withColumn("qxn", sqrt(vec_dot(col("qx"), col("qx"))))
 
   /** Each batch rep's nprobe=3 probed cells + its crk=1 cell
-    * assignment — shared by the serving query, the stats planner's
-    * candidate count, and [[graft.IvfIncrProbe]]. Session-persisted:
+    * assignment — shared by the serving query and the stats planner's
+    * candidate count. Session-persisted:
     * the planner's decision aggregate and the chosen scoring leg both
     * consume it, and the batch-rep × centroid probe window is the kind
     * of work that must not be paid twice per serve.
@@ -840,8 +817,8 @@ object Sim {
     * isotropic recall of [[ivfIncrementalRecall]] is the honest hard
     * case for any coarse quantizer, but the real-corpus claim — cells
     * align with clusters, the probe finds them, residual ADC keeps
-    * within-cell contrast — previously rode AnnProbe side evidence
-    * outside the hash-verified suite. This gate generates a
+    * within-cell contrast — previously rode side evidence outside the
+    * hash-verified suite. This gate generates a
     * deterministic clustered corpus INSIDE both engines (md5-seeded
     * uniform center + noise draws, the dp_rr_count replay discipline:
     * 2000 vectors, 16 centers, noise 0.35·U[−1,1) per dim), runs the
@@ -1102,7 +1079,7 @@ object Sim {
     }
 
   /** IVF top-5 over the corpus-scaled index, probe width as a parameter
-    * (`graft.AnnProbe` sweeps it; the shipped query pins nprobe = 4).
+    * (the shipped query pins nprobe = 4).
     * Same query set / scoring / output shape as [[ivfTopk]], plus the
     * measured ncells column so the scaling is part of the hash-verified
     * result.
@@ -1560,7 +1537,7 @@ object Sim {
   private val ivfpqTopk: Q = (s, dir) => ivfpqTopkAt(s, dir, 3)
 
   /** [[ivfpqTopk]] with the coarse probe width as a parameter (shipped
-    * pin: nprobe=3) — swept by `graft.AnnProbe`.
+    * pin: nprobe=3).
     */
   private[graft] def ivfpqTopkAt(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val e = vectors(s, dir)
@@ -1621,8 +1598,7 @@ object Sim {
     *  - coarse centroids = per-cell midranges ([[centroids]]);
     *  - residual codebook = 16 SAMPLED residual subvectors per subspace
     *    (anchors vec_id 8..23 — literal ids, so both engines build the
-    *    identical codebook; k-means-trained codewords would slot in
-    *    unchanged);
+    *    identical codebook), refined by 2 integer-exact Lloyd rounds;
     *  - encode: nearest codeword per (vector, subspace) by squared L2 on
     *    residuals, ties to the smaller code;
     *  - score: dot(q, c + recon_r) = dot(q, c) + Σ_sub LUT[sub, code] —
@@ -1634,9 +1610,8 @@ object Sim {
     *    vectors per query.
     * All folds are sub-ordered, so scores replay bit-exactly cross-engine.
     */
-  private[graft] def ivfpqResTopkAt(
-      s: SparkSession, dir: String, nprobe: Int, reorder: Int = 64,
-      nCodes: Int = 16, trainRounds: Int = 0): DataFrame = {
+  private[graft] def ivfpqResTopkAt(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
+    val (reorder, nCodes, trainRounds) = (64, 16, 2)
     val e = vectors(s, dir)
     val cent = centroids(s, dir)
     val res = e.join(broadcast(cent), col("label") === col("cell"))
@@ -1660,13 +1635,13 @@ object Sim {
         first(col("label")).as("clabel"), first(col("rv")).as("rv"))
       .select(col("vec_id"), col("sub"), col("w.code").as("code"),
         col("clabel"), col("rv"))
-    // init: sampled anchor residuals (literal vec_ids); then optional
-    // Lloyd rounds — integer-exact sums, count division is the only IEEE
+    // init: sampled anchor residuals (literal vec_ids); then the Lloyd
+    // rounds — integer-exact sums, count division is the only IEEE
     // step, per-round materialization of the tiny (8×nCodes) table.
     // Codebook, codes, and recon norms are the TRAINED INDEX: session-
-    // cached per config (like pq_codebook/pq_codes), so queries measure
+    // cached (like pq_codebook/pq_codes), so queries measure
     // probe+ADC economics, not index construction.
-    val cb = graft.Cached.of(s, dir, s"pqres.cb.$nCodes.$trainRounds") {
+    val cb = graft.Cached.of(s, dir, "pqres.cb") {
       var cbq = rsub.filter(col("vec_id") >= 8 && col("vec_id") < (8 + nCodes))
         .select(col("sub"), (col("vec_id") - 8).cast("int").as("code"), col("rv").as("cw"))
         .localCheckpoint(true)
@@ -1683,7 +1658,7 @@ object Sim {
       cbq.withColumn("cw", expr("transform(cw, t -> t / 1048576.0)"))
         .withColumn("cwn2", vec_dot(col("cw"), col("cw")))
     }
-    val codes = graft.Cached.of(s, dir, s"pqres.codes.$nCodes.$trainRounds")(rsub
+    val codes = graft.Cached.of(s, dir, "pqres.codes")(rsub
       .withColumn("rv", expr("transform(rv, t -> t / 1048576.0)"))
       .join(broadcast(cb), "sub")
       .withColumn("d2", expr(
@@ -1701,7 +1676,7 @@ object Sim {
       .select(col("cell").as("dcell"), col("sub").as("dsub"),
         col("code").as("dcode"), vec_dot(col("cs"), col("cw")).as("ccdot"))
     // ‖c + recon_r‖² per vector: cn² + Σ_sub (2·c_sub·cw + ‖cw‖²)
-    val recn = graft.Cached.of(s, dir, s"pqres.recn.$nCodes.$trainRounds")(codes
+    val recn = graft.Cached.of(s, dir, "pqres.recn")(codes
       .join(broadcast(cdot),
         col("clabel") === col("dcell") && col("csub") === col("dsub") &&
           col("code") === col("dcode"))
@@ -1863,8 +1838,7 @@ object Sim {
 
   /** [[mipsIvf]] with the probe width as a parameter — the shipped
     * query pins nprobe=12 of 20 norm-banded cells (the measured
-    * frontier on the near-isotropic corpus); `graft.AnnProbe` sweeps
-    * this on other corpora.
+    * frontier on the near-isotropic corpus).
     */
   private[graft] def mipsIvfAt(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val base = vectors(s, dir).select(col("vec_id"), col("label"), col("v"))
@@ -1950,7 +1924,7 @@ object Sim {
     */
   private val ivfpqResRecall: Q = (s, dir) => {
     val brute = bruteTopk(s, dir).select(col("q_id"), col("cand_id"))
-    val approx = ivfpqResTopkAt(s, dir, 3, 64, 16, 2)
+    val approx = ivfpqResTopkAt(s, dir, 3)
       .select(col("q_id").as("aq"), col("cand_id").as("ac"))
     brute.join(approx,
         col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
@@ -2229,9 +2203,9 @@ object Sim {
        |FROM sir, nn ORDER BY q_id, rk""".stripMargin
 
   /** Recall@5 of the scaled-IVF path vs brute force — the same exact
-    * cross-engine recall gate every other ANN family carries (the
-    * AnnProbe two-corpus sweep quantifies the scaling; this pins the
-    * sf-gate numbers in the oracle).
+    * cross-engine recall gate every other ANN family carries (BASELINE.md
+    * records the two-corpus scaling sweep; this pins the sf-gate numbers
+    * in the oracle).
     */
   private val oIvfScaledRecall: String =
     s"""WITH $oIvfScaledCte,

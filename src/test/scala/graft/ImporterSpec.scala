@@ -81,4 +81,22 @@ class ImporterSpec extends AnyFunSuite {
       "region_copy", truncate = true, sinkDir = Some(tmp))
     assert(res2.rowsImported == 5)
   }
+
+  test("importParquet rejects an import with no sink") {
+    val e = intercept[IllegalArgumentException] {
+      Importer.importParquet(spark, s"${TestSpark.sf}/region.parquet", "region_none")
+    }
+    assert(e.getMessage.contains("no sink"))
+  }
+
+  test("importParquet rejects a JDBC sink combined with a file sink") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_imp_mixed").toString
+    val e = intercept[IllegalArgumentException] {
+      Importer.importParquet(spark, s"${TestSpark.sf}/region.parquet", "region_mixed",
+        jdbcUrl = Some("jdbc:derby:memory:graftdb;create=true"), copyDir = Some(tmp))
+    }
+    assert(e.getMessage.contains("jdbcUrl"))
+    // rejected before the scan: nothing was written
+    assert(new java.io.File(tmp).list().isEmpty)
+  }
 }
