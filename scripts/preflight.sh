@@ -16,8 +16,7 @@ sbt -batch Test/compile
 echo "[preflight] compile perfbench"
 (cd perfbench && sbt -batch compile)
 echo "[preflight] verify dump at $SF_DIR"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
+sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
 echo "[preflight] oracle compare"
 python3 scripts/check.py "$SF_DIR" "$OUT_DIR" | tail -3
 echo "[preflight] GREEN"

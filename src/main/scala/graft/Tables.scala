@@ -94,12 +94,16 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     checkSchema(dir, "events", raw.schema)
-    raw.schema("ts").dataType match {
+    normalizeTs(raw, raw.schema("ts").dataType)
+  }
+
+  /** `ts` of the stored type `stored` as session-timezone TimestampType. */
+  private def normalizeTs(raw: DataFrame, stored: DataType): DataFrame =
+    stored match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
-  }
 
   /** readStream twin of [[events]]: file-source streams need an explicit
     * schema, so peek at the stored batch schema first, then apply the
@@ -109,12 +113,7 @@ object Tables {
   def eventsStream(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val stored = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(stored).parquet(path)
-    stored("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+    normalizeTs(spark.readStream.schema(stored).parquet(path), stored("ts").dataType)
   }
 
   /** `documents` spread across the session's cores and persisted. The
@@ -186,7 +185,11 @@ object ShuffleWidth {
   * dedup/similarity queries reference their shingle/signature/vector
   * tables several times per plan AND across queries; persisting each call
   * separately would pile up duplicate cached copies for the session
-  * lifetime. One shared entry per (session, sf-dir, key) instead.
+  * lifetime. One shared entry per (session, sf-dir, key, index root)
+  * instead: the active [[IndexStore]] root is part of every key, so a
+  * frame read back from a persisted index never collides with the
+  * in-session build of the same key (the lifecycle specs run both paths
+  * in one JVM), and callers never spell the root themselves.
   */
 object Cached {
   private val entries =
@@ -201,7 +204,7 @@ object Cached {
     * the loser unpersists its duplicate and adopts the winner's frame.
     */
   def of(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
-    val k = (s, dir, key)
+    val k = (s, dir, IndexStore.active.fold(key)(r => s"$key@$r"))
     val existing = entries.get(k)
     if (existing != null) existing
     else {
@@ -212,13 +215,14 @@ object Cached {
   }
 
   /** Evict (and unpersist) every entry whose key ends with `suffix` —
-    * the root tag, in practice. IndexLifecycleSpec uses this to force
-    * the corpus-cache parquet read-back that the build's own session
-    * entries would otherwise shadow (ADVICE r15): writeAll populates
-    * the same key@root entries the subsequent serve would hit, so
-    * without eviction a read-back pin compares the in-session build to
-    * itself. Production never needs this — a scoring session is a
-    * different JVM from the build job.
+    * `@<root>`, in practice: every entry built under that root.
+    * IndexLifecycleSpec uses this to force the corpus-cache parquet
+    * read-back that the build's own session entries would otherwise
+    * shadow (ADVICE r15): writeAll populates the same key@root entries
+    * the subsequent serve would hit, so without eviction a read-back
+    * pin compares the in-session build to itself. Production never
+    * needs this — a scoring session is a different JVM from the build
+    * job.
     */
   def evictKeySuffix(suffix: String): Unit = {
     val it = entries.entrySet().iterator()
@@ -245,6 +249,25 @@ object Scratch {
   /** `graft_<kind>_<tag>` under java.io.tmpdir, as an absolute path. */
   def path(kind: String, dir: String): String =
     new java.io.File(sys.props("java.io.tmpdir"), s"graft_${kind}_${tag(dir)}").getAbsolutePath
+
+  /** (session, dir, kind) layouts already written; guarded by `once`'s lock. */
+  private val laid = scala.collection.mutable.Set.empty[(SparkSession, String, String)]
+
+  /** [[path]]`(kind, dir)`, after running `write` on it at most once per
+    * (session, dir, kind) — the one-time table layouts. The layout is
+    * recorded only AFTER `write` returns, so one transient write failure
+    * (tmp full, co-tenant I/O error) is retried by the next call instead
+    * of handing every later caller a path that holds nothing.
+    */
+  def once(s: SparkSession, dir: String, kind: String)(write: String => Unit): String =
+    synchronized {
+      val base = path(kind, dir)
+      if (!laid((s, dir, kind))) {
+        write(base)
+        laid += ((s, dir, kind))
+      }
+      base
+    }
 }
 
 /** Run independent one-time cache builds concurrently — Spark schedules

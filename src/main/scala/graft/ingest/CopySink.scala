@@ -101,6 +101,7 @@ object CopySink {
       targetFactory: () => CopyTarget,
       batchSize: Int = 5000): Unit = {
     Importer.assertSafeTable(table)
+    require(batchSize > 0, s"batchSize must be positive: $batchSize")
     val columns = df.columns.toSeq
     columns.foreach(Importer.assertSafeColumn)
     lines(df).foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>

@@ -90,7 +90,9 @@ object Importer {
     * instead (truncate flag maps to SaveMode.Overwrite + truncate, the
     * reference's TRUNCATE-then-COPY) and no file sink may be given. An
     * import with no sink at all is rejected: it would write nothing yet
-    * report every scanned row as imported.
+    * report every scanned row as imported. Every output column name
+    * passes [[assertSafeColumn]] before any write, with or without a
+    * columnMap (ParquetImporter.php:204-216).
     */
   def importParquet(
       spark: SparkSession,
@@ -109,9 +111,11 @@ object Importer {
       "no sink: give sinkDir, copyDir or jdbcUrl")
     require(!(jdbcUrl.isDefined && fileSinks),
       "jdbcUrl cannot be combined with sinkDir/copyDir")
+    require(batchSize > 0, s"batchSize must be positive: $batchSize")
     val t0 = System.nanoTime()
     val raw = spark.read.parquet(path)
     val projected = project(raw, columnMap)
+    projected.columns.foreach(assertSafeColumn)
     val out = if (normalizeValues) normalize(projected) else projected
 
     val mode = if (truncate) SaveMode.Overwrite else SaveMode.Append

@@ -24,27 +24,19 @@ object Bucketed {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Idempotence guard: (session, dir) pairs whose bucket tables exist. */
-  private val prepared = java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-
   /** Lay down orders + lineitem bucketed by order key (once per session
     * and scale factor).
     */
-  def prepare(s: SparkSession, dir: String): (String, String) = synchronized {
+  def prepare(s: SparkSession, dir: String): (String, String) = {
     val tag = Scratch.tag(dir)
     val (ot, lt) = (s"graft_orders_$tag", s"graft_lineitem_$tag")
-    // mark prepared only AFTER both writes succeed — otherwise one
-    // transient write failure (tmp full, co-tenant I/O error) would
-    // poison every later call with names of tables that don't exist
-    if (!prepared.contains((s, dir))) {
-      val base = Scratch.path("bucketed", dir)
+    Scratch.once(s, dir, "bucketed") { base =>
       Tables(s, dir, "orders").write.mode("overwrite")
         .option("path", s"$base/orders")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
       Tables(s, dir, "lineitem").write.mode("overwrite")
         .option("path", s"$base/lineitem")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
-      prepared.add((s, dir))
     }
     (ot, lt)
   }

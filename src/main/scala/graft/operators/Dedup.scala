@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.IndexStore.{artifact, corpusCached}
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,22 +67,13 @@ object Dedup {
     * (64-bit collisions are negligible), so the string-based oracle still
     * matches exactly.
     */
-  /** Session cache + optional corpus-cache read-back: the whole-corpus
-    * derivations below serve ~15 non-incremental queries and dominate
-    * cold warm-up, so an index root built from THIS corpus carries
-    * them as a `_corpus_cache` panel (r14 verdict ask #4) — read back
-    * when present and source-matched, rebuilt in-session otherwise
-    * (see [[graft.IndexStore.corpusCached]]). The session-cache key
-    * carries the root tag so a mid-session repoint (specs) never
-    * crosses the two paths.
-    */
-  private def ccache(s: SparkSession, dir: String, key: String, art: String)(
-      build: => DataFrame): DataFrame =
-    graft.Cached.of(s, dir, key + graft.IndexStore.tag)(
-      graft.IndexStore.corpusCached(s, dir, art)(build))
-
   /** The corpus-cache panel, in WRITE ORDER (derived caches read their
-    * just-written upstreams through the root-pinned accessors).
+    * just-written upstreams through the root-pinned accessors). The
+    * whole-corpus derivations below serve ~15 non-incremental queries
+    * and dominate cold warm-up, so an index root built from THIS corpus
+    * carries them as a `_corpus_cache` panel (r14 verdict ask #4) — read
+    * back when present and source-matched, rebuilt in-session otherwise
+    * (see [[graft.IndexStore.corpusCached]]).
     */
   private[graft] def corpusCaches: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_sh64" -> (shingles _),
@@ -95,7 +87,7 @@ object Dedup {
     "dedup_ngmh_pairs" -> (ngramMinhashPairs _))
 
   private def shingles(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.sh64", "dedup_sh64") {
+    corpusCached(s, dir, "dedup_sh64") {
       // The driver-generated parquet is one row group per file, so the scan
       // is a single task; shingling is the most expensive per-row expression
       // in the engine (~1 ms/doc), so spread the rows BEFORE computing it.
@@ -120,7 +112,7 @@ object Dedup {
     * output-bound expansion join at the end.
     */
   private def contentGroups(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.groups", "dedup_groups") {
+    corpusCached(s, dir, "dedup_groups") {
       shingles(s, dir)
         .groupBy("ckey")
         .agg(count(lit(1)).as("cnt"), first(col("sh64")).as("sh64"))
@@ -153,7 +145,7 @@ object Dedup {
     * on duplicate-heavy corpora (the round-3 scale flaw).
     */
   private[graft] def postings(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.postings", "dedup_postings") {
+    corpusCached(s, dir, "dedup_postings") {
       val g = contentGroups(s, dir)
       val ex = g.select(col("ckey"), expr("cast(size(sh64) as bigint)").as("n"),
         col("cnt"), explode(col("sh64")).as("s"))
@@ -202,7 +194,7 @@ object Dedup {
     * width ~4×, and collisions are the sh64 argument (P ≈ |reps|²/2⁶⁵).
     */
   private[graft] def pairSharedCounts(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.pairshared", "dedup_pair_shared") {
+    corpusCached(s, dir, "dedup_pair_shared") {
       val exf = postings(s, dir).withColumn("ck", expr("xxhash64(ckey)"))
       exf.as("a").join(exf.as("b"),
           col("a.s") === col("b.s") && col("a.ck") < col("b.ck"))
@@ -219,7 +211,7 @@ object Dedup {
     * consumers as [[pairSharedCounts]].
     */
   private[graft] def groupRareCounts(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.grouprare", "dedup_group_rare") {
+    corpusCached(s, dir, "dedup_group_rare") {
       postings(s, dir).groupBy("ckey")
         .agg(count(lit(1)).as("sr"), first(col("n")).as("n"))
     }
@@ -267,7 +259,7 @@ object Dedup {
     * (ckey, n = full shingle-set size, rs = sorted rare shingles).
     */
   private def rareStringSets(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.rarestr", "dedup_rarestr") {
+    corpusCached(s, dir, "dedup_rarestr") {
       val d = Tables.docsSpread(s, dir).select(col("doc_id"), col("text"))
       // The rep-shingle table feeds THREE subtrees (the df count, the
       // rare join-back probe, the doc total) — un-materialized, each
@@ -304,7 +296,7 @@ object Dedup {
     * identical in both engines (the simhash hex→BIGINT discipline).
     */
   private def ngramMinhashSigs(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.ngmh.sig", "dedup_ngmh_sig") {
+    corpusCached(s, dir, "dedup_ngmh_sig") {
       rareStringSets(s, dir).withColumn("sg", expr(
         """transform(sequence(0, 15), p -> array_min(transform(rs, s0 ->
           |  cast(conv(substr(md5(concat(cast(p as string), '|', s0)), 1, 15), 16, 10) as bigint))))"""
@@ -335,7 +327,7 @@ object Dedup {
     * panel exactly as the 32-perm pair table does.
     */
   private def ngramMinhashPairs(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.ngmh.pairs", "dedup_ngmh_pairs") {
+    corpusCached(s, dir, "dedup_ngmh_pairs") {
     val sh = shingles(s, dir)
     val rsets = rareStringSets(s, dir)
     val bands = ngramMinhashSigs(s, dir).select(col("ckey"),
@@ -585,7 +577,7 @@ object Dedup {
     * per DISTINCT content — the shared candidate-generation table.
     */
   private def minhashBands(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.minhash.bands", "dedup_minhash_bands") {
+    corpusCached(s, dir, "dedup_minhash_bands") {
       val sig = contentGroups(s, dir).withColumn("sig", minhash_sig(col("sh64"), 32))
       sig.select(col("ckey"),
           explode(expr(
@@ -601,7 +593,7 @@ object Dedup {
     * once per session, not once per query.
     */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.minhash.pairs", "dedup_minhash_pairs") {
+    corpusCached(s, dir, "dedup_minhash_pairs") {
     val sh = shingles(s, dir)
     val g = contentGroups(s, dir)
     val bands = minhashBands(s, dir)
@@ -662,7 +654,7 @@ object Dedup {
   private val isBatchExpr = graft.Incr.isBatchDoc
 
   /** Frozen-index ARTIFACT builders (what [[graft.IndexBuild]] writes and
-    * the accessors below load back — see [[graft.IndexStore]]): the
+    * [[graft.IndexStore.artifact]] loads back): the
     * history content groups (one shingle set per distinct history
     * content), the 16×2 minhash band index over those groups, and the
     * ckey→doc membership of history. Together they are everything the
@@ -727,16 +719,6 @@ object Dedup {
       .select(col("ckey"), col("nsh"),
         col("band.bidx").as("bidx"), col("band.bh").as("bh"))
 
-  /** The frozen history index, session-cached exactly like the
-    * whole-corpus band table — read from the persisted parquet artifact
-    * when an index root is active ([[graft.IndexStore]]), built
-    * in-session otherwise (the driver's default path).
-    */
-  private def incrHistBands(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "dedup.incr.hist" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "dedup_hist_bands")(buildHistBands(s, dir))
-    }
-
   /** The history content groups (ckey → shingle set). With a persisted
     * index active the artifact is read DIRECTLY — not materialized into
     * the session cache: a cold scoring session consumes it exactly once
@@ -751,15 +733,7 @@ object Dedup {
   private def incrHistGroups(s: SparkSession, dir: String): DataFrame =
     if (graft.IndexStore.active.isDefined)
       graft.IndexStore.loadOrBuild(s, "dedup_hist_groups")(buildHistGroups(s, dir))
-    else
-      graft.Cached.of(s, dir, "dedup.incr.histg" + graft.IndexStore.tag) {
-        buildHistGroups(s, dir)
-      }
-
-  private def incrHistDocs(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "dedup.incr.histd" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "dedup_hist_docs")(buildHistDocs(s, dir))
-    }
+    else graft.Cached.of(s, dir, "dedup.incr.histg")(buildHistGroups(s, dir))
 
   /** Tonight's BATCH shingle table. With a persisted index active the
     * raw documents are filtered to the batch split BEFORE shingling —
@@ -769,7 +743,7 @@ object Dedup {
     */
   private def batchShingles(s: SparkSession, dir: String): DataFrame =
     if (graft.IndexStore.active.isDefined)
-      graft.Cached.of(s, dir, "dedup.incr.batchsh" + graft.IndexStore.tag) {
+      graft.Cached.of(s, dir, "dedup.incr.batchsh") {
         Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"))
           .filter(expr(isBatchExpr))
@@ -804,7 +778,7 @@ object Dedup {
     * all read it.
     */
   private def incrBatchGroups(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "dedup.incr.batchg" + graft.IndexStore.tag) {
+    graft.Cached.of(s, dir, "dedup.incr.batchg") {
       batchShingles(s, dir).groupBy("ckey").agg(first(col("sh64")).as("sh64"))
         .withColumn("sig", minhash_sig(col("sh64"), 32))
     }
@@ -850,7 +824,7 @@ object Dedup {
   private val incrPlanStats: Q = (s, dir) => {
     val b = incrBatchGroups(s, dir)
       .agg(count(lit(1)).cast("long").as("n_batch_groups"))
-    val h = incrHistBands(s, dir).select(col("ckey")).distinct()
+    val h = artifact(s, dir, "dedup_hist_bands").select(col("ckey")).distinct()
       .agg(count(lit(1)).cast("long").as("n_hist_groups"))
     b.crossJoin(h) // two 1-row aggregates
       .select(col("n_batch_groups"), col("n_hist_groups"),
@@ -871,7 +845,7 @@ object Dedup {
   private[graft] def incrementalWith(
       s: SparkSession, dir: String, prune: Option[Boolean]): DataFrame = {
     val bsh = batchShingles(s, dir)
-    val hist = incrHistBands(s, dir)
+    val hist = artifact(s, dir, "dedup_hist_bands")
     val bg = incrBatchGroups(s, dir)
     val bb = bandsOf(bg)
     // size prefilter at candidate-row cost (J ≥ 0.8 ⇒ 4·max ≤ 5·min,
@@ -939,7 +913,7 @@ object Dedup {
       .filter(col("jaccard") >= 0.8)
       .select("ka", "kb", "jaccard")
     val bDocs = bsh.select(col("ckey"), col("doc_id"))
-    val hDocs = incrHistDocs(s, dir)
+    val hDocs = artifact(s, dir, "dedup_hist_docs")
     // batch-vs-history: the batch doc leads regardless of id order
     val cross = verify(candX, gHist)
       .join(bDocs.select(col("ckey").as("ka"), col("doc_id").as("id_a")), "ka")
@@ -968,7 +942,7 @@ object Dedup {
     * [[org.apache.spark.sql.graft.SimHash64]] expression.
     */
   private def simhashes(s: SparkSession, dir: String): DataFrame =
-    ccache(s, dir, "dedup.simhash", "dedup_simhash") {
+    corpusCached(s, dir, "dedup_simhash") {
       Tables.docsSpread(s, dir)
         .withColumn("tk", expr("array_distinct(filter(split(text, ' '), t -> length(t) > 0))"))
         .withColumn("hv", expr("transform(tk, t -> cast(conv(substr(md5(t), 1, 15), 16, 10) AS bigint))"))

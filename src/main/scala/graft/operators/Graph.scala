@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.IndexStore.{artifact, corpusCached}
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -66,45 +67,33 @@ object Graph {
     * pair stream; the index build STAGES it as `graph_batch_edges`
     * (input staging, not index state) so a cold serving session reads
     * tonight's edges as data — the production shape — instead of
-    * paying a full-width pair scan to re-synthesize its own input.
+    * paying a full-width pair scan to re-synthesize its own input. Read
+    * through the session-cached [[graft.IndexStore.artifact]]: the
+    * with-index composition consumes the batch slice from three places
+    * (edges ∪, degree increments, triangle probe) — without the cache
+    * each one would re-run the raw pair self-join, tripling the one
+    * full-width scan a cold session pays.
     */
   private[graft] def buildBatchEdges(s: SparkSession, dir: String): DataFrame =
     rawPairs(s, dir).filter(isBatchEdge(col("u"), col("v"))).distinct()
 
-  private[graft] def batchEdgesOf(s: SparkSession, dir: String): DataFrame =
-    // session-cached: the with-index composition consumes the batch
-    // slice from three accessors (edges ∪, degree increments, triangle
-    // probe) — without the cache each one would re-run the raw pair
-    // self-join, tripling the one full-width scan a cold session pays
-    graft.Cached.of(s, dir, "graph.batchE" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "graph_batch_edges")(
-        buildBatchEdges(s, dir))
-    }
-
+  /** Derived builders (degrees, triangles) read the history edges through
+    * [[graft.IndexStore.artifact]], so an [[graft.IndexStore.writeAll]]
+    * build reads its own just-written upstream artifact instead of
+    * re-deriving it.
+    */
   private[graft] def buildHistDeg(s: SparkSession, dir: String): DataFrame =
-    degOf(histEdgesA(s, dir))
+    degOf(artifact(s, dir, "graph_hist_edges"))
 
   /** History-scoped normalized triangle set (x < y < z) — the oriented
     * enumeration run once by the index build; the serving session adds
     * only triangles closed by batch edges (see [[triangleRows]]).
     */
   private[graft] def buildHistTri(s: SparkSession, dir: String): DataFrame = {
-    val he = histEdgesA(s, dir)
+    val he = artifact(s, dir, "graph_hist_edges")
     normTri(triangleRowsOfOriented(orientedOf(he, degOf(he).select(
       col("src").as("x"), col("d")))))
   }
-
-  /** History edge artifact accessor — reads the persisted artifact when
-    * an index root is active, builds in-session otherwise. Derived
-    * builders (degrees, triangles) go through this accessor so an
-    * [[graft.IndexStore.writeAll]] build reads its own just-written
-    * upstream artifact instead of re-deriving it.
-    */
-  private def histEdgesA(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.histE" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "graph_hist_edges")(
-        rawPairs(s, dir).filter(!isBatchEdge(col("u"), col("v"))).distinct())
-    }
 
   /** Symmetric degree table of an undirected (u < v) edge frame. */
   private def degOf(e: DataFrame): DataFrame =
@@ -122,9 +111,10 @@ object Graph {
     * in-session build (IndexLifecycleSpec pins the consumers).
     */
   private def edges(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.edges" + graft.IndexStore.tag) {
+    graft.Cached.of(s, dir, "graph.edges") {
       if (graft.IndexStore.active.isDefined)
-        histEdgesA(s, dir).unionAll(batchEdgesOf(s, dir))
+        artifact(s, dir, "graph_hist_edges")
+          .unionAll(artifact(s, dir, "graph_batch_edges"))
       else rawPairs(s, dir).distinct()
     }
 
@@ -143,7 +133,7 @@ object Graph {
     * catalog table could, and the exchange is paid either way).
     */
   private def adjacency(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.adj" + graft.IndexStore.tag) {
+    graft.Cached.of(s, dir, "graph.adj") {
       val e = edges(s, dir)
       e.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
@@ -156,11 +146,11 @@ object Graph {
     * set algebra, no edge-sized work).
     */
   private def degrees(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.deg" + graft.IndexStore.tag) {
+    graft.Cached.of(s, dir, "graph.deg") {
       if (graft.IndexStore.active.isDefined) {
         val hist = graft.IndexStore.loadOrBuild(s, "graph_hist_deg")(
           buildHistDeg(s, dir))
-        degMerge(hist, degOf(batchEdgesOf(s, dir)))
+        degMerge(hist, degOf(artifact(s, dir, "graph_batch_edges")))
       } else adjacency(s, dir).groupBy("src").agg(count(lit(1)).as("d"))
     }
 
@@ -198,11 +188,11 @@ object Graph {
           () => triangleRows(s, dir).count()))
       },
       () => {
-        edges1995(s, dir).count()
-        triE1995(s, dir).count()
+        artifact(s, dir, "graph_y95_edges").count()
+        artifact(s, dir, "graph_y95_trie").count()
         edgeSup1995(s, dir).count()
       },
-      () => { histCcLabels(s, dir).count(); ccBatchE(s, dir).count() }))
+      () => { artifact(s, dir, "graph_hist_cc_labels").count(); ccBatchE(s, dir).count() }))
   }
 
   /** Degree-ordered orientation of [[edges]] — the shared substrate of
@@ -221,7 +211,7 @@ object Graph {
 
   /** [[orientedEdges]] over an arbitrary undirected (u < v) edge frame
     * with the given (x, d) degree table — shared with the year-sliced
-    * truss substrate ([[triE1995]]).
+    * truss substrate ([[buildY95TriE]]).
     */
   private def orientedOf(e: DataFrame, deg: DataFrame): DataFrame = {
     val key = deg.select(col("x"), struct(col("d"), col("x")).as("ok"))
@@ -401,21 +391,16 @@ object Graph {
     * localCheckpointed so the lineage (and the plan the driver compiles)
     * stays flat however many rounds run.
     */
-  /** Session cache + optional corpus-cache read-back — the dedup
-    * panel's discipline (graft.operators.Dedup.ccache) extended to the
-    * graph's whole-corpus derivations (r15 verdict ask #7): the indexed
-    * warmup's remaining cost was NOT artifact reads but the derivations
-    * composed ON TOP of them (the LPA rounds, the batch-closed triangle
-    * probe, the bipartite batch slice), each corpus-relative — a merged
-    * root's corpus has changed, so they carry no merge rule and fall
-    * back to the in-session build on any `_src` mismatch.
+  /** The graph slice of the `_corpus_cache` panel, in write order — the
+    * dedup panel's discipline ([[graft.IndexStore.corpusCached]])
+    * extended to the graph's whole-corpus derivations (r15 verdict ask
+    * #7): the indexed warmup's remaining cost was NOT artifact reads but
+    * the derivations composed ON TOP of them (the LPA rounds, the
+    * batch-closed triangle probe, the bipartite batch slice), each
+    * corpus-relative — a merged root's corpus has changed, so they carry
+    * no merge rule and fall back to the in-session build on any `_src`
+    * mismatch.
     */
-  private def gcache(s: SparkSession, dir: String, key: String, art: String)(
-      build: => DataFrame): DataFrame =
-    graft.Cached.of(s, dir, key + graft.IndexStore.tag)(
-      graft.IndexStore.corpusCached(s, dir, art)(build))
-
-  /** The graph slice of the `_corpus_cache` panel, in write order. */
   private[graft] def corpusCaches: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "graph_lpa" -> (lpaLabelsBuild _),
     "graph_tri_full" -> (triangleRowsBuild _),
@@ -426,7 +411,7 @@ object Graph {
     * hash-agg discipline).
     */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    gcache(s, dir, "graph.lpa", "graph_lpa")(lpaLabelsBuild(s, dir))
+    corpusCached(s, dir, "graph_lpa")(lpaLabelsBuild(s, dir))
 
   private def lpaLabelsBuild(s: SparkSession, dir: String): DataFrame = {
     val adj = adjacency(s, dir)
@@ -436,7 +421,7 @@ object Graph {
     // and the downstream joins ran 4-wide); AQE already coalesces small
     // shuffle reads, so the explicit shrink bought nothing at sf0.1.
     // LAZY checkpoints (r17): fixed 2-round budget, no convergence read —
-    // the consumer's materializing action (the gcache persist/count)
+    // the consumer's materializing action (the corpusCached persist/count)
     // computes both rounds in one job instead of three eager ones
     var labels = adj.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
@@ -869,15 +854,15 @@ object Graph {
     * graph_cc_incremental's committed bench number above the warm fold
     * cost (r15 verdict ask #3). It is one-time corpus prep exactly like
     * the co-purchase batch slice, so the graph prewarm builds it
-    * (verdict-excepted single-consumer prewarm, as for
-    * [[histCcLabels]]). Only the SHIPPED suite query consumes this
-    * cache: one-shot fold callers (the nightly merge, the streaming
-    * spec's per-micro-batch scratch dirs) pass their own slice to
-    * [[ccFoldLabels]] instead — a session-lifetime Cached entry per
+    * (verdict-excepted single-consumer prewarm, as for the
+    * `graph_hist_cc_labels` artifact). Only the SHIPPED suite query
+    * consumes this cache: one-shot fold callers (the nightly merge, the
+    * streaming spec's per-micro-batch scratch dirs) pass their own slice
+    * to [[ccFoldLabels]] instead — a session-lifetime Cached entry per
     * scratch dir would grow unboundedly in a long-running stream.
     */
   private[graft] def ccBatchE(s: SparkSession, dir: String): DataFrame =
-    gcache(s, dir, "graph.ccBatchE", "graph_cc_batch")(
+    corpusCached(s, dir, "graph_cc_batch")(
       batchBedges(s, dir).localCheckpoint(true))
 
   private def symAdj(s: SparkSession, e: DataFrame, width: Option[Int] = None): DataFrame =
@@ -969,17 +954,6 @@ object Graph {
     hist2.unionAll(newNodes)
   }
 
-  /** The frozen history CC label table — artifact-backed accessor,
-    * shared by the serving query and the graph prewarm (r14
-    * verdict ask #5: the one-time in-session pointer-doubling belongs
-    * with the other substrate builds, not inside the query's number).
-    */
-  private[graft] def histCcLabels(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.ccHist" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "graph_hist_cc_labels")(
-        buildHistCcLabels(s, dir))
-    }
-
   /** Incremental connected components — the r12 verdict's ask #4: the
     * frozen-history discipline applied to global graph connectivity.
     * History labels come from the persisted artifact (in-session build
@@ -992,7 +966,7 @@ object Graph {
     */
   private val ccIncremental: Q = (s, dir) =>
     componentsOutput(
-      ccFoldLabels(s, dir, histCcLabels(s, dir), Some(ccBatchE(s, dir))))
+      ccFoldLabels(s, dir, artifact(s, dir, "graph_hist_cc_labels"), Some(ccBatchE(s, dir))))
 
   /** Nightly index UPDATE for the graph substrate artifacts — pure set
     * algebra over the persisted history tables plus batch-derived
@@ -1013,7 +987,7 @@ object Graph {
     val histL = s.read.parquet(s"$histRoot/graph_hist_cc_labels")
     // anti-join makes the merge idempotent (re-running tonight's fold
     // against an already-merged root adds nothing)
-    val newE = batchEdgesOf(s, dir).join(histE, Seq("u", "v"), "left_anti")
+    val newE = artifact(s, dir, "graph_batch_edges").join(histE, Seq("u", "v"), "left_anti")
     val mergedE = histE.unionByName(newE)
     val mergedD = degMerge(histD, degOf(newE))
     Map(
@@ -1035,7 +1009,7 @@ object Graph {
       // un-merged remainder (empty here; a production nightly stages
       // tomorrow's ingested edge file into the new root afterwards).
       "graph_batch_edges" ->
-        batchEdgesOf(s, dir).join(mergedE, Seq("u", "v"), "left_anti"))
+        artifact(s, dir, "graph_batch_edges").join(mergedE, Seq("u", "v"), "left_anti"))
   }
 
   /** Full-corpus rebuild comparators for IndexMergeSpec (the whole
@@ -1136,13 +1110,13 @@ object Graph {
     * are disjoint because a history triangle has no batch edge).
     */
   private[graft] def triangleRows(s: SparkSession, dir: String): DataFrame =
-    gcache(s, dir, "graph.tri", "graph_tri_full")(triangleRowsBuild(s, dir))
+    corpusCached(s, dir, "graph_tri_full")(triangleRowsBuild(s, dir))
 
   private def triangleRowsBuild(s: SparkSession, dir: String): DataFrame =
     if (graft.IndexStore.active.isDefined) {
       val hist = graft.IndexStore.loadOrBuild(s, "graph_hist_tri")(
         buildHistTri(s, dir))
-      val bE = batchEdgesOf(s, dir)
+      val bE = artifact(s, dir, "graph_batch_edges")
       hist.unionAll(batchClosedTriangles(
         bE, batchAdjOf(edges(s, dir), bE), degrees(s, dir)))
     } else normTri(triangleRowsOfOriented(orientedEdges(s, dir)))
@@ -1243,7 +1217,7 @@ object Graph {
     * every [[ktrussPeel]] run seeds its live supports from it.
     */
   private[graft] def edgeSupports(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.edgeSup" + graft.IndexStore.tag) {
+    graft.Cached.of(s, dir, "graph.edgeSup") {
       triEdgeRows(s, dir).groupBy("u", "v").agg(count(lit(1)).as("support"))
     }
 
@@ -1263,7 +1237,7 @@ object Graph {
     * support < k−2 = 2 (each deletion can drop neighbors' supports, so
     * one pass is only the first round). The loop NEVER recounts
     * triangles on the shrinking graph: supports are maintained by
-    * DECREMENT from the cached slice substrate ([[triE1995]]) — a dead
+    * DECREMENT from the cached slice substrate (`graph_y95_trie`) — a dead
     * triangle is one touching a removed edge, and each surviving edge's
     * live support is its base support minus the dead triangles through
     * it — so a round's work is the frontier's triangle lookups, never a
@@ -1292,7 +1266,7 @@ object Graph {
     * measured 2-3× slower to scan under the cache's columnar codec).
     */
   private[graft] def triEdgeRows(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graft.triE" + graft.IndexStore.tag)(
+    graft.Cached.of(s, dir, "graft.triE")(
       triEdgeRowsOfNorm(triangleRows(s, dir)))
 
   /** (x, y, z, u, v) triangle-edge rows from (a, b, c) triangle rows. */
@@ -1338,31 +1312,21 @@ object Graph {
   }
 
   private[graft] def buildY95TriE(s: SparkSession, dir: String): DataFrame = {
-    val e = edges1995(s, dir)
+    val e = artifact(s, dir, "graph_y95_edges")
     val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
       .groupBy("x").agg(count(lit(1)).as("d"))
     triEdgeRowsOf(triangleRowsOfOriented(orientedOf(e, deg)))
   }
 
-  private[graft] def edges1995(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.edges.y95" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "graph_y95_edges")(buildY95Edges(s, dir))
-    }
-
-  private[graft] def triE1995(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.triE.y95" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "graph_y95_trie")(buildY95TriE(s, dir))
-    }
-
   private[graft] def edgeSup1995(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "graph.edgeSup.y95" + graft.IndexStore.tag) {
-      triE1995(s, dir).groupBy("u", "v").agg(count(lit(1)).as("support"))
+    graft.Cached.of(s, dir, "graph.edgeSup.y95") {
+      artifact(s, dir, "graph_y95_trie").groupBy("u", "v").agg(count(lit(1)).as("support"))
     }
 
   private[graft] def ktrussPeel(s: SparkSession, dir: String, k: Int): DataFrame = {
     val maxRounds = 12
-    val e0 = edges1995(s, dir)
-    val triE = triE1995(s, dir)
+    val e0 = artifact(s, dir, "graph_y95_edges")
+    val triE = artifact(s, dir, "graph_y95_trie")
     val baseSup = edgeSup1995(s, dir)
     // AQE disabled for the LOOP ONLY — see graft.NoAqe (its per-stage
     // materialization latency dominated the peel: 19 → 14 s measured)
@@ -1534,7 +1498,7 @@ object Graph {
     // artifact scan — session-cached, because the batch-sized slice is
     // consumed three times per run (probe, endpoint prune, accounting
     // count) and each reference would otherwise re-scan the edge set.
-    val bE = graft.Cached.of(s, dir, "graph.batchPar" + graft.IndexStore.tag)(
+    val bE = graft.Cached.of(s, dir, "graph.batchPar")(
       e.filter(isBatchEdge(col("u"), col("v"))))
     // With a root active the probe never touches the full symmetric
     // adjacency: only the batch endpoints' neighborhoods are read off
@@ -1599,8 +1563,8 @@ object Graph {
   private[graft] def trussnessDecompose(s: SparkSession, dir: String): DataFrame = {
     val maxPeels = 40
     val kcap = 24
-    val e0 = edges1995(s, dir)
-    val triE = triE1995(s, dir)
+    val e0 = artifact(s, dir, "graph_y95_edges")
+    val triE = artifact(s, dir, "graph_y95_trie")
     val baseSup = edgeSup1995(s, dir)
     val nEdges = e0.count()
     graft.NoAqe.during(s) {
@@ -1680,8 +1644,8 @@ object Graph {
     */
   private[graft] def trussnessHIndex(s: SparkSession, dir: String): DataFrame = {
     val maxRounds = 12
-    val e0 = edges1995(s, dir)
-    val triE = triE1995(s, dir)
+    val e0 = artifact(s, dir, "graph_y95_edges")
+    val triE = artifact(s, dir, "graph_y95_trie")
     val baseSup = edgeSup1995(s, dir)
     val nEdges = e0.count()
     def maybeBcast(df: DataFrame): DataFrame =

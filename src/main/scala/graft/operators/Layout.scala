@@ -34,24 +34,17 @@ object Layout {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private val prepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String, String)]()
-
   /** Lay down lineitem hive-partitioned by ship month (once per session+SF).
     * The one-time partitioned write is ingest-layout cost, same category as
     * [[Bucketed.prepare]]; every later month-constrained query prunes
     * directories instead of scanning the table.
     */
-  def prepareMonthly(s: SparkSession, dir: String): String = synchronized {
-    val base = Scratch.path("monthly", dir)
-    if (!prepared.contains((s, dir, "monthly"))) {
+  def prepareMonthly(s: SparkSession, dir: String): String =
+    Scratch.once(s, dir, "monthly") { base =>
       Tables(s, dir, "lineitem")
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
         .write.mode("overwrite").partitionBy("ship_month").parquet(base)
-      prepared.add((s, dir, "monthly"))
     }
-    base
-  }
 
   /** 16-bit Morton bit-spread (x -> x with a zero bit interleaved after each
     * source bit) via the standard mask cascade, emitted as SQL text so the
@@ -83,49 +76,37 @@ object Layout {
     * into files by zval, sorted by zval within each file, so file/row-group
     * min-max stats are tight on BOTH dimensions.
     */
-  def prepareZorder(s: SparkSession, dir: String): String = synchronized {
-    val base = Scratch.path("zorder", dir)
-    if (!prepared.contains((s, dir, "zorder"))) {
+  def prepareZorder(s: SparkSession, dir: String): String =
+    Scratch.once(s, dir, "zorder") { base =>
       Tables(s, dir, "part")
         .withColumn("zval", expr(zSql(zx, zy, sparkShl)))
         .repartitionByRange(8, col("zval"))
         .sortWithinPartitions("zval")
         .write.mode("overwrite").parquet(base)
-      prepared.add((s, dir, "zorder"))
     }
-    base
-  }
 
   /** Linear-sorted control layout for the pruning comparison in LayoutSpec:
     * same files, sorted by p_size alone — min/max on the second dimension is
     * full-range in every file.
     */
-  def prepareLinear(s: SparkSession, dir: String): String = synchronized {
-    val base = Scratch.path("linear", dir)
-    if (!prepared.contains((s, dir, "linear"))) {
+  def prepareLinear(s: SparkSession, dir: String): String =
+    Scratch.once(s, dir, "linear") { base =>
       Tables(s, dir, "part")
         .withColumn("zval", expr(zSql(zx, zy, sparkShl)))
         .repartitionByRange(8, col("p_size"), col("p_partkey"))
         .sortWithinPartitions("p_size", "p_partkey")
         .write.mode("overwrite").parquet(base)
-      prepared.add((s, dir, "linear"))
     }
-    base
-  }
 
   /** Deliberately fragmented copy of documents (64 tiny files) — the
     * small-file problem every streaming/incremental ingest produces. Built
     * once per session as the input fixture for [[layout_compaction]].
     */
-  def prepareFragmented(s: SparkSession, dir: String): String = synchronized {
-    val base = Scratch.path("fragments", dir)
-    if (!prepared.contains((s, dir, "fragments"))) {
+  def prepareFragmented(s: SparkSession, dir: String): String =
+    Scratch.once(s, dir, "fragments") { base =>
       Tables(s, dir, "documents").repartition(64)
         .write.mode("overwrite").parquet(base)
-      prepared.add((s, dir, "fragments"))
     }
-    base
-  }
 
   /** One-time layouts built before a timed run (ingest cost, not query cost). */
   def prewarm(s: SparkSession, dir: String): Unit = {

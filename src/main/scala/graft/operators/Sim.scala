@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.IndexStore.artifact
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -201,7 +202,7 @@ object Sim {
     * measured `ncells` rides the hash-verified output).
     */
   /** Frozen IVF-index ARTIFACT builders (written by [[graft.IndexBuild]],
-    * loaded back by the accessors below — see [[graft.IndexStore]]),
+    * loaded back by [[graft.IndexStore.artifact]]),
     * since round 12 built on the CORPUS-SCALED ⌊√n_hist⌋ k-means cells
     * (the [[scaledNcells]] sizing rule, trained on history by the same
     * hash-seeded integer-exact 2-round Lloyd as [[scaledAssign]]) — the
@@ -273,7 +274,7 @@ object Sim {
 
   private[graft] def buildIvfHistMembers(s: SparkSession, dir: String): DataFrame =
     membersForCells(vectors(s, dir).filter(not(expr(isBatchVecExpr))),
-      histAssign(s, dir), ivfHistReps(s, dir))
+      histAssign(s, dir), artifact(s, dir, "ivf_hist_reps"))
 
   /** Codewords per residual subspace — the PQ side of the incremental
     * index (round-13, the r12 verdict's top ask: the 512 k cold probe
@@ -294,7 +295,7 @@ object Sim {
     * broadcast-sized at any corpus where ncells = ⌊√n⌋.
     */
   private[graft] def buildIvfHistCodebook(s: SparkSession, dir: String): DataFrame = {
-    val uc = ivfHistCentroids(s, dir)
+    val uc = artifact(s, dir, "ivf_hist_centroids")
       .select(col("cell"), expr("transform(cv, t -> t / cn)").as("u"))
     val anch = vectors(s, dir).filter(not(expr(isBatchVecExpr)))
       .orderBy("vec_id").limit(16)
@@ -321,7 +322,7 @@ object Sim {
     * rep-remap + encode-new-content ([[mergedArtifacts]]).
     */
   private[graft] def buildIvfHistCodes(s: SparkSession, dir: String): DataFrame =
-    encodeRepsWith(ivfHistReps(s, dir), ivfHistCodebook(s, dir))
+    encodeRepsWith(artifact(s, dir, "ivf_hist_reps"), artifact(s, dir, "ivf_hist_codebook"))
 
   /** Encode (cell, v, rep) rows against a folded codebook — shared by
     * the artifact builder, the nightly merge's new-content side, and
@@ -481,31 +482,6 @@ object Sim {
       "ivf_hist_codebook" -> cb, "ivf_hist_codes" -> codes)
   }
 
-  private def ivfHistReps(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.incr.hreps" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "ivf_hist_reps")(buildIvfHistReps(s, dir))
-    }
-
-  private def ivfHistMembers(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.incr.hmem" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "ivf_hist_members")(buildIvfHistMembers(s, dir))
-    }
-
-  private def ivfHistCentroids(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.incr.cent" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "ivf_hist_centroids")(buildIvfHistCentroids(s, dir))
-    }
-
-  private def ivfHistCodebook(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.incr.cb" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "ivf_hist_codebook")(buildIvfHistCodebook(s, dir))
-    }
-
-  private def ivfHistCodes(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.incr.codes" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "ivf_hist_codes")(buildIvfHistCodes(s, dir))
-    }
-
   /** Tonight's BATCH vectors. With a persisted index active the raw
     * embeddings are filtered to the batch split BEFORE the cast+norm
     * build — the cold scoring session's only vector work is
@@ -514,7 +490,7 @@ object Sim {
     */
   private def batchVectors(s: SparkSession, dir: String): DataFrame =
     if (graft.IndexStore.active.isDefined)
-      graft.Cached.of(s, dir, "sim.incr.batchv" + graft.IndexStore.tag) {
+      graft.Cached.of(s, dir, "sim.incr.batchv") {
         Tables(s, dir, "embeddings")
           .filter(expr(isBatchVecExpr))
           .select(col("vec_id"), col("label"), expr("cast(embedding AS array<double>)").as("v"))
@@ -541,7 +517,7 @@ object Sim {
     * of work that must not be paid twice per serve.
     */
   private[graft] def incrProbed(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.incr.probed" + graft.IndexStore.tag)(
+    graft.Cached.of(s, dir, "sim.incr.probed")(
       incrProbedPlan(s, dir))
 
   /** The probe plan itself, uncached — PlanEvidenceSpec pins its shape
@@ -549,7 +525,7 @@ object Sim {
     * persist can't hide the join strategy behind an InMemoryRelation.
     */
   private[graft] def incrProbedPlan(s: SparkSession, dir: String): DataFrame = {
-    val cent = ivfHistCentroids(s, dir)
+    val cent = artifact(s, dir, "ivf_hist_centroids")
     incrBreps(s, dir)
       .crossJoin(broadcast(cent.select(col("cell"), col("cv"), col("cn"))))
       .withColumn("ccos", vec_dot(col("qx"), col("cv")) / (col("qxn") * col("cn")))
@@ -598,7 +574,7 @@ object Sim {
     */
   private[graft] def incrCandCounts(s: SparkSession, dir: String): DataFrame =
     incrProbed(s, dir)
-      .join(ivfHistReps(s, dir).groupBy("cell").agg(count(lit(1)).as("nreps")),
+      .join(artifact(s, dir, "ivf_hist_reps").groupBy("cell").agg(count(lit(1)).as("nreps")),
         Seq("cell"), "left")
       .groupBy("qrep").agg(coalesce(sum(col("nreps")), lit(0L)).as("ncand"))
 
@@ -639,9 +615,9 @@ object Sim {
     */
   private[graft] def ivfIncrementalWith(
       s: SparkSession, dir: String, leg: Option[Boolean]): DataFrame = {
-    val hreps = ivfHistReps(s, dir)
-    val hmem = ivfHistMembers(s, dir)
-    val cent = ivfHistCentroids(s, dir)
+    val hreps = artifact(s, dir, "ivf_hist_reps")
+    val hmem = artifact(s, dir, "ivf_hist_members")
+    val cent = artifact(s, dir, "ivf_hist_centroids")
     val bv = batchVectors(s, dir)
     val breps = incrBreps(s, dir)
     val bmem = incrBmem(s, dir)
@@ -687,8 +663,8 @@ object Sim {
       // corpus; the LUT below is NOT (one row per batch-rep × probed
       // cell — it grows with the BATCH), so its join carries no hint
       // and AQE picks broadcast vs shuffle from the measured size.
-      val cb = ivfHistCodebook(s, dir)
-      val codes = ivfHistCodes(s, dir)
+      val cb = artifact(s, dir, "ivf_hist_codebook")
+      val codes = artifact(s, dir, "ivf_hist_codes")
       val lut = probed.join(broadcast(cb), Seq("cell"))
         .withColumn("pdot", vec_dot(expr("slice(qv, sub * 8 + 1, 8)"), col("cw")))
         .groupBy(col("qrep"), col("cell"))

@@ -87,11 +87,6 @@ object Text {
       hist.unionByName(batch.join(hist, Seq("gram"), "left_anti")))
   }
 
-  private def gramHistVocab(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "text.gram.hist" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "gram_hist_vocab")(buildGramHistVocab(s, dir))
-    }
-
   private val ngramNovelty: Q = (s, dir) => {
     // the batch side grams ONLY batch documents (per-row gramming
     // commutes with the doc filter); with a persisted index active the
@@ -102,7 +97,7 @@ object Text {
         Tables(s, dir, "documents").filter(expr(isBatchDocExpr))
           .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       else Tables.docsSpread(s, dir).filter(expr(isBatchDocExpr))
-    val hist = gramHistVocab(s, dir).withColumn("seen", lit(1L))
+    val hist = graft.IndexStore.artifact(s, dir, "gram_hist_vocab").withColumn("seen", lit(1L))
     gramsOf(batchDocs)
       .groupBy("doc_id", "gram").agg(count(lit(1)).as("cnt"))
       .join(hist, Seq("gram"), "left")

@@ -227,15 +227,10 @@ object Train {
         (coalesce(col("hw"), lit(0L)) + coalesce(col("bw"), lit(0L))).as("cw")))
   }
 
-  private def lmHistCounts(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "train.lm.hist" + graft.IndexStore.tag) {
-      graft.IndexStore.loadOrBuild(s, "lm_hist_counts")(buildLmHistCounts(s, dir))
-    }
-
   private val isBatchDocExpr = graft.Incr.isBatchDoc
 
   private val lmPplFilter: Q = (s, dir) => {
-    val lm = lmHistCounts(s, dir)
+    val lm = graft.IndexStore.artifact(s, dir, "lm_hist_counts")
     val nv = lm.agg(sum(col("cw")).as("n"), count(lit(1)).as("v"))
     // the batch side tokenizes ONLY batch documents (filter before the
     // explode — per-row tokenization commutes with the doc filter)

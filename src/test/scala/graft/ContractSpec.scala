@@ -68,4 +68,30 @@ class ContractSpec extends AnyFunSuite {
     // non-driver dirs are exempt: specs stage reduced synthetic corpora
     Tables.checkSchema("/tmp/anywhere", "documents", drifted)
   }
+
+  test("Cached.of keys one key separately under no root and under an index root") {
+    val s = TestSpark.spark
+    val (dir, key, root) = ("contract-dir", "contract.root.keying", "/contract/root")
+    val plain = Cached.of(s, dir, key)(s.range(1).toDF())
+    try {
+      IndexStore.use(Some(root))
+      val rooted = Cached.of(s, dir, key)(s.range(2).toDF())
+      assert(rooted ne plain)
+      assert(rooted.count() == 2)
+      assert(Cached.of(s, dir, key)(fail("entry under the root must be reused")) eq rooted)
+    } finally {
+      IndexStore.use(None)
+      Cached.evictKeySuffix(s"@$root")
+    }
+    assert(Cached.of(s, dir, key)(fail("entry without a root must be reused")) eq plain)
+    assert(plain.count() == 1)
+    Cached.evictKeySuffix(key)
+  }
+
+  test("IndexStore.artifact rejects an unregistered name and names it") {
+    val e = intercept[IllegalArgumentException] {
+      IndexStore.artifact(TestSpark.spark, TestSpark.sf, "no_such_artifact")
+    }
+    assert(e.getMessage.contains("no_such_artifact"), e.getMessage)
+  }
 }

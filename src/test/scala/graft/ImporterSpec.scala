@@ -99,4 +99,36 @@ class ImporterSpec extends AnyFunSuite {
     // rejected before the scan: nothing was written
     assert(new java.io.File(tmp).list().isEmpty)
   }
+
+  test("importParquet without a columnMap rejects an unsafe source column before any write") {
+    val src = java.nio.file.Files.createTempDirectory("graft_imp_badcol").toString
+    Seq((1, 2)).toDF("id", "bad col").write.mode("overwrite").parquet(s"$src/in")
+    val out = java.nio.file.Files.createTempDirectory("graft_imp_badcol_out").toString
+    val e = intercept[IllegalArgumentException] {
+      Importer.importParquet(spark, s"$src/in", "badcol",
+        sinkDir = Some(out), copyDir = Some(out))
+    }
+    assert(e.getMessage.contains("Unsafe column name: bad col"))
+    assert(new java.io.File(out).list().isEmpty)
+  }
+
+  test("importParquet rejects a non-positive batchSize up front") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_imp_batch").toString
+    val e = intercept[IllegalArgumentException] {
+      Importer.importParquet(spark, s"${TestSpark.sf}/region.parquet", "region_batch",
+        copyDir = Some(tmp), batchSize = 0)
+    }
+    assert(e.getMessage.contains("batchSize"))
+    assert(new java.io.File(tmp).list().isEmpty)
+  }
+
+  test("CopySink.copyInto rejects a non-positive batchSize up front") {
+    // on the driver, before any partition runs: an executor-side
+    // failure would surface wrapped in a SparkException instead
+    val e = intercept[IllegalArgumentException] {
+      graft.ingest.CopySink.copyInto(Seq((1, "a")).toDF("id", "name"), "users",
+        () => new RecordingCopyTarget.Recorder, batchSize = 0)
+    }
+    assert(e.getMessage.contains("batchSize"))
+  }
 }

@@ -41,7 +41,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
 
   test("trussness slices equal the k-truss survivor sets (k = 4, 5)") {
     val tn = operators.Graph.trussnessHIndex(s, dir)
-    val nEdges = operators.Graph.edges1995(s, dir).count()
+    val nEdges = IndexStore.artifact(s, dir, "graph_y95_edges").count()
     assert(tn.count() == nEdges, "decomposition must cover every slice edge")
     Seq(4, 5).foreach { k =>
       val slice = tn.filter(col("trussness") >= k)
