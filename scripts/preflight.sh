@@ -16,7 +16,10 @@ sbt -batch Test/compile
 echo "[preflight] compile perfbench"
 (cd perfbench && sbt -batch compile)
 echo "[preflight] verify dump at $SF_DIR"
+# Verify exits 1 when any query threw (after writing every other one and
+# listing the failed names), which stops this script here
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
 echo "[preflight] oracle compare"
-python3 scripts/check.py "$SF_DIR" "$OUT_DIR" | tail -3
+# every FAIL line with its detail rows, then the summary
+python3 scripts/check.py "$SF_DIR" "$OUT_DIR" | grep -v -E '^(PASS|SKIP) '
 echo "[preflight] GREEN"

@@ -250,10 +250,13 @@ object IndexStore {
     * silently falls back to the in-session build), so the one-time
     * derivation becomes a build-time bill exactly like the graph
     * substrate, without weakening any contract. The frame is
-    * session-cached under `name`, like [[artifact]].
+    * session-cached under `name`, like [[artifact]]; a name missing from
+    * [[corpusCaches]] fails fast, since the panel never writes it.
     */
   def corpusCached(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
+      build: => DataFrame): DataFrame = {
+    if (!corpusCaches.exists(_._1 == name))
+      throw new IllegalArgumentException(s"unregistered corpus cache '$name'")
     Cached.of(s, dir, name)(active match {
       // while writeAll is REBUILDING this very root (overwrite mode), a
       // read-back would resolve to the parquet the build is about to
@@ -270,6 +273,7 @@ object IndexStore {
         s.read.parquet(s"$r/_corpus_cache/$name")
       case _ => build
     })
+  }
 
   private val srcChecked =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Option[String]]()

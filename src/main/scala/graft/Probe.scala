@@ -15,10 +15,10 @@ object Probe {
     val doExplain = args.contains("explain")
     val runs = args.drop(2).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
     val spark = Session.local()
-    // warm the JVM + parquet footers so timings reflect the query
-    Tables.all.foreach { t =>
-      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
+    // warm the JVM + parquet footers so timings reflect the query; a
+    // corpus may lack some tables, but a table that exists must load
+    Tables.all.filter(t => new java.io.File(s"$sfDir/$t.parquet").exists)
+      .foreach(t => Tables(spark, sfDir, t).count())
     name.split(',').foreach { nm =>
       val fn = SparkEntry.queries(nm)
       if (doExplain) fn(spark, sfDir).explain("formatted")

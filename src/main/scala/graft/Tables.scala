@@ -192,26 +192,65 @@ object ShuffleWidth {
   * in one JVM), and callers never spell the root themselves.
   */
 object Cached {
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  /** One entry: completed with the persisted frame by the thread that
+    * builds it (`builder`), or removed from [[entries]] and failed.
+    */
+  private final class Slot(val builder: Thread)
+    extends java.util.concurrent.CompletableFuture[DataFrame]
 
-  /** NOT computeIfAbsent: cache builders call `of` for the caches they
-    * depend on (postings -> contentGroups -> shingles), and a nested
-    * computeIfAbsent on the same map throws IllegalStateException
-    * "Recursive update" — which query hits it first depends on Map
-    * iteration order, so it surfaced as a nondeterministic per-SF verify
-    * failure. get/putIfAbsent allows re-entrancy; if two threads race,
-    * the loser unpersists its duplicate and adopts the winner's frame.
+  private val entries =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Slot]()
+
+  /** Single-flight: the first caller of a (session, dir, key@root) runs
+    * `build` and persists the frame; concurrent callers of the same key
+    * wait for that build and get the same frame. A build that throws
+    * leaves no entry, so the next call builds again, and its waiters see
+    * the failure. Not computeIfAbsent: builders call `of` for the caches
+    * they depend on (postings -> contentGroups -> shingles), which a
+    * nested computeIfAbsent on the same map rejects ("Recursive update");
+    * the slot is claimed with putIfAbsent and built outside any map lock.
+    * A builder that re-enters its own key on the same thread throws
+    * instead of waiting on itself.
+    *
+    * Waiters block while holding whatever monitors they hold, so no
+    * builder may take the session monitor ([[NoAqe]], [[ShuffleWidth]]):
+    * a waiter inside one of those would deadlock against it. No builder
+    * does today.
     */
   def of(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
     val k = (s, dir, IndexStore.active.fold(key)(r => s"$key@$r"))
-    val existing = entries.get(k)
-    if (existing != null) existing
-    else {
-      val built = build.persist()
-      val prev = entries.putIfAbsent(k, built)
-      if (prev != null) { built.unpersist(blocking = false); prev } else built
+    val mine = new Slot(Thread.currentThread)
+    entries.putIfAbsent(k, mine) match {
+      case null =>
+        try { mine.complete(build.persist()); mine.get }
+        catch { case e: Throwable =>
+          entries.remove(k, mine)
+          mine.completeExceptionally(e)
+          throw e
+        }
+      case slot if !slot.isDone && (slot.builder eq Thread.currentThread) =>
+        throw new IllegalStateException(s"Cached.of: '${k._3}' re-entered while building it")
+      case slot =>
+        try slot.get
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     }
+  }
+
+  /** Materialize every accessor's frame for (`s`, `dir`) concurrently,
+    * one thread each, and rethrow the first failure. The builds order
+    * themselves: an accessor whose upstream cache another thread is
+    * building waits for it in [[of]].
+    */
+  def warm(s: SparkSession, dir: String)(accessors: ((SparkSession, String) => DataFrame)*): Unit = {
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val ts = accessors.map { a =>
+      val th = new Thread(() => try a(s, dir).count() catch { case e: Throwable => errs.add(e) })
+      th.setDaemon(true)
+      th.start()
+      th
+    }
+    ts.foreach(_.join())
+    if (!errs.isEmpty) throw errs.peek()
   }
 
   /** Evict (and unpersist) every entry whose key ends with `suffix` —
@@ -228,8 +267,10 @@ object Cached {
     val it = entries.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getKey._3.endsWith(suffix)) {
-        e.getValue.unpersist(blocking = false)
+      // a failed build removes its slot before failing it, so every done
+      // slot left in the map holds a frame; in-flight builds are kept
+      if (e.getKey._3.endsWith(suffix) && e.getValue.isDone) {
+        e.getValue.get.unpersist(blocking = false)
         it.remove()
       }
     }
@@ -268,30 +309,6 @@ object Scratch {
       }
       base
     }
-}
-
-/** Run independent one-time cache builds concurrently — Spark schedules
-  * jobs submitted from multiple threads of one session side by side,
-  * and the prewarm phases were latency-bound on sequential job
-  * barriers, not on cluster capacity (r14 verdict ask #4). Callers
-  * partition their builds into dependency-disjoint chains; the shared
-  * upstream caches are built BEFORE the fan-out so no two threads race
-  * on one Cached key (Cached.of tolerates the race, but the loser's
-  * duplicate build would waste exactly the time this helper saves).
-  * The first failure rethrows to the prewarm's caller.
-  */
-object Par {
-  def run(tasks: Seq[() => Unit]): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = tasks.map { t =>
-      val th = new Thread(() => try t() catch { case e: Throwable => errs.add(e) })
-      th.setDaemon(true)
-      th.start()
-      th
-    }
-    ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
 }
 
 /** Determinism helpers so Spark results hash-match the DuckDB oracle.

@@ -188,13 +188,13 @@ object Dedup {
     * twice per session. The union threshold keeps the PERSISTED table
     * output-bounded (≤ the two result sets at rep grain) — the
     * unfiltered pair-agg would be candidate-sized, which is exactly what
-    * this repo never materializes. Session-cached only (the artifact
-    * name is NOT in the corpus-cache panel). Pair keys are 8-byte longs,
-    * not 32-char md5 strings: two long keys cut the pair-row shuffle
-    * width ~4×, and collisions are the sh64 argument (P ≈ |reps|²/2⁶⁵).
+    * this repo never materializes. Session-cached only (not in the
+    * corpus-cache panel). Pair keys are 8-byte longs, not 32-char md5
+    * strings: two long keys cut the pair-row shuffle width ~4×, and
+    * collisions are the sh64 argument (P ≈ |reps|²/2⁶⁵).
     */
   private[graft] def pairSharedCounts(s: SparkSession, dir: String): DataFrame =
-    corpusCached(s, dir, "dedup_pair_shared") {
+    graft.Cached.of(s, dir, "dedup_pair_shared") {
       val exf = postings(s, dir).withColumn("ck", expr("xxhash64(ckey)"))
       exf.as("a").join(exf.as("b"),
           col("a.s") === col("b.s") && col("a.ck") < col("b.ck"))
@@ -211,7 +211,7 @@ object Dedup {
     * consumers as [[pairSharedCounts]].
     */
   private[graft] def groupRareCounts(s: SparkSession, dir: String): DataFrame =
-    corpusCached(s, dir, "dedup_group_rare") {
+    graft.Cached.of(s, dir, "dedup_group_rare") {
       postings(s, dir).groupBy("ckey")
         .agg(count(lit(1)).as("sr"), first(col("n")).as("n"))
     }
@@ -1243,37 +1243,10 @@ object Dedup {
     * official bench charged ~650 s of cache materialization to four
     * queries that take ~13 s warm).
     */
-  def prewarm(s: SparkSession, dir: String): Unit = {
-    // shared base chain first — everything below derives from it, so
-    // building it up front keeps the concurrent chains off each
-    // other's Cached keys
-    Tables.docsSpread(s, dir).count()
-    shingles(s, dir).count()
-    contentGroups(s, dir).count()
-    // the derived chains are dependency-disjoint: build them
-    // concurrently (graft.Par) — the phase was latency-bound on
-    // sequential job barriers (r14 verdict ask #4: 18.5 s of the
-    // ~60 s sf0.1 warmup, measured mostly idle cores)
-    graft.Par.run(Seq(
-      // the unfiltered pair-agg + per-group rare counts (r16: shared by
-      // dedup_ngram_jaccard AND dedup_containment) derive from postings
-      () => {
-        postings(s, dir).count()
-        graft.Par.run(Seq(
-          () => pairSharedCounts(s, dir).count(),
-          () => groupRareCounts(s, dir).count()))
-      },
-      () => {
-        minhashBands(s, dir).count()
-        minhashPairs(s, dir).count()
-      },
-      () => simhashes(s, dir).count(),
-      () => {
-        rareStringSets(s, dir).count()
-        ngramMinhashSigs(s, dir).count()
-        ngramMinhashPairs(s, dir).count()
-      }))
-  }
+  def prewarm(s: SparkSession, dir: String): Unit =
+    graft.Cached.warm(s, dir)(Tables.docsSpread, shingles, contentGroups, postings,
+      pairSharedCounts, groupRareCounts, minhashBands, minhashPairs, simhashes,
+      rareStringSets, ngramMinhashSigs, ngramMinhashPairs)
 
   val queries: Map[String, Q] = Map(
     "dedup_exact" -> exact,

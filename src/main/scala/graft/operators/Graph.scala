@@ -168,32 +168,15 @@ object Graph {
     * consumed by >= 2 suite queries belong here — the full-graph
     * triEdgeRows / edgeSupports chain serves graph_truss_support alone,
     * so its one-time build rides that query's first run (r11 verdict
-    * ask #5: warmup attribution + trim).
+    * ask #5: warmup attribution + trim). The history CC labels and the
+    * batch slice serve graph_cc_incremental alone but are warmed anyway,
+    * so its number measures the nightly fold, not the one-time history
+    * pointer-doubling.
     */
-  def prewarm(s: SparkSession, dir: String): Unit = {
-    // the co-purchase edge set feeds every chain below — build it first
-    edges(s, dir).count()
-    // three dependency-disjoint chains run concurrently (graft.Par,
-    // r14 verdict ask #4): the main-substrate chain, the frozen 1995
-    // truss slice, and the bipartite history CC labels (ask #5 — a
-    // single-consumer cache by the usual rule, prewarmed by verdict
-    // exception so graph_cc_incremental's committed number measures
-    // the nightly fold, not the one-time history pointer-doubling)
-    graft.Par.run(Seq(
-      () => {
-        adjacency(s, dir).count()
-        degrees(s, dir).count()
-        graft.Par.run(Seq(
-          () => lpaLabels(s, dir).count(),
-          () => triangleRows(s, dir).count()))
-      },
-      () => {
-        artifact(s, dir, "graph_y95_edges").count()
-        artifact(s, dir, "graph_y95_trie").count()
-        edgeSup1995(s, dir).count()
-      },
-      () => { artifact(s, dir, "graph_hist_cc_labels").count(); ccBatchE(s, dir).count() }))
-  }
+  def prewarm(s: SparkSession, dir: String): Unit =
+    graft.Cached.warm(s, dir)(edges, adjacency, degrees, lpaLabels, triangleRows,
+      artifact(_, _, "graph_y95_edges"), artifact(_, _, "graph_y95_trie"), edgeSup1995,
+      artifact(_, _, "graph_hist_cc_labels"), ccBatchE)
 
   /** Degree-ordered orientation of [[edges]] — the shared substrate of
     * every triangle-based query ([[triangles]], [[trussSupport]],

@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 /** Driver-contract guards: every query must carry a DuckDB oracle (the
   * driver silently downgrades oracle-less queries to a rows-only check,
@@ -93,5 +98,70 @@ class ContractSpec extends AnyFunSuite {
       IndexStore.artifact(TestSpark.spark, TestSpark.sf, "no_such_artifact")
     }
     assert(e.getMessage.contains("no_such_artifact"), e.getMessage)
+  }
+
+  test("IndexStore.corpusCached rejects a name outside the corpus-cache panel and names it") {
+    val e = intercept[IllegalArgumentException] {
+      IndexStore.corpusCached(TestSpark.spark, TestSpark.sf, "no_such_cache")(
+        fail("an unregistered corpus cache must not build"))
+    }
+    assert(e.getMessage.contains("no_such_cache"), e.getMessage)
+  }
+
+  /** `body` on 8 pool threads released together; their results or failures. */
+  private def eightAtOnce(body: => DataFrame): Seq[Future[DataFrame]] = {
+    val pool = Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val go = new CountDownLatch(1)
+    try {
+      val fs = (1 to 8).map(_ => Future { go.await(); body })
+      go.countDown()
+      fs.foreach(f => Await.ready(f, 60.seconds))
+      fs
+    } finally pool.shutdown()
+  }
+
+  test("Cached.of is single-flight: concurrent callers of one key build once and share the frame") {
+    val s = TestSpark.spark
+    val key = "contract.single.flight"
+    val builds = new AtomicInteger
+    val frames = eightAtOnce(Cached.of(s, "contract-dir", key) {
+      builds.incrementAndGet()
+      Thread.sleep(200)
+      s.range(3).toDF()
+    }).map(Await.result(_, 1.second))
+    assert(builds.get == 1)
+    assert(frames.forall(_ eq frames.head))
+    assert(frames.head.count() == 3)
+    Cached.evictKeySuffix(key)
+  }
+
+  test("Cached.of: a failed build reaches its waiters and leaves no entry, so the next call builds") {
+    val s = TestSpark.spark
+    val key = "contract.failed.build"
+    eightAtOnce(Cached.of(s, "contract-dir", key) {
+      Thread.sleep(200)
+      throw new IllegalStateException("build failed")
+    }).foreach { f =>
+      val e = intercept[IllegalStateException](Await.result(f, 1.second))
+      assert(e.getMessage == "build failed")
+    }
+    val builds = new AtomicInteger
+    val df = Cached.of(s, "contract-dir", key) { builds.incrementAndGet(); s.range(2).toDF() }
+    assert(builds.get == 1)
+    assert(df.count() == 2)
+    Cached.evictKeySuffix(key)
+  }
+
+  test("Cached.of: re-entering the key being built on the same thread throws and names it") {
+    val s = TestSpark.spark
+    val key = "contract.reentry"
+    val e = intercept[IllegalStateException] {
+      Cached.of(s, "contract-dir", key)(Cached.of(s, "contract-dir", key)(s.range(1).toDF()))
+    }
+    assert(e.getMessage.contains(key), e.getMessage)
+    // the failed outer build left no entry behind
+    assert(Cached.of(s, "contract-dir", key)(s.range(1).toDF()).count() == 1)
+    Cached.evictKeySuffix(key)
   }
 }
