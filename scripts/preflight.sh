@@ -17,9 +17,13 @@ echo "[preflight] compile perfbench"
 (cd perfbench && sbt -batch compile)
 echo "[preflight] verify dump at $SF_DIR"
 # Verify exits 1 when any query threw (after writing every other one and
-# listing the failed names), which stops this script here
-sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
+# listing the failed names), which stops this script here; its stderr is
+# kept for the fixpoint report below
+sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" 2> >(tee "$OUT_DIR/verify.stderr" >&2)
 echo "[preflight] oracle compare"
 # every FAIL line with its detail rows, then the summary
 python3 scripts/check.py "$SF_DIR" "$OUT_DIR" | grep -v -E '^(PASS|SKIP) '
+# report only: a loop whose round budget bound before its fixpoint
+echo "[preflight] unconverged fixpoints"
+grep -E "fixpoint '.+' hit its [0-9]+-round budget unconverged" "$OUT_DIR/verify.stderr" || echo "none"
 echo "[preflight] GREEN"

@@ -6,7 +6,8 @@ package graft
   * Every timed run forces the whole result: it hashes every output column
   * into one aggregate (`xxhash64(struct(*))`, as perfbench does), so a
   * query whose cost lives in a column nothing else references is measured
-  * in full without collecting the rows.
+  * in full without collecting the rows. Each run also reports the Spark
+  * jobs it ran (its own job group).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -26,10 +27,13 @@ object Probe {
       // (sim_ivf_plan, dedup_incr_plan) whose VALUES are the probe result
       if (args.contains("show")) fn(spark, sfDir).show(20, false)
       (1 to runs).foreach { i =>
+        val group = s"probe-$nm-$i"
+        spark.sparkContext.setJobGroup(group, nm)
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir)
           .selectExpr("xxhash64(struct(*)) AS h").agg(Map("h" -> "count")).head().getLong(0)
-        println(f"[probe] $nm run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n rows")
+        val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+        println(f"[probe] $nm run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n rows, $jobs jobs")
       }
     }
     spark.stop()

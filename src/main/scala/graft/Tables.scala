@@ -162,6 +162,41 @@ object NoAqe {
   }
 }
 
+/** The fixpoint loop every iterative operator runs on the Spark driver:
+  * round r = 1, 2, … calls `step(state, r)`, which returns the next state
+  * and whether anything changed, until a round changes nothing
+  * (converged) or `maxRounds` rounds have run. A loop whose budget binds
+  * unconverged logs one WARN naming it; callers whose result must be a
+  * fixpoint call [[Fixpoint.Result.requireConverged]].
+  */
+object Fixpoint {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** `rounds` counts every round run, the final no-change round too. */
+  final case class Result[S](name: String, state: S, rounds: Int, converged: Boolean) {
+    /** `state`, or an IllegalStateException naming the loop and `what`. */
+    def requireConverged(what: String): S = {
+      if (!converged) throw new IllegalStateException(
+        s"fixpoint '$name' still changing at its $rounds-round budget — $what")
+      state
+    }
+  }
+
+  def run[S](name: String, maxRounds: Int, init: S)(step: (S, Int) => (S, Boolean)): Result[S] = {
+    var state = init
+    var rounds = 0
+    var changed = true
+    while (changed && rounds < maxRounds) {
+      rounds += 1
+      val (next, ch) = step(state, rounds)
+      state = next
+      changed = ch
+    }
+    if (changed) log.warn(s"fixpoint '$name' hit its $maxRounds-round budget unconverged")
+    Result(name, state, rounds, !changed)
+  }
+}
+
 /** Run an EAGERLY-EXECUTING body under a reduced shuffle width — the
   * manual analog of AQE partition coalescing for the latency-bound
   * fixpoint loops that run AQE-free (their per-stage materialization

@@ -1164,13 +1164,10 @@ object Dedup {
     * production dedup actually consumes: pick one canonical doc per
     * CLUSTER, not per pair (pairs A-B and B-C must collapse to one
     * survivor, not two). cluster_id = min doc_id in the component, a
-    * fixpoint independent of algorithm, so the iterative min-label
-    * propagation here and the oracle's recursive transitive closure
-    * agree exactly. Each iteration is one join + hash agg on the edge
-    * list (the standard large-graph CC shape — GraphX does the same);
-    * iterations are bounded by component diameter, which for duplicate
-    * clusters is tiny. Every round materializes via persist+count so
-    * lineage never re-executes the loop from scratch.
+    * fixpoint independent of algorithm, so Graph's hash-min label loop
+    * here and the oracle's recursive transitive closure agree exactly.
+    * Rounds are bounded by component diameter, which for duplicate
+    * clusters is tiny.
     */
   private val clusters: Q = (s, dir) => graft.NoAqe.during(s) {
     val pairs = minhashPairs(s, dir).select(col("doc_a"), col("doc_b"))
@@ -1182,34 +1179,12 @@ object Dedup {
     // — 2 converged rounds were spending seconds per action on plan
     // compilation alone. At 100 TB the coalesce factor scales with
     // |edges|, not corpus size.
-    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionAll(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      // lazy (r17): round 1's convergence count is the first action and
-      // materializes the edge checkpoint as a side effect — one fewer job
+    val adj = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      // lazy: the loop's first action materializes the checkpoint
       .coalesce(4).localCheckpoint(false)
-    var lab = edges.select(col("u").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id")).coalesce(4).persist()
-    var changed = 1L
-    var iter = 0
-    // the persisted frame backing the CURRENT `lab` (initial labels, then
-    // each round's `next`); superseded rounds are dropped once the new
-    // round materializes — without this the loop leaks one persisted
-    // frame per iteration for the session lifetime
-    var labStore: DataFrame = lab
-    while (changed > 0 && iter < 25) {
-      val nbr = edges.join(lab, edges("v") === lab("doc_id"))
-        .groupBy(col("u")).agg(min(col("cluster_id")).as("nl"))
-      val next = lab.as("l").join(nbr, col("l.doc_id") === col("u"), "left")
-        .select(col("l.doc_id").as("doc_id"), col("l.cluster_id").as("old"),
-          least(col("l.cluster_id"), coalesce(col("nl"), col("l.cluster_id")))
-            .as("cluster_id"))
-        .persist()
-      changed = next.filter(col("cluster_id") < col("old")).count()
-      labStore.unpersist(blocking = false)
-      labStore = next
-      lab = next.select("doc_id", "cluster_id")
-      iter += 1
-    }
+    val lab = Graph.hashMinLabels("dedup_clusters", adj, 25).state
+      .select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
     val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     lab.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))

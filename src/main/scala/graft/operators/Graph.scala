@@ -539,6 +539,8 @@ object Graph {
       .orderBy("rk")
   }
 
+  private val kcoreRounds = 12
+
   /** k-core decomposition (k=3, synchronous peel to FIXPOINT) — the
     * degeneracy primitive behind community cores, spam rings, and graph
     * sparsification: repeatedly delete nodes of degree < k until no
@@ -553,58 +555,48 @@ object Graph {
     * removed nodes only shrink the frontier, so a 100 TB graph pays
     * O(rounds) edge passes, never quadratic work.
     *
-    * Round budget: 12 — a safety valve mirrored EXACTLY by the oracle's
-    * 12 unrolled rounds. Peeling is monotone (a round that peels
-    * nothing leaves the graph unchanged, so every later round also
-    * peels nothing), which makes the early exit and the oracle's no-op
-    * tail rounds produce identical output whenever the fixpoint lands
-    * within budget; RoundSevenOpsSpec asserts it does (re-peeling the
+    * Round budget: [[kcoreRounds]] — a safety valve the oracle unrolls
+    * exactly. Peeling is monotone (a round that peels nothing leaves the
+    * graph unchanged, so every later round also peels nothing), which
+    * makes the early exit and the oracle's no-op tail rounds produce
+    * identical output whenever the fixpoint lands within budget; RoundSevenOpsSpec asserts it does (re-peeling the
     * survivors removes nobody). Output: every node of the original edge
     * list with the round that removed it (0 = genuine 3-core member)
     * and its final degree (0 if peeled, ≥ k if it survived).
     */
   private val kcore: Q = (s, dir) => graft.NoAqe.during(s) {
     val k = 3
-    val maxRounds = 12
     // lazy base state (r17): round 1's peel observable is the first
     // action and materializes both checkpoints through its own job
-    var e = edges(s, dir).select(col("u"), col("v")).localCheckpoint(false)
-    val allNodes = e.select(col("u").as("node"))
-      .unionAll(e.select(col("v").as("node"))).distinct().localCheckpoint(false)
-    var alive = allNodes
-    var removed = allNodes.limit(0)
-      .select(col("node"), lit(0L).as("removed_round"))
-    var r = 1
-    var converged = false
+    val e0 = edges(s, dir).select(col("u"), col("v")).localCheckpoint(false)
+    val allNodes = e0.select(col("u").as("node"))
+      .unionAll(e0.select(col("v").as("node"))).distinct().localCheckpoint(false)
     // LAZY round checkpoints (r17): the per-round convergence observable
     // (low.isEmpty) is the round's ONLY required action — it materializes
     // the round's peel frontier, and the next round's observable
     // materializes the carried state (removed / alive / e) as a side
-    // effect of computing through it. One job per round instead of the
-    // former four eager materialize jobs + the observable. The
+    // effect of computing through it. One job per round; the
     // checkpoints still cut logical-plan lineage each round.
-    while (r <= maxRounds && !converged) {
-      val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val low = alive.join(deg, Seq("node"), "left")
-        .filter(coalesce(col("deg"), lit(0L)) < k)
-        .select(col("node"), lit(r.toLong).as("removed_round"))
-        .localCheckpoint(false)
-      if (low.isEmpty) converged = true
-      else {
-        removed = removed.unionAll(low).localCheckpoint(false)
-        alive = alive.join(low.select("node"), Seq("node"), "left_anti")
+    val (coreE, _, peeled) = graft.Fixpoint.run("graph_kcore", kcoreRounds,
+        (e0, allNodes, allNodes.limit(0).select(col("node"), lit(0L).as("removed_round")))) {
+      case ((e, alive, removed), r) =>
+        val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("deg"))
+        val low = alive.join(deg, Seq("node"), "left")
+          .filter(coalesce(col("deg"), lit(0L)) < k)
+          .select(col("node"), lit(r.toLong).as("removed_round"))
           .localCheckpoint(false)
-        e = e.join(low.select(col("node").as("u")), Seq("u"), "left_anti")
-          .join(low.select(col("node").as("v")), Seq("v"), "left_anti")
-          .localCheckpoint(false)
-        r += 1
-      }
-    }
-    val finalDeg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
+        if (low.isEmpty) ((e, alive, removed), false)
+        else ((e.join(low.select(col("node").as("u")), Seq("u"), "left_anti")
+            .join(low.select(col("node").as("v")), Seq("v"), "left_anti")
+            .localCheckpoint(false),
+          alive.join(low.select("node"), Seq("node"), "left_anti").localCheckpoint(false),
+          removed.unionAll(low).localCheckpoint(false)), true)
+    }.state
+    val finalDeg = coreE.select(col("u").as("node")).unionAll(coreE.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("core_deg"))
     allNodes
-      .join(removed, Seq("node"), "left")
+      .join(peeled, Seq("node"), "left")
       .join(finalDeg, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("removed_round"), lit(0L)).as("removed_round"),
@@ -612,74 +604,53 @@ object Graph {
       .orderBy("node")
   }
 
-  /** Connected components by synchronous min-label propagation (hash-min
-    * / HCC): every node starts labeled with its own id; each round a node
-    * takes the minimum label among itself and its neighbors; at fixpoint
-    * every node carries the minimum node id reachable from it — the
-    * canonical component id. Per-round cost is ONE edge-linear join
-    * (adjacency is cached pre-partitioned by src, so only the node-sized
-    * label table moves — the Pregel invariant from graph_pagerank) plus
-    * one map-side-combining min aggregate; rounds needed = the
-    * eccentricity of each component's minimum node, small for the
-    * co-purchase graph (dense overlap through shared orders). At 100 TB
-    * the same loop runs with the edge list partitioned once; for
-    * path-shaped / high-diameter graphs use the SHIPPED pointer-doubling
-    * sibling `graph_cc_pointer_doubling` ([[pointerDoubleLabels]]),
-    * which drops rounds to O(log d).
-    *
-    * Round budget: 8, mirrored by the oracle's 8 unrolled rounds.
-    * Propagation is monotone (labels only decrease, a no-change round
-    * stays at fixpoint forever), so the early exit and the oracle's
-    * no-op tail agree whenever the fixpoint lands within budget;
-    * RoundEightOpsSpec asserts one more round changes nothing and that
-    * both endpoints of every edge agree at fixpoint. Output: every node
-    * with its component id (= min reachable node id) and the component
-    * size.
+  /** Min-label propagation to the min reachable id (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"): every node of the
+    * symmetric (src, dst) adjacency starts labeled with its own id and
+    * each round maps the label table through `round`. Labels only ever
+    * decrease, so the round changed something iff the exact label sum
+    * dropped — one narrow aggregate job over the fresh checkpoint
+    * instead of a node×node join per round ([[lblSum]]). Each round is
+    * LAZILY checkpointed (eager=false: the no-arg overload is eager):
+    * the sum job is the first action and materializes it, so a round is
+    * one job; the pre-loop sum materializes the initial state the same way.
     */
-  /** Hash-min label rounds over an arbitrary symmetric (src, dst)
-    * adjacency — the CC core, exposed for the pointer-doubling spec's
-    * side-by-side convergence comparison. After r rounds every node
-    * carries the min id within graph distance r.
-    */
-  private[graft] def hashMinLabels(adj: DataFrame, maxRounds: Int): DataFrame = {
-    // lazy initial state (r17): the pre-loop convergence sum is the
-    // first action and materializes both checkpoints in one job
+  private def minLabels(name: String, adj: DataFrame, maxRounds: Int)(
+      round: DataFrame => DataFrame): graft.Fixpoint.Result[DataFrame] = {
     val allNodes = adj.select(col("src").as("node")).distinct().localCheckpoint(false)
-    var lbl = allNodes.select(col("node"), col("node").as("lbl")).localCheckpoint(false)
-    var r = 1
-    var converged = false
-    // monotone convergence check via the exact label sum (labels only
-    // ever decrease, so sum-unchanged ⟺ no label changed) — one narrow
-    // aggregate job over the fresh checkpoint instead of the former
-    // node×node join per round (r16; the same trick pointer-doubling
-    // adopted in round 10, worth one full join job × rounds here)
-    var prevSum = lblSum(lbl)
-    while (r <= maxRounds && !converged) {
-      val next = adj.join(lbl, col("src") === col("node"))
-        .select(col("dst").as("node"), col("lbl"))
-        .unionAll(lbl)
-        .groupBy("node").agg(min(col("lbl")).as("lbl"))
-        // LAZY checkpoint — eager=false EXPLICITLY: the no-arg overload
-        // is eager in Spark 4.1.2 (bytecode: checkpoint(true, false)),
-        // so the r16 call here still ran a materialize job per round.
-        // The sum job below is the first action and materializes the
-        // checkpoint as a side effect — one job per round, for real (r17)
-        .localCheckpoint(false)
-      val nextSum = lblSum(next)
-      if (nextSum.compareTo(prevSum) == 0) converged = true
-      prevSum = nextSum
-      lbl = next
-      r += 1
+    val lbl0 = allNodes.select(col("node"), col("node").as("lbl")).localCheckpoint(false)
+    val res = graft.Fixpoint.run(name, maxRounds, (lbl0, lblSum(lbl0))) {
+      case ((lbl, sum), _) =>
+        val next = round(lbl).localCheckpoint(false)
+        val nextSum = lblSum(next)
+        ((next, nextSum), nextSum.compareTo(sum) != 0)
     }
-    lbl
+    res.copy(state = res.state._1)
   }
 
-  /** Exact decimal label sum — the monotone-convergence observable shared
-    * by [[hashMinLabels]] and [[pointerDoubleLabelsWithRounds]]. SUM over
-    * zero rows is NULL: an EMPTY graph is legitimate input (the CC fold
-    * against an already-merged label artifact leaves no
-    * component-connecting edges — the idempotent re-serve) and must read
-    * as a converged fixpoint, not an NPE.
+  /** One hop: every node takes the min label among itself and its
+    * neighbors (one edge-linear join plus a map-side-combining min).
+    */
+  private def gather(adj: DataFrame, lbl: DataFrame): DataFrame =
+    adj.join(lbl, col("src") === col("node"))
+      .select(col("dst").as("node"), col("lbl"))
+      .unionAll(lbl)
+      .groupBy("node").agg(min(col("lbl")).as("lbl"))
+
+  /** Hash-min (HCC) label rounds: [[gather]] per round, so after r
+    * rounds every node carries the min id within graph distance r.
+    */
+  private[graft] def hashMinLabels(
+      name: String, adj: DataFrame, maxRounds: Int): graft.Fixpoint.Result[DataFrame] =
+    minLabels(name, adj, maxRounds)(gather(adj, _))
+
+  /** Exact decimal label sum — the monotone-convergence observable of
+    * [[minLabels]]. SUM over zero rows is NULL: an EMPTY graph is
+    * legitimate input (the CC fold against an already-merged label
+    * artifact leaves no component-connecting edges — the idempotent
+    * re-serve) and must read as a converged fixpoint, not an NPE.
+    * DECIMAL(38,0) keeps the sum exact at any node-id × node-count
+    * scale a cluster can hold.
     */
   private def lblSum(df: DataFrame): java.math.BigDecimal = {
     val s = df.agg(sum(col("lbl").cast("decimal(38,0)")).as("s")).head().getDecimal(0)
@@ -687,79 +658,30 @@ object Graph {
   }
 
   /** Hash-min + POINTER DOUBLING: each round gathers the neighbor
-    * minimum (one edge-linear co-partitioned join, as [[hashMinLabels]])
-    * and then JUMPS every label through the label table itself
-    * (lbl(v) := lbl(lbl(v)) — labels are node ids, so the jump is one
-    * node-linear self-join). Information now travels 2^r hops in r
-    * rounds instead of r, so a diameter-d component converges in
-    * O(log d) rounds — the property the plain hash-min budget cannot
-    * offer on path-shaped graphs (Kiveris et al., "Connected Components
-    * in MapReduce and Beyond" — this is the label-table formulation of
-    * their star-contraction idea; RoundNineOpsSpec proves the separation
-    * on a diameter-50 path where 8-round hash-min returns non-components).
+    * minimum ([[gather]]) and then JUMPS every label through the
+    * previous round's label table (labels are node ids, so the jump is
+    * one node-linear join). Reach doubles — gather adds one hop, the
+    * lookup the previous round's full reach: reach_r = 2·reach_{r-1}+1
+    * = 2^r − 1 on a path — so a diameter-d component converges in
+    * O(log d) rounds, the property the plain hash-min budget cannot
+    * offer on path-shaped graphs (Kiveris et al.; this is the
+    * label-table formulation of their star-contraction idea;
+    * RoundNineOpsSpec proves the separation on a diameter-50 path where
+    * 8-round hash-min returns non-components). The lookup join is total
+    * (labels are node ids and lbl covers every node) and labels only
+    * decrease (lbl_{r-1}(u) ≤ u), so the fixpoint is the same unique
+    * min-reachable-id labeling. Referencing the checkpointed `lbl` leaf
+    * three times (gather join, union, lookup) is safe — the Spark 4
+    * relation-dedup constraint bug (SURVEY §8a#3) trips only on the
+    * DIRECT self-join of one checkpointed frame, which this never builds.
     */
-  private[graft] def pointerDoubleLabels(adj: DataFrame, maxRounds: Int): DataFrame =
-    pointerDoubleLabelsWithRounds(adj, maxRounds)._1
-
-  /** [[pointerDoubleLabels]] plus the number of PRODUCTIVE rounds — the
-    * last round at which any label changed, the observable the O(log d)
-    * claim is probed on (BASELINE.md round-9: a 1 M-node path converges
-    * in ~log₂ rounds where hash-min would need a million). The final
-    * no-change verification round is excluded from the count (it does
-    * run, but its only effect is detecting the fixpoint).
-    */
-  private[graft] def pointerDoubleLabelsWithRounds(
-      adj: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    // lazy initial state (r17): the pre-loop convergence sum is the
-    // first action and materializes both checkpoints in one job
-    val allNodes = adj.select(col("src").as("node")).distinct().localCheckpoint(false)
-    var lbl = allNodes.select(col("node"), col("node").as("lbl")).localCheckpoint(false)
-    var r = 1
-    var lastChange = 0
-    var converged = false
-    // monotone convergence check: labels only ever DECREASE, so the
-    // round changed something iff the exact label sum dropped — one
-    // narrow aggregate job over the fresh checkpoint instead of a
-    // node×node join per round (DECIMAL(38,0) keeps the sum exact at
-    // any node-id × node-count scale a cluster can hold); [[lblSum]]
-    var prevSum = lblSum(lbl)
-    while (r <= maxRounds && !converged) {
-      // gather + jump in ONE materialized round: lbl_r = lbl_{r-1} ∘
-      // gather. The jump goes THROUGH THE PREVIOUS round's table — not
-      // through the gather result as in rounds ≤9 — so reach still
-      // doubles (gather adds one hop, the lookup adds the previous
-      // round's full reach: reach_r = 2·reach_{r-1}+1 = 2^r − 1 on a
-      // path), the lookup join is total (labels are node ids and lbl
-      // covers every node), and labels only decrease (lbl_{r-1}(u) ≤ u,
-      // min monotonicity) — the fixpoint is the same unique
-      // min-reachable-id labeling. Referencing the checkpointed `lbl`
-      // leaf three times (gather join, union, lookup) is safe — the
-      // Spark 4 relation-dedup constraint bug (SURVEY §8a#3) trips only
-      // on the DIRECT self-join of one checkpointed frame, which this
-      // formulation never builds — so the round needs ONE
-      // materialization instead of the former three (the round-10
-      // double-buffer trim).
-      val gather = adj.join(lbl, col("src") === col("node"))
-        .select(col("dst").as("node"), col("lbl"))
-        .unionAll(lbl)
-        .groupBy("node").agg(min(col("lbl")).as("lbl"))
-      val lookup = lbl.select(col("node").as("lbl"), col("lbl").as("lbl2"))
-      // LAZY checkpoint — eager=false EXPLICITLY (the r16 no-arg call
-      // was still eager; see hashMinLabels): the convergence-sum job
-      // right below is the first action, so it materializes the
-      // checkpoint as a side effect — one job per round instead of an
-      // eager-materialize job plus the sum job (r17)
-      val next = gather.join(lookup, "lbl")
+  private[graft] def pointerDoubleLabels(
+      name: String, adj: DataFrame, maxRounds: Int): graft.Fixpoint.Result[DataFrame] =
+    minLabels(name, adj, maxRounds) { lbl =>
+      gather(adj, lbl)
+        .join(lbl.select(col("node").as("lbl"), col("lbl").as("lbl2")), "lbl")
         .select(col("node"), col("lbl2").as("lbl"))
-        .localCheckpoint(false)
-      val nextSum = lblSum(next)
-      if (nextSum.compareTo(prevSum) == 0) converged = true else lastChange = r
-      prevSum = nextSum
-      lbl = next
-      r += 1
     }
-    (lbl, lastChange)
-  }
 
   private def componentsOutput(lbl: DataFrame): DataFrame = {
     // Component sizes via a map-side-partial groupBy + join-back (r17).
@@ -779,8 +701,29 @@ object Graph {
       .orderBy("node")
   }
 
+  private val ccRounds = 8
+
+  /** Connected components by synchronous min-label propagation
+    * ([[hashMinLabels]]): at fixpoint every node carries the minimum
+    * node id reachable from it — the canonical component id. Adjacency
+    * is cached pre-partitioned by src, so only the node-sized label
+    * table moves (the Pregel invariant from graph_pagerank); rounds
+    * needed = the eccentricity of each component's minimum node, small
+    * for the co-purchase graph (dense overlap through shared orders).
+    * For path-shaped / high-diameter graphs use the SHIPPED
+    * pointer-doubling sibling `graph_cc_pointer_doubling`, which drops
+    * rounds to O(log d).
+    *
+    * Round budget: [[ccRounds]], which the oracle unrolls. Propagation
+    * is monotone (labels only decrease, a no-change round stays at
+    * fixpoint forever), so the early exit and the oracle's no-op tail
+    * agree whenever the fixpoint lands within budget; RoundEightOpsSpec
+    * asserts one more round changes nothing and that both endpoints of
+    * every edge agree at fixpoint. Output: every node with its
+    * component id (= min reachable node id) and the component size.
+    */
   private val connectedComponents: Q = (s, dir) =>
-    componentsOutput(hashMinLabels(adjacency(s, dir), 8))
+    componentsOutput(hashMinLabels("graph_connected_components", adjacency(s, dir), ccRounds).state)
 
   /** Connected components via [[pointerDoubleLabels]] — the O(log d)
     * variant a 100 TB graph of unknown diameter needs (8-round hash-min
@@ -792,7 +735,8 @@ object Graph {
     * is pinned in RoundNineOpsSpec on a diameter-50 path.
     */
   private val ccPointerDoubling: Q = (s, dir) =>
-    componentsOutput(pointerDoubleLabels(adjacency(s, dir), 16))
+    componentsOutput(
+      pointerDoubleLabels("graph_cc_pointer_doubling", adjacency(s, dir), 16).state)
 
   // ------------------------------------- incremental connected components
 
@@ -865,15 +809,9 @@ object Graph {
     * round budget is exhausted before the fixpoint — a truncated label
     * table would silently mis-merge components forever after).
     */
-  private[graft] def buildHistCcLabels(s: SparkSession, dir: String): DataFrame = {
-    val budget = 20
-    val (lbl, lastChange) =
-      pointerDoubleLabelsWithRounds(symAdj(s, histBedges(s, dir)), budget)
-    require(lastChange < budget,
-      s"history CC labels still changing at the $budget-round budget — " +
-        "refusing to persist a non-fixpoint label artifact")
-    lbl
-  }
+  private[graft] def buildHistCcLabels(s: SparkSession, dir: String): DataFrame =
+    pointerDoubleLabels("graph_hist_cc_labels", symAdj(s, histBedges(s, dir)), 20)
+      .requireConverged("refusing to persist a non-fixpoint label artifact")
 
   /** Fold tonight's batch edges into a frozen history labeling and
     * return the FULL updated (node, lbl) table — the true min-id
@@ -927,7 +865,8 @@ object Graph {
     // a cluster-sized batch still fans out
     val foldWidth = math.max(4, s.sparkContext.defaultParallelism / 4)
     val res = graft.NoAqe.during(s)(graft.ShuffleWidth.during(s, foldWidth)(
-        pointerDoubleLabels(symAdj(s, fold, Some(foldWidth)), 16)))
+        pointerDoubleLabels("graph_cc_fold", symAdj(s, fold, Some(foldWidth)), 16)
+          .requireConverged("refusing to fold a non-fixpoint labeling into history")))
       .select(col("node").as("olbl"), col("lbl").as("nlbl"))
     val hist2 = histLbl.join(res, col("lbl") === col("olbl"), "left")
       .select(col("node"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
@@ -1001,8 +940,8 @@ object Graph {
   private[graft] def fullSubstrate(s: SparkSession, dir: String): Map[String, DataFrame] = {
     val e = rawPairs(s, dir).distinct()
     val d = degOf(e)
-    val (lbl, _) = pointerDoubleLabelsWithRounds(
-      symAdj(s, encodeB(bpairs(s, dir).distinct())), 20)
+    val lbl = pointerDoubleLabels(
+      "graph_cc_full", symAdj(s, encodeB(bpairs(s, dir).distinct())), 20).state
     Map(
       "graph_hist_edges" -> e,
       "graph_hist_deg" -> d,
@@ -1213,34 +1152,6 @@ object Graph {
       .orderBy("support")
   }
 
-  /** k-truss decomposition (k = 4, synchronous peel to FIXPOINT) over
-    * the current-year (1995) co-purchase slice — the completion
-    * graph_truss_support's single support pass points at: an edge is in
-    * the 4-truss iff it survives repeated deletion of edges with
-    * support < k−2 = 2 (each deletion can drop neighbors' supports, so
-    * one pass is only the first round). The loop NEVER recounts
-    * triangles on the shrinking graph: supports are maintained by
-    * DECREMENT from the cached slice substrate (`graph_y95_trie`) — a dead
-    * triangle is one touching a removed edge, and each surviving edge's
-    * live support is its base support minus the dead triangles through
-    * it — so a round's work is the frontier's triangle lookups, never a
-    * fresh O(m^1.5) intersection or an edge-sized state rewrite. The
-    * year scope is the production shape (a cohesion gate decomposes
-    * recent activity) AND the cost-bounding discipline betweenness'
-    * fixed sources set: peel depth is what a synchronous loop pays for
-    * (each round is a full scheduler barrier — the full-history graph
-    * peels in 8 rounds at sf0.1 and measures latency-bound at ~1.5 s a
-    * round regardless of frontier size; BASELINE.md round-11), and the
-    * yearly slice converges in 3-4 rounds at every sf with a non-trivial
-    * decomposition (sf0.1: removals 16 640, 204, 0 → 164 k survivors).
-    * Round budget 12, mirrored by the oracle's 12 unrolled rounds;
-    * peeling is monotone (a no-removal round leaves supports unchanged
-    * forever), so the no-op tail keeps oracle and early-exit loop
-    * identical whenever the fixpoint lands in budget.
-    * RoundElevenOpsSpec pins the fixpoint (re-peeling survivors removes
-    * nothing) and truss nesting (5-truss ⊆ 4-truss). Output: every
-    * slice edge with the round that removed it (0 = in the 4-truss).
-    */
   /** Id-normalized triangle-EDGE rows: 3 rows per triangle (x < y < z),
     * one per supported edge key (u, v) — the per-edge refinement of
     * [[triangleRows]], session-cached like it. [[trussSupport]]
@@ -1306,8 +1217,37 @@ object Graph {
       artifact(s, dir, "graph_y95_trie").groupBy("u", "v").agg(count(lit(1)).as("support"))
     }
 
+  private val ktrussRounds = 12
+
+  /** k-truss decomposition (k = 4, synchronous peel to FIXPOINT) over
+    * the current-year (1995) co-purchase slice — the completion
+    * graph_truss_support's single support pass points at: an edge is in
+    * the 4-truss iff it survives repeated deletion of edges with
+    * support < k−2 = 2 (each deletion can drop neighbors' supports, so
+    * one pass is only the first round). The loop NEVER recounts
+    * triangles on the shrinking graph: supports are maintained by
+    * DECREMENT from the cached slice substrate (`graph_y95_trie`) — a dead
+    * triangle is one touching a removed edge, and each surviving edge's
+    * live support is its base support minus the dead triangles through
+    * it — so a round's work is the frontier's triangle lookups, never a
+    * fresh O(m^1.5) intersection or an edge-sized state rewrite. The
+    * year scope is the production shape (a cohesion gate decomposes
+    * recent activity) AND the cost-bounding discipline betweenness'
+    * fixed sources set: peel depth is what a synchronous loop pays for
+    * (each round is a full scheduler barrier — the full-history graph
+    * peels in 8 rounds at sf0.1 and measures latency-bound at ~1.5 s a
+    * round regardless of frontier size; BASELINE.md round-11), and the
+    * yearly slice converges in 3-4 rounds at every sf with a non-trivial
+    * decomposition (sf0.1: removals 16 640, 204, 0 → 164 k survivors).
+    * Round budget [[ktrussRounds]], which the oracle unrolls;
+    * peeling is monotone (a no-removal round leaves supports unchanged
+    * forever), so the no-op tail keeps oracle and early-exit loop
+    * identical whenever the fixpoint lands in budget.
+    * RoundElevenOpsSpec pins the fixpoint (re-peeling survivors removes
+    * nothing) and truss nesting (5-truss ⊆ 4-truss). Output: every
+    * slice edge with the round that removed it (0 = in the 4-truss).
+    */
   private[graft] def ktrussPeel(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val maxRounds = 12
     val e0 = artifact(s, dir, "graph_y95_edges")
     val triE = artifact(s, dir, "graph_y95_trie")
     val baseSup = edgeSup1995(s, dir)
@@ -1326,48 +1266,41 @@ object Graph {
     // frontier — sizes are measured driver-side (checkpointed
     // LogicalRDDs carry no stats), with a shuffle-join fallback for a
     // graph whose peel frontier outgrows the driver.
-    var removedParts: List[DataFrame] = Nil
-    // CUMULATIVE removed-edge count, tracked driver-side like nLow: the
-    // removed set is the sum of every frontier so far, so on a deep peel
-    // it outgrows the per-round frontier — it needs the same >1e6
-    // shuffle-join fallback as lowE/decNew or a large peel OOMs the
-    // driver (ADVICE r11 #1)
-    var nRemovedCum = 0L
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (nRemovedCum <= 1000000L) broadcast(df) else df
-    var decCum: Option[DataFrame] = None
-    var r = 1
-    var converged = false
-    while (r <= maxRounds && !converged) {
-      val removedBefore = removedParts.reduceOption(_ unionAll _)
-        .map(_.select(col("u"), col("v")))
-      // the frontier: round 1 reads base supports; later rounds scan
-      // only the (frontier-sized) decrement table, which carries each
-      // damaged edge's base support — an edge with no lost triangle
-      // still holds its round-1-surviving base support, so the round
-      // never rescans the edge table
-      val low = (if (r == 1)
-          e0.join(baseSup, Seq("u", "v"), "left")
-            .filter(coalesce(col("support"), lit(0L)) < k - 2)
-        else {
-          val d = decCum.get.filter(col("s0") - col("d") < k - 2)
-          removedBefore.fold(d)(b => d.join(maybeBcast(b), Seq("u", "v"), "left_anti"))
-        })
-        .select(col("u"), col("v"), lit(r.toLong).as("removed_round"))
-        // lazy for real (eager=false — the r16 no-arg call was eager):
-        // the count below materializes it (r17)
-        .localCheckpoint(false)
-      val nLow = low.count()
-      if (nLow == 0L) converged = true
-      else {
-        decCum = Some(peelRoundDec(triE, baseSup,
-          low.select(col("u"), col("v")), nLow, removedBefore, maybeBcast, decCum))
-        removedParts ::= low
-        nRemovedCum += nLow
-        r += 1
-      }
-    }
-    removedParts.reduceOption(_ unionAll _) match {
+    // The state also carries the CUMULATIVE removed-edge count, tracked
+    // driver-side like nLow: the removed set is the sum of every
+    // frontier so far, so on a deep peel it outgrows the per-round
+    // frontier — it needs the same >1e6 shuffle-join fallback as
+    // lowE/decNew or a large peel OOMs the driver (ADVICE r11 #1)
+    val (removed, _, _) = graft.Fixpoint.run("graph_ktruss", ktrussRounds,
+        (List.empty[DataFrame], Option.empty[DataFrame], 0L)) {
+      case (st @ (removedParts, decCum, nRemovedCum), r) =>
+        def maybeBcast(df: DataFrame): DataFrame =
+          if (nRemovedCum <= 1000000L) broadcast(df) else df
+        val removedBefore = removedParts.reduceOption(_ unionAll _)
+          .map(_.select(col("u"), col("v")))
+        // the frontier: round 1 reads base supports; later rounds scan
+        // only the (frontier-sized) decrement table, which carries each
+        // damaged edge's base support — an edge with no lost triangle
+        // still holds its round-1-surviving base support, so the round
+        // never rescans the edge table
+        val low = (if (r == 1)
+            e0.join(baseSup, Seq("u", "v"), "left")
+              .filter(coalesce(col("support"), lit(0L)) < k - 2)
+          else {
+            val d = decCum.get.filter(col("s0") - col("d") < k - 2)
+            removedBefore.fold(d)(b => d.join(maybeBcast(b), Seq("u", "v"), "left_anti"))
+          })
+          .select(col("u"), col("v"), lit(r.toLong).as("removed_round"))
+          // lazy (eager=false): the count below materializes it
+          .localCheckpoint(false)
+        val nLow = low.count()
+        if (nLow == 0L) (st, false)
+        else ((low :: removedParts,
+          Some(peelRoundDec(triE, baseSup,
+            low.select(col("u"), col("v")), nLow, removedBefore, maybeBcast, decCum)),
+          nRemovedCum + nLow), true)
+    }.state
+    removed.reduceOption(_ unionAll _) match {
       case None => e0.select(col("u"), col("v"), lit(0L).as("removed_round"))
       case Some(rm) => e0.join(rm, Seq("u", "v"), "left")
         .select(col("u"), col("v"),
@@ -1531,9 +1464,8 @@ object Graph {
     * Removed edges get trussness k−1; the loop runs to the empty
     * survivor set, so the output IS the complete decomposition
     * (RoundTwelveOpsSpec pins completeness and k-truss nesting against
-    * [[ktrussPeel]]). Budgets mirror the oracle: 40 nonempty rounds
-    * (the gate corpora need 21-32; the oracle unrolls the same 40 with
-    * no-op tails), levels capped at 24 (max trussness here is 9-16).
+    * [[ktrussPeel]]). Budgets: 40 nonempty rounds (the gate corpora
+    * need 21-32), levels capped at 24 (max trussness here is 9-16).
     * Cost anatomy (the graph_ktruss discipline, BASELINE.md round-12):
     * the bill is nonempty-rounds × round-latency — rounds are a
     * property of the support structure, not the edge count, and every
@@ -1592,16 +1524,16 @@ object Graph {
       // every edge is removed exactly once, at its trussness level; a
       // budget-truncated exit (kcap/maxPeels hit first) would silently
       // drop the unremoved edges from the decomposition, so fail loud
-      // instead — on a corpus that trips this, raise the budgets and the
-      // oracle's mirrored unroll together (ADVICE r12)
+      // instead — on a corpus that trips this, raise the budgets
       require(nRemovedCum >= nEdges,
         s"trussnessDecompose: budgets exhausted at k=$k after $peels peels " +
-          s"with $nRemovedCum of $nEdges edges removed — raise kcap/maxPeels " +
-          "(and the oracle's mirrored unroll) for this corpus")
+          s"with $nRemovedCum of $nEdges edges removed — raise kcap/maxPeels for this corpus")
       removedParts.reduceOption(_ unionAll _)
         .getOrElse(e0.select(col("u"), col("v"), lit(2L).as("trussness")))
     }
   }
+
+  private val trussnessRounds = 12
 
   /** The SHIPPED full decomposition: the triangle-core h-index
     * iteration (Lü et al. 2016's h-index convergence for coreness,
@@ -1620,13 +1552,12 @@ object Graph {
     * h-index hash-agg, one checkpoint. RoundTwelveOpsSpec pins the
     * h-index fixpoint row-identical to [[trussnessDecompose]]'s peel —
     * two independent algorithms, one answer — plus k-truss nesting
-    * against [[ktrussPeel]]. Budgets mirror the oracle: 12 rounds (the
+    * against [[ktrussPeel]]. The oracle unrolls [[trussnessRounds]] (the
     * clamp makes every round monotone, so budget-bound outputs stay
     * equal cross-engine even unconverged; gate corpora converge well
     * inside it).
     */
   private[graft] def trussnessHIndex(s: SparkSession, dir: String): DataFrame = {
-    val maxRounds = 12
     val e0 = artifact(s, dir, "graph_y95_edges")
     val triE = artifact(s, dir, "graph_y95_trie")
     val baseSup = edgeSup1995(s, dir)
@@ -1638,13 +1569,11 @@ object Graph {
       // a filter on the cached substrate, no distinct, no new cache
       val tri = triE.filter(col("u") === col("x") && col("v") === col("y"))
         .select(col("x"), col("y"), col("z"))
-      var rho = e0.join(baseSup, Seq("u", "v"), "left")
+      val rho0 = e0.join(baseSup, Seq("u", "v"), "left")
         .select(col("u"), col("v"), coalesce(col("support"), lit(0L)).as("r"))
         // lazy (r17): round 1's broadcast builds materialize it
         .localCheckpoint(false)
-      var round = 0
-      var converged = false
-      while (round < maxRounds && !converged) {
+      val fin = graft.Fixpoint.run("graph_trussness", trussnessRounds, rho0) { (rho, _) =>
         val tr = tri
           .join(maybeBcast(rho.select(col("u").as("x"), col("v").as("y"), col("r").as("rxy"))),
             Seq("x", "y"))
@@ -1671,11 +1600,9 @@ object Graph {
             // LAZY (r17): the moved-count below scans every partition, so
             // it fully materializes the round — one job instead of two
             .localCheckpoint(false))
-        round += 1
-        if (next.filter(col("moved")).count() == 0L) converged = true
-        rho = next.select(col("u"), col("v"), col("r"))
-      }
-      rho.select(col("u"), col("v"), (col("r") + 2).as("trussness"))
+        (next.select(col("u"), col("v"), col("r")), next.filter(col("moved")).count() > 0L)
+      }.state
+      fin.select(col("u"), col("v"), (col("r") + 2).as("trussness"))
     }
   }
 
@@ -1702,15 +1629,15 @@ object Graph {
     "graph_degree_stats" -> degreeStats,
   )
 
-  /** DuckDB replay of the fixpoint peel: 12 unrolled rounds (the Spark
-    * side's round budget). Rounds past the fixpoint peel nothing —
+  /** DuckDB replay of the fixpoint peel: [[kcoreRounds]] unrolled rounds
+    * (the Spark side's round budget). Rounds past the fixpoint peel nothing —
     * peeling is monotone — so the no-op tail leaves the result equal to
     * the true fixpoint. Each round derives its candidates from the
     * surviving node set (a{r-1}) left-joined to the live degrees, so
     * isolated (degree-0) nodes are peeled, matching the Spark loop.
     */
   private val oKcore: String = {
-    val rounds = (1 to 12).map { r =>
+    val rounds = (1 to kcoreRounds).map { r =>
       val (ep, ap) = (s"e${r - 1}", s"a${r - 1}")
       s"""d$r AS MATERIALIZED (SELECT node, COUNT(*) AS deg FROM
          |  (SELECT u AS node FROM $ep UNION ALL SELECT v FROM $ep) GROUP BY 1),
@@ -1720,7 +1647,7 @@ object Graph {
          |e$r AS MATERIALIZED (SELECT u, v FROM $ep WHERE u NOT IN (SELECT node FROM r$r)
          |  AND v NOT IN (SELECT node FROM r$r))""".stripMargin
     }.mkString(",\n")
-    val rem = (1 to 12)
+    val rem = (1 to kcoreRounds)
       .map(r => s"SELECT node, $r AS removed_round FROM r$r")
       .mkString("\nUNION ALL ")
     s"""WITH pl AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -1730,7 +1657,7 @@ object Graph {
        |$rounds,
        |rem AS MATERIALIZED ($rem),
        |fd AS MATERIALIZED (SELECT node, COUNT(*) AS core_deg FROM
-       |  (SELECT u AS node FROM e12 UNION ALL SELECT v FROM e12) GROUP BY 1)
+       |  (SELECT u AS node FROM e$kcoreRounds UNION ALL SELECT v FROM e$kcoreRounds) GROUP BY 1)
        |SELECT alln.node,
        |  CAST(COALESCE(rem.removed_round, 0) AS BIGINT) AS removed_round,
        |  CAST(COALESCE(fd.core_deg, 0) AS BIGINT) AS core_deg
@@ -1738,12 +1665,12 @@ object Graph {
        |ORDER BY node""".stripMargin
   }
 
-  /** DuckDB replay of hash-min propagation: 8 unrolled materialized
-    * rounds (the Spark side's round budget); rounds past the fixpoint
+  /** DuckDB replay of hash-min propagation: [[ccRounds]] unrolled
+    * materialized rounds (the Spark side's round budget); rounds past the fixpoint
     * are no-ops, so the tail leaves the result at the true fixpoint.
     */
   private val oCc: String = {
-    val rounds = (1 to 8).map { r =>
+    val rounds = (1 to ccRounds).map { r =>
       s"""l$r AS MATERIALIZED (SELECT node, MIN(lbl) AS lbl FROM (
          |  SELECT a.dst AS node, l.lbl FROM adj a JOIN l${r - 1} l ON a.src = l.node
          |  UNION ALL SELECT node, lbl FROM l${r - 1}) GROUP BY node)""".stripMargin
@@ -1753,10 +1680,10 @@ object Graph {
        |adj AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
        |l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM adj),
        |$rounds,
-       |cs AS MATERIALIZED (SELECT lbl, COUNT(*) AS n_nodes FROM l8 GROUP BY 1)
-       |SELECT l8.node, CAST(l8.lbl AS BIGINT) AS component,
+       |cs AS MATERIALIZED (SELECT lbl, COUNT(*) AS n_nodes FROM l$ccRounds GROUP BY 1)
+       |SELECT l$ccRounds.node, CAST(l$ccRounds.lbl AS BIGINT) AS component,
        |  CAST(cs.n_nodes AS BIGINT) AS n_nodes
-       |FROM l8 JOIN cs USING (lbl) ORDER BY node""".stripMargin
+       |FROM l$ccRounds JOIN cs USING (lbl) ORDER BY node""".stripMargin
   }
 
   /** Full-recount oracle for graph_cc_incremental: pointer-doubling
@@ -1767,15 +1694,15 @@ object Graph {
     * no-ops (labels are already stable), so the unrolled tail is safe.
     * Each round mirrors the Spark loop verbatim: gather one hop +
     * group-min, then jump THROUGH the previous round's table. Unlike
-    * the engine loop (which fail-louds on budget exhaustion,
-    * [[buildHistCcLabels]]), a fixed unroll would silently return
+    * the engine loops (which fail loud on budget exhaustion,
+    * [[buildHistCcLabels]] and [[ccFoldLabels]]), a fixed unroll would silently return
     * non-components on a corpus whose min-id eccentricity exceeds 255
     * — so the final SELECT mirrors the fail-loud: it appends a
     * sentinel row (node = −1) whenever the round BEYOND the budget (a
     * 9th, oracle-only round) still changes a label, which can only
     * hash-mismatch the engine side and turn the silent drift into a
     * red gate (ADVICE r14). Comparing l9 vs l8 — not l8 vs l7 — makes
-    * the sentinel match the engine's `lastChange < budget` semantics:
+    * the sentinel match the engine's convergence verdict ([[graft.Fixpoint]]):
     * a graph that legitimately converges AT round 8 (round 8
     * productive, l8 already the fixpoint) is a correct answer, not a
     * spurious red (ADVICE r15).
@@ -1843,15 +1770,15 @@ object Graph {
        |FROM bcc WHERE bcd > 0 ORDER BY part""".stripMargin
   }
 
-  /** DuckDB replay of the k-truss peel: 12 unrolled materialized rounds
-    * (the Spark side's budget), each recomputing triangles and supports
+  /** DuckDB replay of the k-truss peel: [[ktrussRounds]] unrolled
+    * materialized rounds (the Spark side's budget), each recomputing triangles and supports
     * on the surviving edge set — the reference formulation the Spark
     * side's decrement-maintained supports must equal round for round.
     * Rounds past the fixpoint peel nothing (monotonicity), so the no-op
     * tail leaves the result at the true fixpoint.
     */
   private val oKtruss: String = {
-    val rounds = (1 to 12).map { r =>
+    val rounds = (1 to ktrussRounds).map { r =>
       val ep = s"e${r - 1}"
       s"""t$r AS MATERIALIZED (SELECT x.u AS a, x.v AS b, y.v AS c
          |  FROM $ep x JOIN $ep y ON x.v = y.u JOIN $ep z ON z.u = x.u AND z.v = y.v),
@@ -1864,7 +1791,7 @@ object Graph {
          |  LEFT JOIN s$r s ON e.u = s.u AND e.v = s.v WHERE COALESCE(s.s, 0) >= 2)"""
         .stripMargin
     }.mkString(",\n")
-    val rem = (1 to 12).map(r => s"SELECT u, v, $r AS rr FROM r$r")
+    val rem = (1 to ktrussRounds).map(r => s"SELECT u, v, $r AS rr FROM r$r")
       .mkString("\nUNION ALL ")
     s"""WITH pl AS MATERIALIZED (SELECT DISTINCT l.l_orderkey AS o, l.l_partkey AS p
        |  FROM lineitem l JOIN orders r ON l.l_orderkey = r.o_orderkey
@@ -1877,9 +1804,9 @@ object Graph {
        |ORDER BY e0.u, e0.v""".stripMargin
   }
 
-  /** DuckDB replay of the full truss decomposition: 12 unrolled
-    * materialized rounds of the triangle-core h-index iteration (the
-    * Spark side's budget). Each round joins the static triangle table
+  /** DuckDB replay of the full truss decomposition: [[trussnessRounds]]
+    * unrolled materialized rounds of the triangle-core h-index iteration
+    * (the Spark side's budget). Each round joins the static triangle table
     * against the previous ρ three times (one lookup per triangle
     * edge), takes per edge the h-index of the min-of-other-two
     * contributions — COUNT of ranks the descending contribution list
@@ -1892,7 +1819,7 @@ object Graph {
     * margin in DuckDB as in Spark.
     */
   private val oTrussness: String = {
-    val rounds = (1 to 12).map { i =>
+    val rounds = (1 to trussnessRounds).map { i =>
       val rp = s"r${i - 1}"
       s"""tr$i AS MATERIALIZED (SELECT t.a, t.b, t.c, r1.r AS rab, r2.r AS rac, r3.r AS rbc
          |  FROM tri t
@@ -1921,7 +1848,7 @@ object Graph {
        |    UNION ALL SELECT b, c FROM tri) GROUP BY 1, 2) s
        |  ON e0.u = s.u AND e0.v = s.v),
        |$rounds
-       |SELECT u, v, CAST(r + 2 AS BIGINT) AS trussness FROM r12 ORDER BY u, v""".stripMargin
+       |SELECT u, v, CAST(r + 2 AS BIGINT) AS trussness FROM r$trussnessRounds ORDER BY u, v""".stripMargin
   }
 
   val oracles: Map[String, String] = Map(

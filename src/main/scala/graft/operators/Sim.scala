@@ -1226,13 +1226,13 @@ object Sim {
     * exact integer math — the `tol` every production k-means exposes:
     * on near-isotropic data the zero-movement tail is unboundedly long
     * boundary wobble, measured in BASELINE.md round-10), with a hard
-    * cap of 6 update rounds. The stop round is a deterministic function
-    * of the data (first threshold hit, else the cap), so the oracle
-    * replays it exactly: it unrolls all 6 rounds, computes the same
-    * per-round move counts, and selects the same round's assignment —
-    * no no-op-tail assumption needed, and BOTH stop paths are
-    * hash-verified (the threshold fires at round 5 at sf0.01; the cap
-    * binds at sf0.1). Every round's centroid table and assignment are
+    * cap of [[kmeansRounds]] update rounds. The stop round is a
+    * deterministic function of the data (first threshold hit, else the
+    * cap), so the oracle replays it exactly: it unrolls every round,
+    * computes the same per-round move counts, and selects the same
+    * round's assignment — no no-op-tail assumption needed, and BOTH
+    * stop paths are hash-verified (the threshold fires at round 5 at
+    * sf0.01; the cap binds at sf0.1). Every round's centroid table and assignment are
     * localCheckpointed (the emb_pca_power lambda-inlining guard; at
     * 100 TB the assignment would persist to storage between rounds —
     * same shape, and every round is one broadcast-assign scan plus one
@@ -1250,14 +1250,17 @@ object Sim {
     * consumers read.
     */
   private[graft] def kmeansConverged(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.kmeans.converged")(kmeansConvergeDetail(s, dir)._1)
+    graft.Cached.of(s, dir, "sim.kmeans.converged")(kmeansConvergeDetail(s, dir).state)
+
+  /** Update-round cap of [[kmeansConverge]], which its oracle unrolls. */
+  private val kmeansRounds = 6
 
   /** [[kmeansConverge]] plus the loop observables RoundTenOpsSpec pins:
-    * the stop round and whether the movement threshold (rather than the
-    * cap alone) was satisfied there.
+    * the stop round (`rounds`) and whether the movement threshold
+    * (rather than the cap alone) was satisfied there (`converged`).
     */
   private[graft] def kmeansConvergeDetail(
-      s: SparkSession, dir: String): (DataFrame, Int, Boolean) = {
+      s: SparkSession, dir: String): graft.Fixpoint.Result[DataFrame] = {
     val e = vectors(s, dir)
       .withColumn("x", expr("transform(v, t -> cast(round(t * 1048576.0) as double))"))
       .withColumn("xn", sqrt(vec_dot(col("x"), col("x"))))
@@ -1312,26 +1315,20 @@ object Sim {
       // LAZY (r17): round 1's centroid broadcast build is the first
       // consumer and materializes the initial assignment in its own job
       .localCheckpoint(false)
-    var cur = a0
-    var stopRound = 0
-    var met = false
-    while (stopRound < 6 && !met) {
+    val res = graft.Fixpoint.run("emb_kmeans_converge", kmeansRounds, a0) { (cur, _) =>
       val c = cents(
         cur.select(col("cell").as("pcell0"), col("vec_id"))
           .join(e, "vec_id").select(col("pcell0").as("cell"), posexplode(col("x")))
           .groupBy("cell", "pos").agg(sum(col("col")).as("cx")))
       val an = assign(c, cur.select(col("vec_id"), col("cell").as("pcell"),
         col("cell_first"), col("n_moves")))
-      stopRound += 1
-      if (an.filter(col("moved")).count() * 50 <= n) met = true
-      cur = an
+      (an, an.filter(col("moved")).count() * 50 > n)
     }
-    val out = cur
+    res.copy(state = res.state
       .select(col("vec_id"), col("cell_first"), col("cell").as("cell_final"),
         col("n_moves"), round(col("ccos"), 6).as("cos_final"),
-        lit(stopRound.toLong).as("stop_round"))
-      .orderBy("vec_id")
-    (out, stopRound, met)
+        lit(res.rounds.toLong).as("stop_round"))
+      .orderBy("vec_id"))
   }
 
   /** Embedding-drift monitor — the vector-space companion of
@@ -2355,9 +2352,9 @@ object Sim {
        |        / (xn.xn * c$r.cn) DESC, c$r.cell) AS rk
        |  FROM xn CROSS JOIN c$r) WHERE rk = 1)""".stripMargin
 
-  /** Full emb_kmeans_converge oracle: midrange init + 6 unrolled
-    * update/assign rounds, then the SAME stopping rule the Spark loop
-    * applies — the first round whose move count satisfies moved·50 ≤ n
+  /** Full emb_kmeans_converge oracle: midrange init + [[kmeansRounds]]
+    * unrolled update/assign rounds, then the SAME stopping rule the Spark
+    * loop applies — the first round whose move count satisfies moved·50 ≤ n
     * (2% movement threshold), else the cap. The stop round is a
     * deterministic function of the data, so selecting that round's
     * assignment replays the early-exited loop exactly; rounds past the
@@ -2365,7 +2362,7 @@ object Sim {
     * never running them.
     */
   private val (oKmeansCtes, oKmeansConverge): (String, String) = {
-    val cap = 6
+    val cap = kmeansRounds
     val mCols = (1 to cap).map(r =>
       s"""(SELECT COUNT(*) FROM a$r JOIN a${r - 1} USING (vec_id)
          |     WHERE a$r.cell <> a${r - 1}.cell) AS m$r""".stripMargin).mkString(",\n  ")

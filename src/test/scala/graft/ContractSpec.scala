@@ -164,4 +164,21 @@ class ContractSpec extends AnyFunSuite {
     assert(Cached.of(s, "contract-dir", key)(s.range(1).toDF()).count() == 1)
     Cached.evictKeySuffix(key)
   }
+
+  test("Fixpoint.run stops at the first no-change round, or reports the budget binding") {
+    // state counts down to 0 and then stays there: round 4 is the first
+    // round that changes nothing
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val down = Fixpoint.run("countdown", 10, 3) { (n, r) =>
+      seen += r
+      (math.max(n - 1, 0), n > 0)
+    }
+    assert(down == Fixpoint.Result("countdown", 0, 4, converged = true))
+    assert(seen.toSeq == Seq(1, 2, 3, 4))
+    assert(down.requireConverged("unused") == 0)
+    val capped = Fixpoint.run("capped", 2, 3)((n, _) => (math.max(n - 1, 0), n > 0))
+    assert(capped == Fixpoint.Result("capped", 1, 2, converged = false))
+    val e = intercept[IllegalStateException](capped.requireConverged("need a fixpoint"))
+    assert(e.getMessage.contains("capped") && e.getMessage.contains("need a fixpoint"), e.getMessage)
+  }
 }

@@ -17,6 +17,15 @@ class DedupSimSpec extends AnyFunSuite {
     assert(out.agg(sum("n_copies")).head.getLong(0) == docs * 2)
   }
 
+  test("dedup_clusters returns a frame that reads no Dataset-cache entry") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val out = SparkEntry.queries("dedup_clusters")(spark, sf)
+    assert(out.count() > 0)
+    val cached = out.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+    assert(cached.isEmpty,
+      s"dedup_clusters left ${cached.size} persisted frame(s) in the session cache")
+  }
+
   test("minhash banding finds exactly the brute-force J>=0.8 pairs") {
     val banded = SparkEntry.queries("dedup_minhash")(spark, sf)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -75,14 +75,26 @@ class RoundNineOpsSpec extends AnyFunSuite {
       .repartition(4, col("src"))
       .persist()
     adj.count()
-    val hm = operators.Graph.hashMinLabels(adj, 8).collect()
+    val hmRes = operators.Graph.hashMinLabels("hash-min path", adj, 8)
+    val hm = hmRes.state.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hm(50L) == 42L && hm.values.exists(_ != 0L),
       s"hash-min unexpectedly converged inside 8 rounds: ${hm.toSeq.sorted}")
-    val pd = operators.Graph.pointerDoubleLabels(adj, 16).collect()
+    assert(!hmRes.converged && hmRes.rounds == 8,
+      s"hash-min reported converged=${hmRes.converged} after ${hmRes.rounds} rounds")
+    val pdRes = operators.Graph.pointerDoubleLabels("pointer-doubling path", adj, 16)
+    val pd = pdRes.state.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pd.size == 51 && pd.values.forall(_ == 0L),
       s"pointer doubling failed to reach the true fixpoint: ${pd.toSeq.sorted}")
+    // reach after r rounds is 2^r − 1 hops, so 49 hops need 6 productive
+    // rounds plus the no-change round that detects the fixpoint
+    val logBound = math.ceil(math.log(50) / math.log(2)).toInt + 1
+    assert(pdRes.converged && pdRes.rounds <= logBound,
+      s"pointer doubling took ${pdRes.rounds} rounds (bound $logBound), converged=${pdRes.converged}")
+    val short = operators.Graph.pointerDoubleLabels("short pointer-doubling path", adj, 3)
+    val err = intercept[IllegalStateException](short.requireConverged("not a fixpoint"))
+    assert(err.getMessage.contains("short pointer-doubling path"), err.getMessage)
   }
 
   test("graph_cc_pointer_doubling equals graph_connected_components on the co-purchase graph") {

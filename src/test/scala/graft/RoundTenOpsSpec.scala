@@ -56,7 +56,8 @@ class RoundTenOpsSpec extends AnyFunSuite {
   }
 
   test("emb_kmeans_converge stops at the movement threshold inside the 6-round cap") {
-    val (out, stopRound, met) = operators.Sim.kmeansConvergeDetail(s, dir)
+    val res = operators.Sim.kmeansConvergeDetail(s, dir)
+    val (out, stopRound, met) = (res.state, res.rounds, res.converged)
     assert(met,
       s"movement never fell to 2% within $stopRound rounds — the threshold " +
         "stopping rule degenerated to the cap on this corpus")
