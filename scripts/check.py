@@ -2,12 +2,18 @@
 """Local stand-in for the driver's correctness gate.
 
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
+       python3 scripts/check.py --same <verifyOutDirA> <verifyOutDirB>
 
 Loads each <verifyOutDir>/<name> parquet result (written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the same
 source tables, sorts columns by name, and compares values exactly.
+
+--same compares two Verify dumps (say, of two commits) without DuckDB:
+every query's Spark output must hold the same rows as a multiset (same
+columns, exact values, any order). It also lists the queries whose oracle
+SQL text differs between the dumps. Exit status 1 on any row difference.
 """
-import decimal, json, math, sys, glob, os
+import collections, decimal, json, math, sys, glob, os
 import duckdb
 import pyarrow.parquet as pq
 import pyarrow as pa
@@ -33,12 +39,60 @@ def norm(v):
         return ("decimal", str(v.normalize()))
     return v
 
+def frozen(v):
+    """norm() applied through nested lists and structs, hashable."""
+    if isinstance(v, list):
+        return tuple(frozen(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, frozen(x)) for k, x in v.items()))
+    return norm(v)
+
 def cells(tbl):
     cols = sorted(tbl.column_names)
     pyl = {c: tbl.column(c).to_pylist() for c in cols}
     return [tuple(norm(pyl[c][i]) for c in cols) for i in range(tbl.num_rows)], cols
 
+def outputs(d):
+    return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+
+def same(dir_a, dir_b):
+    names_a, names_b = outputs(dir_a), outputs(dir_b)
+    n_same = n_diff = 0
+    for name in sorted(names_a | names_b):
+        if name not in names_a or name not in names_b:
+            print(f"DIFF {name}: output only in {dir_a if name in names_a else dir_b}")
+            n_diff += 1; continue
+        ta, tb = load_spark(os.path.join(dir_a, name)), load_spark(os.path.join(dir_b, name))
+        if ta is None or tb is None:
+            print(f"DIFF {name}: no spark output in {dir_a if ta is None else dir_b}")
+            n_diff += 1; continue
+        (ra, ca), (rb, cb) = cells(ta), cells(tb)
+        if ca != cb:
+            print(f"DIFF {name}: cols A={ca} B={cb}"); n_diff += 1; continue
+        ma = collections.Counter(tuple(frozen(x) for x in r) for r in ra)
+        mb = collections.Counter(tuple(frozen(x) for x in r) for r in rb)
+        if ma != mb:
+            only_a, only_b = ma - mb, mb - ma
+            print(f"DIFF {name}: rows A={len(ra)} B={len(rb)}; "
+                  f"{sum(only_a.values())} only in A, {sum(only_b.values())} only in B")
+            print(f"   cols:   {ca}")
+            for tag, rest in (("A", only_a), ("B", only_b)):
+                if rest:
+                    print(f"   {tag} only: {next(iter(rest))}")
+            n_diff += 1; continue
+        print(f"SAME {name} ({len(ra)} rows)")
+        n_same += 1
+    oa = json.load(open(f"{dir_a}/oracle_sql.json"))
+    ob = json.load(open(f"{dir_b}/oracle_sql.json"))
+    changed = sorted(n for n in set(oa) | set(ob) if oa.get(n) != ob.get(n))
+    for n in changed:
+        print(f"ORACLE-SQL {n}: text differs")
+    print(f"== {n_same} same, {n_diff} differ, {len(changed)} oracle SQL texts differ ==")
+    sys.exit(1 if n_diff else 0)
+
 def main():
+    if sys.argv[1] == "--same":
+        same(sys.argv[2], sys.argv[3])
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders",

@@ -61,12 +61,6 @@ object Dedup {
   private val oShingle =
     "list_distinct(list_transform(range(1, greatest(len(text) - 10, 2)), i -> substr(text, i, 12)))"
 
-  /** Shingle sets with a hashed (xxhash64) copy: join keys and signature
-    * inputs are 8-byte longs instead of 12-char strings — smaller shuffles
-    * and codegen-friendly signature loops. Jaccard counts are unchanged
-    * (64-bit collisions are negligible), so the string-based oracle still
-    * matches exactly.
-    */
   /** The corpus-cache panel, in WRITE ORDER (derived caches read their
     * just-written upstreams through the root-pinned accessors). The
     * whole-corpus derivations below serve ~15 non-incremental queries
@@ -86,6 +80,12 @@ object Dedup {
     "dedup_ngmh_sig" -> (ngramMinhashSigs _),
     "dedup_ngmh_pairs" -> (ngramMinhashPairs _))
 
+  /** Shingle sets with a hashed (xxhash64) copy: join keys and signature
+    * inputs are 8-byte longs instead of 12-char strings — smaller shuffles
+    * and codegen-friendly signature loops. Jaccard counts are unchanged
+    * (64-bit collisions are negligible), so the string-based oracle still
+    * matches exactly.
+    */
   private def shingles(s: SparkSession, dir: String): DataFrame =
     corpusCached(s, dir, "dedup_sh64") {
       // The driver-generated parquet is one row group per file, so the scan
@@ -117,6 +117,64 @@ object Dedup {
         .groupBy("ckey")
         .agg(count(lit(1)).as("cnt"), first(col("sh64")).as("sh64"))
     }
+
+  // ---------------------------------------------------------- pair kernels
+
+  /** Band-collision candidate pairs (ka, kb), distinct: rows of `a` and
+    * `b` (aliased `a`/`b`) agreeing on every band-key column in `keys`
+    * and on the caller's `cond` (key order, size bound), keyed by `id`.
+    */
+  private def bandCandidates(a: DataFrame, b: DataFrame, keys: Seq[String], cond: Column,
+      id: String = "ckey"): DataFrame =
+    a.as("a").join(b.as("b"), keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) && cond)
+      .select(col(s"a.$id").as("ka"), col(s"b.$id").as("kb"))
+      .distinct()
+
+  /** J ≥ 0.8 forces |A∩B| ≤ min ⇒ J ≤ min/max, so a pair of set sizes
+    * with 4·max > 5·min cannot verify — the exact size prefilter.
+    */
+  private def sizeBound(na: Column, nb: Column): Column =
+    greatest(na, nb) * 4 <= least(na, nb) * 5
+
+  /** Exact Jaccard ≥ 0.8 verify of candidate content pairs (ka, kb) over
+    * the xxhash64 shingle sets (ckey, sh64) of `ga` (ka side) and `gb`
+    * (kb side): (ka, kb, jaccard).
+    */
+  private def verifySh64(cand: DataFrame, ga: DataFrame, gb: DataFrame): DataFrame = cand
+    .join(ga.select(col("ckey").as("ka"), col("sh64").as("sh_a")), "ka")
+    .join(gb.select(col("ckey").as("kb"), col("sh64").as("sh_b")), "kb")
+    .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))))
+    .withColumn("jaccard", col("shared").cast("double") /
+      (size(col("sh_a")) + size(col("sh_b")) - col("shared")))
+    .filter(col("jaccard") >= 0.8)
+    .select("ka", "kb", "jaccard")
+
+  /** Content pairs (ka, kb, …) → doc pairs: each side's content key
+    * expands to its member docs in `docs` (`key`, doc_id, plus the `by`
+    * columns both sides share), emitted as (doc_a < doc_b, `keep`…);
+    * `keep` may read the side ids `id_a`/`id_b`.
+    */
+  private[graft] def docPairs(pairs: DataFrame, docs: DataFrame, key: String, by: String*)(
+      keep: Column*): DataFrame = {
+    def side(k: String, id: String) =
+      docs.select(by.map(col) :+ col(key).as(k) :+ col("doc_id").as(id): _*)
+    pairs.join(side("ka", "id_a"), by :+ "ka").join(side("kb", "id_b"), by :+ "kb")
+      .select(Seq(least(col("id_a"), col("id_b")).as("doc_a"),
+        greatest(col("id_a"), col("id_b")).as("doc_b")) ++ keep: _*)
+  }
+
+  /** Same-content doc pairs: every two member docs (doc_a < doc_b) of one
+    * content in `docs` (ckey, doc_id) — restricted to the contents of
+    * `groups` (ckey, measure columns) when given — with `keep`.
+    */
+  private def sameContentPairs(docs: DataFrame, groups: Option[DataFrame] = None)(
+      keep: Column*): DataFrame = {
+    def side(id: String) = docs.select(col("ckey"), col("doc_id").as(id))
+    groups.fold(side("id_a"))(_.join(side("id_a"), "ckey"))
+      .join(side("id_b"), "ckey")
+      .filter(col("id_a") < col("id_b"))
+      .select(Seq(col("id_a").as("doc_a"), col("id_b").as("doc_b")) ++ keep: _*)
+  }
 
   // ------------------------------------------------------------------ exact
 
@@ -230,23 +288,15 @@ object Dedup {
       .withColumn("jaccard",
         col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
       .filter(col("jaccard") >= JaccardThreshold)
-    val inter = interG
-      .join(sh.select(col("ck").as("ka"), col("doc_id").as("id_a")), "ka")
-      .join(sh.select(col("ck").as("kb"), col("doc_id").as("id_b")), "kb")
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"), col("jaccard"))
     // intra-group (identical text): J = sr / (2n - sr) over the group's
     // rare-shingle count sr — same formula the doc-level oracle computes
     val intraG = groupRareCounts(s, dir)
       .withColumn("jaccard",
         col("sr").cast("double") / (col("n") * 2 - col("sr")))
       .filter(col("jaccard") >= JaccardThreshold)
-    val intra = intraG
-      .join(sh.select(col("ckey"), col("doc_id").as("id_a")), "ckey")
-      .join(sh.select(col("ckey"), col("doc_id").as("id_b")), "ckey")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
-    inter.unionAll(intra).orderBy("doc_a", "doc_b")
+    docPairs(interG, sh, "ck")(col("jaccard"))
+      .unionAll(sameContentPairs(sh, Some(intraG))(col("jaccard")))
+      .orderBy("doc_a", "doc_b")
   }
 
   // ---------------------------------------- ngram minhash (approximate default)
@@ -303,22 +353,6 @@ object Dedup {
           .stripMargin))
     }
 
-  /** The APPROXIMATE-candidate default for the exact-Jaccard family:
-    * identical pair MEASURE and threshold as [[ngramJaccard]] (shared
-    * RARE shingles / (na + nb − shared) ≥ 0.6), but candidates come from
-    * 8-band × 2-row minhash banding over the rare sets instead of the
-    * rare-posting self-join — so the cost is CANDIDATE-bound, not
-    * Σdf²-bound, on distinct-content corpora where the exact plan's
-    * posting join is provably the (expensive) optimum (see the AllPairs
-    * analysis above [[postings]]). Verification is exact on candidates
-    * (array_intersect on the rare sets after a result-neutral size
-    * prefilter), so output pairs are a SUBSET of the exact pairs —
-    * recall is the one quantity lost, and `dedup_ngram_minhash_recall`
-    * measures it against the exact plan (RoundNineOpsSpec pins the
-    * floor). At 100 TB this is the plan to run first: band keys are 16
-    * bytes/rep, bucket joins are quadratic only within a band bucket,
-    * and the Σ-shared verify bill is paid only for candidate pairs.
-    */
   /** The VERIFIED ngram-minhash near-dup doc-pair table (doc_a, doc_b,
     * jaccard) — cached like [[minhashPairs]] (r16): `dedup_ngram_minhash`
     * reports it and the recall gate joins against it, so each consumer
@@ -336,11 +370,7 @@ object Dedup {
           .as("bd"))
       .select(col("ckey"), col("bd.bidx").as("bidx"),
         col("bd.h1").as("h1"), col("bd.h2").as("h2"))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.bidx") === col("b.bidx") && col("a.h1") === col("b.h1") &&
-          col("a.h2") === col("b.h2") && col("a.ckey") < col("b.ckey"))
-      .select(col("a.ckey").as("ka"), col("b.ckey").as("kb"))
-      .distinct()
+    val cand = bandCandidates(bands, bands, Seq("bidx", "h1", "h2"), col("a.ckey") < col("b.ckey"))
     // result-neutral size prefilter: shared ≤ min(|ra|,|rb|), so
     // J ≥ 0.6 forces 8·min(|ra|,|rb|) ≥ 3·(na+nb) — long math before any
     // shingle array ships (the dedup_minhash discipline). NO broadcast
@@ -366,25 +396,32 @@ object Dedup {
       .withColumn("jaccard",
         col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
       .filter(col("jaccard") >= JaccardThreshold)
-    val inter = interG
-      .join(sh.select(col("ckey").as("ka"), col("doc_id").as("id_a")), "ka")
-      .join(sh.select(col("ckey").as("kb"), col("doc_id").as("id_b")), "kb")
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"), col("jaccard"))
     // intra (identical text): J = sr / (2n - sr), as the exact plan
     val intraG = rsets
       .select(col("ckey"), expr("cast(size(rs) as bigint)").as("sr"), col("n"))
       .withColumn("jaccard",
         col("sr").cast("double") / (col("n") * 2 - col("sr")))
       .filter(col("jaccard") >= JaccardThreshold)
-    val intra = intraG
-      .join(sh.select(col("ckey"), col("doc_id").as("id_a")), "ckey")
-      .join(sh.select(col("ckey"), col("doc_id").as("id_b")), "ckey")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
-    inter.unionAll(intra)
+    docPairs(interG, sh, "ckey")(col("jaccard"))
+      .unionAll(sameContentPairs(sh, Some(intraG))(col("jaccard")))
     }
 
+  /** The APPROXIMATE-candidate default for the exact-Jaccard family:
+    * identical pair MEASURE and threshold as [[ngramJaccard]] (shared
+    * RARE shingles / (na + nb − shared) ≥ 0.6), but candidates come from
+    * 8-band × 2-row minhash banding over the rare sets instead of the
+    * rare-posting self-join — so the cost is CANDIDATE-bound, not
+    * Σdf²-bound, on distinct-content corpora where the exact plan's
+    * posting join is provably the (expensive) optimum (see the AllPairs
+    * analysis above [[postings]]). Verification is exact on candidates
+    * (array_intersect on the rare sets after a result-neutral size
+    * prefilter), so output pairs are a SUBSET of the exact pairs —
+    * recall is the one quantity lost, and `dedup_ngram_minhash_recall`
+    * measures it against the exact plan (RoundNineOpsSpec pins the
+    * floor). At 100 TB this is the plan to run first: band keys are 16
+    * bytes/rep, bucket joins are quadratic only within a band bucket,
+    * and the Σ-shared verify bill is paid only for candidate pairs.
+    */
   private val ngramMinhash: Q = (s, dir) =>
     ngramMinhashPairs(s, dir).orderBy("doc_a", "doc_b")
 
@@ -432,20 +469,11 @@ object Dedup {
       .filter(col("shared").cast("double") /
         (col("na") + col("nb") - col("shared")) >= JaccardThreshold)
     val sh = shingles(s, dir)
-    val inter = interG
-      .join(sh.select(col("ckey").as("ka"), col("doc_id").as("id_a")), "ka")
-      .join(sh.select(col("ckey").as("kb"), col("doc_id").as("id_b")), "kb")
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"))
     // intra (identical text within a sampled content group)
-    val intra = sampled
+    val intraG = sampled
       .select(col("ckey"), expr("cast(size(rs) as bigint)").as("sr"), col("n"))
       .filter(col("sr").cast("double") / (col("n") * 2 - col("sr")) >= JaccardThreshold)
-      .join(sh.select(col("ckey"), col("doc_id").as("id_a")), "ckey")
-      .join(sh.select(col("ckey"), col("doc_id").as("id_b")), "ckey")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val exact = inter.unionAll(intra)
+    val exact = docPairs(interG, sh, "ckey")().unionAll(sameContentPairs(sh, Some(intraG))())
     val approx = ngramMinhashPairs(s, dir)
       .select(col("doc_a").as("qa"), col("doc_b").as("qb"))
     exact.join(approx,
@@ -546,44 +574,24 @@ object Dedup {
       .withColumn("c_ka", col("shared").cast("double") / col("na"))
       .withColumn("c_kb", col("shared").cast("double") / col("nb"))
       .filter(greatest(col("c_ka"), col("c_kb")) >= ContainmentThreshold)
-    val inter = interG
-      .join(sh.select(col("ck").as("ka"), col("doc_id").as("id_a")), "ka")
-      .join(sh.select(col("ck").as("kb"), col("doc_id").as("id_b")), "kb")
-      .select(
-        least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"),
-        when(col("id_a") <= col("id_b"), col("c_ka")).otherwise(col("c_kb")).as("cont_a"),
-        when(col("id_a") <= col("id_b"), col("c_kb")).otherwise(col("c_ka")).as("cont_b"))
+    val inter = docPairs(interG, sh, "ck")(
+      when(col("id_a") <= col("id_b"), col("c_ka")).otherwise(col("c_kb")).as("cont_a"),
+      when(col("id_a") <= col("id_b"), col("c_kb")).otherwise(col("c_ka")).as("cont_b"))
     val intraG = groupRareCounts(s, dir)
       .withColumn("c", col("sr").cast("double") / col("n"))
       .filter(col("c") >= ContainmentThreshold)
-    val intra = intraG
-      .join(sh.select(col("ckey"), col("doc_id").as("id_a")), "ckey")
-      .join(sh.select(col("ckey"), col("doc_id").as("id_b")), "ckey")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        col("c").as("cont_a"), col("c").as("cont_b"))
-    inter.unionAll(intra).orderBy("doc_a", "doc_b")
+    inter.unionAll(sameContentPairs(sh, Some(intraG))(col("c").as("cont_a"), col("c").as("cont_b")))
+      .orderBy("doc_a", "doc_b")
   }
 
   // ---------------------------------------------------------------- minhash
 
-  /** MinHash (32 perms via seeded xxhash64) + LSH banding (16 bands x 2)
-    * for candidates, exact Jaccard (J >= 0.8) to verify. The oracle is the
-    * brute-force Jaccard — banding must therefore be recall-lossless at
-    * this threshold, which the band parameters guarantee (see object doc).
-    */
   /** LSH band keys (16 bands x 2 rows over the 32-perm MinHash signature)
     * per DISTINCT content — the shared candidate-generation table.
     */
   private def minhashBands(s: SparkSession, dir: String): DataFrame =
     corpusCached(s, dir, "dedup_minhash_bands") {
-      val sig = contentGroups(s, dir).withColumn("sig", minhash_sig(col("sh64"), 32))
-      sig.select(col("ckey"),
-          explode(expr(
-            "transform(sequence(0, 15), b -> struct(b AS bidx, xxhash64(element_at(sig, 2*b+1), element_at(sig, 2*b+2)) AS bh))"))
-            .as("band"))
-        .select(col("ckey"), col("band.bidx").as("bidx"), col("band.bh").as("bh"))
+      bandsForGroups(contentGroups(s, dir)).select("ckey", "bidx", "bh")
     }
 
   /** The verified near-dup pair table (doc_a, doc_b, jaccard) — a shared
@@ -597,48 +605,34 @@ object Dedup {
     val sh = shingles(s, dir)
     val g = contentGroups(s, dir)
     val bands = minhashBands(s, dir)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.bidx") === col("b.bidx") && col("a.bh") === col("b.bh") &&
-          col("a.ckey") < col("b.ckey"))
-      .select(col("a.ckey").as("ka"), col("b.ckey").as("kb"))
-      .distinct()
-    // EXACT size prefilter before any shingle array ships: J(A,B) ≥ 0.8
-    // forces |A∩B| ≤ min ⇒ J ≤ min/max, so any candidate with
-    // 4·max(|A|,|B|) > 5·min(|A|,|B|) cannot verify. The per-content
-    // sizes are a broadcast long table, so this runs at candidate-row
-    // cost (16 bytes/pair) and prunes the moderate-similarity bulk that
-    // recall-lossless r=2 banding necessarily promotes — measured 2.8×
-    // on a 64× distinct-content probe whose template families produced
-    // 57 M candidates (BASELINE.md round-8 notes; the remaining verify
-    // cost is Θ(survivors·|set|), the canonical LSH verify bill).
+    val cand = bandCandidates(bands, bands, Seq("bidx", "bh"), col("a.ckey") < col("b.ckey"))
+    // EXACT size prefilter ([[sizeBound]]) before any shingle array
+    // ships: it runs at candidate-row cost (16 bytes/pair) and prunes the
+    // moderate-similarity bulk that recall-lossless r=2 banding
+    // necessarily promotes — measured 2.8× on a 64× distinct-content
+    // probe whose template families produced 57 M candidates
+    // (BASELINE.md round-8 notes; the remaining verify cost is
+    // Θ(survivors·|set|), the canonical LSH verify bill). NO broadcast
+    // hint: `sizes` is one row per distinct content, which a broadcast
+    // would collect into one process at 100 TB — AQE broadcasts it when
+    // it measures small (the dedup_ngram_minhash argument).
     val sizes = g.select(col("ckey"), expr("cast(size(sh64) as bigint)").as("nsh"))
     val candSized = cand
-      .join(broadcast(sizes.select(col("ckey").as("ka"), col("nsh").as("na"))), "ka")
-      .join(broadcast(sizes.select(col("ckey").as("kb"), col("nsh").as("nb"))), "kb")
-      .filter(greatest(col("na"), col("nb")) * 4 <= least(col("na"), col("nb")) * 5)
+      .join(sizes.select(col("ckey").as("ka"), col("nsh").as("na")), "ka")
+      .join(sizes.select(col("ckey").as("kb"), col("nsh").as("nb")), "kb")
+      .filter(sizeBound(col("na"), col("nb")))
       .select("ka", "kb")
-    // exact Jaccard verification once per size-compatible CONTENT pair
-    val interG = candSized
-      .join(g.select(col("ckey").as("ka"), col("sh64").as("sh_a")), "ka")
-      .join(g.select(col("ckey").as("kb"), col("sh64").as("sh_b")), "kb")
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("shared").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("shared")))
-      .filter(col("jaccard") >= 0.8)
-      .select("ka", "kb", "jaccard")
-    val inter = interG
-      .join(sh.select(col("ckey").as("ka"), col("doc_id").as("id_a")), "ka")
-      .join(sh.select(col("ckey").as("kb"), col("doc_id").as("id_b")), "kb")
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"), col("jaccard"))
+    // exact Jaccard verification once per size-compatible CONTENT pair;
     // identical-content pairs: J is exactly n/n = 1.0 in both engines
-    val intra = sh.as("a").join(sh.as("b"),
-        col("a.ckey") === col("b.ckey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        lit(1.0).as("jaccard"))
-    inter.unionAll(intra)
+    docPairs(verifySh64(candSized, g, g), sh, "ckey")(col("jaccard"))
+      .unionAll(sameContentPairs(sh)(lit(1.0).as("jaccard")))
   }
 
+  /** MinHash (32 perms via seeded xxhash64) + LSH banding (16 bands x 2)
+    * for candidates, exact Jaccard (J >= 0.8) to verify. The oracle is the
+    * brute-force Jaccard — banding must therefore be recall-lossless at
+    * this threshold, which the band parameters guarantee (see object doc).
+    */
   private val minhash: Q = (s, dir) =>
     minhashPairs(s, dir).orderBy("doc_a", "doc_b")
 
@@ -673,7 +667,7 @@ object Dedup {
       .groupBy("ckey").agg(first(col("sh64")).as("sh64"))
 
   private[graft] def buildHistBands(s: SparkSession, dir: String): DataFrame =
-    bandsOf(incrHistGroups(s, dir).withColumn("sig", minhash_sig(col("sh64"), 32)))
+    bandsForGroups(incrHistGroups(s, dir))
 
   private[graft] def bandsForGroups(g: DataFrame): DataFrame =
     bandsOf(g.withColumn("sig", minhash_sig(col("sh64"), 32)))
@@ -698,18 +692,17 @@ object Dedup {
     val histG = s.read.parquet(s"$histRoot/dedup_hist_groups")
     val histB = s.read.parquet(s"$histRoot/dedup_hist_bands")
     val histD = s.read.parquet(s"$histRoot/dedup_hist_docs")
-    val bsh = shingles(s, dir).filter(expr(isBatchExpr))
-    val bg = bsh.groupBy("ckey").agg(first(col("sh64")).as("sh64"))
-    val newG = bg.join(histG.select("ckey"), Seq("ckey"), "left_anti")
+    val newG = groupsFor(s, dir, expr(isBatchExpr))
+      .join(histG.select("ckey"), Seq("ckey"), "left_anti")
     Map(
       "dedup_hist_groups" -> histG.unionByName(newG),
       "dedup_hist_bands" -> histB.unionByName(bandsForGroups(newG)),
-      "dedup_hist_docs" -> histD.unionByName(bsh.select(col("ckey"), col("doc_id"))))
+      "dedup_hist_docs" -> histD.unionByName(docsFor(s, dir, expr(isBatchExpr))))
   }
 
   /** (bidx, bh) band rows + the size prefilter's shingle count from a
-    * (ckey, sh64, sig) frame — shared by the history index build and
-    * the batch side of [[incremental]].
+    * (ckey, sh64, sig) frame — the one band build: the corpus bands, the
+    * history index and the batch side of [[incremental]] all use it.
     */
   private def bandsOf(g: DataFrame): DataFrame =
     g.select(col("ckey"), expr("cast(size(sh64) as bigint)").as("nsh"),
@@ -754,25 +747,6 @@ object Dedup {
       }
     else shingles(s, dir).filter(expr(isBatchExpr))
 
-  /** Incremental near-dup detection of a NEW batch against a FROZEN
-    * history index — the production nightly dedup shape the round-9
-    * verdict promoted: every other dedup query re-derives whole-corpus
-    * candidate structure, but a 100 TB pipeline joins tonight's slice
-    * against persisted signatures. Same measure/threshold/banding as
-    * [[minhashPairs]] (16 bands × 2 rows over 32 minhashes, exact
-    * Jaccard ≥ 0.8 verify on candidates), so the output is provably the
-    * whole-corpus pair set RESTRICTED to pairs touching a batch doc
-    * (signatures are content-determined, hence split-invariant —
-    * RoundTenOpsSpec pins the equality). Candidates come from two
-    * joins: batch bands × history bands (batch-vs-history, including
-    * identical content crossing the split — all 16 bands collide) and
-    * batch bands × batch bands (batch-internal). Cost tracks the BATCH:
-    * candidate generation moves only the history side's cached index
-    * rows (band keys, 16 B/rep); history shingle sets ship solely for
-    * the candidate reps surviving the band + size filters (the bounded
-    * LSH verify bill), and no history×history pair is ever formed.
-    * Output: (batch_doc, match_doc, jaccard, match_src∈{batch,history}).
-    */
   /** Tonight's batch content groups (+ signatures), session-cached: the
     * band build, the verify's batch side, and the prune planner's stats
     * all read it.
@@ -833,6 +807,25 @@ object Dedup {
           lit("pruned")).otherwise(lit("full")).as("leg"))
   }
 
+  /** Incremental near-dup detection of a NEW batch against a FROZEN
+    * history index — the production nightly dedup shape the round-9
+    * verdict promoted: every other dedup query re-derives whole-corpus
+    * candidate structure, but a 100 TB pipeline joins tonight's slice
+    * against persisted signatures. Same measure/threshold/banding as
+    * [[minhashPairs]] (16 bands × 2 rows over 32 minhashes, exact
+    * Jaccard ≥ 0.8 verify on candidates), so the output is provably the
+    * whole-corpus pair set RESTRICTED to pairs touching a batch doc
+    * (signatures are content-determined, hence split-invariant —
+    * RoundTenOpsSpec pins the equality). Candidates come from two
+    * joins: batch bands × history bands (batch-vs-history, including
+    * identical content crossing the split — all 16 bands collide) and
+    * batch bands × batch bands (batch-internal). Cost tracks the BATCH:
+    * candidate generation moves only the history side's cached index
+    * rows (band keys, 16 B/rep); history shingle sets ship solely for
+    * the candidate reps surviving the band + size filters (the bounded
+    * LSH verify bill), and no history×history pair is ever formed.
+    * Output: (batch_doc, match_doc, jaccard, match_src∈{batch,history}).
+    */
   private val incremental: Q = (s, dir) => incrementalWith(s, dir, None)
 
   /** The serving query, with the artifact-read prune either chosen by
@@ -851,17 +844,9 @@ object Dedup {
     // size prefilter at candidate-row cost (J ≥ 0.8 ⇒ 4·max ≤ 5·min,
     // exactly [[minhashPairs]]' bound); sizes ride the band tables so
     // no extra join is needed, and no broadcast hint is given
-    val candX = bb.as("a").join(hist.as("b"),
-        col("a.bidx") === col("b.bidx") && col("a.bh") === col("b.bh") &&
-          greatest(col("a.nsh"), col("b.nsh")) * 4 <=
-            least(col("a.nsh"), col("b.nsh")) * 5)
-      .select(col("a.ckey").as("ka"), col("b.ckey").as("kb")).distinct()
-    val candB = bb.as("a").join(bb.as("b"),
-        col("a.bidx") === col("b.bidx") && col("a.bh") === col("b.bh") &&
-          col("a.ckey") < col("b.ckey") &&
-          greatest(col("a.nsh"), col("b.nsh")) * 4 <=
-            least(col("a.nsh"), col("b.nsh")) * 5)
-      .select(col("a.ckey").as("ka"), col("b.ckey").as("kb")).distinct()
+    val sized = sizeBound(col("a.nsh"), col("b.nsh"))
+    val candX = bandCandidates(bb, hist, Seq("bidx", "bh"), sized)
+    val candB = bandCandidates(bb, bb, Seq("bidx", "bh"), col("a.ckey") < col("b.ckey") && sized)
     // exact Jaccard verify once per candidate CONTENT pair. The ka side
     // is always a batch content; the kb side comes from either the
     // history GROUPS artifact (candX) or the batch groups (candB) —
@@ -904,34 +889,20 @@ object Dedup {
           .select(col("ckey")).distinct()
         incrHistGroups(s, dir).join(keys, Seq("ckey"), "left_semi")
       } else incrHistGroups(s, dir)
-    def verify(cand: DataFrame, gb: DataFrame): DataFrame = cand
-      .join(gBatch.select(col("ckey").as("ka"), col("sh64").as("sh_a")), "ka")
-      .join(gb.select(col("ckey").as("kb"), col("sh64").as("sh_b")), "kb")
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("shared").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("shared")))
-      .filter(col("jaccard") >= 0.8)
-      .select("ka", "kb", "jaccard")
     val bDocs = bsh.select(col("ckey"), col("doc_id"))
     val hDocs = artifact(s, dir, "dedup_hist_docs")
     // batch-vs-history: the batch doc leads regardless of id order
-    val cross = verify(candX, gHist)
+    val cross = verifySh64(candX, gBatch, gHist)
       .join(bDocs.select(col("ckey").as("ka"), col("doc_id").as("id_a")), "ka")
       .join(hDocs.select(col("ckey").as("kb"), col("doc_id").as("id_b")), "kb")
       .select(col("id_a").as("batch_doc"), col("id_b").as("match_doc"),
         col("jaccard"), lit("history").as("match_src"))
-    // batch-internal near-dups between distinct contents
-    val inter = verify(candB, gBatch)
-      .join(bDocs.select(col("ckey").as("ka"), col("doc_id").as("id_a")), "ka")
-      .join(bDocs.select(col("ckey").as("kb"), col("doc_id").as("id_b")), "kb")
-      .select(least(col("id_a"), col("id_b")).as("batch_doc"),
-        greatest(col("id_a"), col("id_b")).as("match_doc"),
-        col("jaccard"), lit("batch").as("match_src"))
-    // batch-internal identical content: J is exactly 1.0 in both engines
-    val intra = bDocs.as("a").join(bDocs.as("b"),
-        col("a.ckey") === col("b.ckey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("batch_doc"), col("b.doc_id").as("match_doc"),
-        lit(1.0).as("jaccard"), lit("batch").as("match_src"))
+    // batch-internal near-dups between distinct contents, then identical
+    // content (J is exactly 1.0 in both engines); the lower doc leads
+    // (a positional union: the batch pairs' doc_a/doc_b take cross's names)
+    val inter = docPairs(verifySh64(candB, gBatch, gBatch), bDocs, "ckey")(
+      col("jaccard"), lit("batch").as("match_src"))
+    val intra = sameContentPairs(bDocs)(lit(1.0).as("jaccard"), lit("batch").as("match_src"))
     cross.unionAll(inter).unionAll(intra).orderBy("batch_doc", "match_doc")
   }
 
@@ -971,18 +942,11 @@ object Dedup {
           "transform(sequence(0, 3), c -> struct(c AS cidx, (shiftright(simhash, 15 * c) & 32767) AS cval))"))
           .as("ch"))
       .select(col("simhash"), col("ch.cidx").as("cidx"), col("ch.cval").as("cval"))
-    val candSig = chunks.as("a").join(chunks.as("b"),
-        col("a.cidx") === col("b.cidx") && col("a.cval") === col("b.cval") &&
-          col("a.simhash") < col("b.simhash"))
-      .select(col("a.simhash").as("sa"), col("b.simhash").as("sb"))
-      .distinct()
-      .withColumn("ham", expr("cast(bit_count(sa ^ sb) as int)"))
+    val candSig = bandCandidates(chunks, chunks, Seq("cidx", "cval"),
+        col("a.simhash") < col("b.simhash"), "simhash")
+      .withColumn("ham", expr("cast(bit_count(ka ^ kb) as int)"))
       .filter(col("ham") <= 3)
-    val inter = candSig
-      .join(sim.select(col("simhash").as("sa"), col("doc_id").as("id_a")), "sa")
-      .join(sim.select(col("simhash").as("sb"), col("doc_id").as("id_b")), "sb")
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"), col("ham"))
+    val inter = docPairs(candSig, sim, "simhash")(col("ham"))
     val intra = sim.as("a").join(sim.as("b"),
         col("a.simhash") === col("b.simhash") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -1017,15 +981,9 @@ object Dedup {
         col("a.blk") === col("b.blk") && col("a.head") < col("b.head"))
       .withColumn("editdist", levenshtein(col("a.head"), col("b.head")).cast("bigint"))
       .filter(col("editdist") <= 8)
-      .select(col("a.blk").as("kblk"), col("a.head").as("ha"),
-        col("b.head").as("hb"), col("editdist"))
-    val inter = interH
-      .join(d.select(col("blk").as("kblk"), col("head").as("ha"), col("doc_id").as("id_a")),
-        Seq("kblk", "ha"))
-      .join(d.select(col("blk").as("kblk"), col("head").as("hb"), col("doc_id").as("id_b")),
-        Seq("kblk", "hb"))
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"), col("editdist"))
+      .select(col("a.blk").as("blk"), col("a.head").as("ka"),
+        col("b.head").as("kb"), col("editdist"))
+    val inter = docPairs(interH, d, "head", "blk")(col("editdist"))
     // intra-content (identical heads): distance 0, all doc pairs in group
     val intra = d.as("a").join(d.as("b"),
         col("a.blk") === col("b.blk") && col("a.head") === col("b.head") &&

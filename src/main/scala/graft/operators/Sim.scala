@@ -47,21 +47,66 @@ object Sim {
   private def cosine(qv: Column, qn: Column, v: Column, n: Column): Column =
     round(vec_dot(qv, v) / (qn * n), 6)
 
+  /** Unrounded cosine of vector column `x` (norm `xn`) against a
+    * centroid row's `cv` (norm `cn`) — the probe and assignment score.
+    */
+  private[graft] def centCos(x: String, xn: String): Column =
+    vec_dot(col(x), col("cv")) / (col(xn) * col("cn"))
+
+  /** Per-query top-`k`: rank each `q` partition by `score` DESC, ties to
+    * the smaller `id`, and keep ranks 1..k in column `rk` — the cut every
+    * exact, ANN, ADC and re-rank stage of this pack shares.
+    */
+  private def topK(df: DataFrame, q: String, score: Column, id: Column, k: Int,
+      rk: String = "rk"): DataFrame =
+    df.withColumn(rk, row_number().over(Window.partitionBy(q).orderBy(score.desc, id)))
+      .filter(col(rk) <= k)
+
+  /** Coarse IVF probe: each query row × the broadcast centroid table
+    * `cents` (one row per `cell`), scored by the caller's `score` into
+    * `ccos` (cosine in float or quantized space, or MIPS's inner
+    * product) and cut to each `key`'s `nprobe` best cells, ties to the
+    * smaller cell id, rank in `crk`.
+    */
+  private[graft] def probe(queries: DataFrame, key: String, cents: DataFrame,
+      score: Column, nprobe: Int): DataFrame =
+    topK(queries.crossJoin(broadcast(cents)).withColumn("ccos", score),
+      key, col("ccos"), col("cell"), nprobe, "crk")
+
+  /** The shipped top-K result: (q_id, rk, cand_id, `score`, `extra`…)
+    * for the K best candidates (`vec_id`) per query, ordered.
+    */
+  private def topKRows(scored: DataFrame, score: String, extra: Column*): DataFrame =
+    topK(scored, "q_id", col(score), col("vec_id"), K)
+      .select(Seq(col("q_id"), col("rk"), col("vec_id").as("cand_id"), col(score)) ++ extra: _*)
+      .orderBy("q_id", "rk")
+
+  /** Recall@k per truth query: `truth` and `approx` each carry
+    * (q_id, cand_id); the output is (q_id, n_hit, recall_at_k), one row
+    * per truth query — a query with no hit reports n_hit = 0.
+    */
+  private[graft] def recallAt(k: Int)(truth: DataFrame, approx: DataFrame): DataFrame =
+    truth.select(col("q_id"), col("cand_id"))
+      .join(approx.select(col("q_id").as("aq"), col("cand_id").as("ac")),
+        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
+      .groupBy("q_id")
+      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
+      .withColumn(s"recall_at_$k", col("n_hit").cast("double") / k)
+      .orderBy("q_id")
+
+  /** The probe queries: corpus vectors vec_id < 8 as (q_id, qv, qn). */
+  private def probeQueries(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+
   /** Exact cosine top-k (k=5) for query vectors vec_id < 8 against the
     * whole corpus (self excluded).
     */
   private[graft] val bruteTopk: Q = (s, dir) => {
     val e = vectors(s, dir)
-    val q = e.select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      .filter(col("q_id") < 8)
-    val scored = broadcast(q).crossJoin(e)
+    topKRows(broadcast(probeQueries(e)).crossJoin(e)
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("rk"), col("vec_id").as("cand_id"), col("cos_sim"))
-      .orderBy("q_id", "rk")
+      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm"))), "cos_sim")
   }
 
   /** Deterministic +-1 hyperplanes (splitmix64 bit stream, fixed seed) as
@@ -100,23 +145,11 @@ object Sim {
       .withColumn("qb", explode(array(
         col("qb0"), col("qb0").bitwiseXOR(1), col("qb0").bitwiseXOR(2),
         col("qb0").bitwiseXOR(4), col("qb0").bitwiseXOR(8))))
-    val scored = broadcast(q).join(e, col("qb") === col("bucket"))
+    topKRows(broadcast(q).join(e, col("qb") === col("bucket"))
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("rk"), col("vec_id").as("cand_id"), col("cos_sim"))
-      .orderBy("q_id", "rk")
+      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm"))), "cos_sim")
   }
 
-  /** IVF-style approximate top-k: coarse quantizer = per-cell centroids
-    * (the label column is the cell id here; in production, k-means).
-    * Every corpus vector is indexed under its own cell; each query probes
-    * its nprobe=3 nearest centroids and scores only those cells' vectors. At
-    * 100 TB: centroids are a broadcast table, the corpus is partitioned
-    * by cell id, and a query touches nprobe/ncells of the data.
-    */
   /** Centroids: elementwise MIDRANGE per cell ((min+max)/2, 10 cells x 64
     * dims -> tiny). Not the mean: a float mean depends on partial-sum
     * merge order, so the index build would not be bit-reproducible across
@@ -141,6 +174,13 @@ object Sim {
       .select(col("label").as("cell"), col("cv"),
         sqrt(vec_dot(col("cv"), col("cv"))).as("cn"))
 
+  /** IVF-style approximate top-k: coarse quantizer = per-cell centroids
+    * (the label column is the cell id here; in production, k-means).
+    * Every corpus vector is indexed under its own cell; each query probes
+    * its nprobe=3 nearest centroids and scores only those cells' vectors. At
+    * 100 TB: centroids are a broadcast table, the corpus is partitioned
+    * by cell id, and a query touches nprobe/ncells of the data.
+    */
   private val ivfTopk: Q = (s, dir) => ivfTopkAt(s, dir, 3)
 
   /** [[ivfTopk]] with the probe width as a parameter — the shipped
@@ -149,25 +189,12 @@ object Sim {
     */
   private[graft] def ivfTopkAt(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val e = vectors(s, dir)
-    val cent = centroids(s, dir)
-    // queries probe their nprobe nearest centroids
-    val q = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("ccos", vec_dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crk") <= nprobe)
+    val qCells = probe(probeQueries(e), "q_id", centroids(s, dir), centCos("qv", "qn"), nprobe)
       .select(col("q_id"), col("qv"), col("qn"), col("cell"))
     // score only vectors in the probed cells (corpus side keyed by label)
-    val scored = broadcast(qCells).join(e, col("cell") === col("label"))
+    topKRows(broadcast(qCells).join(e, col("cell") === col("label"))
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("rk"), col("vec_id").as("cand_id"), col("cos_sim"))
-      .orderBy("q_id", "rk")
+      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm"))), "cos_sim")
   }
 
   /** Deterministic history/batch split of the vector corpus — the ANN
@@ -179,28 +206,6 @@ object Sim {
     */
   private val isBatchVecExpr = graft.Incr.isBatchVec
 
-  /** Incremental IVF serving — the production nightly ANN shape, the
-    * vector twin of `dedup_incremental`: every other sim query builds
-    * its index from the whole corpus, but a 100 TB pipeline ADDS a new
-    * batch of vectors to a FROZEN index built from history. For each
-    * batch vector this emits (a) the history cell it is placed in (the
-    * index-update write: nearest history centroid) and (b) its top-3
-    * nearest HISTORY vectors from its nprobe=3 probed cells (the
-    * retrieval read that backs semantic dedup / RAG admission of new
-    * documents). History centroids are the frozen ⌊√n_hist⌋-cell
-    * quantizer trained on history by the hash-seeded integer-exact
-    * Lloyd ([[histAssign]] — bit-reproducible, so the whole pipeline
-    * hash-verifies); history vectors ship only from probed cells,
-    * batch×batch is never scored, and the cell join carries NO
-    * broadcast hint: the batch side is a corpus slice, not a query
-    * handful, so the optimizer must stay free to shuffle both sides by
-    * cell id (the ADVICE-r9 lesson from dedup_ngram_minhash's
-    * prefilter). At 100 TB: cost tracks the batch AND stays sub-linear
-    * in history — each batch vector touches nprobe·√n_hist history
-    * candidates (nprobe/ncells of history with ncells = ⌊√n_hist⌋,
-    * the r11-demonstrated scaling law, now the production path; the
-    * measured `ncells` rides the hash-verified output).
-    */
   /** Frozen IVF-index ARTIFACT builders (written by [[graft.IndexBuild]],
     * loaded back by [[graft.IndexStore.artifact]]),
     * since round 12 built on the CORPUS-SCALED ⌊√n_hist⌋ k-means cells
@@ -229,23 +234,15 @@ object Sim {
     * a cold session never touches raw history vectors
     * (IndexLifecycleSpec's hermetic test deletes them).
     */
-  private[graft] def histNcells(s: SparkSession, dir: String): Long = {
-    val n = vectors(s, dir).filter(not(expr(isBatchVecExpr))).count()
-    math.max(2L, math.floor(math.sqrt(n.toDouble)).toLong)
-  }
+  private[graft] def histNcells(s: SparkSession, dir: String): Long =
+    sqrtCells(vectors(s, dir).filter(not(expr(isBatchVecExpr))))
 
   /** Quantized HISTORY vectors with their hash-seeded initial cell —
     * [[scaledX]] restricted to the frozen-history split.
     */
   private[graft] def histScaledX(s: SparkSession, dir: String): DataFrame =
     graft.Cached.of(s, dir, "sim.incr.hx") {
-      val nc = histNcells(s, dir)
-      vectors(s, dir).filter(not(expr(isBatchVecExpr)))
-        .select(col("vec_id"),
-          expr("transform(v, t -> cast(round(t * 1048576.0) as double))").as("x"))
-        .withColumn("xn", sqrt(vec_dot(col("x"), col("x"))))
-        .withColumn("c0", expr(
-          s"cast(conv(substr(md5(concat('ivfs|', cast(vec_id as string))), 1, 15), 16, 10) as bigint) % $nc"))
+      seededX(vectors(s, dir).filter(not(expr(isBatchVecExpr))), histNcells(s, dir))
     }
 
   /** The frozen coarse quantizer: final history assignment after two
@@ -294,14 +291,20 @@ object Sim {
     * are assigned against it), a retrain rebuilds it. ncells×128 rows —
     * broadcast-sized at any corpus where ncells = ⌊√n⌋.
     */
-  private[graft] def buildIvfHistCodebook(s: SparkSession, dir: String): DataFrame = {
-    val uc = artifact(s, dir, "ivf_hist_centroids")
-      .select(col("cell"), expr("transform(cv, t -> t / cn)").as("u"))
-    val anch = vectors(s, dir).filter(not(expr(isBatchVecExpr)))
-      .orderBy("vec_id").limit(16)
+  private[graft] def buildIvfHistCodebook(s: SparkSession, dir: String): DataFrame =
+    foldedCodebook(artifact(s, dir, "ivf_hist_centroids"),
+      vectors(s, dir).filter(not(expr(isBatchVecExpr))), histAssign(s, dir))
+
+  /** The cell-folded codebook of [[buildIvfHistCodebook]] from (cell, cv,
+    * cn) centroids, the history vectors `hv` (vec_id, v) and their cell
+    * assignment `asn` (vec_id, cell) — shared with the clustered gate.
+    */
+  private def foldedCodebook(cents: DataFrame, hv: DataFrame, asn: DataFrame): DataFrame = {
+    val uc = cents.select(col("cell"), expr("transform(cv, t -> t / cn)").as("u"))
+    val anch = hv.orderBy("vec_id").limit(16)
       .withColumn("code",
         (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
-      .join(histAssign(s, dir).select(col("vec_id"), col("cell").as("acell")), "vec_id")
+      .join(asn.select(col("vec_id"), col("cell").as("acell")), "vec_id")
       .join(uc.select(col("cell").as("acell"), col("u").as("au")), "acell")
       .select(col("code"), expr("zip_with(v, au, (a, b) -> a - b)").as("r"))
     uc.crossJoin(broadcast(anch))
@@ -365,8 +368,8 @@ object Sim {
     * vector) group, and the centroid SUMS merge by pure elementwise
     * addition (exact integer-valued doubles — order-free). `nc` is the
     * frozen budget, unchanged until a retrain. IndexMergeSpec pins
-    * merge == the reassign-all rebuild [[frozenAssignAll]] defines,
-    * artifact for artifact.
+    * merge == the reassign-all rebuild from raw data, artifact for
+    * artifact.
     */
   private[graft] def mergedArtifacts(
       s: SparkSession, dir: String, histRoot: String): Map[String, DataFrame] = {
@@ -425,61 +428,13 @@ object Sim {
     * merge and the reference rebuild so both apply the identical rule.
     * Output: (vec_id, cell, v, nrm, x, xn).
     */
-  private def batchAssignedTo(
+  private[graft] def batchAssignedTo(
       s: SparkSession, dir: String, cents: DataFrame): DataFrame = {
     val bx = vectors(s, dir).filter(expr(isBatchVecExpr))
       .select(col("vec_id"), col("v"), col("nrm"))
       .withColumn("x", expr("transform(v, t -> cast(round(t * 1048576.0) as double))"))
       .withColumn("xn", sqrt(vec_dot(col("x"), col("x"))))
     scaledAssignTo(cents, bx).join(bx, "vec_id")
-  }
-
-  /** Reference "reassign-all rebuild" defining the merge identity:
-    * every corpus vector keyed by the cell the FROZEN history quantizer
-    * gives it — history rows by their training assignment, batch rows
-    * by nearest final history centroid (the serving rule). A nightly
-    * rebuild-without-retrain computes this from RAW data; [[mergedArtifacts]]
-    * must reach the same rows reading only artifacts + tonight's batch.
-    * (With a corpus-TRAINED quantizer, "merge == retrained-from-scratch
-    * build" is not a meaningful identity: retraining on H∪B changes
-    * ncells and every cell boundary, and reproducing it requires the
-    * raw history the merge exists to avoid. Assign-only update vs
-    * periodic retrain is the standard production IVF split.)
-    */
-  private[graft] def frozenAssignAll(s: SparkSession, dir: String): DataFrame = {
-    val hRows = vectors(s, dir).filter(not(expr(isBatchVecExpr)))
-      .join(histAssign(s, dir).select(col("vec_id"), col("cell")), "vec_id")
-      .select(col("cell"), col("vec_id"), col("v"), col("nrm"))
-    val cents = buildIvfHistCentroids(s, dir)
-      .select(col("cell"), col("cv"), col("cn"))
-    hRows.unionByName(
-      batchAssignedTo(s, dir, cents)
-        .select(col("cell"), col("vec_id"), col("v"), col("nrm")))
-  }
-
-  /** The reference-rebuild artifacts (raw-data side of IndexMergeSpec's
-    * identity): reps/members/centroid-sums over [[frozenAssignAll]].
-    */
-  private[graft] def refMergedArtifacts(
-      s: SparkSession, dir: String): Map[String, DataFrame] = {
-    val all = frozenAssignAll(s, dir)
-    val reps = all.groupBy(col("cell"), col("v"))
-      .agg(min(col("vec_id")).as("rep"), first(col("nrm")).as("hnrm"))
-    val members = all
-      .join(reps.select(col("cell"), col("v"), col("rep")), Seq("cell", "v"))
-      .select(col("rep").as("mrep"), col("vec_id").as("cand_id"))
-    val cents = scaledCellsOf(
-      all.select(col("cell"),
-        expr("transform(v, t -> cast(round(t * 1048576.0) as double))").as("x")))
-      .withColumn("nc", lit(histNcells(s, dir)))
-    // the codebook is frozen at history training time in BOTH
-    // formulations; codes re-encode every merged (cell, v) group
-    // against it — the raw-data rule the remap+append merge must equal
-    val cb = buildIvfHistCodebook(s, dir)
-    val codes = encodeRepsWith(reps.select(col("cell"), col("v"), col("rep")), cb)
-    Map("ivf_hist_reps" -> reps, "ivf_hist_members" -> members,
-      "ivf_hist_centroids" -> cents,
-      "ivf_hist_codebook" -> cb, "ivf_hist_codes" -> codes)
   }
 
   /** Tonight's BATCH vectors. With a persisted index active the raw
@@ -526,12 +481,8 @@ object Sim {
     */
   private[graft] def incrProbedPlan(s: SparkSession, dir: String): DataFrame = {
     val cent = artifact(s, dir, "ivf_hist_centroids")
-    incrBreps(s, dir)
-      .crossJoin(broadcast(cent.select(col("cell"), col("cv"), col("cn"))))
-      .withColumn("ccos", vec_dot(col("qx"), col("cv")) / (col("qxn") * col("cn")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("qrep").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crk") <= 3)
+    probe(incrBreps(s, dir), "qrep", cent.select(col("cell"), col("cv"), col("cn")),
+        centCos("qx", "qxn"), 3)
       .withColumn("cell_assigned",
         max(when(col("crk") === 1, col("cell"))).over(Window.partitionBy("qrep")))
       .select(col("qrep"), col("qv"), col("qn"), col("cell"), col("cell_assigned"))
@@ -587,6 +538,28 @@ object Sim {
       .join(incrBreps(s, dir).select(col("qrep"), col("qv")), Seq("qv"))
       .select(col("q_id"), col("qrep"))
 
+  /** Incremental IVF serving — the production nightly ANN shape, the
+    * vector twin of `dedup_incremental`: every other sim query builds
+    * its index from the whole corpus, but a 100 TB pipeline ADDS a new
+    * batch of vectors to a FROZEN index built from history. For each
+    * batch vector this emits (a) the history cell it is placed in (the
+    * index-update write: nearest history centroid) and (b) its top-3
+    * nearest HISTORY vectors from its nprobe=3 probed cells (the
+    * retrieval read that backs semantic dedup / RAG admission of new
+    * documents). History centroids are the frozen ⌊√n_hist⌋-cell
+    * quantizer trained on history by the hash-seeded integer-exact
+    * Lloyd ([[histAssign]] — bit-reproducible, so the whole pipeline
+    * hash-verifies); history vectors ship only from probed cells,
+    * batch×batch is never scored, and the cell join carries NO
+    * broadcast hint: the batch side is a corpus slice, not a query
+    * handful, so the optimizer must stay free to shuffle both sides by
+    * cell id (the ADVICE-r9 lesson from dedup_ngram_minhash's
+    * prefilter). At 100 TB: cost tracks the batch AND stays sub-linear
+    * in history — each batch vector touches nprobe·√n_hist history
+    * candidates (nprobe/ncells of history with ncells = ⌊√n_hist⌋,
+    * the r11-demonstrated scaling law, now the production path; the
+    * measured `ncells` rides the hash-verified output).
+    */
   private val ivfIncremental: Q = (s, dir) => ivfIncrementalWith(s, dir, None)
 
   /** Planner observability as a first-class hash-verified query: the
@@ -742,15 +715,9 @@ object Sim {
     // ranked above it contributes at least one member that outranks the
     // held member. So cut to 3 reps, then explode only their members.
     val mns = hmem.groupBy("mrep").agg(min(col("cand_id")).as("mn"))
-    val topCands = scoredReps
-      .join(mns, col("rep") === col("mrep"))
-      .withColumn("rrk", row_number().over(
-        Window.partitionBy("qrep").orderBy(col("cos_sim").desc, col("mn"))))
-      .filter(col("rrk") <= 3)
-      .join(hmem, Seq("mrep"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qrep").orderBy(col("cos_sim").desc, col("cand_id"))))
-      .filter(col("rk") <= 3)
+    val top3Reps = topK(scoredReps.join(mns, col("rep") === col("mrep")),
+      "qrep", col("cos_sim"), col("mn"), 3, "rrk")
+    val topCands = topK(top3Reps.join(hmem, Seq("mrep")), "qrep", col("cos_sim"), col("cand_id"), 3)
       .select(col("qrep"), col("cell_assigned"), col("rk"), col("cand_id"), col("cos_sim"))
     bmem.join(topCands, Seq("qrep"))
       .crossJoin(broadcast(ncDf))
@@ -772,45 +739,19 @@ object Sim {
     val q8 = vectors(s, dir).filter(expr(isBatchVecExpr))
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
       .orderBy("q_id").limit(8)
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id"))
-    val brute = broadcast(q8).crossJoin(hv)
-      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("q_id"), col("vec_id").as("cand_id"))
-    val approx = ivfIncremental(s, dir)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_3", col("n_hit").cast("double") / 3)
-      .orderBy("q_id")
+    recallAt(3)(bruteTop3(q8, hv), ivfIncremental(s, dir))
   }
 
-  /** Recall@3 of the ADC incremental path on a CLUSTERED corpus, with
-    * the top-64 cut BINDING (round 13, r12 verdict ask #5): the 0.58
-    * isotropic recall of [[ivfIncrementalRecall]] is the honest hard
-    * case for any coarse quantizer, but the real-corpus claim — cells
-    * align with clusters, the probe finds them, residual ADC keeps
-    * within-cell contrast — previously rode side evidence outside the
-    * hash-verified suite. This gate generates a
-    * deterministic clustered corpus INSIDE both engines (md5-seeded
-    * uniform center + noise draws, the dp_rr_count replay discipline:
-    * 2000 vectors, 16 centers, noise 0.35·U[−1,1) per dim), runs the
-    * full production pipeline on it — history split, ⌊√n_hist⌋
-    * integer-exact Lloyd, folded residual codebook, per-vector codes,
-    * LUT, ADC top-64, exact re-rank — and pins recall@3 vs brute force
-    * over history. Sizing makes the ADC cut BIND (≈ 115 candidates per
-    * query from 3 of 38 cells > 64), so the ADC scores THEMSELVES are
-    * hash-pinned cross-engine here — at gate sf the shipped query's
-    * probed cells hold < 64 reps and a wrong ADC ordering would pass
-    * unnoticed; on this corpus it would change which candidates survive
-    * to the re-rank. RoundFourteenOpsSpec pins the recall floor and the
-    * binding-cut precondition; the DuckDB oracle replays corpus
-    * generation and the full pipeline, so the ADC ordering is
-    * hash-verified end to end.
+  /** Exact cosine top-3 truth over history (vec_id, v, nrm) for the
+    * probe queries `q` (q_id, qv, qn), as (q_id, cand_id) — the truth
+    * side of both incremental recall gates.
     */
+  private def bruteTop3(q: DataFrame, hv: DataFrame): DataFrame =
+    topK(broadcast(q).crossJoin(hv)
+        .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm"))),
+      "q_id", col("cos_sim"), col("vec_id"), 3)
+      .select(col("q_id"), col("vec_id").as("cand_id"))
+
   private val nClu = 2000
   private val cClu = 16
 
@@ -842,25 +783,19 @@ object Sim {
   private def cluHx(s: SparkSession, dir: String): DataFrame =
     graft.Cached.of(s, dir, "sim.clu.hx") {
       val hv = cluV(s, dir).filter(not(expr(isBatchVecExpr)))
-      val n = hv.count()
-      val nc = math.max(2L, math.floor(math.sqrt(n.toDouble)).toLong)
-      hv.select(col("vec_id"),
-          expr("transform(v, t -> cast(round(t * 1048576.0) as double))").as("x"))
-        .withColumn("xn", sqrt(vec_dot(col("x"), col("x"))))
-        .withColumn("c0", expr(
-          s"cast(conv(substr(md5(concat('ivfs|', cast(vec_id as string))), 1, 15), 16, 10) as bigint) % $nc"))
+      seededX(hv, sqrtCells(hv))
     }
 
-  private def cluAssign(s: SparkSession, dir: String): DataFrame =
+  private[graft] def cluAssign(s: SparkSession, dir: String): DataFrame =
     graft.Cached.of(s, dir, "sim.clu.assign")(lloyd2(cluHx(s, dir)))
 
-  private def cluCents(s: SparkSession, dir: String): DataFrame =
+  private[graft] def cluCents(s: SparkSession, dir: String): DataFrame =
     graft.Cached.of(s, dir, "sim.clu.cents") {
       scaledCellsOf(cluAssign(s, dir).join(cluHx(s, dir), "vec_id")
         .select(col("cell"), col("x")))
     }
 
-  private def cluQ8(s: SparkSession, dir: String): DataFrame =
+  private[graft] def cluQ8(s: SparkSession, dir: String): DataFrame =
     graft.Cached.of(s, dir, "sim.clu.q8") {
       cluV(s, dir).filter(expr(isBatchVecExpr)).orderBy("vec_id").limit(8)
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -869,6 +804,29 @@ object Sim {
         .localCheckpoint(true)
     }
 
+  /** Recall@3 of the ADC incremental path on a CLUSTERED corpus, with
+    * the top-64 cut BINDING (round 13, r12 verdict ask #5): the 0.58
+    * isotropic recall of [[ivfIncrementalRecall]] is the honest hard
+    * case for any coarse quantizer, but the real-corpus claim — cells
+    * align with clusters, the probe finds them, residual ADC keeps
+    * within-cell contrast — previously rode side evidence outside the
+    * hash-verified suite. This gate generates a
+    * deterministic clustered corpus INSIDE both engines (md5-seeded
+    * uniform center + noise draws, the dp_rr_count replay discipline:
+    * 2000 vectors, 16 centers, noise 0.35·U[−1,1) per dim), runs the
+    * full production pipeline on it — history split, ⌊√n_hist⌋
+    * integer-exact Lloyd, folded residual codebook, per-vector codes,
+    * LUT, ADC top-64, exact re-rank — and pins recall@3 vs brute force
+    * over history. Sizing makes the ADC cut BIND (≈ 115 candidates per
+    * query from 3 of 38 cells > 64), so the ADC scores THEMSELVES are
+    * hash-pinned cross-engine here — at gate sf the shipped query's
+    * probed cells hold < 64 reps and a wrong ADC ordering would pass
+    * unnoticed; on this corpus it would change which candidates survive
+    * to the re-rank. RoundFourteenOpsSpec pins the recall floor and the
+    * binding-cut precondition; the DuckDB oracle replays corpus
+    * generation and the full pipeline, so the ADC ordering is
+    * hash-verified end to end.
+    */
   private val ivfIncrementalRecallClustered: Q = (s, dir) => {
     val vs = cluV(s, dir)
     val hv = vs.filter(not(expr(isBatchVecExpr)))
@@ -877,22 +835,7 @@ object Sim {
     // folded residual codebook + per-vector codes (no rep collapse: the
     // synthetic corpus is duplicate-free by construction, so vector id
     // IS the rep — the formula parity the gate oracles already rely on)
-    val uc = cents.select(col("cell"), expr("transform(cv, t -> t / cn)").as("u"))
-    val anch = hv.orderBy("vec_id").limit(16)
-      .withColumn("code",
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
-      .join(asn.select(col("vec_id"), col("cell").as("acell")), "vec_id")
-      .join(uc.select(col("cell").as("acell"), col("u").as("au")), "acell")
-      .select(col("code"), expr("zip_with(v, au, (a, b) -> a - b)").as("r"))
-    val cb = graft.Cached.of(s, dir, "sim.clu.cb") {
-      uc.crossJoin(broadcast(anch))
-        .select(col("cell"), col("code"), col("u"), col("r"),
-          explode(expr("sequence(0, 7)")).as("sub"))
-        .withColumn("cw", expr(
-          "transform(sequence(0, 7), j -> element_at(u, sub * 8 + j + 1) + element_at(r, sub * 8 + j + 1))"))
-        .select(col("cell"), col("sub"), col("code"),
-          col("cw"), vec_dot(col("cw"), col("cw")).as("cwn2"))
-    }
+    val cb = graft.Cached.of(s, dir, "sim.clu.cb")(foldedCodebook(cents, hv, asn))
     val codes = graft.Cached.of(s, dir, "sim.clu.codes") {
       encodeRepsWith(
         hv.join(asn.select(col("vec_id"), col("cell")), "vec_id")
@@ -900,11 +843,7 @@ object Sim {
     }
     // the 8 probe queries: lowest batch ids, probing in quantized space
     val q8 = cluQ8(s, dir)
-    val probed = q8.crossJoin(broadcast(cents))
-      .withColumn("ccos", vec_dot(col("qx"), col("cv")) / (col("qxn") * col("cn")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crk") <= 3)
+    val probed = probe(q8, "q_id", cents, centCos("qx", "qxn"), 3)
       .select(col("q_id"), col("qv"), col("qn"), col("cell"))
     val lut = probed.join(broadcast(cb), Seq("cell"))
       .withColumn("pdot", vec_dot(expr("slice(qv, sub * 8 + 1, 8)"), col("cw")))
@@ -916,59 +855,21 @@ object Sim {
         "if(size(lutarr) = 128, lutarr, raise_error(concat('ADC LUT misaligned: expected 128 entries, got ', cast(size(lutarr) as string))))"))
     // batch-proportional side: no broadcast hint (same discipline as the
     // main serving path — AQE measures and picks the strategy)
-    val reo = probed.select(col("q_id"), col("cell"))
-      .join(codes, Seq("cell"))
-      .join(lut, Seq("q_id", "cell"))
-      .withColumn("adc_dot", expr(
-        "aggregate(transform(codes, (c, s) -> element_at(lutarr, s * 16 + c + 1)), 0.0D, (acc, t) -> acc + t)"))
-      .withColumn("adc_sim", round(col("adc_dot") / (col("qn") * sqrt(col("recn2"))), 6))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("adc_sim").desc, col("rep"))))
-      .filter(col("ark") <= 64)
+    val reo = topK(probed.select(col("q_id"), col("cell"))
+        .join(codes, Seq("cell"))
+        .join(lut, Seq("q_id", "cell"))
+        .withColumn("adc_dot", expr(
+          "aggregate(transform(codes, (c, s) -> element_at(lutarr, s * 16 + c + 1)), 0.0D, (acc, t) -> acc + t)"))
+        .withColumn("adc_sim", round(col("adc_dot") / (col("qn") * sqrt(col("recn2"))), 6)),
+      "q_id", col("adc_sim"), col("rep"), 64, "ark")
       .select(col("q_id"), col("rep").as("cand_id"))
-    val approx = reo
-      .join(hv.select(col("vec_id").as("cand_id"), col("v").as("hv2"),
-        col("nrm").as("hn")), Seq("cand_id"))
-      .join(q8.select(col("q_id"), col("qv"), col("qn")), Seq("q_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("hv2"), col("hn")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("cand_id"))))
-      .filter(col("rk") <= 3)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    val brute = broadcast(q8.select(col("q_id"), col("qv"), col("qn"))).crossJoin(hv)
-      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id"))))
-      .filter(col("rk") <= 3)
-      .select(col("q_id"), col("vec_id").as("cand_id"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_3", col("n_hit").cast("double") / 3)
-      .orderBy("q_id")
-  }
-
-  /** Observables RoundFourteenOpsSpec pins for the clustered gate: the
-    * per-query ADC candidate count (the cut must BIND: > 64) and the
-    * mean recall (the floor).
-    */
-  private[graft] def cluGateStats(s: SparkSession, dir: String): (Long, Double) = {
-    val out = ivfIncrementalRecallClustered(s, dir)
-    val meanRecall = out.agg(avg(col("recall_at_3"))).head().getDouble(0)
-    val asn = cluAssign(s, dir)
-    val cents = cluCents(s, dir)
-    val q8 = cluQ8(s, dir)
-    val cellSizes = asn.groupBy("cell").agg(count(lit(1)).as("cn_"))
-    val minCand = q8.crossJoin(broadcast(cents))
-      .withColumn("ccos", vec_dot(col("qx"), col("cv")) / (col("qxn") * col("cn")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crk") <= 3)
-      .join(cellSizes, Seq("cell"))
-      .groupBy("q_id").agg(sum(col("cn_")).as("ncand"))
-      .agg(min(col("ncand"))).head().getLong(0)
-    (minCand, meanRecall)
+    val approx = topK(reo
+        .join(hv.select(col("vec_id").as("cand_id"), col("v").as("hv2"),
+          col("nrm").as("hn")), Seq("cand_id"))
+        .join(q8.select(col("q_id"), col("qv"), col("qn")), Seq("q_id"))
+        .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("hv2"), col("hn"))),
+      "q_id", col("cos_sim"), col("cand_id"), 3)
+    recallAt(3)(bruteTop3(q8.select(col("q_id"), col("qv"), col("qn")), hv), approx)
   }
 
   // ------------------------------------------------- corpus-scaled IVF
@@ -983,33 +884,36 @@ object Sim {
     * nprobe/ncells SHRINKS as the corpus grows (the two-corpus clustered
     * probe in BASELINE.md round-11 measures it at held recall).
     */
-  private[graft] def scaledNcells(s: SparkSession, dir: String): Long = {
-    val n = vectors(s, dir).count()
-    math.max(2L, math.floor(math.sqrt(n.toDouble)).toLong)
-  }
+  private[graft] def scaledNcells(s: SparkSession, dir: String): Long =
+    sqrtCells(vectors(s, dir))
 
-  /** Quantized vectors with their hash-seeded initial cell: the ×2^20
-    * integer quantization is [[kmeansIter]]'s bit-determinism discipline
-    * (exact integer sums under any partitioning); the seed cell is an
-    * md5-mod draw both engines compute identically.
+  /** ⌊√n⌋ cells (at least 2) for the n rows of `vs`. */
+  private def sqrtCells(vs: DataFrame): Long =
+    math.max(2L, math.floor(math.sqrt(vs.count().toDouble)).toLong)
+
+  /** Quantized vectors (vec_id, x, xn) with their hash-seeded initial
+    * cell c0 among `nc`: the ×2^20 integer quantization is
+    * [[kmeansIter]]'s bit-determinism discipline (exact integer sums
+    * under any partitioning); the seed cell is an md5-mod draw both
+    * engines compute identically.
     */
+  private def seededX(vs: DataFrame, nc: Long): DataFrame =
+    vs.select(col("vec_id"),
+        expr("transform(v, t -> cast(round(t * 1048576.0) as double))").as("x"))
+      .withColumn("xn", sqrt(vec_dot(col("x"), col("x"))))
+      .withColumn("c0", expr(
+        s"cast(conv(substr(md5(concat('ivfs|', cast(vec_id as string))), 1, 15), 16, 10) as bigint) % $nc"))
+
+  /** [[seededX]] over the whole corpus, at [[scaledNcells]] cells. */
   private[graft] def scaledX(s: SparkSession, dir: String): DataFrame =
-    graft.Cached.of(s, dir, "sim.scaled.x") {
-      val nc = scaledNcells(s, dir)
-      vectors(s, dir)
-        .select(col("vec_id"),
-          expr("transform(v, t -> cast(round(t * 1048576.0) as double))").as("x"))
-        .withColumn("xn", sqrt(vec_dot(col("x"), col("x"))))
-        .withColumn("c0", expr(
-          s"cast(conv(substr(md5(concat('ivfs|', cast(vec_id as string))), 1, 15), 16, 10) as bigint) % $nc"))
-    }
+    graft.Cached.of(s, dir, "sim.scaled.x")(seededX(vectors(s, dir), scaledNcells(s, dir)))
 
   /** (cell, cv, cn) centroid table = per-cell integer component sums
     * (cosine is scale-invariant, so no division and the build stays
     * exact); all-zero cells are dropped (cn = 0 would divide by zero
     * under ANSI — both engines apply the same guard).
     */
-  private def scaledCellsOf(asn: DataFrame): DataFrame =
+  private[graft] def scaledCellsOf(asn: DataFrame): DataFrame =
     asn.select(col("cell"), posexplode(col("x")))
       .groupBy("cell", "pos").agg(sum(col("col")).as("cx"))
       .groupBy("cell")
@@ -1023,7 +927,7 @@ object Sim {
     */
   private def scaledAssignTo(cents: DataFrame, xq: DataFrame): DataFrame =
     xq.crossJoin(broadcast(cents))
-      .withColumn("ccos", vec_dot(col("x"), col("cv")) / (col("xn") * col("cn")))
+      .withColumn("ccos", centCos("x", "xn"))
       .groupBy("vec_id")
       .agg(max(struct(col("ccos"), (-col("cell")).as("nc"))).as("b"))
       .select(col("vec_id"), (-col("b.nc")).as("cell"))
@@ -1067,24 +971,13 @@ object Sim {
     val nc = scaledNcells(s, dir)
     val q = scaledX(s, dir).filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("x").as("qx"), col("xn").as("qxn"))
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("ccos", vec_dot(col("qx"), col("cv")) / (col("qxn") * col("cn")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crk") <= nprobe)
+    val qCells = probe(q, "q_id", cent, centCos("qx", "qxn"), nprobe)
       .select(col("q_id"), col("cell"))
-    val qv = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = broadcast(qCells.join(qv, "q_id"))
+    topKRows(broadcast(qCells.join(probeQueries(e), "q_id"))
       .join(e.join(asn, "vec_id"), Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm")))
-    scored.withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id"))))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("rk"), col("vec_id").as("cand_id"), col("cos_sim"),
-        lit(nc).as("ncells"))
-      .orderBy("q_id", "rk")
+      .withColumn("cos_sim", cosine(col("qv"), col("qn"), col("v"), col("nrm"))),
+      "cos_sim", lit(nc).as("ncells"))
   }
 
   private val ivfScaled: Q = (s, dir) => scaledIvfAt(s, dir, 4)
@@ -1092,17 +985,8 @@ object Sim {
   /** Recall@5 of the scaled-IVF path against brute force — the family's
     * quantitative gate, exact in both engines like [[ivfRecall]].
     */
-  private val ivfScaledRecall: Q = (s, dir) => {
-    val brute = bruteTopk(s, dir).select(col("q_id"), col("cand_id"))
-    val approx = scaledIvfAt(s, dir, 4)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_5", col("n_hit").cast("double") / 5)
-      .orderBy("q_id")
-  }
+  private val ivfScaledRecall: Q = (s, dir) =>
+    recallAt(K)(bruteTopk(s, dir), scaledIvfAt(s, dir, 4))
 
   /** Recall@5 of the LSH path against the brute-force truth, per query —
     * the quantitative ANN gate as data. Both top-5 sets are recomputed
@@ -1112,33 +996,13 @@ object Sim {
     * (they are deterministic constants, see [[planes]]) — so the recall
     * number is pinned cross-engine, not just thresholded in a spec.
     */
-  private val lshRecall: Q = (s, dir) => {
-    val brute = bruteTopk(s, dir).select(col("q_id"), col("cand_id"))
-    val approx = lshTopk(s, dir)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_5", col("n_hit").cast("double") / 5)
-      .orderBy("q_id")
-  }
+  private val lshRecall: Q = (s, dir) => recallAt(K)(bruteTopk(s, dir), lshTopk(s, dir))
 
   /** Recall@5 of the IVF path against brute force — same quantitative
     * gate as [[lshRecall]], possible because the midrange centroids make
     * the IVF index build bit-reproducible (see [[ivfTopk]]).
     */
-  private val ivfRecall: Q = (s, dir) => {
-    val brute = bruteTopk(s, dir).select(col("q_id"), col("cand_id"))
-    val approx = ivfTopk(s, dir)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_5", col("n_hit").cast("double") / 5)
-      .orderBy("q_id")
-  }
+  private val ivfRecall: Q = (s, dir) => recallAt(K)(bruteTopk(s, dir), ivfTopk(s, dir))
 
   /** Materialize the shared corpus-vector cache (see [[vectors]]), the PQ
     * codes with their reconstruction norms and the corpus-scaled IVF
@@ -1154,17 +1018,11 @@ object Sim {
     * aggregation a full iteration would add. The midrange centroids (see
     * [[centroids]]) keep the whole step hash-verifiable in DuckDB.
     */
-  private val assignNearest: Q = (s, dir) => {
-    val e = vectors(s, dir)
-    e.crossJoin(broadcast(centroids(s, dir)))
-      .withColumn("ccos", vec_dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("rk") === 1)
+  private val assignNearest: Q = (s, dir) =>
+    probe(vectors(s, dir), "vec_id", centroids(s, dir), centCos("v", "nrm"), 1)
       .select(col("vec_id"), col("cell").as("assigned_cell"),
         round(col("ccos"), 6).as("cos_to_centroid"))
       .orderBy("vec_id")
-  }
 
   /** One full k-means Lloyd iteration (assign → centroid update →
     * re-assign), made bit-deterministic under ANY partitioning: vector
@@ -1193,12 +1051,8 @@ object Sim {
         .agg(expr("transform(array_sort(collect_list(struct(pos, cx))), p -> p.cx)").as("cv"))
         .withColumn("cn", sqrt(vec_dot(col("cv"), col("cv"))))
     def assign(cents: DataFrame, cellCol: String, outCol: String) =
-      e.crossJoin(broadcast(cents))
-        .withColumn("ccos", vec_dot(col("x"), col("cv")) / (col("xn") * col("cn")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("ccos").desc, col(cellCol))))
-        .filter(col("rk") === 1)
-        .select(col("vec_id"), col(cellCol).as(outCol), col("ccos").as(outCol + "_cos"))
+      probe(e, "vec_id", cents.withColumnRenamed(cellCol, "cell"), centCos("x", "xn"), 1)
+        .select(col("vec_id"), col("cell").as(outCol), col("ccos").as(outCol + "_cos"))
     val c1 = toArr(
       e.select(col("label"), posexplode(col("x")))
         .groupBy("label", "pos").agg((min(col("col")) + max(col("col"))).as("cx"))
@@ -1284,7 +1138,7 @@ object Sim {
     // instead of a sort window — one less shuffle+sort per round
     def assign(cents: DataFrame, prev: DataFrame): DataFrame =
       prev.join(e, "vec_id").crossJoin(broadcast(cents))
-        .withColumn("ccos", vec_dot(col("x"), col("cv")) / (col("xn") * col("cn")))
+        .withColumn("ccos", centCos("x", "xn"))
         .groupBy("vec_id")
         .agg(max(struct(col("ccos"), (-col("cell")).as("nc"))).as("b"),
           first(col("pcell")).as("pcell"),
@@ -1307,7 +1161,7 @@ object Sim {
       e.select(col("label").as("cell"), posexplode(col("x")))
         .groupBy("cell", "pos").agg((min(col("col")) + max(col("col"))).as("cx")))
     val a0 = e.crossJoin(broadcast(c0))
-      .withColumn("ccos", vec_dot(col("x"), col("cv")) / (col("xn") * col("cn")))
+      .withColumn("ccos", centCos("x", "xn"))
       .groupBy("vec_id")
       .agg(max(struct(col("ccos"), (-col("cell")).as("nc"))).as("b"))
       .select(col("vec_id"), (-col("b.nc")).as("cell"), col("b.ccos").as("ccos"),
@@ -1433,27 +1287,6 @@ object Sim {
       .orderBy("vec_id")
   }
 
-  /** IVF-PQ query — the assembled ANN index the previous pieces build
-    * toward (coarse IVF probe from [[ivfTopk]] + the PQ codebook from
-    * [[pqEncode]]), scored the way a production IVFADC engine scores:
-    *  1. the query probes its 3 nearest coarse centroids;
-    *  2. an 8×K lookup table per query holds the partial dot of each
-    *     query SUBVECTOR against each codeword — candidates are then
-    *     scored WITHOUT touching their floats: dot(q, recon(v)) =
-    *     Σ_sub LUT[sub, code(v, sub)], an 8-term add per candidate
-    *     instead of a 64-term float dot (and ‖recon‖² is a
-    *     query-independent per-(sub,code) table the same way);
-    *  3. the ADC top-5 is re-ranked against the exact vectors
-    *     (`cos_exact`) — the standard refine stage, touching only k
-    *     full vectors per query.
-    * At 100 TB the corpus side is 8 B of codes per vector (32×
-    * compression), the LUT + codebooks broadcast, and the probe set
-    * bounds the scan to nprobe/K of the corpus — this is the shape that
-    * makes billion-vector ANN feasible at all. Determinism: the ADC sum
-    * folds the 8 LUT partials in sub order (sorted collect_list →
-    * sequential aggregate), mirroring DuckDB's ordered list_sum, so the
-    * approximate scores — not just the ids — hash-verify cross-engine.
-    */
   /** PQ codebook per (sub, codebook-group): 2 codewords per label
     * (parity-split midranges, 20 total per subspace) — enough
     * granularity that same-cell candidates get distinct reconstructions
@@ -1503,6 +1336,27 @@ object Sim {
           .as("recn2"))
     }
 
+  /** IVF-PQ query — the assembled ANN index the previous pieces build
+    * toward (coarse IVF probe from [[ivfTopk]] + the PQ codebook from
+    * [[pqEncode]]), scored the way a production IVFADC engine scores:
+    *  1. the query probes its 3 nearest coarse centroids;
+    *  2. an 8×K lookup table per query holds the partial dot of each
+    *     query SUBVECTOR against each codeword — candidates are then
+    *     scored WITHOUT touching their floats: dot(q, recon(v)) =
+    *     Σ_sub LUT[sub, code(v, sub)], an 8-term add per candidate
+    *     instead of a 64-term float dot (and ‖recon‖² is a
+    *     query-independent per-(sub,code) table the same way);
+    *  3. the ADC top-5 is re-ranked against the exact vectors
+    *     (`cos_exact`) — the standard refine stage, touching only k
+    *     full vectors per query.
+    * At 100 TB the corpus side is 8 B of codes per vector (32×
+    * compression), the LUT + codebooks broadcast, and the probe set
+    * bounds the scan to nprobe/K of the corpus — this is the shape that
+    * makes billion-vector ANN feasible at all. Determinism: the ADC sum
+    * folds the 8 LUT partials in sub order (sorted collect_list →
+    * sequential aggregate), mirroring DuckDB's ordered list_sum, so the
+    * approximate scores — not just the ids — hash-verify cross-engine.
+    */
   private val ivfpqTopk: Q = (s, dir) => ivfpqTopkAt(s, dir, 3)
 
   /** [[ivfpqTopk]] with the coarse probe width as a parameter (shipped
@@ -1514,14 +1368,9 @@ object Sim {
     val cb = pqCodebook(s, dir)
     val codes = pqCodes(s, dir)
     val recn = pqRecNorms(s, dir)
-    val q = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val q = probeQueries(e)
     // coarse probe: same nprobe=3 expression as sim_cosine_topk_ivf
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("ccos", vec_dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crk") <= nprobe)
+    val qCells = probe(q, "q_id", cent, centCos("qv", "qn"), nprobe)
       .select(col("q_id"), col("qn"), col("cell"))
     // ADC lookup table: dot of each query subvector against each codeword
     val lut = q.crossJoin(broadcast(cb))
@@ -1529,29 +1378,41 @@ object Sim {
       .select(col("q_id").as("lq"), col("sub").as("lsub"),
         col("cbk").as("lcode"), col("pdot"))
     // candidates = corpus vectors in probed cells; scored from codes only
-    val cand = broadcast(qCells).join(e, col("cell") === col("label"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("qn"), col("vec_id").as("cand_id"))
-    val adc = cand
-      .join(codes, col("cand_id") === col("cvid"))
-      .join(broadcast(lut),
-        col("q_id") === col("lq") && col("csub") === col("lsub") && col("code") === col("lcode"))
-      .groupBy(col("q_id"), col("cand_id"), col("qn"))
-      .agg(expr(
-        "aggregate(transform(array_sort(collect_list(struct(csub, pdot))), p -> p.pdot), 0.0D, (acc, t) -> acc + t)")
-        .as("adc_dot"))
-      .join(recn, col("cand_id") === col("rvid"))
-      .withColumn("adc_sim", round(col("adc_dot") / (col("qn") * sqrt(col("recn2"))), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("adc_sim").desc, col("cand_id"))
+    val adc = adcScored(qCells, e, codes, lut, recn)
+      .withColumn("adc_sim", round(col("adc") / (col("qn") * sqrt(col("recn2"))), 6))
     // refine: exact cosine for the ADC winners only
-    adc.withColumn("rk", row_number().over(w)).filter(col("rk") <= K)
-      .join(e.select(col("vec_id").as("evid"), col("v").as("ev"), col("nrm").as("en")),
-        col("cand_id") === col("evid"))
-      .join(q.select(col("q_id").as("q2"), col("qv")), col("q_id") === col("q2"))
-      .withColumn("cos_exact", round(vec_dot(col("qv"), col("ev")) / (col("qn") * col("en")), 6))
+    refineExact(topK(adc, "q_id", col("adc_sim"), col("cand_id"), K), e, q)
       .select(col("q_id"), col("rk"), col("cand_id"), col("adc_sim"), col("cos_exact"))
       .orderBy("q_id", "rk")
   }
+
+  /** Both IVF-PQ paths' ADC stage: each probed-cell candidate's LUT
+    * partials over its codes, summed in subspace order into `adc`, with
+    * its ‖recon‖² (`recn2`); the other `qCells` columns ride along.
+    */
+  private def adcScored(qCells: DataFrame, e: DataFrame, codes: DataFrame, lut: DataFrame,
+      recn: DataFrame): DataFrame = {
+    val keep = qCells.columns.toSeq.filterNot(_ == "cell").map(col)
+    broadcast(qCells).join(e, col("cell") === col("label"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .select(keep :+ col("vec_id").as("cand_id"): _*)
+      .join(codes, col("cand_id") === col("cvid"))
+      .join(broadcast(lut),
+        col("q_id") === col("lq") && col("csub") === col("lsub") && col("code") === col("lcode"))
+      .groupBy(keep :+ col("cand_id"): _*)
+      .agg(expr(
+        "aggregate(transform(array_sort(collect_list(struct(csub, pdot))), p -> p.pdot), 0.0D, (acc, t) -> acc + t)")
+        .as("adc"))
+      .join(recn, col("cand_id") === col("rvid"))
+  }
+
+  /** The refine stage: exact cosine `cos_exact` of the ADC winners. */
+  private def refineExact(winners: DataFrame, e: DataFrame, q: DataFrame): DataFrame =
+    winners
+      .join(e.select(col("vec_id").as("evid"), col("v").as("ev"), col("nrm").as("en")),
+        col("cand_id") === col("evid"))
+      .join(q.select(col("q_id").as("q2"), col("qv")), col("q_id") === col("q2"))
+      .withColumn("cos_exact", cosine(col("qv"), col("qn"), col("ev"), col("en")))
 
   /** RESIDUAL-encoding IVFADC — the production IVF-PQ shape ([[ivfpqTopkAt]]
     * encodes raw vectors; real engines encode x − centroid(cell)):
@@ -1656,13 +1517,8 @@ object Sim {
         .as("resn2x"), first(col("clabel")).as("rcell"))
       .join(broadcast(cent.select(col("cell").as("rcell"), col("cn"))), "rcell")
       .select(col("cvid").as("rvid"), (col("cn") * col("cn") + col("resn2x")).as("recn2")))
-    val q = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("ccos", vec_dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crk") <= nprobe)
+    val q = probeQueries(e)
+    val qCells = probe(q, "q_id", cent, centCos("qv", "qn"), nprobe)
       .select(col("q_id"), col("qn"), col("cell"),
         vec_dot(col("qv"), col("cv")).as("qcdot"))
     val lut = q.select(col("q_id"), explode(expr("sequence(0, 7)")).as("sub"), col("qv"))
@@ -1670,37 +1526,15 @@ object Sim {
       .join(broadcast(cb), "sub")
       .select(col("q_id").as("lq"), col("sub").as("lsub"),
         col("code").as("lcode"), vec_dot(col("qs"), col("cw")).as("pdot"))
-    val cand = broadcast(qCells).join(e, col("cell") === col("label"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("qn"), col("qcdot"), col("vec_id").as("cand_id"))
-    val adc = cand
-      .join(codes, col("cand_id") === col("cvid"))
-      .join(broadcast(lut),
-        col("q_id") === col("lq") && col("csub") === col("lsub") && col("code") === col("lcode"))
-      .groupBy(col("q_id"), col("cand_id"), col("qn"), col("qcdot"))
-      .agg(expr(
-        "aggregate(transform(array_sort(collect_list(struct(csub, pdot))), p -> p.pdot), 0.0D, (acc, t) -> acc + t)")
-        .as("adc_res"))
-      .join(recn, col("cand_id") === col("rvid"))
+    val adc = adcScored(qCells, e, codes, lut, recn)
       .withColumn("adc_sim",
-        round((col("qcdot") + col("adc_res")) / (col("qn") * sqrt(col("recn2"))), 6))
-    val wA = Window.partitionBy("q_id").orderBy(col("adc_sim").desc, col("cand_id"))
-    val refined = adc.withColumn("ark", row_number().over(wA)).filter(col("ark") <= reorder)
-      .join(e.select(col("vec_id").as("evid"), col("v").as("ev"), col("nrm").as("en")),
-        col("cand_id") === col("evid"))
-      .join(q.select(col("q_id").as("q2"), col("qv")), col("q_id") === col("q2"))
-      .withColumn("cos_exact", round(vec_dot(col("qv"), col("ev")) / (col("qn") * col("en")), 6))
-    val wE = Window.partitionBy("q_id").orderBy(col("cos_exact").desc, col("cand_id"))
-    refined.withColumn("rk", row_number().over(wE)).filter(col("rk") <= K)
+        round((col("qcdot") + col("adc")) / (col("qn") * sqrt(col("recn2"))), 6))
+    val refined = refineExact(topK(adc, "q_id", col("adc_sim"), col("cand_id"), reorder, "ark"), e, q)
+    topK(refined, "q_id", col("cos_exact"), col("cand_id"), K)
       .select(col("q_id"), col("rk"), col("cand_id"), col("adc_sim"), col("cos_exact"))
       .orderBy("q_id", "rk")
   }
 
-  /** Recall@5 of the IVF-PQ ADC ranking against brute force — the ANN
-    * recall gate applied to the third index family (after
-    * [[lshRecall]] / [[ivfRecall]]). The number quantifies what ADC
-    * compression costs on this corpus, pinned cross-engine.
-    */
   /** Embedding QA gate — the sanity filter that runs BEFORE any vector
     * lands in an ANN index: a truncated encoder, a bad batch, or a
     * zeroed row shows up as a squared-norm outlier, and one poisoned
@@ -1771,14 +1605,9 @@ object Sim {
         expr("transform(v, x -> x * 2.0d)").as("v")))
     val q = aug.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val w = Window.partitionBy("q_id").orderBy(col("ip").desc, col("vec_id"))
-    broadcast(q).crossJoin(aug)
+    topKRows(broadcast(q).crossJoin(aug)
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("ip", round(vec_dot(col("qv"), col("v")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("rk"), col("vec_id").as("cand_id"), col("ip"))
-      .orderBy("q_id", "rk")
+      .withColumn("ip", round(vec_dot(col("qv"), col("v")), 6)), "ip")
   }
 
   /** MIPS top-k through the IVF index family — the norm-augmentation
@@ -1828,12 +1657,7 @@ object Sim {
       .withColumn("va", expr("concat(v, array(sqrt(m2 - n2)))"))
       .withColumn("cell0",
         col("label") * 2 + when(col("n2") * 2 > col("m2"), 1L).otherwise(0L))
-    val cent = ax.select(col("cell0"), posexplode(col("va")))
-      .groupBy("cell0", "pos")
-      .agg(((min(col("col")) + max(col("col"))) / 2).as("cx"))
-      .groupBy("cell0")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, cx))), p -> p.cx)").as("cv"))
-      .select(col("cell0").as("cell"), col("cv"))
+    val cent = midrangeCents(ax.select(col("cell0").as("label"), col("va").as("v")))
     val q = aug.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), expr("concat(v, array(0.0d))").as("qa"))
     // probe order by centroid INNER PRODUCT (not cosine): MIPS winners
@@ -1845,39 +1669,20 @@ object Sim {
     // ordering reached 0.70; banded cells + IP ordering dominate at
     // every probed fraction and clear the 0.8 floor at nprobe 12/20
     // (recall 0.825/0.90/0.95 at sf0.1/0.01/0.001)
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("ub", vec_dot(col("qa"), col("cv")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ub").desc, col("cell"))))
-      .filter(col("crk") <= nprobe)
+    val qCells = probe(q, "q_id", cent, vec_dot(col("qa"), col("cv")), nprobe)
       .select(col("q_id"), col("qa"), col("cell"))
     // qa·va = q·x exactly: the appended query coordinate is 0.0, and
     // adding 0.0·aug to a finite fold is the identity in IEEE
-    val scored = broadcast(qCells).join(ax, col("cell") === col("cell0"))
+    topKRows(broadcast(qCells).join(ax, col("cell") === col("cell0"))
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("ip", round(vec_dot(col("qa"), col("va")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("ip").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("rk"), col("vec_id").as("cand_id"), col("ip"))
-      .orderBy("q_id", "rk")
+      .withColumn("ip", round(vec_dot(col("qa"), col("va")), 6)), "ip")
   }
 
   /** Recall@5 of the augmented-IVF MIPS path against the brute MIPS
     * truth — the same quantitative gate every index in the family
     * carries ([[lshRecall]]/[[ivfRecall]]/[[ivfpqRecall]]).
     */
-  private val mipsRecall: Q = (s, dir) => {
-    val brute = mipsTopk(s, dir).select(col("q_id"), col("cand_id"))
-    val approx = mipsIvf(s, dir)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_5", col("n_hit").cast("double") / 5)
-      .orderBy("q_id")
-  }
+  private val mipsRecall: Q = (s, dir) => recallAt(K)(mipsTopk(s, dir), mipsIvf(s, dir))
 
   /** Recall@5 of the RESIDUAL IVFADC path ([[ivfpqResTopkAt]]) against
     * brute force, shipped at the trained-codebook config (nprobe=3,
@@ -1891,29 +1696,15 @@ object Sim {
     * rounds, encode, LUT, ADC, reorder, refine) is replayed by the
     * DuckDB oracle, so the recall number is hash-pinned cross-engine.
     */
-  private val ivfpqResRecall: Q = (s, dir) => {
-    val brute = bruteTopk(s, dir).select(col("q_id"), col("cand_id"))
-    val approx = ivfpqResTopkAt(s, dir, 3)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_5", col("n_hit").cast("double") / 5)
-      .orderBy("q_id")
-  }
+  private val ivfpqResRecall: Q = (s, dir) =>
+    recallAt(K)(bruteTopk(s, dir), ivfpqResTopkAt(s, dir, 3))
 
-  private val ivfpqRecall: Q = (s, dir) => {
-    val brute = bruteTopk(s, dir).select(col("q_id"), col("cand_id"))
-    val approx = ivfpqTopk(s, dir)
-      .select(col("q_id").as("aq"), col("cand_id").as("ac"))
-    brute.join(approx,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_5", col("n_hit").cast("double") / 5)
-      .orderBy("q_id")
-  }
+  /** Recall@5 of the IVF-PQ ADC ranking against brute force — the ANN
+    * recall gate applied to the third index family (after
+    * [[lshRecall]] / [[ivfRecall]]). The number quantifies what ADC
+    * compression costs on this corpus, pinned cross-engine.
+    */
+  private val ivfpqRecall: Q = (s, dir) => recallAt(K)(bruteTopk(s, dir), ivfpqTopk(s, dir))
 
   /** kNN classification — the retrieval machinery put to its canonical
     * downstream use: each query vector takes the majority label of its
@@ -1935,10 +1726,7 @@ object Sim {
       e.select(col("vec_id").as("cand_id"), col("label").as("cand_label")), "cand_id")
     val votes = labeled.groupBy("q_id", "cand_label")
       .agg(count(lit(1)).as("n_votes"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("n_votes").desc, col("cand_label"))
-    votes.withColumn("vrk", row_number().over(w))
-      .filter(col("vrk") === 1)
+    topK(votes, "q_id", col("n_votes"), col("cand_label"), 1, "vrk")
       .join(broadcast(truth), "q_id")
       .select(col("q_id"), col("true_label").cast("long").as("true_label"),
         col("cand_label").cast("long").as("pred_label"), col("n_votes"))
@@ -2064,20 +1852,11 @@ object Sim {
       .withColumn("n16", sqrt(vec_dot(col("v16"), col("v16"))))
     val q = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("v16").as("qv16"), col("n16").as("qn16"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos16").desc, col("vec_id"))
-    val pref = broadcast(q).crossJoin(e)
+    val pref = topKRows(broadcast(q).crossJoin(e)
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos16", round(vec_dot(col("qv16"), col("v16")) / (col("qn16") * col("n16")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id").as("aq"), col("vec_id").as("ac"))
-    val brute = bruteTopk(s, dir).select(col("q_id"), col("cand_id"))
-    brute.join(pref,
-        col("q_id") === col("aq") && col("cand_id") === col("ac"), "left")
-      .groupBy("q_id")
-      .agg(expr("cast(count(ac) as bigint)").as("n_hit"))
-      .withColumn("recall_at_5", col("n_hit").cast("double") / 5)
-      .orderBy("q_id")
+      .withColumn("cos16", round(vec_dot(col("qv16"), col("v16")) / (col("qn16") * col("n16")), 6)),
+      "cos16")
+    recallAt(K)(bruteTopk(s, dir), pref)
   }
 
   val queries: Map[String, Q] = Map(
@@ -2110,6 +1889,28 @@ object Sim {
     "sim_ivf_scaled_recall" -> ivfScaledRecall,
   )
 
+  /** DuckDB twin of [[recallAt]]: the closing SELECT of a recall@k
+    * oracle over two CTEs, `truth` and `approx`, with (q_id, cand_id).
+    */
+  private def oRecallAt(k: Int)(truth: String, approx: String): String =
+    s"""SELECT t.q_id, CAST(COUNT(a.cand_id) AS BIGINT) AS n_hit,
+       |  CAST(COUNT(a.cand_id) AS DOUBLE) / $k AS recall_at_$k
+       |FROM $truth t LEFT JOIN $approx a ON t.q_id = a.q_id AND t.cand_id = a.cand_id
+       |GROUP BY t.q_id ORDER BY t.q_id""".stripMargin
+
+  /** DuckDB twin of a recall gate's exact cosine truth: CTE `br`
+    * (q_id, cand_id), the top-`k` per query of `q` (q_id, qv, qn) over
+    * the corpus rows `w` (vec_id, v, nrm) that `from` pairs it with —
+    * the scored pairs are CTE `bs`.
+    */
+  private def oBruteTruth(k: Int, q: String, from: String): String =
+    s"""bs AS (SELECT $q.q_id, w.vec_id AS cand_id,
+       |  round(list_sum(list_transform(range(64), i -> $q.qv[i+1] * w.v[i+1])) / ($q.qn * w.nrm), 6) AS cos_sim
+       |  FROM $from),
+       |br AS (SELECT q_id, cand_id FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk FROM bs)
+       |  WHERE rk <= $k)""".stripMargin
+
   /** DuckDB replay of the corpus-scaled IVF: ncells = ⌊√n⌋, the md5 seed
     * assignment, both unrolled Lloyd rounds plus the final-centroid
     * recompute over the last assignment (integer-exact, the
@@ -2117,39 +1918,10 @@ object Sim {
     * final centroids, and exact scoring inside probed cells.
     */
   private val oIvfScaledCte: String =
-    """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+    s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
       |  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), t -> t * t))) AS nrm
       |  FROM embeddings),
-      |nn AS (SELECT GREATEST(2, CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS nc FROM v),
-      |x0 AS (SELECT vec_id,
-      |    list_transform(v, t -> round(t * 1048576.0)) AS x,
-      |    sqrt(list_sum(list_transform(list_transform(v, t -> round(t * 1048576.0)), t -> t * t))) AS xn,
-      |    CAST(('0x' || substr(md5('ivfs|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) % nn.nc AS c0
-      |  FROM v, nn),
-      |c1d AS (SELECT c0 AS cell, i, SUM(x[i]) AS cx FROM x0, range(1, 65) t(i) GROUP BY 1, 2),
-      |c1 AS (SELECT cell, cv, sqrt(list_sum(list_transform(cv, t -> t * t))) AS cn
-      |  FROM (SELECT cell, list(cx ORDER BY i) AS cv FROM c1d GROUP BY 1)
-      |  WHERE sqrt(list_sum(list_transform(cv, t -> t * t))) > 0),
-      |a1 AS (SELECT vec_id, cell, x FROM (
-      |  SELECT x0.vec_id, c1.cell, x0.x,
-      |    row_number() OVER (PARTITION BY x0.vec_id ORDER BY
-      |      list_sum(list_transform(range(64), i -> x0.x[i+1] * c1.cv[i+1])) / (x0.xn * c1.cn) DESC,
-      |      c1.cell) AS rk
-      |  FROM x0 CROSS JOIN c1) WHERE rk = 1),
-      |c2d AS (SELECT cell, i, SUM(x[i]) AS cx FROM a1, range(1, 65) t(i) GROUP BY 1, 2),
-      |c2 AS (SELECT cell, cv, sqrt(list_sum(list_transform(cv, t -> t * t))) AS cn
-      |  FROM (SELECT cell, list(cx ORDER BY i) AS cv FROM c2d GROUP BY 1)
-      |  WHERE sqrt(list_sum(list_transform(cv, t -> t * t))) > 0),
-      |a2 AS (SELECT vec_id, cell, x FROM (
-      |  SELECT x0.vec_id, c2.cell, x0.x,
-      |    row_number() OVER (PARTITION BY x0.vec_id ORDER BY
-      |      list_sum(list_transform(range(64), i -> x0.x[i+1] * c2.cv[i+1])) / (x0.xn * c2.cn) DESC,
-      |      c2.cell) AS rk
-      |  FROM x0 CROSS JOIN c2) WHERE rk = 1),
-      |c3d AS (SELECT cell, i, SUM(x[i]) AS cx FROM a2, range(1, 65) t(i) GROUP BY 1, 2),
-      |c3 AS (SELECT cell, cv, sqrt(list_sum(list_transform(cv, t -> t * t))) AS cn
-      |  FROM (SELECT cell, list(cx ORDER BY i) AS cv FROM c3d GROUP BY 1)
-      |  WHERE sqrt(list_sum(list_transform(cv, t -> t * t))) > 0),
+      |${oLloydTrain("v")},
       |q AS (SELECT vec_id AS q_id, x AS qx, xn AS qxn FROM x0 WHERE vec_id < 8),
       |pc AS (SELECT q_id, cell FROM (
       |  SELECT q.q_id, c3.cell,
@@ -2178,18 +1950,8 @@ object Sim {
     */
   private val oIvfScaledRecall: String =
     s"""WITH $oIvfScaledCte,
-       |bs AS (SELECT qv.q_id, w.vec_id AS cand_id,
-       |  round(list_sum(list_transform(range(64), i -> qv.qv[i+1] * w.v[i+1])) / (qv.qn * w.nrm), 6) AS cos_sim
-       |  FROM qv JOIN v w ON qv.q_id <> w.vec_id),
-       |br AS (SELECT q_id, cand_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk FROM bs)
-       |  WHERE rk <= 5),
-       |j AS (SELECT br.q_id, COUNT(sir.cand_id) AS n_hit FROM br
-       |  LEFT JOIN sir ON br.q_id = sir.q_id AND br.cand_id = sir.cand_id
-       |  GROUP BY br.q_id)
-       |SELECT q_id, CAST(n_hit AS BIGINT) AS n_hit,
-       |  CAST(n_hit AS DOUBLE) / 5 AS recall_at_5
-       |FROM j ORDER BY q_id""".stripMargin
+       |${oBruteTruth(5, "qv", "qv JOIN v w ON qv.q_id <> w.vec_id")}
+       |${oRecallAt(5)("br", "sir")}""".stripMargin
 
   /** DuckDB replay of the full IVF pipeline: midrange centroids per cell,
     * nprobe=3 coarse probe, exact scoring inside probed cells, top-5.
@@ -2443,16 +2205,17 @@ object Sim {
       |    sqrt(list_sum(list_transform(list_transform(v, t -> round(t * 1048576.0)), t -> t * t))) AS qxn
       |  FROM v WHERE substr(md5('incrv|' || CAST(vec_id AS VARCHAR)), 1, 2) < '40')""".stripMargin
 
-  /** The frozen-quantizer TRAINING block (references `hv`): nc, seed
+  /** The quantizer TRAINING block over the vector CTE `src` (`hv` for
+    * the incremental family, `v` for the corpus-scaled IVF): nc, seed
     * cells, both unrolled Lloyd rounds, final-centroid sums c3.
     */
-  private val oIncrTrain: String =
-    """nn AS (SELECT GREATEST(2, CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS nc FROM hv),
+  private def oLloydTrain(src: String): String =
+    s"""nn AS (SELECT GREATEST(2, CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS nc FROM $src),
       |x0 AS (SELECT vec_id,
       |    list_transform(v, t -> round(t * 1048576.0)) AS x,
       |    sqrt(list_sum(list_transform(list_transform(v, t -> round(t * 1048576.0)), t -> t * t))) AS xn,
       |    CAST(('0x' || substr(md5('ivfs|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) % nn.nc AS c0
-      |  FROM hv, nn),
+      |  FROM $src, nn),
       |c1d AS (SELECT c0 AS cell, i, SUM(x[i]) AS cx FROM x0, range(1, 65) t(i) GROUP BY 1, 2),
       |c1 AS (SELECT cell, cv, sqrt(list_sum(list_transform(cv, t -> t * t))) AS cn
       |  FROM (SELECT cell, list(cx ORDER BY i) AS cv FROM c1d GROUP BY 1)
@@ -2477,6 +2240,8 @@ object Sim {
       |c3 AS (SELECT cell, cv, sqrt(list_sum(list_transform(cv, t -> t * t))) AS cn
       |  FROM (SELECT cell, list(cx ORDER BY i) AS cv FROM c3d GROUP BY 1)
       |  WHERE sqrt(list_sum(list_transform(cv, t -> t * t))) > 0)""".stripMargin
+
+  private val oIncrTrain: String = oLloydTrain("hv")
 
   /** The SERVING block (references `v`/`hv`/`bq`/`a2`/`c3`): nprobe=3
     * coarse probe, the folded residual codebook, per-vector codes, the
@@ -2597,7 +2362,7 @@ object Sim {
         |  round((SELECT nw FROM n3) / (CAST(pn.n AS DOUBLE) * pn.n * 1099511627776.0), 9) AS eig
         |FROM pr, pn WHERE pr.ark <= 8 ORDER BY dim""".stripMargin,
     "emb_matryoshka_recall" ->
-      """WITH v0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH v0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |vv AS (SELECT vec_id, v,
         |    sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
         |    v[1:16] AS v16,
@@ -2607,26 +2372,20 @@ object Sim {
         |bs AS (SELECT q.q_id, w.vec_id,
         |    round(list_sum(list_transform(range(64), i -> q.qv[i+1] * w.v[i+1])) / (q.qn * w.nrm), 6) AS cs
         |  FROM q JOIN vv w ON q.q_id <> w.vec_id),
-        |bt AS (SELECT q_id, vec_id FROM (SELECT *,
+        |bt AS (SELECT q_id, vec_id AS cand_id FROM (SELECT *,
         |    row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) rk FROM bs) WHERE rk <= 5),
         |ts AS (SELECT q.q_id, w.vec_id,
         |    round(list_sum(list_transform(range(16), i -> q.qv16[i+1] * w.v16[i+1])) / (q.qn16 * w.n16), 6) AS cs
         |  FROM q JOIN vv w ON q.q_id <> w.vec_id),
-        |tt AS (SELECT q_id, vec_id FROM (SELECT *,
+        |tt AS (SELECT q_id, vec_id AS cand_id FROM (SELECT *,
         |    row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) rk FROM ts) WHERE rk <= 5)
-        |SELECT b.q_id, CAST(COUNT(t.vec_id) AS BIGINT) AS n_hit,
-        |  CAST(COUNT(t.vec_id) AS DOUBLE) / 5 AS recall_at_5
-        |FROM bt b LEFT JOIN tt t ON b.q_id = t.q_id AND b.vec_id = t.vec_id
-        |GROUP BY b.q_id ORDER BY b.q_id""".stripMargin,
+        |${oRecallAt(5)("bt", "tt")}""".stripMargin,
     "sim_mips_topk_ivf" ->
       s"""WITH $oMipsIvfCte
          |SELECT q_id, rk, cand_id, ip FROM mir ORDER BY q_id, rk""".stripMargin,
     "sim_mips_recall" ->
       s"""WITH $oMipsIvfCte
-         |SELECT b.q_id, CAST(COUNT(a.cand_id) AS BIGINT) AS n_hit,
-         |  CAST(COUNT(a.cand_id) AS DOUBLE) / 5 AS recall_at_5
-         |FROM mb b LEFT JOIN mir a ON b.q_id = a.q_id AND b.cand_id = a.cand_id
-         |GROUP BY b.q_id ORDER BY b.q_id""".stripMargin,
+         |${oRecallAt(5)("mb", "mir")}""".stripMargin,
     // exact integer moments (HUGEINT on the DuckDB side mirrors the
     // DECIMAL(38,0) route in Spark); z from two exact integers
     "emb_norm_outliers" ->
@@ -2705,16 +2464,8 @@ object Sim {
     // gate completed for the third index family (LSH, IVF, IVF-PQ)
     "sim_ivfpq_recall" ->
       s"""WITH $oIvfPqCte,
-         |bs AS (SELECT q.q_id, w.vec_id AS cand_id,
-         |  round(list_sum(list_transform(range(64), i -> q.qv[i+1] * w.v[i+1])) / (q.qn * w.nrm), 6) AS cos_sim
-         |  FROM q JOIN v w ON q.q_id <> w.vec_id),
-         |br AS (SELECT q_id, cand_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk
-         |  FROM bs) WHERE rk <= 5)
-         |SELECT br.q_id, CAST(COUNT(p.cand_id) AS BIGINT) AS n_hit,
-         |  CAST(COUNT(p.cand_id) AS DOUBLE) / 5 AS recall_at_5
-         |FROM br LEFT JOIN ptop p ON br.q_id = p.q_id AND br.cand_id = p.cand_id
-         |GROUP BY br.q_id ORDER BY br.q_id""".stripMargin,
+         |${oBruteTruth(5, "q", "q JOIN v w ON q.q_id <> w.vec_id")}
+         |${oRecallAt(5)("br", "ptop")}""".stripMargin,
     // full Lloyd-step replay on the same ×2^20 integer quantization
     "emb_kmeans_converge" -> oKmeansConverge,
     // full replay of the trained residual IVFADC index: quantized
@@ -2723,7 +2474,7 @@ object Sim {
     // with reorder-64 refine — every fold sub/dim-ordered so scores
     // match bit-exactly
     "sim_ivfpq_residual_recall" ->
-      """WITH v AS MATERIALIZED (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
+      s"""WITH v AS MATERIALIZED (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
         |    sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
         |  FROM embeddings),
         |cd AS (SELECT label, i, (MIN(v.v[i]) + MAX(v.v[i])) / 2 AS cx
@@ -2807,18 +2558,8 @@ object Sim {
         |pr AS (SELECT q_id, cand_id FROM (
         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_exact DESC, cand_id) AS rk
         |  FROM ref) WHERE rk <= 5),
-        |bs AS (SELECT q.q_id, w.vec_id AS cand_id,
-        |    round(list_sum(list_transform(range(64), i -> q.qv[i+1] * w.v[i+1])) / (q.qn * w.nrm), 6) AS cos_sim
-        |  FROM q JOIN v w ON q.q_id <> w.vec_id),
-        |br AS (SELECT q_id, cand_id FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk
-        |  FROM bs) WHERE rk <= 5),
-        |j AS (SELECT br.q_id, COUNT(pr.cand_id) AS n_hit FROM br
-        |  LEFT JOIN pr ON br.q_id = pr.q_id AND br.cand_id = pr.cand_id
-        |  GROUP BY br.q_id)
-        |SELECT q_id, CAST(n_hit AS BIGINT) AS n_hit,
-        |  CAST(n_hit AS DOUBLE) / 5 AS recall_at_5
-        |FROM j ORDER BY q_id""".stripMargin,
+        |${oBruteTruth(5, "q", "q JOIN v w ON q.q_id <> w.vec_id")}
+        |${oRecallAt(5)("br", "pr")}""".stripMargin,
     // mean-shift drift test: same injected label-0 bias, same integer
     // sums, same dim-ordered Δ² fold
     "emb_centroid_drift" ->
@@ -2998,19 +2739,9 @@ object Sim {
          |$oIncrTrain,
          |$oIncrServe,
          |q8 AS (SELECT q_id, qv, qn FROM bq ORDER BY q_id LIMIT 8),
-         |bs AS (SELECT q8.q_id, w.vec_id AS cand_id,
-         |  round(list_sum(list_transform(range(64), i -> q8.qv[i+1] * w.v[i+1])) / (q8.qn * w.nrm), 6) AS cos_sim
-         |  FROM q8 CROSS JOIN hv w),
-         |br AS (SELECT q_id, cand_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk FROM bs)
-         |  WHERE rk <= 3),
          |ap AS (SELECT q_id, cand_id FROM tp WHERE rk <= 3),
-         |j AS (SELECT br.q_id, COUNT(ap.cand_id) AS n_hit FROM br
-         |  LEFT JOIN ap ON br.q_id = ap.q_id AND br.cand_id = ap.cand_id
-         |  GROUP BY br.q_id)
-         |SELECT q_id, CAST(n_hit AS BIGINT) AS n_hit,
-         |  CAST(n_hit AS DOUBLE) / 3 AS recall_at_3
-         |FROM j ORDER BY q_id""".stripMargin,
+         |${oBruteTruth(3, "q8", "q8 CROSS JOIN hv w")}
+         |${oRecallAt(3)("br", "ap")}""".stripMargin,
     // clustered ADC gate: the corpus itself is md5-generated inside the
     // query (16 centers, noise 0.35·U[-1,1) per dim — the dp_rr_count
     // replay discipline), then the IDENTICAL train/serve blocks run over
@@ -3035,46 +2766,16 @@ object Sim {
          |  ORDER BY vec_id LIMIT 8),
          |$oIncrTrain,
          |$oIncrServeAdc,
-         |bs AS (SELECT bq.q_id, w.vec_id AS cand_id,
-         |  round(list_sum(list_transform(range(64), i -> bq.qv[i+1] * w.v[i+1])) / (bq.qn * w.nrm), 6) AS cos_sim
-         |  FROM bq CROSS JOIN hv w),
-         |br AS (SELECT q_id, cand_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk FROM bs)
-         |  WHERE rk <= 3),
          |ap AS (SELECT q_id, cand_id FROM tp WHERE rk <= 3),
-         |j AS (SELECT br.q_id, COUNT(ap.cand_id) AS n_hit FROM br
-         |  LEFT JOIN ap ON br.q_id = ap.q_id AND br.cand_id = ap.cand_id
-         |  GROUP BY br.q_id)
-         |SELECT q_id, CAST(n_hit AS BIGINT) AS n_hit,
-         |  CAST(n_hit AS DOUBLE) / 3 AS recall_at_3
-         |FROM j ORDER BY q_id""".stripMargin,
+         |${oBruteTruth(3, "bq", "bq CROSS JOIN hv w")}
+         |${oRecallAt(3)("br", "ap")}""".stripMargin,
     "sim_ivf_recall" ->
       s"""WITH $oIvfCte,
-         |s AS (SELECT q.q_id, w.vec_id AS cand_id,
-         |  round(list_sum(list_transform(range(64), i -> q.qv[i+1] * w.v[i+1])) / (q.qn * w.nrm), 6) AS cos_sim
-         |  FROM q JOIN v w ON q.q_id <> w.vec_id),
-         |r AS (SELECT q_id, cand_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk FROM s)
-         |  WHERE rk <= 5),
-         |j AS (SELECT r.q_id, COUNT(ir.cand_id) AS n_hit FROM r
-         |  LEFT JOIN ir ON r.q_id = ir.q_id AND r.cand_id = ir.cand_id
-         |  GROUP BY r.q_id)
-         |SELECT q_id, CAST(n_hit AS BIGINT) AS n_hit,
-         |  CAST(n_hit AS DOUBLE) / 5 AS recall_at_5
-         |FROM j ORDER BY q_id""".stripMargin,
+         |${oBruteTruth(5, "q", "q JOIN v w ON q.q_id <> w.vec_id")}
+         |${oRecallAt(5)("br", "ir")}""".stripMargin,
     "sim_lsh_recall" ->
       s"""WITH $oLshCte,
-         |s AS (SELECT q.q_id, w.vec_id AS cand_id,
-         |  round(list_sum(list_transform(range(64), i -> q.qv[i+1] * w.v[i+1])) / (q.qn * w.nrm), 6) AS cos_sim
-         |  FROM q JOIN v w ON q.q_id <> w.vec_id),
-         |r AS (SELECT q_id, cand_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, cand_id) AS rk FROM s)
-         |  WHERE rk <= 5),
-         |j AS (SELECT r.q_id, COUNT(lsr.cand_id) AS n_hit FROM r
-         |  LEFT JOIN lsr ON r.q_id = lsr.q_id AND r.cand_id = lsr.cand_id
-         |  GROUP BY r.q_id)
-         |SELECT q_id, CAST(n_hit AS BIGINT) AS n_hit,
-         |  CAST(n_hit AS DOUBLE) / 5 AS recall_at_5
-         |FROM j ORDER BY q_id""".stripMargin,
+         |${oBruteTruth(5, "q", "q JOIN v w ON q.q_id <> w.vec_id")}
+         |${oRecallAt(5)("br", "lsr")}""".stripMargin,
   )
 }

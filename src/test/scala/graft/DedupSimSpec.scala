@@ -68,4 +68,37 @@ class DedupSimSpec extends AnyFunSuite {
     val b = SparkEntry.queries("dedup_simhash_pairs")(spark, sf).collect().toSeq
     assert(a == b)
   }
+
+  test("recallAt counts a query with zero hits as n_hit = 0, not a missing row") {
+    import spark.implicits._
+    val truth = Seq((1L, 10L), (1L, 11L), (2L, 20L), (2L, 21L)).toDF("q_id", "cand_id")
+    val approx = Seq((1L, 10L), (1L, 99L), (2L, 98L)).toDF("q_id", "cand_id")
+    val out = operators.Sim.recallAt(2)(truth, approx)
+    assert(out.columns.toSeq == Seq("q_id", "n_hit", "recall_at_2"))
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got == Seq((1L, 1L, 0.5), (2L, 0L, 0.0)))
+  }
+
+  test("probe keeps min(nprobe, ncells) cells per query and breaks score ties by the smaller cell") {
+    import spark.implicits._
+    val q = Seq((1L, 1.0), (2L, -1.0)).toDF("q_id", "w")
+    // cells 5 and 3 tie on score for every query; cell 7 scores apart
+    val cents = Seq((5L, 1.0), (3L, 1.0), (7L, 0.5)).toDF("cell", "c")
+    def cells(nprobe: Int): Seq[(Long, Int, Long)] =
+      operators.Sim.probe(q, "q_id", cents, col("w") * col("c"), nprobe)
+        .select("q_id", "crk", "cell").orderBy("q_id", "crk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    assert(cells(2) == Seq((1L, 1, 3L), (1L, 2, 5L), (2L, 1, 7L), (2L, 2, 3L)))
+    assert(cells(5) == Seq((1L, 1, 3L), (1L, 2, 5L), (1L, 3, 7L),
+      (2L, 1, 7L), (2L, 2, 3L), (2L, 3, 5L)))
+  }
+
+  test("docPairs emits doc_a < doc_b for both content-key orders") {
+    import spark.implicits._
+    val docs = Seq(("x", 9L), ("x", 2L), ("y", 5L)).toDF("ckey", "doc_id")
+    val pairs = Seq(("x", "y", 0.9), ("y", "x", 0.8)).toDF("ka", "kb", "jaccard")
+    val got = operators.Dedup.docPairs(pairs, docs, "ckey")(col("jaccard"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == Set((5L, 9L, 0.9), (2L, 5L, 0.9), (5L, 9L, 0.8), (2L, 5L, 0.8)))
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, first, lit, min, not}
+import operators.Sim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The nightly index UPDATE contract: folding tonight's batch into the
@@ -12,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (content groups, bands, docs, LM counts, gram vocabulary) that
   * rebuild treats the whole corpus as history; for the IVF artifacts —
   * whose ⌊√n_hist⌋-cell quantizer is TRAINED on history — the rebuild
-  * is the reassign-all form (`Sim.refMergedArtifacts`): the frozen
+  * is the reassign-all form (`refMergedArtifacts` below): the frozen
   * history quantizer recomputed from raw data, every corpus vector
   * assigned under it (history by its training assignment, batch by the
   * serving rule), centroid sums recomputed globally. Retraining on
@@ -29,13 +30,55 @@ class IndexMergeSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Reference "reassign-all rebuild" defining the IVF merge identity:
+    * every corpus vector keyed by the cell the FROZEN history quantizer
+    * gives it — history rows by their training assignment, batch rows
+    * by nearest final history centroid (the serving rule). A nightly
+    * rebuild-without-retrain computes this from RAW data; the merge must
+    * reach the same rows reading only artifacts + tonight's batch.
+    */
+  private def frozenAssignAll(s: SparkSession, dir: String): DataFrame = {
+    val hRows = Sim.vectors(s, dir).filter(not(expr(Incr.isBatchVec)))
+      .join(Sim.histAssign(s, dir).select(col("vec_id"), col("cell")), "vec_id")
+      .select(col("cell"), col("vec_id"), col("v"), col("nrm"))
+    val cents = Sim.buildIvfHistCentroids(s, dir)
+      .select(col("cell"), col("cv"), col("cn"))
+    hRows.unionByName(
+      Sim.batchAssignedTo(s, dir, cents)
+        .select(col("cell"), col("vec_id"), col("v"), col("nrm")))
+  }
+
+  /** The reference-rebuild IVF artifacts: reps/members/centroid-sums over
+    * [[frozenAssignAll]].
+    */
+  private def refMergedArtifacts(s: SparkSession, dir: String): Map[String, DataFrame] = {
+    val all = frozenAssignAll(s, dir)
+    val reps = all.groupBy(col("cell"), col("v"))
+      .agg(min(col("vec_id")).as("rep"), first(col("nrm")).as("hnrm"))
+    val members = all
+      .join(reps.select(col("cell"), col("v"), col("rep")), Seq("cell", "v"))
+      .select(col("rep").as("mrep"), col("vec_id").as("cand_id"))
+    val cents = Sim.scaledCellsOf(
+      all.select(col("cell"),
+        expr("transform(v, t -> cast(round(t * 1048576.0) as double))").as("x")))
+      .withColumn("nc", lit(Sim.histNcells(s, dir)))
+    // the codebook is frozen at history training time in BOTH
+    // formulations; codes re-encode every merged (cell, v) group
+    // against it — the raw-data rule the remap+append merge must equal
+    val cb = Sim.buildIvfHistCodebook(s, dir)
+    val codes = Sim.encodeRepsWith(reps.select(col("cell"), col("v"), col("rep")), cb)
+    Map("ivf_hist_reps" -> reps, "ivf_hist_members" -> members,
+      "ivf_hist_centroids" -> cents,
+      "ivf_hist_codebook" -> cb, "ivf_hist_codes" -> codes)
+  }
+
   test("merged artifacts equal a from-scratch full-corpus build, artifact for artifact") {
     val rootA = java.nio.file.Files.createTempDirectory("graft-merge-hist").toString
     val rootB = java.nio.file.Files.createTempDirectory("graft-merge-out").toString
     IndexStore.writeAll(s, dir, rootA)
     IndexStore.mergeAll(s, dir, rootA, rootB)
     val fullGroups = operators.Dedup.groupsFor(s, dir, lit(true))
-    val simRef = operators.Sim.refMergedArtifacts(s, dir)
+    val simRef = refMergedArtifacts(s, dir)
     val full: Map[String, DataFrame] = Map(
       "dedup_hist_groups" -> fullGroups,
       "dedup_hist_bands" -> operators.Dedup.bandsForGroups(fullGroups),

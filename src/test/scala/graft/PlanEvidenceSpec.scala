@@ -71,6 +71,24 @@ class PlanEvidenceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"a broadcast hint covers the batch-proportional ADC LUT subtree:\n${bad.map(_.toString.take(500)).mkString}")
   }
 
+  test("dedup_minhash_pairs: no broadcast HINT on the per-content size table") {
+    // the size prefilter's table has one row per distinct content — it
+    // grows with the corpus, so a static broadcast hint on it is a
+    // single-process memory wall at 100 TB (the dedup_ngram_minhash argument):
+    // AQE alone picks that join's strategy from the measured size. 'nsh'
+    // is the size table's column; the build must carry it (else this pin
+    // is vacuous) and no hinted subtree may contain it.
+    val build = operators.Dedup.corpusCaches.toMap.apply("dedup_minhash_pairs")(s, dir)
+    val plan = build.queryExecution.analyzed
+    assert(plan.toString.contains("nsh"), "the size prefilter left the dedup_minhash_pairs build")
+    val bad = plan.collect {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+        if h.child.toString.contains("nsh") => h
+    }
+    assert(bad.isEmpty,
+      s"a broadcast hint covers the per-content size table:\n${bad.map(_.toString.take(500)).mkString}")
+  }
+
   test("graph_cc_incremental: batch fold only — no cartesian, label fetch is pruned then keyed") {
     val p = planString(operators.Graph.queries("graph_cc_incremental")(s, dir))
     assert(!p.contains("CartesianProduct"),

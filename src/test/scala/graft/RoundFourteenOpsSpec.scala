@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{avg, col, count, expr, lit, min, sum}
+import operators.Sim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 pins.
@@ -24,8 +26,24 @@ class RoundFourteenOpsSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val dir = TestSpark.sf
 
+  /** Observables of the clustered gate: the smallest per-query ADC
+    * candidate count over its 3 probed cells (the cut must BIND: > 64)
+    * and the mean recall (the floor).
+    */
+  private def cluGateStats(s: SparkSession, dir: String): (Long, Double) = {
+    val meanRecall = Sim.queries("sim_ivf_incremental_recall_clustered")(s, dir)
+      .agg(avg(col("recall_at_3"))).head().getDouble(0)
+    val cellSizes = Sim.cluAssign(s, dir).groupBy("cell").agg(count(lit(1)).as("cn_"))
+    val minCand = Sim.probe(Sim.cluQ8(s, dir), "q_id", Sim.cluCents(s, dir),
+        Sim.centCos("qx", "qxn"), 3)
+      .join(cellSizes, Seq("cell"))
+      .groupBy("q_id").agg(sum(col("cn_")).as("ncand"))
+      .agg(min(col("ncand"))).head().getLong(0)
+    (minCand, meanRecall)
+  }
+
   test("clustered ADC gate: top-64 cut binds and recall clears the floor") {
-    val (minCand, meanRecall) = operators.Sim.cluGateStats(s, dir)
+    val (minCand, meanRecall) = cluGateStats(s, dir)
     assert(minCand > 64,
       s"ADC cut must BIND on the clustered corpus: min candidates per " +
         s"query = $minCand (need > 64, else the gate degenerates to the " +
