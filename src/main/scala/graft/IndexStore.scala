@@ -2,6 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** The md5-parity history/batch split shared by the whole incremental
+  * family: the '40' prefix (≈ 25% batch share), which the DuckDB oracles
+  * embed literally.
+  */
+object Incr {
+  val batchThresh: String = "40"
+  val isBatchDoc: String =
+    s"substr(md5(concat('incr|', cast(doc_id as string))), 1, 2) < '$batchThresh'"
+  val isBatchVec: String =
+    s"substr(md5(concat('incrv|', cast(vec_id as string))), 1, 2) < '$batchThresh'"
+}
+
 /** On-disk lifecycle for the frozen-index artifacts behind the
   * incremental family (`dedup_incremental`, `sim_ivf_incremental`,
   * `text_lm_ppl_filter`, `text_ngram_novelty`, `pipeline_admission`).
@@ -35,18 +47,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * persisted path is row-identical to the in-session path;
   * IndexLifecycleSpec pins that equality per consumer query.
   */
-/** The md5-parity history/batch split shared by the whole incremental
-  * family: the '40' prefix (≈ 25% batch share), which the DuckDB oracles
-  * embed literally.
-  */
-object Incr {
-  val batchThresh: String = "40"
-  val isBatchDoc: String =
-    s"substr(md5(concat('incr|', cast(doc_id as string))), 1, 2) < '$batchThresh'"
-  val isBatchVec: String =
-    s"substr(md5(concat('incrv|', cast(vec_id as string))), 1, 2) < '$batchThresh'"
-}
-
 object IndexStore {
   @volatile private var rootOverride: Option[String] = None
 

@@ -215,25 +215,6 @@ object Dedup {
       ex.join(rare, "s")
     }
 
-  /** Why the posting self-join below is NOT prefix-filtered (AllPairs /
-    * ppjoin, Bayardo et al. WWW'07), measured on a 16× distinct-content
-    * probe (80 k template docs, BASELINE.md round-8 notes): prefix×prefix
-    * candidate generation (exact by the smallest-shared-element lemma)
-    * cuts pair ROWS 15× (4.0 B → 261 M) and ppjoin's positional filter
-    * adds nothing on short prefixes — but exact SHARED COUNTS still cost
-    * Σ_pairs shared(pair) no matter how candidates are found (each
-    * shared shingle must be touched once), and the candidate-restricted
-    * count join (Σ_cand·|A| = 18.6 G rows) is strictly WORSE than
-    * aggregating the posting join's own pair rows (4.0 B = the exact
-    * lower bound for this corpus). So the direct join + hash-agg IS the
-    * optimal exact plan shape; its volume is a DATA property
-    * (similar-template corpora share rare shingles promiscuously), it
-    * map-side-partial-aggregates, and it distributes evenly — a ~100 GB
-    * shuffle at the probe's scale, routine on a cluster, past one box's
-    * disk. The knobs that change the asymptote are semantic: the rarity
-    * cap, the threshold, or approximate candidates (dedup_minhash).
-    */
-
   /** Rare-posting pair aggregation — (ka, kb) = xxhash64(ckey) pair,
     * shared = |A∩B| over rare shingles, na/nb = full set sizes — kept
     * for every pair passing EITHER consumer's threshold (J ≥ 0.6 for
@@ -250,6 +231,24 @@ object Dedup {
     * corpus-cache panel). Pair keys are 8-byte longs, not 32-char md5
     * strings: two long keys cut the pair-row shuffle width ~4×, and
     * collisions are the sh64 argument (P ≈ |reps|²/2⁶⁵).
+    *
+    * Why the posting self-join is NOT prefix-filtered (AllPairs /
+    * ppjoin, Bayardo et al. WWW'07), measured on a 16× distinct-content
+    * probe (80 k template docs, BASELINE.md round-8 notes): prefix×prefix
+    * candidate generation (exact by the smallest-shared-element lemma)
+    * cuts pair ROWS 15× (4.0 B → 261 M) and ppjoin's positional filter
+    * adds nothing on short prefixes — but exact SHARED COUNTS still cost
+    * Σ_pairs shared(pair) no matter how candidates are found (each
+    * shared shingle must be touched once), and the candidate-restricted
+    * count join (Σ_cand·|A| = 18.6 G rows) is strictly WORSE than
+    * aggregating the posting join's own pair rows (4.0 B = the exact
+    * lower bound for this corpus). So the direct join + hash-agg IS the
+    * optimal exact plan shape; its volume is a DATA property
+    * (similar-template corpora share rare shingles promiscuously), it
+    * map-side-partial-aggregates, and it distributes evenly — a ~100 GB
+    * shuffle at the probe's scale, routine on a cluster, past one box's
+    * disk. The knobs that change the asymptote are semantic: the rarity
+    * cap, the threshold, or approximate candidates (dedup_minhash).
     */
   private[graft] def pairSharedCounts(s: SparkSession, dir: String): DataFrame =
     graft.Cached.of(s, dir, "dedup_pair_shared") {

@@ -179,13 +179,6 @@ object Fn {
       .orderBy("doc_id")
   }
 
-  /** Statistical moments computed from EXACT decimal sums (n, Σx, Σx²,
-    * Σxy) instead of streaming corr()/var_samp(): the streaming forms
-    * accumulate floats in partition order and cannot hash-match across
-    * engines; moment arithmetic on order-independent sums is identical
-    * everywhere. This is also the mergeable formulation a distributed
-    * profiler wants at 100 TB (per-partition moment vectors merge by +).
-    */
   /** Welch's two-sample t statistic — the experimentation-platform
     * primitive (did variant B move the metric?). Groups are a
     * deterministic user split (user_id % 2) over event values in exact
@@ -253,6 +246,13 @@ object Fn {
       .orderBy("l_returnflag")
   }
 
+  /** Statistical moments computed from EXACT decimal sums (n, Σx, Σx²,
+    * Σxy) instead of streaming corr()/var_samp(): the streaming forms
+    * accumulate floats in partition order and cannot hash-match across
+    * engines; moment arithmetic on order-independent sums is identical
+    * everywhere. This is also the mergeable formulation a distributed
+    * profiler wants at 100 TB (per-partition moment vectors merge by +).
+    */
   private val aggStatsMoments: Q = (s, dir) => {
     import graft.Det
     def dsumSq(c: String) = sum((col(c) * col(c)).cast(Det.Scale)).cast("double")

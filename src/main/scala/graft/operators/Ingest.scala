@@ -512,44 +512,21 @@ object Ingest {
 
   /** IQR outlier audit (Tukey fences) on order totals — the box-plot
     * rule every DQ dashboard starts with: flag values beyond
-    * [q1 − 1.5·IQR, q3 + 1.5·IQR]. Quartiles come from the
-    * histogram-selection substrate (Relational.aggPercentileDist's
-    * discipline): two map-side-combining scans locate the type-1 p25/p75
-    * ranks via integer rank·100 ≥ p100·n comparisons, only the straddle
-    * buckets are ranked, and the fence count is ONE more
-    * map-side-combining scan against the broadcast 1-row fence table.
-    * No row ever shuffles; at 100 TB the audit costs three scans.
+    * [q1 − 1.5·IQR, q3 + 1.5·IQR]. The quartiles are the type-1 p25/p75
+    * picks of the exact-percentile kernel ([[Relational.rankSelect]]):
+    * map-side-combining histogram passes locate the ranks, and only the
+    * straddle buckets' collapsed (distinct value, count) rows reach a
+    * window. The fence count is ONE more map-side-combining scan against
+    * the broadcast 1-row fence table. No row ever shuffles, only
+    * aggregates; at 100 TB the audit costs four scans.
     */
   private val dqOutlierIqr: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val nb = 1024
-    val o = Tables(s, dir, "orders")
-      .select(col("o_totalprice").as("v"), col("o_orderkey"))
-    val mm = o.agg(min(col("v")).as("mn"), max(col("v")).as("mx"), count(lit(1)).as("n"))
-    val hist = o.crossJoin(broadcast(mm))
-      .withColumn("b", Relational.histBucket(col("v"), nb))
-      .groupBy("b").agg(count(lit(1)).as("bw"))
-    val cum = hist.withColumn("below", coalesce(
-        sum(col("bw")).over(Window.orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val specs = mm.select(explode(array(lit(25L), lit(75L))).as("p100"), col("n"))
-      .withColumn("t100", col("p100") * col("n"))
-    val located = specs.join(broadcast(cum),
-      col("t100") > col("below") * 100 &&
-        col("t100") <= (col("below") + col("bw")) * 100)
-    val buckets = located.select(col("b"), col("below")).distinct()
-    val ranked = o.crossJoin(broadcast(mm))
-      .withColumn("b", Relational.histBucket(col("v"), nb))
-      .join(broadcast(buckets), "b")
-      .withColumn("cr", col("below") + row_number().over(
-        Window.partitionBy("b").orderBy(col("v"), col("o_orderkey"))))
-    val picked = ranked.join(
-        broadcast(located.select(col("p100").as("p_"), col("t100"), col("b").as("b_"))),
-        col("b") === col("b_") && col("cr") * 100 >= col("t100"))
-      .groupBy("p_").agg(min(col("v")).as("q"))
+    val o = Tables(s, dir, "orders").select(col("o_totalprice").as("v"))
+    val picked = Relational.rankSelect(o.withColumn("w", lit(1L)), Nil,
+      Relational.type1Ranks(Seq(25, 75)), cacheKey = Some((s, dir, "dq.iqr")))._1
     val fences = picked.agg(
-        max(when(col("p_") === 25, col("q"))).as("q1"),
-        max(when(col("p_") === 75, col("q"))).as("q3"))
+        max(when(col("p100") === 25, col("v"))).as("q1"),
+        max(when(col("p100") === 75, col("v"))).as("q3"))
       .withColumn("iqr", col("q3") - col("q1"))
       .withColumn("lo", col("q1") - lit(1.5) * col("iqr"))
       .withColumn("hi", col("q3") + lit(1.5) * col("iqr"))

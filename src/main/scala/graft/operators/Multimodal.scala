@@ -94,19 +94,6 @@ object Multimodal {
       .orderBy("doc_id", "frame_idx")
   }
 
-  /** Perceptual average-hash over the payload — the multimodal dedup
-    * primitive (aHash: sample N values, threshold each against the mean,
-    * pack bits). On real images the decoded 8x8 grayscale feeds this; here
-    * the STUB "pixels" are 60 evenly-spaced payload bytes, so the hash
-    * arithmetic, the bit packing, and the collision-group join are all the
-    * production shape. 60 bits (not 64) keeps the packed value inside a
-    * signed int64 without overflow in either engine (same choice as
-    * SimHash64). The mean threshold is the integer cross-multiplication
-    * `val*60 > total` — no division, no floats, bit-identical everywhere.
-    * Collision groups come from one hash aggregation on the 8-byte hash +
-    * a key-partitioned join back; at 100 TB only (doc_id, phash) pairs
-    * shuffle.
-    */
   /** (doc_id, text) → (doc_id, phash): the 60-bit aHash as a PER-ROW
     * expression chain — no doc-grain exchange at all (r16; the pre-r16
     * shape fanned 60 (doc, i, v) rows per doc through posexplode into a
@@ -138,6 +125,19 @@ object Multimodal {
           |  (v, i) -> IF(v * 60 > total, shiftleft(1L, i), 0L)), 0L, (a, x) -> a + x)"""
           .stripMargin).as("phash"))
 
+  /** Perceptual average-hash over the payload — the multimodal dedup
+    * primitive (aHash: sample N values, threshold each against the mean,
+    * pack bits). On real images the decoded 8x8 grayscale feeds this; here
+    * the STUB "pixels" are 60 evenly-spaced payload bytes, so the hash
+    * arithmetic, the bit packing, and the collision-group join are all the
+    * production shape. 60 bits (not 64) keeps the packed value inside a
+    * signed int64 without overflow in either engine (same choice as
+    * SimHash64). The mean threshold is the integer cross-multiplication
+    * `val*60 > total` — no division, no floats, bit-identical everywhere.
+    * Collision groups come from one hash aggregation on the 8-byte hash +
+    * a key-partitioned join back; at 100 TB only (doc_id, phash) pairs
+    * shuffle.
+    */
   private val phash: Q = (s, dir) => {
     // n_same via a map-side-partial groupBy + join-back over the ONE
     // materialized phash table (r17). The r16 window count routed every
@@ -191,17 +191,6 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** Framed audio-feature extraction: the payload's bytes stand in for
-    * PCM samples (STUB — a decoder would emit real samples; everything
-    * downstream is the production shape). Each doc yields up to 8
-    * non-overlapping 32-sample frames; per frame the exact integer
-    * energy Σ(v−64)², its RMS (one IEEE sqrt of an exact ratio —
-    * correctly rounded, so bit-identical cross-engine), and the peak
-    * sample. The per-sample fan-out goes through the posexplode
-    * generator barrier (phash's inlining lesson) and collapses in one
-    * doc-keyed hash aggregation — frames per doc are bounded, so output
-    * is O(docs) and the shape is embarrassingly parallel at 100 TB.
-    */
   /** Per-(doc, frame) integer energy + peak over the stub PCM samples —
     * shared by [[audioEnergy]], [[shotBoundary]] and [[alignStub]].
     * Session-cached (r16): all three consumers re-ran the identical
@@ -223,6 +212,17 @@ object Multimodal {
         max(col("v")).cast("bigint").as("peak"))
   }
 
+  /** Framed audio-feature extraction: the payload's bytes stand in for
+    * PCM samples (STUB — a decoder would emit real samples; everything
+    * downstream is the production shape). Each doc yields up to 8
+    * non-overlapping 32-sample frames; per frame the exact integer
+    * energy Σ(v−64)², its RMS (one IEEE sqrt of an exact ratio —
+    * correctly rounded, so bit-identical cross-engine), and the peak
+    * sample. The per-sample fan-out goes through the posexplode
+    * generator barrier (phash's inlining lesson) and collapses in one
+    * doc-keyed hash aggregation — frames per doc are bounded, so output
+    * is O(docs) and the shape is embarrassingly parallel at 100 TB.
+    */
   private val audioEnergy: Q = (s, dir) =>
     frames(s, dir)
       .withColumn("rms", round(sqrt(col("energy").cast("double") / lit(32.0)), 6))

@@ -193,14 +193,6 @@ object Relational {
       .orderBy("p_brand")
   }
 
-  /** Banded range join via binning — the scale path for pure range
-    * predicates (no equi conjunct). A naive `o_totalprice BETWEEN
-    * c_acctbal ± 100` join is a cartesian product at cluster scale;
-    * mapping both sides to width-200 bins (each ±100 window spans ≤ 2
-    * bins) turns it into an ordinary hash equi-join on the bin id with an
-    * exact residual filter — O(n) shuffle, no cross product. The oracle
-    * is the plain BETWEEN join, proving the binning preserves semantics.
-    */
   /** Interval-overlap join without a quadratic theta. Each lineitem's
     * transit window [l_shipdate, ship + (l_orderkey % 45 + 1) days] is
     * exploded into the calendar months it touches (bounded fan-out:
@@ -230,6 +222,14 @@ object Relational {
       .orderBy("audit_month")
   }
 
+  /** Banded range join via binning — the scale path for pure range
+    * predicates (no equi conjunct). A naive `o_totalprice BETWEEN
+    * c_acctbal ± 100` join is a cartesian product at cluster scale;
+    * mapping both sides to width-200 bins (each ±100 window spans ≤ 2
+    * bins) turns it into an ordinary hash equi-join on the bin id with an
+    * exact residual filter — O(n) shuffle, no cross product. The oracle
+    * is the plain BETWEEN join, proving the binning preserves semantics.
+    */
   private val joinRangeBinned: Q = (s, dir) => {
     val bw = 200.0
     val c = Tables(s, dir, "customer")
@@ -585,176 +585,174 @@ object Relational {
       .orderBy("l_returnflag")
   }
 
-  /** Exact global percentiles with NO unbounded aggregate state, NO
-    * global sort, and NO full-table shuffle — distributed selection by
-    * histogram pruning (the two-phase text_length_clip discipline
-    * applied to rank selection). Spark's `percentile` (agg_percentile)
-    * buffers every value per group; a global rank window single-task
-    * sorts the table; even a range-exchange ranking pass moves every
-    * row. This plan moves NOTHING but aggregates:
-    *
-    *  1. one map-side-combining pass for (min, max, n);
-    *  2. one map-side-combining pass for a 1024-bucket value histogram
-    *     (bucketing is any monotone function of v — equal values land in
-    *     one bucket, so selected VALUES are bucketing-independent);
-    *  3. the ≤1024-row histogram prefix-sums on a bounded window, and
-    *     each percentile's target positions — computed with INTEGER
-    *     arithmetic (pos·100 = p100·(n−1), so the straddling ranks and
-    *     the interpolation weight m are exact ints, no float position to
-    *     drift cross-engine) — locate their bucket in the broadcast
-    *     cumulative histogram;
-    *  4. straddle-bucket rows COLLAPSE to (distinct value, multiplicity)
-    *     in a map-side-combining aggregate (equal values interchange
-    *     freely at rank boundaries), sub-bucketed one recursion level on
-    *     the bucket's own range; the rank-locating windows run over the
-    *     collapsed distinct-value table, partitioned by (bucket,
-    *     sub-bucket), and below-counts lift local spans to global ranks.
-    *
-    * At 100 TB: three scans, windows only over bounded distinct-value
-    * tables. Degenerate skew (99% one value) is the collapse's case: the
-    * hot value is ONE dv row at any multiplicity, so no window ever sees
-    * its row count — the one-level row-ranking formulation funneled ~n
-    * rows into ONE window task exactly when the data was worst
-    * (PropertySpec pins the bound on a 99%-constant column). Verified
-    * against Spark's own `percentile` in RoundEightOpsSpec (≤1e-4, the
-    * built-in computes its position in floating point).
+  /** Monotone nb-cell value bucketing on the per-key moments (mn, mx) —
+    * equal values share a bucket, so picked VALUES are
+    * bucketing-independent; the all-equal guard avoids 0/0.
     */
-  /** Monotone 1024-cell value bucketing for the histogram-selection
-    * percentile family — equal values share a bucket, so selected VALUES
-    * are bucketing-independent; the all-equal guard avoids 0/0.
-    */
-  private[operators] def histBucket(v: Column, nb: Int): Column =
+  private def histBucket(v: Column, nb: Int): Column =
     when(col("mx") === col("mn"), lit(0L)).otherwise(
       least(floor((v - col("mn")) / ((col("mx") - col("mn")) / nb)), lit(nb - 1L))
         .cast("long"))
 
   /** The same monotone nb-cell bucketing over an EXPLICIT [lo, hi] range
-    * — the sub-bucket (recursion) level of the selection substrate,
-    * shared by the global, grouped and weighted variants so the
-    * zero-width guard and the top-cell cap live in exactly one place.
+    * — the sub-bucket (recursion) level of [[rankSelect]].
     */
-  private[operators] def subBucket(v: Column, lo: Column, hi: Column, nb: Int): Column =
+  private def subBucket(v: Column, lo: Column, hi: Column, nb: Int): Column =
     when(hi === lo, lit(0L)).otherwise(
       least(floor((v - lo) / ((hi - lo) / nb)), lit(nb - 1L)).cast("long"))
 
-  /** The histogram-selection engine behind the exact-percentile family —
-    * exposed for the property gate (PropertySpec drives it over skewed /
-    * duplicate-heavy generated data). Input: column `v` (double); any
-    * other columns are ignored (the selection is value-collapsed, so no
-    * row tiebreak exists to matter). Output: (pct, n, value) per
-    * requested integer percentile, interpolated like `percentile()`
-    * with exact integer positions.
-    */
-  private[graft] def histogramSelect(
-      data: DataFrame, pcts: Seq[Int], nb: Int = 1024,
-      cacheKey: Option[(SparkSession, String, String)] = None): DataFrame =
-    histogramSelectParts(data, pcts, nb, cacheKey)._1
-
-  /** [[histogramSelect]] plus its window-INPUT frame (the collapsed
-    * distinct-value table `dv`), exposed so the property gate can pin
-    * the degenerate-skew bound: PropertySpec drives a 99%-one-value
-    * column and asserts no window partition exceeds the sub-bucket
-    * distinct-value bound.
+  /** The exact-percentile kernel: the value at weighted rank r, by
+    * distributed histogram selection with NO unbounded aggregate state,
+    * NO global sort and NO full-table shuffle (the two-phase
+    * text_length_clip discipline applied to rank selection). Spark's
+    * `percentile` buffers every value per group; a global rank window
+    * sorts the table on one task; even a range-exchange ranking pass
+    * moves every row. This plan moves nothing but aggregates.
     *
-    * Two defenses close the old single-level hole (a dominant value
-    * concentrating ~n rows into ONE rank-window task):
-    *  - DISTINCT-VALUE COLLAPSE: equal values interchange freely at any
-    *    rank boundary, so selection needs only (value, multiplicity);
-    *    straddle-bucket rows collapse by exact value in a map-side-
-    *    combining aggregate BEFORE any window — duplicate mass (the
-    *    skew) never reaches a window partition at all;
-    *  - one RECURSION level: straddle buckets re-histogram into nb
-    *    sub-buckets on their own [min, max] (riding the level-1
-    *    histogram pass), so window partitions are bounded by
-    *    distinct-values-per-1/nb² of the value domain even on
-    *    adversarial all-distinct concentrated columns.
-    * Cost: one extra bounded window (sub-bucket totals); the dv branch
-    * reuses one exchange for both consumers.
+    * Input: `data` with `v` (double), an integer weight `w` (the count
+    * variants pass 1) and the group `keys` (none for a global pick);
+    * `ranks` maps the per-key moments (keys…, mn, mx, n = Σw) to the
+    * caller's rank rows (keys…, p100, r, …). Output: those rank rows
+    * with `v`, the distinct value whose weighted span covers rank r
+    * (equal values interchange freely at any rank, so the pick is
+    * row-order-free), and the window-input frame `dv` for the property
+    * gate. The kernel never branches on its caller: both pick rules
+    * ([[interpolatedRanks]], [[type1Ranks]]) are rank rows.
+    *
+    *  1. one map-side-combining pass for the per-key (mn, mx, n);
+    *  2. one map-side-combining pass for the nb-bucket weight histogram
+    *     with per-bucket min/max (the sub-bucket ranges);
+    *  3. the ≤ nb-row-per-key histogram prefix sums on a bounded window
+    *     locate each rank's bucket: below < r ≤ below + bw;
+    *  4. DISTINCT-VALUE COLLAPSE: straddle-bucket rows collapse to
+    *     (value, Σw) in a map-side-combining aggregate BEFORE any
+    *     window, sub-bucketed one level on the bucket's own [min, max];
+    *  5. the exclusive prefix below_v over the collapsed table,
+    *     partitioned by (keys, bucket, sub-bucket) and lifted by the
+    *     bucket and sub-bucket offsets to a global rank, picks the value
+    *     with below_v < r ≤ below_v + wv.
+    *
+    * At 100 TB: three scans, windows only over bounded distinct-value
+    * tables. Degenerate skew (99% one value) is the collapse's case: the
+    * hot value is ONE dv row at any multiplicity, so no window ever sees
+    * its row count — a per-bucket row_number over data rows would
+    * hash-partition every straddle row by bucket and funnel a dominant
+    * value into one task exactly when the data is worst (PropertySpec
+    * pins the bound on a 99%-constant column, PlanEvidenceSpec that no
+    * row_number survives in any percentile query). The sub-bucket level
+    * bounds window partitions for the adversarial all-DISTINCT
+    * concentrated bucket by distinct-values-per-1/nb² of the domain.
+    *
+    * The tiny derived frames (moments, located ranks, collapsed dv) are
+    * each read by 2+ branches; uncached, every reference re-executes its
+    * subplan (28 base-table scans against 3). Production queries pass a
+    * (session, dir, name) `cacheKey` so repeated executions reuse one
+    * Cached.of entry per frame; ad-hoc callers (the property gate) fall
+    * back to plain persist.
     */
-  private[graft] def histogramSelectParts(
-      data: DataFrame, pcts: Seq[Int], nb: Int = 1024,
+  private[graft] def rankSelect(
+      data: DataFrame, keys: Seq[String], ranks: DataFrame => DataFrame, nb: Int = 1024,
       cacheKey: Option[(SparkSession, String, String)] = None): (DataFrame, DataFrame) = {
-    // the tiny derived frames (1-row moments, ≤1024-row histogram prefix,
-    // ≤2·pcts locator rows, collapsed dv) are cached: each is referenced
-    // by 2+ downstream branches, and without the cache every reference
-    // re-executes its whole subplan — 28 base-table scans in the
-    // uncached plan vs 3 with it. Production queries pass a (session,
-    // dir, name) cacheKey so repeated executions (min-of-2 bench passes,
-    // determinism double-runs) REUSE one Cached.of entry per query
-    // instead of leaking a fresh persist() set per invocation; ad-hoc
-    // callers (the property gate) fall back to plain persist.
     def keep(tag: String)(df: DataFrame): DataFrame = cacheKey match {
       case Some((s, d, k)) => graft.Cached.of(s, d, s"$k.$tag")(df)
       case None => df.persist()
     }
-    val mm = keep("mm")(
-      data.agg(min(col("v")).as("mn"), max(col("v")).as("mx"), count(lit(1)).as("n")))
-    val withB = data.crossJoin(broadcast(mm)).withColumn("b", histBucket(col("v"), nb))
-    // per-bucket min/max ride the same map-side-combining pass as cnt —
-    // they define the sub-bucket (level-2) value ranges
-    val hist = withB.groupBy("b").agg(count(lit(1)).as("cnt"),
-      min(col("v")).as("bmn"), max(col("v")).as("bmx"))
-    val cum = hist.withColumn("below", coalesce(
-        sum(col("cnt")).over(Window.orderBy("b")
+    // a per-key table joins on the keys; a global one is one broadcast row
+    def byKey(l: DataFrame, r: DataFrame): DataFrame =
+      if (keys.isEmpty) l.crossJoin(broadcast(r)) else l.join(broadcast(r), keys)
+    val ks = keys.map(col)
+    val bk = ks :+ col("b")
+    val mm = keep("mm")(data.groupBy(ks: _*)
+      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"), sum(col("w")).as("n")))
+    val withB = byKey(data, mm).withColumn("b", histBucket(col("v"), nb))
+    val cum = withB.groupBy(bk: _*)
+      .agg(sum(col("w")).as("bw"), min(col("v")).as("bmn"), max(col("v")).as("bmx"))
+      .withColumn("below", coalesce(
+        sum(col("bw")).over(Window.partitionBy(ks: _*).orderBy("b")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    // each percentile -> up to 2 straddling global ranks (lo, lo+1)
-    val specs = mm.select(
-        explode(array(pcts.map(p => lit(p.toLong)): _*)).as("p100"), col("n"))
-      .withColumn("pos100", col("p100") * (col("n") - 1))
-      .withColumn("lo", expr("pos100 div 100 + 1"))
-      .withColumn("m", expr("pos100 % 100"))
-      .select(col("p100"), col("n"), col("m"),
-        explode(array(col("lo"), col("lo") + 1)).as("r"))
-      .filter(col("r") <= col("n"))
-    val specsK = keep("specs")(specs)
-    val located = keep("located")(specsK.join(broadcast(cum),
-      col("r") > col("below") && col("r") <= col("below") + col("cnt")))
+    val located = keep("located")(byKey(ranks(mm), cum)
+      .filter(col("r") > col("below") && col("r") <= col("below") + col("bw")))
     val buckets = located
-      .select(col("b"), col("below"), col("bmn"), col("bmx")).distinct()
-    // DISTINCT-VALUE COLLAPSE: equal values interchange freely at any
-    // rank boundary, so selection only ever needs (value, multiplicity) —
-    // the map-side-combining groupBy below absorbs duplicate mass BEFORE
-    // any window. A 99%-one-value bucket collapses to a handful of dv
-    // rows; no window ever sees the hot value's row count. The sub-bucket
-    // key b2 (the one recursion level, on the bucket's own [min, max])
-    // additionally bounds window partitions for the adversarial
-    // all-DISTINCT concentrated bucket by distinct-values-per-1/nb² of
-    // the value domain.
-    val dv = keep("dv")(withB.join(broadcast(buckets), "b")
+      .select(bk ++ Seq(col("below"), col("bmn"), col("bmx")): _*).distinct()
+    val dv = keep("dv")(withB.join(broadcast(buckets), keys :+ "b")
       .withColumn("b2", subBucket(col("v"), col("bmn"), col("bmx"), nb))
-      .groupBy("b", "below", "b2", "v").agg(count(lit(1)).as("cv")))
-    // sub-bucket totals (≤ nb·|straddle buckets| rows) → per-sub-bucket
-    // rank offsets over the cached dv
-    val cum2 = dv.groupBy("b", "b2").agg(sum(col("cv")).as("cnt2"))
+      .groupBy(bk ++ Seq(col("below"), col("b2"), col("v")): _*)
+      .agg(sum(col("w")).as("wv")))
+    val cum2 = dv.groupBy(bk :+ col("b2"): _*).agg(sum(col("wv")).as("w2"))
       .withColumn("below2", coalesce(
-        sum(col("cnt2")).over(Window.partitionBy("b").orderBy("b2")
+        sum(col("w2")).over(Window.partitionBy(bk: _*).orderBy("b2")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("b"), col("b2"), col("below2"))
-    val cumv = dv.join(broadcast(cum2), Seq("b", "b2"))
+      .drop("w2")
+    val cumv = dv.join(broadcast(cum2), keys ++ Seq("b", "b2"))
       .withColumn("below_v", col("below") + col("below2") + coalesce(
-        sum(col("cv")).over(Window.partitionBy("b", "b2").orderBy("v")
+        sum(col("wv")).over(Window.partitionBy(bk :+ col("b2"): _*).orderBy("v")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    // global rank r lands on the distinct value whose cumulative span
-    // covers it: below_v < r ≤ below_v + cv
-    val picked = cumv.join(
-        broadcast(located.select(col("p100"), col("n").as("n_"), col("m"),
-          col("r"), col("b").as("b_"))),
-        col("b") === col("b_") && col("r") > col("below_v") &&
-          col("r") <= col("below_v") + col("cv"))
-      .select(col("p100"), col("n_"), col("m"), col("r").as("gr"), col("v"))
-    val lom = specsK.groupBy("p100").agg(min(col("r")).as("lo"))
-    val res = picked.join(broadcast(lom), "p100")
-      .groupBy("p100")
-      .agg(max(col("n_")).as("n"),
-        max(when(col("gr") === col("lo"), col("v"))).as("vlo"),
-        max(when(col("gr") === col("lo") + 1, col("v"))).as("vhi"),
+      .select(bk ++ Seq(col("v"), col("below_v"), col("wv")): _*)
+    val picked = cumv
+      .join(broadcast(located.drop("bw", "below", "bmn", "bmx")), keys :+ "b")
+      .filter(col("r") > col("below_v") && col("r") <= col("below_v") + col("wv"))
+      .drop("b", "below_v", "wv")
+    (picked, dv)
+  }
+
+  /** Each integer percentile as `percentile()`'s interpolated rank rows:
+    * with exact integer hundredths pos100 = p100·(n−1) (no float position
+    * to drift cross-engine), ranks lo = pos100 div 100 + 1 and lo + 1
+    * while ≤ n, carrying n, lo and the interpolation weight m =
+    * pos100 % 100.
+    */
+  private[graft] def interpolatedRanks(pcts: Seq[Int])(mm: DataFrame): DataFrame =
+    mm.drop("mn", "mx")
+      .withColumn("p100", explode(array(pcts.map(p => lit(p.toLong)): _*)))
+      .withColumn("lo", expr("p100 * (n - 1) div 100 + 1"))
+      .withColumn("m", expr("p100 * (n - 1) % 100"))
+      .withColumn("r", explode(array(col("lo"), col("lo") + 1)))
+      .filter(col("r") <= col("n"))
+
+  /** Each integer percentile as the type-1 weighted rank row
+    * r = ceil(p100·n / 100): for integer weights the smallest v whose
+    * cumulative weight reaches p·W (cumw·100 ≥ p100·W) is exactly the
+    * value whose span covers rank r.
+    */
+  private[graft] def type1Ranks(pcts: Seq[Int])(mm: DataFrame): DataFrame =
+    mm.drop("mn", "mx")
+      .withColumn("p100", explode(array(pcts.map(p => lit(p.toLong)): _*)))
+      .withColumn("r", expr("(p100 * n + 99) div 100"))
+
+  /** Exact interpolated percentiles (keys…, pct, n, value) of column `v`
+    * per `keys` group, like `percentile()` with exact integer positions —
+    * the [[rankSelect]] picks at ranks lo and lo + 1 folded to
+    * vlo + m·(vhi − vlo)/100. Verified against Spark's own `percentile`
+    * in RoundEightOpsSpec (≤1e-4, the built-in computes its position in
+    * floating point).
+    */
+  private[graft] def histogramSelect(
+      data: DataFrame, pcts: Seq[Int], nb: Int = 1024,
+      cacheKey: Option[(SparkSession, String, String)] = None,
+      keys: Seq[String] = Nil): DataFrame =
+    histogramSelectParts(data, pcts, nb, cacheKey, keys)._1
+
+  /** [[histogramSelect]] plus the kernel's window-input frame `dv`, which
+    * the property gate bounds on degenerate and adversarial columns.
+    */
+  private[graft] def histogramSelectParts(
+      data: DataFrame, pcts: Seq[Int], nb: Int = 1024,
+      cacheKey: Option[(SparkSession, String, String)] = None,
+      keys: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    val ks = keys.map(col)
+    val (picked, dv) = rankSelect(data.select(ks ++ Seq(col("v"), lit(1L).as("w")): _*),
+      keys, interpolatedRanks(pcts), nb, cacheKey)
+    val res = picked.groupBy(ks :+ col("p100"): _*)
+      .agg(max(col("n")).as("n"),
+        max(when(col("r") === col("lo"), col("v"))).as("vlo"),
+        max(when(col("r") === col("lo") + 1, col("v"))).as("vhi"),
         max(col("m")).as("m"))
-      .select(
+      .select(ks ++ Seq(
         (col("p100").cast("double") / 100.0).as("pct"),
         col("n"),
         round(col("vlo") +
-          (col("m") * (coalesce(col("vhi"), col("vlo")) - col("vlo"))) / 100.0, 6).as("value"))
-      .orderBy("pct")
+          (col("m") * (coalesce(col("vhi"), col("vlo")) - col("vlo"))) / 100.0, 6).as("value")): _*)
+      .orderBy(ks :+ col("pct"): _*)
     (res, dv)
   }
 
@@ -790,158 +788,36 @@ object Relational {
         round(col("tm"), 6).as("trimmed_mean"))
   }
 
-  /** PER-GROUP exact percentiles by histogram selection — the "p99 per
-    * endpoint" query every latency dashboard runs, exact, with bounded
-    * state (the built-in `percentile` buffers every group value;
-    * approx_percentile answers it only within rank ε). Same substrate
-    * as [[aggPercentileDist]] with the group key threaded through every
-    * step: a (group × 1024)-row count histogram, per-group cumulative
-    * offsets on a bounded window, integer target positions, and the
-    * distinct-value-collapse rank location over only the straddle
-    * buckets, PARTITIONED by (group, bucket) so parallelism scales with
-    * groups × buckets and a 90%-one-value group contributes ONE collapsed
-    * row for its hot value. Interpolation matches `percentile`'s
-    * definition with exact integer positions. At 100 TB: three
-    * map-side-combining scans + windows over bounded distinct-value
-    * tables — no group ever concentrates on one task.
+  /** PER-GROUP exact percentiles — the "p99 per endpoint" query every
+    * latency dashboard runs, exact, with bounded state (the built-in
+    * `percentile` buffers every group value; approx_percentile answers
+    * it only within rank ε). The [[rankSelect]] kernel keyed by the
+    * group: a (group × 1024)-row histogram, per-group offsets on a
+    * bounded window, and the collapsed rank location PARTITIONED by
+    * (group, bucket), so parallelism scales with groups × buckets and a
+    * 90%-one-value group contributes ONE collapsed row for its hot value.
     */
   private val aggPercentileGrouped: Q = (s, dir) => {
-    val nb = 1024
     val li = Tables(s, dir, "lineitem")
-      .select(col("l_returnflag").as("g"), col("l_extendedprice").as("v"))
-    // multi-referenced tiny frames session-cached (see histogramSelectParts)
-    val mm = graft.Cached.of(s, dir, "pct.grp.mm")(li.groupBy("g")
-      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"), count(lit(1)).as("n")))
-    val withB = li.join(broadcast(mm), "g")
-      .withColumn("b", histBucket(col("v"), nb))
-    val hist = withB.groupBy("g", "b").agg(count(lit(1)).as("cnt"),
-      min(col("v")).as("bmn"), max(col("v")).as("bmx"))
-    val cum = hist.withColumn("below", coalesce(
-        sum(col("cnt")).over(Window.partitionBy("g").orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val specs = mm.select(col("g"), col("n"),
-        explode(array(lit(50L), lit(90L), lit(99L))).as("p100"))
-      .withColumn("pos100", col("p100") * (col("n") - 1))
-      .withColumn("lo", expr("pos100 div 100 + 1"))
-      .withColumn("m", expr("pos100 % 100"))
-      .select(col("g"), col("p100"), col("n"), col("m"),
-        explode(array(col("lo"), col("lo") + 1)).as("r"))
-      .filter(col("r") <= col("n"))
-    val specsK = graft.Cached.of(s, dir, "pct.grp.specs")(specs)
-    val located = graft.Cached.of(s, dir, "pct.grp.located")(
-      specsK.join(broadcast(cum.withColumnRenamed("g", "g_")),
-        col("g") === col("g_") &&
-          col("r") > col("below") && col("r") <= col("below") + col("cnt"))
-        .drop("g_"))
-    // DISTINCT-VALUE COLLAPSE + one sub-bucket level (the FULL
-    // histogramSelectParts degenerate-skew defense, group-keyed):
-    // straddle-bucket rows collapse to (value, multiplicity) map-side
-    // BEFORE any window — a group where one value holds 90% of the rows
-    // contributes ONE dv row for it — and sub-bucketing on the bucket's
-    // own [min, max] bounds window partitions by
-    // distinct-values-per-1/nb² even on all-distinct concentrated groups
-    val buckets = located
-      .select(col("g"), col("b"), col("below"), col("bmn"), col("bmx")).distinct()
-    val dv = graft.Cached.of(s, dir, "pct.grp.dv")(
-      withB.join(broadcast(buckets), Seq("g", "b"))
-        .withColumn("b2", subBucket(col("v"), col("bmn"), col("bmx"), nb))
-        .groupBy("g", "b", "below", "b2", "v").agg(count(lit(1)).as("cv")))
-    val cum2 = dv.groupBy("g", "b", "b2").agg(sum(col("cv")).as("cnt2"))
-      .withColumn("below2", coalesce(
-        sum(col("cnt2")).over(Window.partitionBy("g", "b").orderBy("b2")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("g"), col("b"), col("b2"), col("below2"))
-    val cumv = dv.join(broadcast(cum2), Seq("g", "b", "b2"))
-      .withColumn("below_v", col("below") + col("below2") + coalesce(
-        sum(col("cv")).over(Window.partitionBy("g", "b", "b2").orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val picked = cumv.join(
-        broadcast(located.select(col("g").as("gg"), col("p100"),
-          col("n").as("n_"), col("m"), col("r"))),
-        col("g") === col("gg") && col("r") > col("below_v") &&
-          col("r") <= col("below_v") + col("cv"))
-      .select(col("g"), col("p100"), col("n_"), col("m"),
-        col("r").as("gr"), col("v"))
-    val lom = specsK.groupBy("g", "p100").agg(min(col("r")).as("lo"))
-    picked.join(broadcast(lom), Seq("g", "p100"))
-      .groupBy("g", "p100")
-      .agg(max(col("n_")).as("n"),
-        max(when(col("gr") === col("lo"), col("v"))).as("vlo"),
-        max(when(col("gr") === col("lo") + 1, col("v"))).as("vhi"),
-        max(col("m")).as("m"))
-      .select(col("g").as("l_returnflag"),
-        (col("p100").cast("double") / 100.0).as("pct"), col("n"),
-        round(col("vlo") +
-          (col("m") * (coalesce(col("vhi"), col("vlo")) - col("vlo"))) / 100.0, 6)
-          .as("value"))
-      .orderBy("l_returnflag", "pct")
+      .select(col("l_returnflag"), col("l_extendedprice").as("v"))
+    histogramSelect(li, Seq(50, 90, 99), cacheKey = Some((s, dir, "pct.grp")),
+      keys = Seq("l_returnflag"))
   }
 
-  /** WEIGHTED exact percentiles (weight = line quantity) by the same
-    * histogram-selection substrate as [[aggPercentileDist]] — the
-    * "median order value by units sold" class of question, which no
-    * built-in covers exactly. Type-1 weighted quantile: the p-quantile
-    * is the smallest v whose cumulative weight reaches p·W, located with
-    * pure INTEGER comparisons (cumw·100 ≥ p100·W — no float target).
-    * The weight histogram replaces the count histogram; straddle-bucket
-    * rows collapse to (distinct value, Σweight) before the per-bucket
-    * cumulative-weight window. Same scale posture: three
-    * map-side-combining scans, windows only over collapsed value tables.
+  /** WEIGHTED exact percentiles (weight = line quantity) — the "median
+    * order value by units sold" class of question, which no built-in
+    * covers exactly. Type-1 weighted quantile: the smallest v whose
+    * cumulative weight reaches p·W, as the [[rankSelect]] pick at the
+    * integer rank ceil(p100·W / 100) over the weight histogram, with
+    * straddle-bucket rows collapsed to (distinct value, Σweight).
     */
   private val aggPercentileWeighted: Q = (s, dir) => {
-    val nb = 1024
     val li = Tables(s, dir, "lineitem")
       .select(col("l_extendedprice").as("v"),
         expr("cast(round(l_quantity) as bigint)").as("w"))
-    // multi-referenced tiny frames session-cached (see histogramSelectParts)
-    val mm = graft.Cached.of(s, dir, "pct.w.mm")(
-      li.agg(min(col("v")).as("mn"), max(col("v")).as("mx"), sum(col("w")).as("tw")))
-    val hist = li.crossJoin(broadcast(mm))
-      .withColumn("b", histBucket(col("v"), nb))
-      .groupBy("b").agg(sum(col("w")).as("bw"),
-        min(col("v")).as("bmn"), max(col("v")).as("bmx"))
-    val cum = hist.withColumn("below", coalesce(
-        sum(col("bw")).over(Window.orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val specs = mm.select(explode(array(lit(50L), lit(90L), lit(99L))).as("p100"), col("tw"))
-      .withColumn("t100", col("p100") * col("tw"))
-    val located = graft.Cached.of(s, dir, "pct.w.located")(
-      specs.join(broadcast(cum),
-        col("t100") > col("below") * 100 &&
-          col("t100") <= (col("below") + col("bw")) * 100))
-    val buckets = located
-      .select(col("b"), col("below"), col("bmn"), col("bmx")).distinct()
-    // DISTINCT-VALUE COLLAPSE + one sub-bucket level (the FULL
-    // histogramSelectParts degenerate-skew defense, weighted):
-    // straddle-bucket rows collapse to (value, Σweight) map-side — a
-    // dominant value is one dv row at any multiplicity — and the
-    // cumulative-weight windows run per (bucket, sub-bucket) over
-    // distinct values only; the type-1 pick (smallest v whose global
-    // cumulative weight reaches the target) is unchanged because equal
-    // values share one cumulative span and cw stays globally offset
-    val dv = graft.Cached.of(s, dir, "pct.w.dv")(
-      li.crossJoin(broadcast(mm))
-        .withColumn("b", histBucket(col("v"), nb))
-        .join(broadcast(buckets), "b")
-        .withColumn("b2", subBucket(col("v"), col("bmn"), col("bmx"), nb))
-        .groupBy("b", "below", "b2", "v").agg(sum(col("w")).as("wv")))
-    val cum2 = dv.groupBy("b", "b2").agg(sum(col("wv")).as("w2"))
-      .withColumn("below2", coalesce(
-        sum(col("w2")).over(Window.partitionBy("b").orderBy("b2")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("b"), col("b2"), col("below2"))
-    val cumv = dv.join(broadcast(cum2), Seq("b", "b2"))
-      .withColumn("cw", col("below") + col("below2") + sum(col("wv")).over(
-        Window.partitionBy("b", "b2").orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    cumv.join(
-        broadcast(located.select(col("p100").as("p_"), col("t100"), col("tw").as("tw_"),
-          col("b").as("b_"))),
-        col("b") === col("b_") && col("cw") * 100 >= col("t100"))
-      .groupBy("p_")
-      .agg(max(col("tw_")).as("w_total"), min(col("v")).as("vmin"))
-      .select((col("p_").cast("double") / 100.0).as("pct"), col("w_total"),
-        round(col("vmin"), 6).as("value"))
+    rankSelect(li, Nil, type1Ranks(Seq(50, 90, 99)), cacheKey = Some((s, dir, "pct.w")))._1
+      .select((col("p100").cast("double") / 100.0).as("pct"), col("n").as("w_total"),
+        round(col("v"), 6).as("value"))
       .orderBy("pct")
   }
 

@@ -55,7 +55,8 @@ object Sim {
 
   /** Per-query top-`k`: rank each `q` partition by `score` DESC, ties to
     * the smaller `id`, and keep ranks 1..k in column `rk` — the cut every
-    * exact, ANN, ADC and re-rank stage of this pack shares.
+    * exact, ANN and re-rank stage of this pack shares (the pair-sized
+    * top-64 cuts use the same order through [[heapTop]]).
     */
   private def topK(df: DataFrame, q: String, score: Column, id: Column, k: Int,
       rk: String = "rk"): DataFrame =
@@ -327,21 +328,38 @@ object Sim {
   private[graft] def buildIvfHistCodes(s: SparkSession, dir: String): DataFrame =
     encodeRepsWith(artifact(s, dir, "ivf_hist_reps"), artifact(s, dir, "ivf_hist_codebook"))
 
+  /** Nearest codeword per (row, subspace) — the one encode rule of every
+    * PQ index here. `rows` carries the row `id` columns, the `on` join
+    * keys (`sub`, plus `cell` for a cell-folded codebook) and the 8-dim
+    * subvector `sv`; `cb` holds codewords `cw` under `on`, numbered by
+    * `code`. The squared-L2 argmin is a hash-agg min_by (a sort window
+    * would order rows × codewords just to keep one), ties to the smaller
+    * code. Output: (id…, on…, code, keep…), `keep` columns taken from
+    * the winning pair.
+    */
+  private def nearestCode(rows: DataFrame, cb: DataFrame, on: Seq[String], id: Seq[String],
+      sv: String, keep: Seq[String], code: String = "code"): DataFrame = {
+    val w = code +: keep
+    rows.join(broadcast(cb), on)
+      .withColumn("d2", expr(
+        s"aggregate(zip_with($sv, cw, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, t) -> acc + t)"))
+      .groupBy((id ++ on).map(col): _*)
+      .agg(expr(s"min_by(struct(${w.mkString(", ")}), struct(d2, $code))").as("w"))
+      .select((id ++ on).map(col) ++ w.map(c => col(s"w.$c").as(c)): _*)
+  }
+
+  /** (`id`…, v) rows as one row per subspace with its 8-dim slice `sv`. */
+  private def subvectors(df: DataFrame, id: String*): DataFrame =
+    df.select(id.map(col) ++ Seq(col("v"), explode(expr("sequence(0, 7)")).as("sub")): _*)
+      .withColumn("sv", expr("slice(v, sub * 8 + 1, 8)"))
+
   /** Encode (cell, v, rep) rows against a folded codebook — shared by
     * the artifact builder, the nightly merge's new-content side, and
     * the reference rebuild, so all three apply the identical rule.
     */
   private[graft] def encodeRepsWith(reps: DataFrame, cb: DataFrame): DataFrame =
-    reps.select(col("cell"), col("rep"), col("v"),
-        explode(expr("sequence(0, 7)")).as("sub"))
-      .withColumn("sv", expr("slice(v, sub * 8 + 1, 8)"))
-      .join(broadcast(cb), Seq("cell", "sub"))
-      .withColumn("d2", expr(
-        "aggregate(zip_with(sv, cw, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, t) -> acc + t)"))
-      .groupBy(col("cell"), col("rep"), col("sub"))
-      .agg(expr("min_by(struct(code, cwn2), struct(d2, code))").as("w"))
-      .select(col("cell"), col("rep"), col("sub"),
-        col("w.code").as("code"), col("w.cwn2").as("cwn2"))
+    nearestCode(subvectors(reps, "cell", "rep"), cb, Seq("cell", "sub"), Seq("rep"), "sv",
+        Seq("cwn2"))
       .groupBy(col("cell"), col("rep"))
       .agg(
         expr("transform(array_sort(collect_list(struct(sub, code))), p -> p.code)")
@@ -538,6 +556,70 @@ object Sim {
       .join(incrBreps(s, dir).select(col("qrep"), col("qv")), Seq("qv"))
       .select(col("q_id"), col("qrep"))
 
+  /** Per-`key` bounded-heap top-64 of `scored` by column `score`
+    * ((value DESC, rep ASC), the [[topK]] window's order) as
+    * (key, `carry`…, rep, score): [[org.apache.spark.sql.graft
+    * .TopKByValue]]'s map-side partial heaps shuffle ≤ 64 rows per
+    * (key, map partition), so pair-count-sized data never hits an
+    * exchange. `carry` columns are constant per key.
+    */
+  private def heapTop(scored: DataFrame, key: String, score: String,
+      carry: Seq[String]): DataFrame = {
+    val kc = col(key) +: carry.map(col)
+    scored.groupBy(col(key))
+      .agg(org.apache.spark.sql.graft.TopKAgg.topk_by_value(col(score), col("rep"), 64).as("tk"),
+        carry.map(c => first(col(c)).as(c)): _*)
+      .select(kc :+ explode(col("tk")).as("t"): _*)
+      .select(kc ++ Seq(col("t.key").as("rep"), col("t.val").as(score)): _*)
+  }
+
+  /** Positional ADC over a cell-folded codebook `cb` (cell, sub, code,
+    * cw): each `key`'s probed cells in `probed` (key, qv, qn, cell,
+    * `carry`…) get one lookup table of the query subvectors' partial
+    * dots with every codeword, and every history rep of those cells in
+    * `codes` (cell, rep, codes, recn2) is scored by 8 lookup-adds folded
+    * in subspace order (adc_sim = dot(q, recon) / (‖q‖·‖recon‖), round
+    * 6), then cut by [[heapTop]] to (key, carry…, rep, adc_sim).
+    *
+    * The LUT is laid out sub-major and indexed POSITIONALLY with the
+    * stride INFERRED from the grid: anchor codes are contiguous 0..k−1
+    * by construction and every anchor emits all 8 subspace rows, so the
+    * grid is a dense k×8 — a corpus with < 16 history vectors gets a
+    * shorter stride instead of an error. The one impossible shape (a
+    * grid that is not a multiple of 8) fails loud, as would an
+    * out-of-stride code via ANSI element_at. The stride is a per-LUT-row
+    * column: size()/div inside the scoring lambda would re-run per
+    * pair-element (~17 B times at the 512 k probe).
+    *
+    * The codebook is √n-bounded (ncells × 16 anchors × 8 subs), so it
+    * broadcasts; the LUT (one row per key × probed cell) grows with the
+    * batch, so its join carries no hint and AQE picks broadcast vs
+    * shuffle from the measured size. The candidate fan-out (2.1 B pairs
+    * at the 512 k probe) exists only as a stream: the join inputs are
+    * the two bounded tables, the pairs pour out of the cell-keyed join
+    * straight into the heap cut. (Joining the fanned-out rows with the
+    * LUT by (key, cell) and ranking with a window took two pair-sized
+    * shuffles, the second carrying the LUT arrays — a ~170 GB shuffle
+    * write at 512 k, measured as a disk-full abort in round 14.)
+    */
+  private[graft] def adcTop(probed: DataFrame, key: String, cb: DataFrame, codes: DataFrame,
+      carry: Seq[String] = Nil): DataFrame = {
+    val lut = probed.join(broadcast(cb), Seq("cell"))
+      .withColumn("pdot", vec_dot(expr("slice(qv, sub * 8 + 1, 8)"), col("cw")))
+      .groupBy(col(key), col("cell"))
+      .agg(first(col("qn")).as("qn"), carry.map(c => first(col(c)).as(c)) :+
+        expr("transform(array_sort(collect_list(struct(sub, code, pdot))), p -> p.pdot)")
+          .as("lutarr"): _*)
+      .withColumn("lutarr", expr(
+        "if(size(lutarr) > 0 and size(lutarr) % 8 = 0, lutarr, raise_error(concat('ADC LUT misaligned: expected a dense kx8 grid, got ', cast(size(lutarr) as string), ' entries')))"))
+      .withColumn("lutk", expr("cast(size(lutarr) div 8 as int)"))
+    heapTop(lut.join(codes, Seq("cell"))
+        .withColumn("adc_sim", round(expr(
+          "aggregate(transform(codes, (c, s) -> element_at(lutarr, s * lutk + c + 1)), 0.0D, (acc, t) -> acc + t)") /
+          (col("qn") * sqrt(col("recn2"))), 6)),
+      key, "adc_sim", carry)
+  }
+
   /** Incremental IVF serving — the production nightly ANN shape, the
     * vector twin of `dedup_incremental`: every other sim query builds
     * its index from the whole corpus, but a 100 TB pipeline ADDS a new
@@ -619,71 +701,15 @@ object Sim {
     }
     val reo = if (useAdc) {
       // ADC leg (round-13, the r12 verdict's top ask): candidates are
-      // scored from their 8-int PQ codes — one 128-entry per-(qrep,
-      // cell) lookup table, 8 lookup-adds per pair — instead of a
-      // 64-dim float dot against the full rep vector. The candidate
-      // join's history side moves 8 ints + 1 double per rep (the codes
-      // artifact) rather than 64 doubles, so at the production 512 k
-      // probe the scoring leg pays ~1/8 the arithmetic on ~1/8 the
-      // bytes; only the ADC top-64 reps per batch rep are re-ranked
-      // against exact vectors (the reorder stage, [[ivfpqResTopkAt]]'s
-      // discipline). The cut CAN bind (it decides who survives), so
-      // the DuckDB oracle (oIncrServe's reo), RoundTenOpsSpec's
-      // in-memory replay, and the clustered recall gate all carry the
-      // identical ADC stage.
-      // cb is ncells×128 rows = 128·⌊√n_hist⌋ — √n-bounded (~92 k rows
-      // even at n = 512 k), so the broadcast hint is size-safe at any
-      // corpus; the LUT below is NOT (one row per batch-rep × probed
-      // cell — it grows with the BATCH), so its join carries no hint
-      // and AQE picks broadcast vs shuffle from the measured size.
-      val cb = artifact(s, dir, "ivf_hist_codebook")
-      val codes = artifact(s, dir, "ivf_hist_codes")
-      val lut = probed.join(broadcast(cb), Seq("cell"))
-        .withColumn("pdot", vec_dot(expr("slice(qv, sub * 8 + 1, 8)"), col("cw")))
-        .groupBy(col("qrep"), col("cell"))
-        .agg(first(col("qn")).as("qn"), first(col("cell_assigned")).as("cell_assigned"),
-          expr("transform(array_sort(collect_list(struct(sub * 16 + code AS k, pdot))), p -> p.pdot)")
-            .as("lutarr"))
-        // element_at below indexes lutarr POSITIONALLY in (sub-major,
-        // code) order with the stride INFERRED from the grid (r14
-        // verdict ask #6): anchor codes are contiguous 0..k−1 by
-        // construction (row_number − 1) and every anchor emits all 8
-        // subspace rows, so the grid is always a dense k×8 — a corpus
-        // with < 16 history vectors simply gets a shorter stride and
-        // serves correctly instead of erroring. The remaining guard is
-        // the one genuinely impossible-by-construction shape (a grid
-        // that is not a multiple of 8), kept fail-loud; an
-        // out-of-stride code would also fail loud via ANSI element_at.
-        .withColumn("lutarr", expr(
-          "if(size(lutarr) > 0 and size(lutarr) % 8 = 0, lutarr, raise_error(concat('ADC LUT misaligned: expected a dense kx8 grid, got ', cast(size(lutarr) as string), ' entries')))"))
-        // the stride is hoisted to a per-LUT-row column: evaluating
-        // size()/div inside the scoring lambda would re-run it per
-        // PAIR-ELEMENT (~17 B times at the 512 k probe)
-        .withColumn("lutk", expr("cast(size(lutarr) div 8 as int)"))
-      // The candidate fan-out (batch-rep × probed-cell rep — 2.1 B rows
-      // at the 512 k probe) must exist only as a STREAM: the join inputs
-      // are the two bounded tables (lut: one row per (qrep, probed
-      // cell); codes: one row per history rep), the fan-out pours out of
-      // the cell-keyed join straight into the projection, and the top-64
-      // cut is the bounded-heap aggregate ([[org.apache.spark.sql.graft
-      // .TopKByValue]], (value DESC, key ASC) — the window formulation's
-      // exact order), whose map-side partial heaps shuffle ≤ 64 rows per
-      // (qrep, map partition). The first formulation joined the
-      // fanned-out rows with the LUT by (qrep, cell) and ranked them
-      // with a window — two pair-count-sized shuffles, the second
-      // carrying the 128-double LUT arrays: at 512 k that is a ~170 GB
-      // shuffle write, measured as a disk-full abort (round 14).
-      // Pair-sized data never hits an exchange.
-      lut.join(codes, Seq("cell"))
-        .withColumn("adc_dot", expr(
-          "aggregate(transform(codes, (c, s) -> element_at(lutarr, s * lutk + c + 1)), 0.0D, (acc, t) -> acc + t)"))
-        .withColumn("adc_sim", round(col("adc_dot") / (col("qn") * sqrt(col("recn2"))), 6))
-        .groupBy(col("qrep"))
-        .agg(org.apache.spark.sql.graft.TopKAgg
-          .topk_by_value(col("adc_sim"), col("rep"), 64).as("tk"),
-          first(col("cell_assigned")).as("cell_assigned"))
-        .select(col("qrep"), col("cell_assigned"),
-          explode(expr("transform(tk, t -> t.key)")).as("rep"))
+      // scored from their 8-int PQ codes ([[adcTop]]) instead of a
+      // 64-dim float dot against the full rep vector; only the ADC
+      // top-64 reps per batch rep are re-ranked against exact vectors
+      // (the reorder stage, [[ivfpqResTopkAt]]'s discipline). The cut CAN
+      // bind (it decides who survives), so the DuckDB oracle
+      // (oIncrServe's reo), RoundTenOpsSpec's in-memory replay, and the
+      // clustered recall gate all carry the identical ADC stage.
+      adcTop(probed, "qrep", artifact(s, dir, "ivf_hist_codebook"),
+        artifact(s, dir, "ivf_hist_codes"), Seq("cell_assigned"))
     } else {
       // Exact leg: the full-vector cosine streams straight out of the
       // same cell-keyed join (probed ⋈ reps — two bounded inputs, the
@@ -693,16 +719,11 @@ object Sim {
       // is what makes it the faster leg on small candidate volumes.
       // The downstream re-rank recomputes the identical cosine for the
       // ≤ 64 survivors (idempotent), keeping one shared tail.
-      probed
-        .join(hreps.select(col("cell"), col("rep"),
-          col("v").as("hv"), col("hnrm")), Seq("cell"))
-        .withColumn("xsim", cosine(col("qv"), col("qn"), col("hv"), col("hnrm")))
-        .groupBy(col("qrep"))
-        .agg(org.apache.spark.sql.graft.TopKAgg
-          .topk_by_value(col("xsim"), col("rep"), 64).as("tk"),
-          first(col("cell_assigned")).as("cell_assigned"))
-        .select(col("qrep"), col("cell_assigned"),
-          explode(expr("transform(tk, t -> t.key)")).as("rep"))
+      heapTop(probed
+          .join(hreps.select(col("cell"), col("rep"),
+            col("v").as("hv"), col("hnrm")), Seq("cell"))
+          .withColumn("xsim", cosine(col("qv"), col("qn"), col("hv"), col("hnrm"))),
+        "qrep", "xsim", Seq("cell_assigned"))
     }
     // exact re-rank: full vectors touched only for the ≤ 64 survivors
     val scoredReps = reo
@@ -845,24 +866,9 @@ object Sim {
     val q8 = cluQ8(s, dir)
     val probed = probe(q8, "q_id", cents, centCos("qx", "qxn"), 3)
       .select(col("q_id"), col("qv"), col("qn"), col("cell"))
-    val lut = probed.join(broadcast(cb), Seq("cell"))
-      .withColumn("pdot", vec_dot(expr("slice(qv, sub * 8 + 1, 8)"), col("cw")))
-      .groupBy(col("q_id"), col("cell"))
-      .agg(first(col("qn")).as("qn"),
-        expr("transform(array_sort(collect_list(struct(sub * 16 + code AS k, pdot))), p -> p.pdot)")
-          .as("lutarr"))
-      .withColumn("lutarr", expr(
-        "if(size(lutarr) = 128, lutarr, raise_error(concat('ADC LUT misaligned: expected 128 entries, got ', cast(size(lutarr) as string))))"))
     // batch-proportional side: no broadcast hint (same discipline as the
     // main serving path — AQE measures and picks the strategy)
-    val reo = topK(probed.select(col("q_id"), col("cell"))
-        .join(codes, Seq("cell"))
-        .join(lut, Seq("q_id", "cell"))
-        .withColumn("adc_dot", expr(
-          "aggregate(transform(codes, (c, s) -> element_at(lutarr, s * 16 + c + 1)), 0.0D, (acc, t) -> acc + t)"))
-        .withColumn("adc_sim", round(col("adc_dot") / (col("qn") * sqrt(col("recn2"))), 6)),
-      "q_id", col("adc_sim"), col("rep"), 64, "ark")
-      .select(col("q_id"), col("rep").as("cand_id"))
+    val reo = adcTop(probed, "q_id", cb, codes).select(col("q_id"), col("rep").as("cand_id"))
     val approx = topK(reo
         .join(hv.select(col("vec_id").as("cand_id"), col("v").as("hv2"),
           col("nrm").as("hn")), Seq("cand_id"))
@@ -1313,16 +1319,10 @@ object Sim {
     */
   private def pqCodes(s: SparkSession, dir: String): DataFrame =
     graft.Cached.of(s, dir, "pq_codes") {
-      vectors(s, dir)
-        .select(col("vec_id"), col("v"), explode(expr("sequence(0, 7)")).as("sub"))
-        .withColumn("sv", expr("slice(v, sub * 8 + 1, 8)"))
-        .join(broadcast(pqCodebook(s, dir)), "sub")
-        .withColumn("d2", expr(
-          "aggregate(zip_with(sv, cw, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, t) -> acc + t)"))
-        .groupBy("vec_id", "sub")
-        .agg(expr("min_by(struct(cbk, cwn2), struct(d2, cbk))").as("w"))
+      nearestCode(subvectors(vectors(s, dir), "vec_id"), pqCodebook(s, dir), Seq("sub"),
+          Seq("vec_id"), "sv", Seq("cwn2"), "cbk")
         .select(col("vec_id").as("cvid"), col("sub").as("csub"),
-          col("w.cbk").as("code"), col("w.cwn2").as("cwn2"))
+          col("cbk").as("code"), col("cwn2"))
     }
 
   /** ‖recon‖² per vector: sub-ordered fold of the chosen codeword norms
@@ -1456,15 +1456,6 @@ object Sim {
       .withColumn("rv", expr(
         "transform(slice(r, sub * 8 + 1, 8), t -> cast(round(t * 1048576.0) as double))"))
       .select(col("vec_id"), col("label"), col("sub"), col("rv")))
-    def nearest(cbk: DataFrame): DataFrame = rsub
-      .join(broadcast(cbk), "sub")
-      .withColumn("d2", expr(
-        "aggregate(zip_with(rv, cw, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, t) -> acc + t)"))
-      .groupBy("vec_id", "sub")
-      .agg(expr("min_by(struct(code), struct(d2, code))").as("w"),
-        first(col("label")).as("clabel"), first(col("rv")).as("rv"))
-      .select(col("vec_id"), col("sub"), col("w.code").as("code"),
-        col("clabel"), col("rv"))
     // init: sampled anchor residuals (literal vec_ids); then the Lloyd
     // rounds — integer-exact sums, count division is the only IEEE
     // step, per-round materialization of the tiny (8×nCodes) table.
@@ -1476,7 +1467,7 @@ object Sim {
         .select(col("sub"), (col("vec_id") - 8).cast("int").as("code"), col("rv").as("cw"))
         .localCheckpoint(true)
       for (_ <- 1 to trainRounds) {
-        cbq = nearest(cbq)
+        cbq = nearestCode(rsub, cbq, Seq("sub"), Seq("vec_id"), "rv", Seq("rv"))
           .select(col("sub"), col("code"), posexplode(col("rv")))
           .groupBy("sub", "code", "pos")
           .agg((sum(col("col")) / count(lit(1))).as("cx"))
@@ -1488,16 +1479,11 @@ object Sim {
       cbq.withColumn("cw", expr("transform(cw, t -> t / 1048576.0)"))
         .withColumn("cwn2", vec_dot(col("cw"), col("cw")))
     }
-    val codes = graft.Cached.of(s, dir, "pqres.codes")(rsub
-      .withColumn("rv", expr("transform(rv, t -> t / 1048576.0)"))
-      .join(broadcast(cb), "sub")
-      .withColumn("d2", expr(
-        "aggregate(zip_with(rv, cw, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, t) -> acc + t)"))
-      .groupBy("vec_id", "sub")
-      .agg(expr("min_by(struct(code, cwn2), struct(d2, code))").as("w"),
-        first(col("label")).as("clabel"))
-      .select(col("vec_id").as("cvid"), col("sub").as("csub"),
-        col("w.code").as("code"), col("w.cwn2").as("cwn2"), col("clabel")))
+    val codes = graft.Cached.of(s, dir, "pqres.codes")(
+      nearestCode(rsub.withColumn("rv", expr("transform(rv, t -> t / 1048576.0)")), cb,
+          Seq("sub"), Seq("vec_id", "label"), "rv", Seq("cwn2"))
+        .select(col("vec_id").as("cvid"), col("sub").as("csub"),
+          col("code"), col("cwn2"), col("label").as("clabel")))
     // query-independent per-(cell, sub, code) centroid·codeword dots
     val cdot = cent
       .select(col("cell"), explode(expr("sequence(0, 7)")).as("sub"), col("cv"))
@@ -2177,33 +2163,27 @@ object Sim {
     */
   private[graft] def kmeansOracleCtes: String = oKmeansCtes
 
-  /** The shared frozen-quantizer replay for the incremental family's
-    * oracles: history split, nc = ⌊√n_hist⌋, md5 seed cells, both
-    * unrolled integer-exact Lloyd rounds, final-centroid sums (c3),
-    * the batch-side nprobe=3 probe in quantized space — then (round 13)
-    * the full ADC stage: frozen cell directions u = cv/cn, the 16
-    * anchor-residual codewords folded per cell (cbn, the
-    * `ivf_hist_codebook` artifact), per-history-vector codes (henc ≡
-    * the `ivf_hist_codes` artifact under the gates' dup-free corpora,
-    * where rep = vec_id), ‖recon‖² as the sub-ordered cwn2 fold, the
-    * per-(query, cell) LUT, the ADC top-64 cut, and exact float
-    * re-ranking of only the survivors (`tp`/`qa`/`nn`/`bq`/`hv`).
+  /** The incremental family's PRELUDE over the vector CTE body `vSql`
+    * (vec_id, v, nrm): the vectors (`v`), the md5 history/batch split
+    * (`hv`), and the batch queries with quantized qx/qxn (`bq`), cut to
+    * the 8 lowest ids when `q8`. The oracle sites assemble
+    * `WITH <prelude>, $oIncrTrain, <serving>`.
     */
-  /** The incremental family's PRELUDE (no external references): cast +
-    * norm over embeddings (`v`), the md5 history/batch split (`hv`),
-    * and the batch queries with quantized qx/qxn (`bq`). Both oracle
-    * sites assemble `WITH $oIncrBase, $oIncrTrain, $oIncrServe`.
-    */
-  private val oIncrBase: String =
-    """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-      |  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), t -> t * t))) AS nrm
-      |  FROM embeddings),
+  private def oIncrPrelude(vSql: String, q8: Boolean): String =
+    s"""v AS ($vSql),
       |hv AS (SELECT * FROM v
       |  WHERE NOT substr(md5('incrv|' || CAST(vec_id AS VARCHAR)), 1, 2) < '40'),
       |bq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn,
       |    list_transform(v, t -> round(t * 1048576.0)) AS qx,
       |    sqrt(list_sum(list_transform(list_transform(v, t -> round(t * 1048576.0)), t -> t * t))) AS qxn
-      |  FROM v WHERE substr(md5('incrv|' || CAST(vec_id AS VARCHAR)), 1, 2) < '40')""".stripMargin
+      |  FROM v WHERE substr(md5('incrv|' || CAST(vec_id AS VARCHAR)), 1, 2) < '40'${
+      if (q8) "\n  ORDER BY vec_id LIMIT 8" else ""})""".stripMargin
+
+  /** [[oIncrPrelude]] over the `embeddings` table. */
+  private val oIncrBase: String = oIncrPrelude(
+    """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+      |  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), t -> t * t))) AS nrm
+      |  FROM embeddings""".stripMargin, q8 = false)
 
   /** The quantizer TRAINING block over the vector CTE `src` (`hv` for
     * the incremental family, `v` for the corpus-scaled IVF): nc, seed
@@ -2243,9 +2223,26 @@ object Sim {
 
   private val oIncrTrain: String = oLloydTrain("hv")
 
-  /** The SERVING block (references `v`/`hv`/`bq`/`a2`/`c3`): nprobe=3
-    * coarse probe, the folded residual codebook, per-vector codes, the
-    * LUT, the leg-selected top-64 cut, exact re-rank (`tp`).
+  /** The batch-side nprobe=3 probe in quantized space (`pc`: q_id, qv,
+    * qn, cell, crk) over `bq` and the trained centroids `c3`.
+    */
+  private val oIncrProbe: String =
+    """pc AS (SELECT q_id, qv, qn, cell, crk FROM (
+      |  SELECT b.q_id, b.qv, b.qn, c3.cell,
+      |    row_number() OVER (PARTITION BY b.q_id ORDER BY
+      |      list_sum(list_transform(range(64), i -> b.qx[i+1] * c3.cv[i+1])) / (b.qxn * c3.cn) DESC,
+      |      c3.cell) AS crk
+      |  FROM bq b CROSS JOIN c3) WHERE crk <= 3)""".stripMargin
+
+  /** The SERVING block (references `v`/`hv`/`bq`/`a2`/`c3`), the full
+    * frozen-quantizer serve of the incremental family's oracles:
+    * nprobe=3 coarse probe ([[oIncrProbe]]), frozen cell directions
+    * u = cv/cn, the 16 anchor-residual codewords folded per cell (cbn,
+    * the `ivf_hist_codebook` artifact), per-history-vector codes (henc
+    * ≡ the `ivf_hist_codes` artifact under the gates' dup-free corpora,
+    * where rep = vec_id), ‖recon‖² as the sub-ordered cwn2 fold, the
+    * per-(query, cell) LUT, the leg-selected top-64 cut, and exact float
+    * re-ranking of only the survivors (`tp`).
     *
     * `adcCond` is the leg-selection predicate replayed verbatim from
     * the Spark planner: the production sites pass the candidate-volume
@@ -2255,12 +2252,7 @@ object Sim {
     * the ADC leg it exists to exercise.
     */
   private def oIncrServeWith(adcCond: String): String =
-    s"""pc AS (SELECT q_id, qv, qn, cell, crk FROM (
-      |  SELECT b.q_id, b.qv, b.qn, c3.cell,
-      |    row_number() OVER (PARTITION BY b.q_id ORDER BY
-      |      list_sum(list_transform(range(64), i -> b.qx[i+1] * c3.cv[i+1])) / (b.qxn * c3.cn) DESC,
-      |      c3.cell) AS crk
-      |  FROM bq b CROSS JOIN c3) WHERE crk <= 3),
+    s"""$oIncrProbe,
       |qa AS (SELECT q_id, cell AS cell_assigned FROM pc WHERE crk = 1),
       |cstat AS (SELECT CAST(COUNT(*) AS BIGINT) AS np
       |  FROM pc JOIN a2 ON a2.cell = pc.cell),
@@ -2719,12 +2711,7 @@ object Sim {
     "sim_ivf_plan" ->
       s"""WITH $oIncrBase,
          |$oIncrTrain,
-         |pc AS (SELECT q_id, cell FROM (
-         |  SELECT b.q_id, c3.cell,
-         |    row_number() OVER (PARTITION BY b.q_id ORDER BY
-         |      list_sum(list_transform(range(64), i -> b.qx[i+1] * c3.cv[i+1])) / (b.qxn * c3.cn) DESC,
-         |      c3.cell) AS crk
-         |  FROM bq b CROSS JOIN c3) WHERE crk <= 3),
+         |$oIncrProbe,
          |st AS (SELECT CAST(COUNT(DISTINCT pc.q_id) AS BIGINT) AS n_batch_reps,
          |  CAST(COUNT(a2.cell) AS BIGINT) AS cand_pairs
          |  FROM pc LEFT JOIN a2 ON a2.cell = pc.cell)
@@ -2756,14 +2743,7 @@ object Sim {
          |    (CAST(('0x' || substr(md5('cluv|' || CAST(cid AS VARCHAR) || '|' || CAST(d AS VARCHAR)), 1, 15)) AS BIGINT) / 1152921504606846976.0 * 2.0 - 1.0)
          |    + 0.35 * (CAST(('0x' || substr(md5('clun|' || CAST(vec_id AS VARCHAR) || '|' || CAST(d AS VARCHAR)), 1, 15)) AS BIGINT) / 1152921504606846976.0 * 2.0 - 1.0)
          |  ) AS v FROM cvv),
-         |v AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, t -> t * t))) AS nrm FROM cvec),
-         |hv AS (SELECT * FROM v
-         |  WHERE NOT substr(md5('incrv|' || CAST(vec_id AS VARCHAR)), 1, 2) < '40'),
-         |bq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn,
-         |    list_transform(v, t -> round(t * 1048576.0)) AS qx,
-         |    sqrt(list_sum(list_transform(list_transform(v, t -> round(t * 1048576.0)), t -> t * t))) AS qxn
-         |  FROM v WHERE substr(md5('incrv|' || CAST(vec_id AS VARCHAR)), 1, 2) < '40'
-         |  ORDER BY vec_id LIMIT 8),
+         |${oIncrPrelude("SELECT vec_id, v, sqrt(list_sum(list_transform(v, t -> t * t))) AS nrm FROM cvec", q8 = true)},
          |$oIncrTrain,
          |$oIncrServeAdc,
          |ap AS (SELECT q_id, cand_id FROM tp WHERE rk <= 3),

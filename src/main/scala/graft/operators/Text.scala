@@ -484,16 +484,6 @@ object Text {
        |  a -> cast(a.c AS bigint))""".stripMargin
   }
 
-  /** Tokenizer-grade token budget: greedy longest-match BPE-ish counts
-    * per document (vs the whitespace proxy in `text_token_count`).
-    * Distributed shape: words content-collapse to DISTINCT before the
-    * per-word fold runs — on a duplicate-heavy crawl the fold cost is
-    * quadratic-free and proportional to distinct vocabulary, not corpus
-    * size — then per-(doc, word) multiplicities expand the counts back
-    * with one word-keyed join and a doc_id-keyed sum. The interpreted
-    * lambda (higher-order fns are CodegenFallback) therefore runs once
-    * per distinct word, not once per occurrence.
-    */
   /** Per-doc BPE token budget (doc_id, n_words, n_bpe_tokens) — shared
     * with Train.packSequencesBpe, which packs on this count.
     */
@@ -509,20 +499,18 @@ object Text {
         sum(col("n") * col("ntok")).as("n_bpe_tokens"))
   }
 
+  /** Tokenizer-grade token budget: greedy longest-match BPE-ish counts
+    * per document (vs the whitespace proxy in `text_token_count`).
+    * Distributed shape: words content-collapse to DISTINCT before the
+    * per-word fold runs — on a duplicate-heavy crawl the fold cost is
+    * quadratic-free and proportional to distinct vocabulary, not corpus
+    * size — then per-(doc, word) multiplicities expand the counts back
+    * with one word-keyed join and a doc_id-keyed sum. The interpreted
+    * lambda (higher-order fns are CodegenFallback) therefore runs once
+    * per distinct word, not once per occurrence.
+    */
   private val bpeCount: Q = (s, dir) => bpePerDoc(s, dir).orderBy("doc_id")
 
-  /** Vocabulary build + encode (the word2id step of training prep):
-    * top-256 tokens by (tf DESC, token) get stable ids 1..256; each doc's
-    * first 16 tokens encode to ids (0 = OOV), emitted as a csv string
-    * with the OOV count. Vocab selection is orderBy+limit →
-    * TakeOrderedAndProject (per-partition 256-row heaps + driver merge),
-    * NOT a global rank window over the full distinct-token table — on a
-    * web corpus that table is 10^7–10^8 rows and a global window sorts
-    * it on one task. Only AFTER the cut does a rank window assign stable
-    * ids, over exactly 256 rows; the 256-row vocab then broadcasts to
-    * the encode join. Reassembly is the ordered collect_list discipline
-    * from text_span_scrub.
-    */
   /** Zipf-law fit over the top-256 token frequencies — the corpus-health
     * diagnostic behind "is this scraped text natural language?" (natural
     * corpora fit log f ≈ a + s·log r with s ≈ −1 and high R²; boilerplate
@@ -579,6 +567,18 @@ object Text {
             .stripMargin), 6).as("r2"))
   }
 
+  /** Vocabulary build + encode (the word2id step of training prep):
+    * top-256 tokens by (tf DESC, token) get stable ids 1..256; each doc's
+    * first 16 tokens encode to ids (0 = OOV), emitted as a csv string
+    * with the OOV count. Vocab selection is orderBy+limit →
+    * TakeOrderedAndProject (per-partition 256-row heaps + driver merge),
+    * NOT a global rank window over the full distinct-token table — on a
+    * web corpus that table is 10^7–10^8 rows and a global window sorts
+    * it on one task. Only AFTER the cut does a rank window assign stable
+    * ids, over exactly 256 rows; the 256-row vocab then broadcasts to
+    * the encode join. Reassembly is the ordered collect_list discipline
+    * from text_span_scrub.
+    */
   private val vocabEncode: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val top = Tables.docsSpread(s, dir)

@@ -175,25 +175,6 @@ object Train {
       .orderBy("doc_id")
   }
 
-  /** CCNet-style perplexity filter (Wenzek et al. 2020) with the nightly
-    * train/apply split — the LM quality gate every crawl pipeline runs:
-    * a language model is trained ONCE on a frozen reference corpus and
-    * each new batch is scored against it, NOT against itself (scoring a
-    * batch with a batch-trained LM lets boilerplate floods score
-    * themselves fluent). Here the md5-parity split shared with
-    * `dedup_incremental` makes ~75% of documents the HISTORY the
-    * unigram LM (add-one smoothing over history vocab; OOV falls to the
-    * same smoothed floor) is trained on and ~25% the scored BATCH. Each
-    * batch doc gets exact-integer token counts, a DECIMAL(28,18)-routed
-    * cross-entropy sum (orderless, so hash-stable), perplexity, and the
-    * CCNet head/middle/tail bucket by xent thirds — bucket edges come
-    * from the distributed globalRank discipline (range partition +
-    * boundary offsets, Flow.globalRank), never a global window. The LM
-    * join carries NO broadcast hint: a 100 TB corpus vocabulary is not
-    * a driver table, and token→token is a plain shuffle equi-join. At
-    * scale: LM build is one map-side-combining count over history;
-    * scoring is batch-linear.
-    */
   /** The frozen history LM — token counts over the history split, the
     * artifact [[graft.IndexBuild]] writes (`lm_hist_counts`) and a cold
     * scoring session reads back instead of re-tokenizing history text
@@ -229,6 +210,25 @@ object Train {
 
   private val isBatchDocExpr = graft.Incr.isBatchDoc
 
+  /** CCNet-style perplexity filter (Wenzek et al. 2020) with the nightly
+    * train/apply split — the LM quality gate every crawl pipeline runs:
+    * a language model is trained ONCE on a frozen reference corpus and
+    * each new batch is scored against it, NOT against itself (scoring a
+    * batch with a batch-trained LM lets boilerplate floods score
+    * themselves fluent). Here the md5-parity split shared with
+    * `dedup_incremental` makes ~75% of documents the HISTORY the
+    * unigram LM (add-one smoothing over history vocab; OOV falls to the
+    * same smoothed floor) is trained on and ~25% the scored BATCH. Each
+    * batch doc gets exact-integer token counts, a DECIMAL(28,18)-routed
+    * cross-entropy sum (orderless, so hash-stable), perplexity, and the
+    * CCNet head/middle/tail bucket by xent thirds — bucket edges come
+    * from the distributed globalRank discipline (range partition +
+    * boundary offsets, Flow.globalRank), never a global window. The LM
+    * join carries NO broadcast hint: a 100 TB corpus vocabulary is not
+    * a driver table, and token→token is a plain shuffle equi-join. At
+    * scale: LM build is one map-side-combining count over history;
+    * scoring is batch-linear.
+    */
   private val lmPplFilter: Q = (s, dir) => {
     val lm = graft.IndexStore.artifact(s, dir, "lm_hist_counts")
     val nv = lm.agg(sum(col("cw")).as("n"), count(lit(1)).as("v"))

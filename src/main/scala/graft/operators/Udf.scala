@@ -39,9 +39,6 @@ object Udf {
 
   // ------------------------------------------------------------ typed UDAF
 
-  /** Typed Aggregator: geometric mean via sum-of-logs (partial-mergeable,
-    * so Spark plans it as partial + final aggregation like any builtin).
-    */
   /** MUST be public: Spark's generated projection code instantiates the
     * buffer class and calls its accessors from janino-compiled Java — a
     * `private` buffer compiles but silently falls back to interpreted
@@ -50,6 +47,9 @@ object Udf {
     */
   case class GeoBuf(sumLog: Double, n: Long)
 
+  /** Typed Aggregator: geometric mean via sum-of-logs (partial-mergeable,
+    * so Spark plans it as partial + final aggregation like any builtin).
+    */
   object GeoMean extends Aggregator[Double, GeoBuf, Double] {
     def zero: GeoBuf = GeoBuf(0.0, 0L)
     def reduce(b: GeoBuf, x: Double): GeoBuf =

@@ -510,7 +510,6 @@ case class MisraGries(
     copy(child = newChild)
 }
 
-/** Column-level API for the graft engine (importable from graft code). */
 /** Greedy longest-match BPE-ish token count over a literal merge vocab —
   * the codegen'd form of the `aggregate()` fold in operators/Text.scala
   * (which remains the declarative reference; the DuckDB oracle replays
@@ -568,6 +567,7 @@ case class BpeCount(child: Expression)
     copy(newChild)
 }
 
+/** Column-level API for the graft engine (importable from graft code). */
 object VecFunctions {
   private def ex(c: Column): Expression = ExpressionUtils.expression(c)
 

@@ -93,6 +93,51 @@ class DedupSimSpec extends AnyFunSuite {
       (2L, 1, 7L), (2L, 2, 3L), (2L, 3, 5L)))
   }
 
+  test("adcTop: a stride-5 LUT scores each survivor as its direct reconstruction dot; the top-64 cut breaks score ties by the smaller rep") {
+    import spark.implicits._
+    // a 2-cell folded codebook over 5 anchors (stride 5, not 16). All
+    // values are multiples of 1/8 or 1/4, so every dot is exact in any
+    // summation order and the scores compare bit for bit
+    val nCode = 5
+    def cw(cell: Long, sub: Int, code: Int): Seq[Double] =
+      Seq.tabulate(8)(j => ((cell * 7 + sub * 3 + code * 5 + j) % 9 - 4) / 4.0)
+    val cb = (for (cell <- Seq(0L, 1L); sub <- 0 until 8; code <- 0 until nCode)
+      yield (cell, sub, code, cw(cell, sub, code))).toDF("cell", "sub", "code", "cw")
+    // cell 0: 70 reps sharing one code row — an exact 70-way score tie,
+    // so a 64-cut over it must bind inside the tie; cell 1: 12 distinct reps
+    val reps: Seq[(Long, Long, Seq[Int])] =
+      Seq.tabulate(70)(i => (0L, 200L - i, Seq(1, 4, 0, 2, 3, 1, 0, 4))) ++
+        Seq.tabulate(12)(i => (1L, i.toLong, Seq.tabulate(8)(sub => (i + 2 * sub) % nCode)))
+    def recon(cell: Long, cs: Seq[Int]): Seq[Double] =
+      cs.zipWithIndex.flatMap { case (c, sub) => cw(cell, sub, c) }
+    def dot(a: Seq[Double], b: Seq[Double]): Double = a.zip(b).map { case (x, y) => x * y }.sum
+    val codes = reps.map { case (cell, rep, cs) => (cell, rep, cs, dot(recon(cell, cs), recon(cell, cs))) }
+      .toDF("cell", "rep", "codes", "recn2")
+    val qs = Seq(
+      1L -> Seq.tabulate(64)(i => ((i * 7 + 3) % 13 - 6) / 8.0),
+      2L -> Seq.tabulate(64)(i => ((i * 5 + 1) % 11 - 5) / 8.0))
+    def probedCells(q: Long): Seq[Long] = if (q == 1L) Seq(0L, 1L) else Seq(1L)
+    val probed = qs.flatMap { case (q, v) =>
+      probedCells(q).map(c => (q, v, math.sqrt(dot(v, v)), c)) }.toDF("q_id", "qv", "qn", "cell")
+    val got = operators.Sim.adcTop(probed, "q_id", cb, codes).collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rep")) -> r.getAs[Double]("adc_sim")).toMap
+    val want = qs.flatMap { case (q, v) =>
+      reps.filter(r => probedCells(q).contains(r._1)).map { case (cell, rep, cs) =>
+        val r = recon(cell, cs)
+        val sc = BigDecimal(dot(v, r) / (math.sqrt(dot(v, v)) * math.sqrt(dot(r, r))))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (q, rep, sc)
+      }.sortBy { case (_, rep, sc) => (-sc, rep) }.take(64)
+    }
+    assert(got.keySet == want.map(w => (w._1, w._2)).toSet)
+    want.foreach { case (q, rep, sc) =>
+      assert(got((q, rep)) == sc, s"q$q rep $rep: ADC ${got((q, rep))} vs direct $sc") }
+    // query 1's cut lands inside the tie: exactly its smallest reps survive
+    val tied = got.keys.collect { case (1L, rep) if rep > 100 => rep }.toSeq.sorted
+    assert(tied.nonEmpty && tied.size < 70, s"the cut should bind inside the tie: ${tied.size} kept")
+    assert(tied == (131L until 131L + tied.size), s"tie survivors are not the smallest reps: $tied")
+  }
+
   test("docPairs emits doc_a < doc_b for both content-key orders") {
     import spark.implicits._
     val docs = Seq(("x", 9L), ("x", 2L), ("y", 5L)).toDF("ckey", "doc_id")

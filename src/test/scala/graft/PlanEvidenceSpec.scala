@@ -407,10 +407,11 @@ class PlanEvidenceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("percentile family: NO row-ranking window survives — selection runs on collapsed distinct values") {
     // the round-9 degenerate-skew fix: straddle rows collapse to
     // (value, multiplicity) map-side, so the plan must contain no
-    // row_number over data rows in any of the three variants (the old
+    // row_number over data rows in any variant on the kernel (the old
     // formulation's per-bucket row_number is exactly what funneled ~n
     // rows into one task under a dominant value)
-    Seq("agg_percentile_dist", "agg_percentile_grouped", "agg_percentile_weighted")
+    Seq("agg_percentile_dist", "agg_percentile_grouped", "agg_percentile_weighted",
+      "dq_outlier_iqr")
       .foreach { q =>
         val p = planString(SparkEntry.queries(q)(s, dir))
         assert(!p.contains("row_number"),

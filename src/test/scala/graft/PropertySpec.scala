@@ -244,46 +244,82 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: histogram selection on a 99%-constant column — correct AND no window partition exceeds the collapsed distinct-value bound") {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col, count, lit}
     import s.implicits._
     // degenerate skew: one value holds 99% of the mass, the rest spread
     // over a wide range that SHARES the dominant value's bucket — the
     // shape where the old single-level row-ranking plan funneled ~n rows
-    // into one window task
+    // into one window task. The same column runs through the kernel's
+    // interpolated rule (global and as two groups) and its type-1
+    // weighted rule.
     val rnd = new scala.util.Random(11)
     val vs: Seq[Double] = Seq.tabulate(20000)(i =>
       if (i % 100 == 0) rnd.nextDouble() * 1e6 else 42.0)
-    val df = rnd.shuffle(vs).zipWithIndex
-      .map { case (v, i) => (v, i.toLong) }.toDF("v", "k")
-    val (res, dv) =
-      operators.Relational.histogramSelectParts(df, Seq(50, 90, 99), nb = 16)
-    // correctness vs the direct sorted interpolation
-    val got = res.collect()
-      .map(r => (r.getAs[Double]("pct"), r.getAs[Double]("value"))).toMap
-    val sorted = vs.sorted
-    val n = sorted.length
-    Seq(50, 90, 99).foreach { p =>
+    val rows = rnd.shuffle(vs).zipWithIndex
+      .map { case (v, i) => (v, i.toLong, (i % 2).toLong, (i % 3 + 1).toLong) }
+    val df = rows.toDF("v", "k", "g", "w")
+    val pcts = Seq(50, 90, 99)
+    def interpolated(sorted: Seq[Double], p: Int): Double = {
+      val n = sorted.length
       val pos100 = p.toLong * (n - 1)
       val lo = (pos100 / 100).toInt
       val m = pos100 % 100
       val vlo = sorted(lo)
       val vhi = if (lo + 1 < n) sorted(lo + 1) else vlo
-      val want = BigDecimal(vlo + (m * (vhi - vlo)) / 100.0)
+      BigDecimal(vlo + (m * (vhi - vlo)) / 100.0)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(math.abs(got(p / 100.0) - want) <= 1e-9, s"p$p: got ${got(p / 100.0)} want $want")
     }
     // plan pin: the window-input frame is the COLLAPSED distinct-value
     // table — the dominant value is one row per sub-bucket, and no
-    // (bucket, sub-bucket) window partition exceeds the distinct-value
-    // bound (straddle distincts ≤ 1% spread + the hot value)
-    val parts = dv.groupBy("b", "b2").agg(count(lit(1)).as("sz"))
-      .agg(org.apache.spark.sql.functions.max(col("sz")).as("mx"),
-        org.apache.spark.sql.functions.sum(col("sz")).as("tot")).head()
-    val distinctStraddle = parts.getLong(1)
-    assert(distinctStraddle <= 300,
-      s"collapse failed: $distinctStraddle rows reached the window input (expect ≤ ~1%-spread distincts)")
-    assert(parts.getLong(0) <= 300,
-      s"a window partition holds ${parts.getLong(0)} rows — the degenerate-skew bound is broken")
+    // (keys, bucket, sub-bucket) window partition exceeds the
+    // distinct-value bound (straddle distincts ≤ 1% spread + the hot value)
+    def assertBound(dv: DataFrame, keys: String*): Unit = {
+      val parts = dv.groupBy((keys ++ Seq("b", "b2")).map(col): _*).agg(count(lit(1)).as("sz"))
+        .agg(org.apache.spark.sql.functions.max(col("sz")).as("mx"),
+          org.apache.spark.sql.functions.sum(col("sz")).as("tot")).head()
+      val distinctStraddle = parts.getLong(1)
+      assert(distinctStraddle <= 300,
+        s"collapse failed: $distinctStraddle rows reached the window input (expect ≤ ~1%-spread distincts)")
+      assert(parts.getLong(0) <= 300,
+        s"a window partition holds ${parts.getLong(0)} rows — the degenerate-skew bound is broken")
+    }
+
+    // interpolated, global: correctness vs the direct sorted interpolation
+    val (res, dv) = operators.Relational.histogramSelectParts(df, pcts, nb = 16)
+    val got = res.collect()
+      .map(r => (r.getAs[Double]("pct"), r.getAs[Double]("value"))).toMap
+    pcts.foreach { p =>
+      val want = interpolated(vs.sorted, p)
+      assert(math.abs(got(p / 100.0) - want) <= 1e-9, s"p$p: got ${got(p / 100.0)} want $want")
+    }
+    assertBound(dv)
+
+    // interpolated, two groups keyed by g
+    val (gres, gdv) =
+      operators.Relational.histogramSelectParts(df, pcts, nb = 16, keys = Seq("g"))
+    val ggot = gres.collect()
+      .map(r => ((r.getAs[Long]("g"), r.getAs[Double]("pct")), r.getAs[Double]("value"))).toMap
+    assert(ggot.size == 2 * pcts.size, s"expected ${2 * pcts.size} (group, pct) rows: $ggot")
+    for (g <- Seq(0L, 1L); p <- pcts) {
+      val want = interpolated(rows.filter(_._3 == g).map(_._1).sorted, p)
+      val have = ggot((g, p / 100.0))
+      assert(math.abs(have - want) <= 1e-9, s"g$g p$p: got $have want $want")
+    }
+    assertBound(gdv, "g")
+
+    // type-1 weighted: the smallest v whose cumulative weight reaches p·W
+    val (wres, wdv) = operators.Relational.rankSelect(df.select("v", "w"), Nil,
+      operators.Relational.type1Ranks(pcts), nb = 16)
+    val wgot = wres.collect().map(r => (r.getAs[Long]("p100"), r.getAs[Double]("v"))).toMap
+    val byV = rows.map(r => (r._1, r._4)).sortBy(_._1)
+    val cumw = byV.scanLeft(0L)(_ + _._2).tail
+    val tw = cumw.last
+    pcts.foreach { p =>
+      val want = byV(cumw.indexWhere(_ * 100 >= p * tw))._1
+      assert(wgot.get(p.toLong).contains(want), s"type-1 p$p: got ${wgot.get(p.toLong)} want $want")
+    }
+    assertBound(wdv)
   }
 
   test("property: histogram selection on an all-DISTINCT concentrated column — the sub-bucket level bounds window partitions") {
