@@ -1,0 +1,100 @@
+#!/usr/bin/env python3
+"""Fail on a parquet read outside the one read path. `graft.Tables.read`
+resolves each input's schema (and its drift check) once per session; a
+raw `read.parquet(` elsewhere in the program infers the schema again on
+every call, one Spark job each, before the query's own work starts, and
+a raw `read.schema(...).parquet(` skips the drift check.
+
+Usage: python3 scripts/lint_reads.py [root ...]   (default: src/main)
+Prints one `file:line` per raw read (the line `read` is on) and exits 1
+if there is any. Comments and string literals are skipped; a read split
+over lines is found.
+"""
+import pathlib
+import re
+import sys
+
+# path suffix -> why that file may read parquet itself
+ALLOWED = {
+    "graft/Tables.scala": "the read path itself",
+    "graft/ingest/Importer.scala":
+        "importParquet reads a user's file once per import, so a cached "
+        "schema saves nothing, and the import owns its own read",
+}
+
+READ = re.compile(r"\bread\s*\.\s*(parquet|schema)\s*\(")
+THEN_PARQUET = re.compile(r"\s*\.\s*parquet\s*\(")
+
+
+def code_only(text):
+    """`text` with every comment and every string and char literal
+    blanked out (newlines kept, so line numbers hold)."""
+    out, i, n = [], 0, len(text)
+    while i < n:
+        if text.startswith('"""', i):
+            j = text.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and text[j] == '"':  # """...""""" closes on the last
+                j += 1
+        elif text[i] == '"':
+            j = i + 1
+            while j < n and text[j] not in '"\n':
+                j += 2 if text[j] == "\\" else 1
+            j = min(j + 1, n)
+        elif text[i] == "'" and re.match(r"'(\\.|[^\\'\n])'", text[i:i + 4]):
+            j = i + (4 if text[i + 1] == "\\" else 3)
+        elif text.startswith("//", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+        elif text.startswith("/*", i):
+            j = text.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+        else:
+            out.append(text[i])
+            i += 1
+            continue
+        out.append(re.sub(r"[^\n]", " ", text[i:j]))
+        i = j
+    return "".join(out)
+
+
+def close_paren(text, open_at):
+    """Index just past the parenthesis that closes the one at `open_at`."""
+    depth = 0
+    for k in range(open_at, len(text)):
+        if text[k] == "(":
+            depth += 1
+        elif text[k] == ")":
+            depth -= 1
+            if depth == 0:
+                return k + 1
+    return len(text)
+
+
+def raw_reads(text):
+    """Yield the 1-based line of every raw parquet read in `text`."""
+    code = code_only(text)
+    for m in READ.finditer(code):
+        if m.group(1) == "schema" and not THEN_PARQUET.match(
+                code, close_paren(code, m.end() - 1)):
+            continue
+        yield code.count("\n", 0, m.start()) + 1
+
+
+def main(argv):
+    roots = [pathlib.Path(a) for a in argv] or [pathlib.Path("src/main")]
+    bad = []
+    for root in roots:
+        files = [root] if root.is_file() else sorted(root.rglob("*.scala"))
+        for f in files:
+            if any(f.as_posix().endswith(a) for a in ALLOWED):
+                continue
+            bad += [f"{f}:{line}" for line in raw_reads(f.read_text(encoding="utf-8"))]
+    for b in bad:
+        print(f"raw parquet read (use graft.Tables.read): {b}")
+    print(f"[lint_reads] {len(bad)} raw read(s)")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

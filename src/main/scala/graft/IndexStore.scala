@@ -81,7 +81,7 @@ object IndexStore {
       case Some(r) if written(s, r, name) =>
         checkMeta(s, r)
         log.info(s"index artifact '$name': READ from $r")
-        s.read.parquet(s"$r/$name")
+        Tables.read(s, s"$r/$name")
       case Some(r) if building =>
         log.info(s"index artifact '$name': building in-session for $r")
         build
@@ -147,7 +147,7 @@ object IndexStore {
       throw new IllegalStateException(
         s"index root $root has no _meta sidecar — cannot verify its " +
           "history/batch split threshold; rebuild with graft.IndexBuild")
-    val built = s.read.parquet(s"$root/_meta")
+    val built = Tables.read(s, s"$root/_meta")
       .where("key = 'batch_thresh'").head().getString(1)
     if (built != Incr.batchThresh)
       throw new IllegalStateException(
@@ -270,7 +270,7 @@ object IndexStore {
       case Some(r) if written(s, r, s"_corpus_cache/$name") &&
           corpusCacheSrc(s, r).contains(dir) =>
         log.info(s"corpus cache '$name': READ from $r")
-        s.read.parquet(s"$r/_corpus_cache/$name")
+        Tables.read(s, s"$r/_corpus_cache/$name")
       case _ => build
     })
   }
@@ -284,7 +284,7 @@ object IndexStore {
     if (cached != null) return cached
     val v =
       if (!written(s, root, "_corpus_cache/_src")) None
-      else Some(s.read.parquet(s"$root/_corpus_cache/_src").head().getString(0))
+      else Some(Tables.read(s, s"$root/_corpus_cache/_src").head().getString(0))
     srcChecked.putIfAbsent(k, v)
     v
   }

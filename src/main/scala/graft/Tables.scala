@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.Try
 
 /** Table loaders for the driver-provided parquet star schema
   * (see /root/repo/TESTDATA.md). One parquet file per table.
@@ -12,12 +14,72 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") events(spark, dir)
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir) else read(spark, s"$dir/$name.parquet")
+
+  /** The one parquet read path: `path` read under a schema resolved once
+    * per (session, path, `nanosAsLong` value, leaf listing). Spark's own
+    * schema inference starts a job per read (`mergeSchemasInParallel`),
+    * which at this size is most of what building a query's plan costs.
+    * The leaf listing is every file's (path, length, modification time),
+    * so a replaced or rewritten file resolves again. Only the schema and
+    * its drift verdict are kept ([[checkSchema]], on a path of the
+    * tables' `<dir>/<name>.parquet` form), never a frame: every call
+    * returns a fresh relation (distinct attribute ids for self-joins)
+    * that reads the files as they are when it runs.
+    */
+  def read(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schemaOf(s, path)).parquet(path)
+
+  /** A resolved schema, the leaf listing it was inferred from, and its
+    * drift verdict: the schema, or the [[checkSchema]] failure.
+    */
+  private final case class Resolved(leaves: Seq[(String, Long, Long)], verdict: Try[StructType])
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The latest resolution per (session, path, `nanosAsLong` value). */
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Resolved]()
+
+  /** `path`'s schema as [[read]] resolves it. The inference runs outside
+    * any map lock ([[Cached.warm]] calls in from many threads): racing
+    * callers may each infer once, and the last one's entry stays.
+    */
+  private def schemaOf(s: SparkSession, path: String): StructType = {
+    val key = (s, path, s.conf.get(NanosAsLong, "false"))
+    val leaves = leafListing(s, path)
+    val hit = resolved.get(key)
+    if (hit != null && hit.leaves == leaves) hit.verdict.get
     else {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      checkSchema(dir, name, df.schema)
-      df
+      val schema = s.read.parquet(path).schema
+      val p = new Path(path)
+      val r = Resolved(leaves, Try {
+        if (p.getName.endsWith(".parquet"))
+          checkSchema(p.getParent.toString, p.getName.stripSuffix(".parquet"), schema)
+        schema
+      })
+      resolved.put(key, r)
+      r.verdict.get
+    }
+  }
+
+  /** Every file under `path` (or `path` itself) as (path, length,
+    * modification time), sorted; empty when `path` does not exist, so the
+    * inference raises Spark's own error.
+    */
+  private def leafListing(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result().sorted
     }
   }
 
@@ -91,9 +153,8 @@ object Tables {
     * events is the only nanos table in the corpus.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    checkSchema(dir, "events", raw.schema)
+    spark.conf.set(NanosAsLong, "true")
+    val raw = read(spark, s"$dir/events.parquet")
     normalizeTs(raw, raw.schema("ts").dataType)
   }
 
@@ -106,13 +167,14 @@ object Tables {
     }
 
   /** readStream twin of [[events]]: file-source streams need an explicit
-    * schema, so peek at the stored batch schema first, then apply the
-    * same ts normalization. `path` is a directory holding events parquet
-    * (tests stage a copy; a production stream would watch a drop dir).
+    * schema, so resolve the stored batch schema first (as [[read]]
+    * does), then apply the same ts normalization. `path` is a directory
+    * holding events parquet (tests stage a copy; a production stream
+    * would watch a drop dir).
     */
   def eventsStream(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stored = spark.read.parquet(path).schema
+    spark.conf.set(NanosAsLong, "true")
+    val stored = schemaOf(spark, path)
     normalizeTs(spark.readStream.schema(stored).parquet(path), stored("ts").dataType)
   }
 

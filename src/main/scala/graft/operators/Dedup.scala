@@ -688,9 +688,9 @@ object Dedup {
     */
   private[graft] def mergedArtifacts(
       s: SparkSession, dir: String, histRoot: String): Map[String, DataFrame] = {
-    val histG = s.read.parquet(s"$histRoot/dedup_hist_groups")
-    val histB = s.read.parquet(s"$histRoot/dedup_hist_bands")
-    val histD = s.read.parquet(s"$histRoot/dedup_hist_docs")
+    val histG = Tables.read(s, s"$histRoot/dedup_hist_groups")
+    val histB = Tables.read(s, s"$histRoot/dedup_hist_bands")
+    val histD = Tables.read(s, s"$histRoot/dedup_hist_docs")
     val newG = groupsFor(s, dir, expr(isBatchExpr))
       .join(histG.select("ckey"), Seq("ckey"), "left_anti")
     Map(

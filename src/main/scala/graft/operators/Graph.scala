@@ -903,10 +903,10 @@ object Graph {
     */
   private[graft] def mergedArtifacts(
       s: SparkSession, dir: String, histRoot: String): Map[String, DataFrame] = {
-    val histE = s.read.parquet(s"$histRoot/graph_hist_edges")
-    val histD = s.read.parquet(s"$histRoot/graph_hist_deg")
-    val histT = s.read.parquet(s"$histRoot/graph_hist_tri")
-    val histL = s.read.parquet(s"$histRoot/graph_hist_cc_labels")
+    val histE = Tables.read(s, s"$histRoot/graph_hist_edges")
+    val histD = Tables.read(s, s"$histRoot/graph_hist_deg")
+    val histT = Tables.read(s, s"$histRoot/graph_hist_tri")
+    val histL = Tables.read(s, s"$histRoot/graph_hist_cc_labels")
     // anti-join makes the merge idempotent (re-running tonight's fold
     // against an already-merged root adds nothing)
     val newE = artifact(s, dir, "graph_batch_edges").join(histE, Seq("u", "v"), "left_anti")
@@ -919,8 +919,8 @@ object Graph {
         batchClosedTriangles(newE, batchAdjOf(mergedE, newE), mergedD)),
       "graph_hist_cc_labels" -> ccFoldLabels(s, dir, histL),
       // frozen calendar slice: copy-through (see buildY95Edges doc)
-      "graph_y95_edges" -> s.read.parquet(s"$histRoot/graph_y95_edges"),
-      "graph_y95_trie" -> s.read.parquet(s"$histRoot/graph_y95_trie"),
+      "graph_y95_edges" -> Tables.read(s, s"$histRoot/graph_y95_edges"),
+      "graph_y95_trie" -> Tables.read(s, s"$histRoot/graph_y95_trie"),
       // staged input, CONSUMED by this merge: tonight's batch is now
       // inside graph_hist_edges, and the composed serving path
       // (edges = hist ∪ staged, degrees = hist ⊕ deg(staged),

@@ -54,7 +54,7 @@ object Ingest {
     val tmp = Scratch.path("sink", dir)
     Importer.importParquet(s, s"$dir/lineitem.parquet", "lineitem_sink",
       truncate = true, sinkDir = Some(tmp))
-    s.read.parquet(s"$tmp/lineitem_sink")
+    Tables.read(s, s"$tmp/lineitem_sink")
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
       .orderBy("l_returnflag")
@@ -114,7 +114,7 @@ object Ingest {
     val tmp = Scratch.path("part", dir)
     Tables(s, dir, "orders")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(s"$tmp/orders")
-    s.read.parquet(s"$tmp/orders")
+    Tables.read(s, s"$tmp/orders")
       .filter(col("o_orderstatus") === "F")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))

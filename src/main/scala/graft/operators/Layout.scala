@@ -85,19 +85,6 @@ object Layout {
         .write.mode("overwrite").parquet(base)
     }
 
-  /** Linear-sorted control layout for the pruning comparison in LayoutSpec:
-    * same files, sorted by p_size alone — min/max on the second dimension is
-    * full-range in every file.
-    */
-  def prepareLinear(s: SparkSession, dir: String): String =
-    Scratch.once(s, dir, "linear") { base =>
-      Tables(s, dir, "part")
-        .withColumn("zval", expr(zSql(zx, zy, sparkShl)))
-        .repartitionByRange(8, col("p_size"), col("p_partkey"))
-        .sortWithinPartitions("p_size", "p_partkey")
-        .write.mode("overwrite").parquet(base)
-    }
-
   /** Deliberately fragmented copy of documents (64 tiny files) — the
     * small-file problem every streaming/incremental ingest produces. Built
     * once per session as the input fixture for [[layout_compaction]].
@@ -110,8 +97,7 @@ object Layout {
 
   /** One-time layouts built before a timed run (ingest cost, not query cost). */
   def prewarm(s: SparkSession, dir: String): Unit = {
-    prepareMonthly(s, dir); prepareZorder(s, dir); prepareLinear(s, dir)
-    prepareFragmented(s, dir)
+    prepareMonthly(s, dir); prepareZorder(s, dir); prepareFragmented(s, dir)
   }
 
   /** Memoized child sessions carrying query-scoped SQL conf. `newSession()`
@@ -142,7 +128,7 @@ object Layout {
     * dimension's broadcast into the fact scan's partition filters at runtime.
     */
   private val joinDpp: Q = (s, dir) => {
-    val fact = s.read.parquet(prepareMonthly(s, dir))
+    val fact = Tables.read(s, prepareMonthly(s, dir))
     val m = Tables(s, dir, "lineitem")
       .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
       .agg(count(lit(1)).as("n_m"))
@@ -184,7 +170,7 @@ object Layout {
     * identical interleave arithmetic on the base table.
     */
   private val scanZorderPrune: Q = (s, dir) => {
-    s.read.parquet(prepareZorder(s, dir))
+    Tables.read(s, prepareZorder(s, dir))
       .where(col("p_size").between(10, 20) &&
         col("p_retailprice") >= 905 && col("p_retailprice") < 918)
       .select(col("p_partkey"), col("p_name"), col("p_size"),
@@ -203,12 +189,12 @@ object Layout {
     * one file; the shuffle moves each row once.
     */
   private val layoutCompaction: Q = (s, dir) => {
-    val frag = s.read.parquet(prepareFragmented(s, dir))
+    val frag = Tables.read(s, prepareFragmented(s, dir))
     val out = Scratch.path("compacted", dir)
     frag.withColumn("bkt", pmod(col("doc_id"), lit(4)).cast("bigint"))
       .repartition(4, col("bkt"))
       .write.mode("overwrite").partitionBy("bkt").parquet(out)
-    s.read.parquet(out)
+    Tables.read(s, out)
       .groupBy(col("bkt").cast("bigint").as("bkt"))
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("_metadata.file_name")).as("n_files"))
@@ -229,7 +215,7 @@ object Layout {
     val out = Seq("zstd", "snappy").map { codec =>
       val path = new java.io.File(codecDir(dir), codec).getAbsolutePath
       src.write.mode("overwrite").option("compression", codec).parquet(path)
-      s.read.parquet(path)
+      Tables.read(s, path)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"), graft.Det.dsum(col("l_quantity")).as("sum_qty"))
         .withColumn("codec", lit(codec))

@@ -391,11 +391,11 @@ object Sim {
     */
   private[graft] def mergedArtifacts(
       s: SparkSession, dir: String, histRoot: String): Map[String, DataFrame] = {
-    val histR = s.read.parquet(s"$histRoot/ivf_hist_reps")
-    val histM = s.read.parquet(s"$histRoot/ivf_hist_members")
-    val histC = s.read.parquet(s"$histRoot/ivf_hist_centroids")
-    val histCb = s.read.parquet(s"$histRoot/ivf_hist_codebook")
-    val histCodes = s.read.parquet(s"$histRoot/ivf_hist_codes")
+    val histR = Tables.read(s, s"$histRoot/ivf_hist_reps")
+    val histM = Tables.read(s, s"$histRoot/ivf_hist_members")
+    val histC = Tables.read(s, s"$histRoot/ivf_hist_centroids")
+    val histCb = Tables.read(s, s"$histRoot/ivf_hist_codebook")
+    val histCodes = Tables.read(s, s"$histRoot/ivf_hist_codes")
     val bCells = batchAssignedTo(s, dir, histC.select(col("cell"), col("cv"), col("cn")))
     val bReps = bCells.groupBy(col("cell"), col("v"))
       .agg(min(col("vec_id")).as("brep"), first(col("nrm")).as("bnrm"))

@@ -13,10 +13,22 @@ object Sql {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def view(s: SparkSession, dir: String, t: String): String = {
-    val name = s"g_$t"
-    Tables(s, dir, t).createOrReplaceTempView(name)
-    name
+  private val viewSeq = new java.util.concurrent.atomic.AtomicLong
+
+  /** `query`, given the names of call-unique temp views over `tables` (in
+    * order), run through `s.sql`. The views are dropped once `s.sql` has
+    * analyzed the query: its analyzed plan already holds the tables'
+    * relations, so no view outlives the call and two corpora on one
+    * session never read each other's view.
+    */
+  private def sqlOver(s: SparkSession, dir: String, tables: String*)(
+      query: Seq[String] => String): DataFrame = {
+    val names = tables.map { t =>
+      val name = s"g_${t}_${viewSeq.incrementAndGet()}"
+      Tables(s, dir, t).createTempView(name)
+      name
+    }
+    try s.sql(query(names)) finally names.foreach(s.catalog.dropTempView)
   }
 
   /** VARIANT (Spark 4 native semi-structured type): parse once, extract
@@ -24,46 +36,43 @@ object Sql {
     * VARIANT beats string re-parsing per access (binary encoding, shredded
     * access), which is exactly what an events pipeline wants.
     */
-  private val variant: Q = (s, dir) => {
-    val ev = view(s, dir, "events")
-    s.sql(
+  private val variant: Q = (s, dir) =>
+    sqlOver(s, dir, "events") { case Seq(ev) =>
       s"""SELECT event_id,
          |  variant_get(pv, '$$.k', 'bigint') AS k_val,
          |  variant_get(pv, '$$.k', 'bigint') * 2 AS k_doubled,
          |  variant_get(pv, '$$.missing', 'bigint') AS absent
          |FROM (SELECT event_id, try_parse_json(props) AS pv
          |      FROM $ev WHERE event_id % 20 = 0)
-         |ORDER BY event_id""".stripMargin)
-  }
+         |ORDER BY event_id""".stripMargin
+    }
 
   /** LATERAL correlated subquery: each customer's single most expensive
     * order — the per-row top-1 idiom SQL users reach for. (Catalyst
     * decorrelates this into a join, so it stays distributed.)
     */
-  private val lateralTopk: Q = (s, dir) => {
-    val c = view(s, dir, "customer"); val o = view(s, dir, "orders")
-    s.sql(
+  private val lateralTopk: Q = (s, dir) =>
+    sqlOver(s, dir, "customer", "orders") { case Seq(c, o) =>
       s"""SELECT c_custkey, t.o_orderkey, t.o_totalprice
          |FROM $c, LATERAL (
          |  SELECT o_orderkey, o_totalprice FROM $o
          |  WHERE o_custkey = c_custkey
          |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-         |ORDER BY c_custkey""".stripMargin)
-  }
+         |ORDER BY c_custkey""".stripMargin
+    }
 
   /** Recursive CTE (Spark 4): a generated key spine joined back to real
     * tables with a correlated count per step.
     */
-  private val recursiveCte: Q = (s, dir) => {
-    val n = view(s, dir, "nation"); val c = view(s, dir, "customer")
-    s.sql(
+  private val recursiveCte: Q = (s, dir) =>
+    sqlOver(s, dir, "nation", "customer") { case Seq(n, c) =>
       s"""WITH RECURSIVE r(k) AS (
          |  SELECT 0 UNION ALL SELECT k + 1 FROM r WHERE k < 24)
          |SELECT k, n_name,
          |  (SELECT COUNT(*) FROM $c WHERE c_nationkey = k) AS n_cust
          |FROM r JOIN $n ON n_nationkey = k
-         |ORDER BY k""".stripMargin)
-  }
+         |ORDER BY k""".stripMargin
+    }
 
   /** TPC-H Q5-shaped star join: revenue per nation for one region and one
     * order year, across customer ⨝ orders ⨝ lineitem ⨝ supplier ⨝ nation ⨝
@@ -137,9 +146,8 @@ object Sql {
     * to itself row-for-row. Quantities are exact cents so the HAVING
     * threshold and output sums hash cross-engine.
     */
-  private val q18BigOrders: Q = (s, dir) => {
-    val (c, o, li) = (view(s, dir, "customer"), view(s, dir, "orders"), view(s, dir, "lineitem"))
-    s.sql(
+  private val q18BigOrders: Q = (s, dir) =>
+    sqlOver(s, dir, "customer", "orders", "lineitem") { case Seq(c, o, li) =>
       s"""SELECT c_custkey, o_orderkey,
          |  date_format(o_orderdate, 'yyyy-MM-dd') AS order_date,
          |  cast(round(o_totalprice * 100, 0) as bigint) AS total_cents,
@@ -153,8 +161,8 @@ object Sql {
          |  HAVING sum(cast(round(l_quantity * 100, 0) as bigint)) > 20000)
          |GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
          |ORDER BY total_cents DESC, o_orderkey
-         |LIMIT 20""".stripMargin)
-  }
+         |LIMIT 20""".stripMargin
+    }
 
   /** GROUP BY ALL / ORDER BY ALL — the modern SQL shorthand (every
     * non-aggregate select item becomes a grouping key). Pure parser
@@ -195,9 +203,8 @@ object Sql {
     * as the same Expand a stack() projection gets — one scan, rows × 3
     * out — so the syntax is free at scale.
     */
-  private val sqlUnpivot: Q = (s, dir) => {
-    val o = view(s, dir, "orders")
-    s.sql(
+  private val sqlUnpivot: Q = (s, dir) =>
+    sqlOver(s, dir, "orders") { case Seq(o) =>
       s"""SELECT o_orderstatus, metric, val
          |FROM (
          |  SELECT o_orderstatus,
@@ -206,8 +213,8 @@ object Sql {
          |    CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust
          |  FROM $o GROUP BY o_orderstatus)
          |UNPIVOT (val FOR metric IN (n_total, n_urgent, n_cust))
-         |ORDER BY o_orderstatus, metric""".stripMargin)
-  }
+         |ORDER BY o_orderstatus, metric""".stripMargin
+    }
 
   /** SQL PIVOT clause with MULTIPLE aggregates per cell — long → wide in
     * the parser. Money pivots in exact integer cents (a double SUM per
@@ -216,9 +223,8 @@ object Sql {
     * — the r2 pivot lesson). The explicit value list avoids the
     * distinct-values pre-scan a dynamic pivot pays at 100 TB.
     */
-  private val sqlPivot: Q = (s, dir) => {
-    val o = view(s, dir, "orders")
-    s.sql(
+  private val sqlPivot: Q = (s, dir) =>
+    sqlOver(s, dir, "orders") { case Seq(o) =>
       s"""SELECT o_orderstatus,
          |  coalesce(urgent_n, 0L) AS urgent_n,
          |  coalesce(urgent_cents, 0L) AS urgent_cents,
@@ -228,8 +234,8 @@ object Sql {
          |        CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents FROM $o)
          |PIVOT (COUNT(*) AS n, SUM(cents) AS cents
          |       FOR o_orderpriority IN ('1-URGENT' AS urgent, '2-HIGH' AS high))
-         |ORDER BY o_orderstatus""".stripMargin)
-  }
+         |ORDER BY o_orderstatus""".stripMargin
+    }
 
   /** TPC-H Q21 shape ("suppliers who kept orders waiting"), adapted to
     * this corpus (no l_receiptdate/l_commitdate columns — lateness is

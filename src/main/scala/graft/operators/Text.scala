@@ -81,7 +81,7 @@ object Text {
     */
   private[graft] def mergedArtifacts(
       s: SparkSession, dir: String, histRoot: String): Map[String, DataFrame] = {
-    val hist = s.read.parquet(s"$histRoot/gram_hist_vocab")
+    val hist = Tables.read(s, s"$histRoot/gram_hist_vocab")
     val batch = gramVocabFor(s, dir, expr(isBatchDocExpr))
     Map("gram_hist_vocab" ->
       hist.unionByName(batch.join(hist, Seq("gram"), "left_anti")))

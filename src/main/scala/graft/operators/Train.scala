@@ -199,7 +199,7 @@ object Train {
     */
   private[graft] def mergedArtifacts(
       s: SparkSession, dir: String, histRoot: String): Map[String, DataFrame] = {
-    val hist = s.read.parquet(s"$histRoot/lm_hist_counts")
+    val hist = Tables.read(s, s"$histRoot/lm_hist_counts")
       .select(col("token"), col("cw").as("hw"))
     val batch = lmCountsFor(s, dir, expr(isBatchDocExpr))
       .select(col("token"), col("cw").as("bw"))

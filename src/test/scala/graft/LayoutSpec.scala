@@ -60,6 +60,18 @@ class LayoutSpec extends AnyFunSuite {
     (hit, total)
   }
 
+  /** Linear-sorted control layout for the pruning comparison: part in 8
+    * range-split files sorted by p_size alone, so min/max on the second
+    * dimension is full-range in every file.
+    */
+  private def prepareLinear(dir: String): String =
+    Scratch.once(s, dir, "linear") { base =>
+      Tables(s, dir, "part")
+        .repartitionByRange(8, col("p_size"), col("p_partkey"))
+        .sortWithinPartitions("p_size", "p_partkey")
+        .write.mode("overwrite").parquet(base)
+    }
+
   test("Z-clustered files keep both dimensions narrow; linear sort leaves dim 2 full-range") {
     // sf0.01 for this evidence: 2 500 parts give the price domain its full
     // 900..999 spread (sf0.001 only spans 900..919)
@@ -71,7 +83,7 @@ class LayoutSpec extends AnyFunSuite {
     val mid = (dlo + dhi) / 2
     val span = math.max(1L, (dhi - dlo) / 20)
     val (zHit, zTotal) = candidateFiles(operators.Layout.prepareZorder(s, dir), mid - span, mid + span)
-    val (lHit, lTotal) = candidateFiles(operators.Layout.prepareLinear(s, dir), mid - span, mid + span)
+    val (lHit, lTotal) = candidateFiles(prepareLinear(dir), mid - span, mid + span)
     assert(zTotal >= 4 && lTotal >= 4, s"layouts produced too few files: $zTotal / $lTotal")
     // the linear layout sorts by p_size, so price is full-range in every
     // file and the narrow price slice prunes nothing

@@ -20,34 +20,10 @@ class RoundSeventeenPerfSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val dir = TestSpark.sf
 
-  /** Count Spark jobs started while `body` runs (listener bus is async:
-    * wait for the count to stabilize before reading it).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    s.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get
-        if (c == prev) stable += 1 else { stable = 0; prev = c }
-      }
-    } finally s.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   private def warmThenCount(name: String): Int = {
     val q = SparkEntry.queries(name)
     q(s, dir).count() // substrate warm-up run (caches, layouts)
-    jobsOf(q(s, dir).count())
+    TestSpark.jobsOf(q(s, dir).count())
   }
 
   test("graph_pagerank: lazy round checkpoints fuse the 3 rounds into the final action's jobs") {
