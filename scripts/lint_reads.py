@@ -17,9 +17,6 @@ import sys
 # path suffix -> why that file may read parquet itself
 ALLOWED = {
     "graft/Tables.scala": "the read path itself",
-    "graft/ingest/Importer.scala":
-        "importParquet reads a user's file once per import, so a cached "
-        "schema saves nothing, and the import owns its own read",
 }
 
 READ = re.compile(r"\bread\s*\.\s*(parquet|schema)\s*\(")

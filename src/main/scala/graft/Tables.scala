@@ -44,14 +44,18 @@ object Tables {
 
   /** `path`'s schema as [[read]] resolves it. The inference runs outside
     * any map lock ([[Cached.warm]] calls in from many threads): racing
-    * callers may each infer once, and the last one's entry stays.
+    * callers may each infer once, and the last one's entry stays. With
+    * `nanosAsLong` on, an entry resolved with it off serves too: Spark
+    * rejects TIMESTAMP(NANOS) with the flag off, so such a schema holds no
+    * column the flag changes (a table read before the session's first
+    * [[events]] read is not inferred again after it).
     */
   private def schemaOf(s: SparkSession, path: String): StructType = {
-    val key = (s, path, s.conf.get(NanosAsLong, "false"))
+    val flag = s.conf.get(NanosAsLong, "false")
     val leaves = leafListing(s, path)
-    val hit = resolved.get(key)
-    if (hit != null && hit.leaves == leaves) hit.verdict.get
-    else {
+    val current = (if (flag == "true") Seq(flag, "false") else Seq(flag))
+      .map(f => resolved.get((s, path, f))).find(r => r != null && r.leaves == leaves)
+    current.getOrElse {
       val schema = s.read.parquet(path).schema
       val p = new Path(path)
       val r = Resolved(leaves, Try {
@@ -59,9 +63,9 @@ object Tables {
           checkSchema(p.getParent.toString, p.getName.stripSuffix(".parquet"), schema)
         schema
       })
-      resolved.put(key, r)
-      r.verdict.get
-    }
+      resolved.put((s, path, flag), r)
+      r
+    }.verdict.get
   }
 
   /** Every file under `path` (or `path` itself) as (path, length,
@@ -289,25 +293,15 @@ object ShuffleWidth {
   * in one JVM), and callers never spell the root themselves.
   */
 object Cached {
-  /** One entry: completed with the persisted frame by the thread that
-    * builds it (`builder`), or removed from [[entries]] and failed.
-    */
-  private final class Slot(val builder: Thread)
-    extends java.util.concurrent.CompletableFuture[DataFrame]
-
   private val entries =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Slot]()
+    new SingleFlight[(SparkSession, String, String), DataFrame]("Cached.of")
 
-  /** Single-flight: the first caller of a (session, dir, key@root) runs
-    * `build` and persists the frame; concurrent callers of the same key
-    * wait for that build and get the same frame. A build that throws
-    * leaves no entry, so the next call builds again, and its waiters see
-    * the failure. Not computeIfAbsent: builders call `of` for the caches
-    * they depend on (postings -> contentGroups -> shingles), which a
-    * nested computeIfAbsent on the same map rejects ("Recursive update");
-    * the slot is claimed with putIfAbsent and built outside any map lock.
-    * A builder that re-enters its own key on the same thread throws
-    * instead of waiting on itself.
+  /** Single-flight ([[SingleFlight]]): the first caller of a (session,
+    * dir, key@root) runs `build` and persists the frame; concurrent
+    * callers of the same key wait for that build and get the same frame,
+    * and a build that throws leaves no entry, so the next call builds
+    * again. Builders call `of` for the caches they depend on (postings ->
+    * contentGroups -> shingles).
     *
     * Waiters block while holding whatever monitors they hold, so no
     * builder may take the session monitor ([[NoAqe]], [[ShuffleWidth]]):
@@ -316,39 +310,16 @@ object Cached {
     */
   def of(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
     val k = (s, dir, IndexStore.active.fold(key)(r => s"$key@$r"))
-    val mine = new Slot(Thread.currentThread)
-    entries.putIfAbsent(k, mine) match {
-      case null =>
-        try { mine.complete(build.persist()); mine.get }
-        catch { case e: Throwable =>
-          entries.remove(k, mine)
-          mine.completeExceptionally(e)
-          throw e
-        }
-      case slot if !slot.isDone && (slot.builder eq Thread.currentThread) =>
-        throw new IllegalStateException(s"Cached.of: '${k._3}' re-entered while building it")
-      case slot =>
-        try slot.get
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    }
+    entries(k, k._3)(build.persist())
   }
 
-  /** Materialize every accessor's frame for (`s`, `dir`) concurrently,
-    * one thread each, and rethrow the first failure. The builds order
+  /** Materialize every accessor's frame for (`s`, `dir`) at once
+    * ([[Concurrently]]) and rethrow the first failure. The builds order
     * themselves: an accessor whose upstream cache another thread is
     * building waits for it in [[of]].
     */
-  def warm(s: SparkSession, dir: String)(accessors: ((SparkSession, String) => DataFrame)*): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = accessors.map { a =>
-      val th = new Thread(() => try a(s, dir).count() catch { case e: Throwable => errs.add(e) })
-      th.setDaemon(true)
-      th.start()
-      th
-    }
-    ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
+  def warm(s: SparkSession, dir: String)(accessors: ((SparkSession, String) => DataFrame)*): Unit =
+    Concurrently(accessors.map(a => () => { a(s, dir).count(); () }): _*)
 
   /** Evict (and unpersist) every entry whose key ends with `suffix` —
     * `@<root>`, in practice: every entry built under that root.
@@ -360,18 +331,8 @@ object Cached {
     * needs this — a scoring session is a different JVM from the build
     * job.
     */
-  def evictKeySuffix(suffix: String): Unit = {
-    val it = entries.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      // a failed build removes its slot before failing it, so every done
-      // slot left in the map holds a frame; in-flight builds are kept
-      if (e.getKey._3.endsWith(suffix) && e.getValue.isDone) {
-        e.getValue.get.unpersist(blocking = false)
-        it.remove()
-      }
-    }
-  }
+  def evictKeySuffix(suffix: String): Unit =
+    entries.evict(_._3.endsWith(suffix))(_.unpersist(blocking = false))
 }
 
 /** Stable scratch locations per corpus directory. Every writer into them
@@ -388,24 +349,98 @@ object Scratch {
   def path(kind: String, dir: String): String =
     new java.io.File(sys.props("java.io.tmpdir"), s"graft_${kind}_${tag(dir)}").getAbsolutePath
 
-  /** (session, dir, kind) layouts already written; guarded by `once`'s lock. */
-  private val laid = scala.collection.mutable.Set.empty[(SparkSession, String, String)]
+  /** (session, dir, kind) layouts written or being written. */
+  private val laid = new SingleFlight[(SparkSession, String, String), String]("Scratch.once")
 
-  /** [[path]]`(kind, dir)`, after running `write` on it at most once per
-    * (session, dir, kind) — the one-time table layouts. The layout is
-    * recorded only AFTER `write` returns, so one transient write failure
-    * (tmp full, co-tenant I/O error) is retried by the next call instead
-    * of handing every later caller a path that holds nothing.
+  /** [[path]]`(kind, dir)`, after running `write` on it once per
+    * (session, dir, kind) — the one-time table layouts. Single-flight by
+    * [[Cached.of]]'s rules ([[SingleFlight]]): concurrent callers of one
+    * layout wait for its one write, while different layouts are written
+    * at once; a write that throws (tmp full, co-tenant I/O error) leaves
+    * no record, so the next call writes again instead of handing every
+    * later caller a path that holds nothing.
     */
   def once(s: SparkSession, dir: String, kind: String)(write: String => Unit): String =
-    synchronized {
+    laid((s, dir, kind), s"$kind of $dir") {
       val base = path(kind, dir)
-      if (!laid((s, dir, kind))) {
-        write(base)
-        laid += ((s, dir, kind))
-      }
+      write(base)
       base
     }
+}
+
+/** A memo whose entries are each built once, by the first caller of their
+  * key; concurrent callers of that key wait for the build and get its
+  * value. A build that throws leaves no entry, so the next call builds
+  * again, and its waiters see the failure. Not computeIfAbsent: a build
+  * may call `apply` for the entries it depends on, which a nested
+  * computeIfAbsent on the same map rejects ("Recursive update"); the slot
+  * is claimed with putIfAbsent and built outside any map lock. A build
+  * that re-enters its own key on the same thread throws
+  * IllegalStateException instead of waiting on itself. `owner` names the
+  * memo in that message.
+  */
+private[graft] final class SingleFlight[K, V](owner: String) {
+  /** One entry: completed with the value by the thread that builds it
+    * (`builder`), or removed from [[slots]] and failed.
+    */
+  private final class Slot(val builder: Thread) extends java.util.concurrent.CompletableFuture[V]
+
+  private val slots = new java.util.concurrent.ConcurrentHashMap[K, Slot]()
+
+  /** `k`'s value, built by `build` on the first call; `name` names `k`. */
+  def apply(k: K, name: => String)(build: => V): V = {
+    val mine = new Slot(Thread.currentThread)
+    slots.putIfAbsent(k, mine) match {
+      case null =>
+        try { val v = build; mine.complete(v); v }
+        catch { case e: Throwable =>
+          slots.remove(k, mine)
+          mine.completeExceptionally(e)
+          throw e
+        }
+      case slot if !slot.isDone && (slot.builder eq Thread.currentThread) =>
+        throw new IllegalStateException(s"$owner: '$name' re-entered while building it")
+      case slot =>
+        try slot.get
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
+  }
+
+  /** Remove every built entry whose key passes `p`, handing its value to
+    * `drop`. A failed build removes its slot before failing it, so every
+    * done slot holds a value; in-flight builds are kept.
+    */
+  def evict(p: K => Boolean)(drop: V => Unit): Unit = {
+    val it = slots.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (p(e.getKey) && e.getValue.isDone) {
+        drop(e.getValue.get)
+        it.remove()
+      }
+    }
+  }
+}
+
+/** Run every body at once, one daemon thread each, wait for all of them,
+  * then rethrow the first failure. Each thread inherits the caller's
+  * Spark job group and active session. The independent one-time builds
+  * use it: the cache prewarms ([[Cached.warm]]) and the layout writes
+  * ([[operators.Layout.prewarm]], [[operators.Bucketed.prepare]]), whose
+  * single jobs leave most cores idle on per-job and first-codegen cost.
+  */
+object Concurrently {
+  def apply(bodies: (() => Unit)*): Unit = {
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val ts = bodies.map { b =>
+      val th = new Thread(() => try b() catch { case e: Throwable => errs.add(e) })
+      th.setDaemon(true)
+      th.start()
+      th
+    }
+    ts.foreach(_.join())
+    if (!errs.isEmpty) throw errs.peek()
+  }
 }
 
 /** Determinism helpers so Spark results hash-match the DuckDB oracle.

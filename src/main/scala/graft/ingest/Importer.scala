@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -92,7 +92,9 @@ object Importer {
     * import with no sink at all is rejected: it would write nothing yet
     * report every scanned row as imported. Every output column name
     * passes [[assertSafeColumn]] before any write, with or without a
-    * columnMap (ParquetImporter.php:204-216).
+    * columnMap (ParquetImporter.php:204-216). The source is read through
+    * [[graft.Tables.read]], and `rowsImported` is counted by the first
+    * sink's write (an `Observation`), not by a scan of its own.
     */
   def importParquet(
       spark: SparkSession,
@@ -113,31 +115,33 @@ object Importer {
       "jdbcUrl cannot be combined with sinkDir/copyDir")
     require(batchSize > 0, s"batchSize must be positive: $batchSize")
     val t0 = System.nanoTime()
-    val raw = spark.read.parquet(path)
+    val raw = graft.Tables.read(spark, path)
     val projected = project(raw, columnMap)
     projected.columns.foreach(assertSafeColumn)
     val out = if (normalizeValues) normalize(projected) else projected
+    // rows imported by THIS run (the reference's ImportResult semantics):
+    // counted by the first sink's write itself, so no scan of its own runs
+    // and the count is of the rows that write wrote, even when the source
+    // is replaced after it; an Append import never reports pre-existing rows
+    val written = new Observation()
+    val counted = out.observe(written, count(lit(1)).as("rows"))
 
     val mode = if (truncate) SaveMode.Overwrite else SaveMode.Append
     jdbcUrl match {
       case Some(url) =>
-        out.write.mode(mode)
+        counted.write.mode(mode)
           .option("truncate", truncate.toString)
           .option("batchsize", batchSize.toString)
           .jdbc(url, quoteIdentifier(table), new java.util.Properties())
       case None =>
         copyDir.foreach { d =>
-          CopySink.writeCopyFiles(out, s"$d/$table", truncate)
+          CopySink.writeCopyFiles(counted, s"$d/$table", truncate)
         }
         sinkDir.foreach { d =>
-          out.write.mode(mode).parquet(s"$d/$table")
+          (if (copyDir.isEmpty) counted else out).write.mode(mode).parquet(s"$d/$table")
         }
     }
-    // rows imported by THIS run (the reference's ImportResult semantics):
-    // count the written frame, not the sink table — an Append import must
-    // not report pre-existing rows, and a JDBC write has no sinkDir to
-    // re-read.
-    val rows = out.count()
+    val rows = written.get("rows").asInstanceOf[Long]
     ImportResult(path, table, rows, (System.nanoTime() - t0) / 1e9)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Scratch, Tables}
+import graft.{Concurrently, Det, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,18 +25,17 @@ object Bucketed {
   type Q = (SparkSession, String) => DataFrame
 
   /** Lay down orders + lineitem bucketed by order key (once per session
-    * and scale factor).
+    * and scale factor), the two independent writes at once.
     */
   def prepare(s: SparkSession, dir: String): (String, String) = {
     val tag = Scratch.tag(dir)
     val (ot, lt) = (s"graft_orders_$tag", s"graft_lineitem_$tag")
     Scratch.once(s, dir, "bucketed") { base =>
-      Tables(s, dir, "orders").write.mode("overwrite")
-        .option("path", s"$base/orders")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
-      Tables(s, dir, "lineitem").write.mode("overwrite")
-        .option("path", s"$base/lineitem")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
+      def write(name: String, table: String, key: String): () => Unit = () =>
+        Tables(s, dir, name).write.mode("overwrite")
+          .option("path", s"$base/$name")
+          .bucketBy(8, key).sortBy(key).saveAsTable(table)
+      Concurrently(write("orders", ot, "o_orderkey"), write("lineitem", lt, "l_orderkey"))
     }
     (ot, lt)
   }

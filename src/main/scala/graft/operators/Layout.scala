@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Scratch, Tables}
+import graft.{Concurrently, Det, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,12 +37,19 @@ object Layout {
   /** Lay down lineitem hive-partitioned by ship month (once per session+SF).
     * The one-time partitioned write is ingest-layout cost, same category as
     * [[Bucketed.prepare]]; every later month-constrained query prunes
-    * directories instead of scanning the table.
+    * directories instead of scanning the table. Rows are clustered by month
+    * before the write with a rebalance, so a month lands in one task and
+    * one file, where an unclustered write leaves a file per month in every
+    * scan task (perfbench's x8 corpus: 83 files, against 332 from 4 tasks).
+    * AQE splits a month larger than its advisory partition size and
+    * coalesces small ones; a plain `repartition(ship_month)` would put a
+    * whole month in one task at 100 TB.
     */
   def prepareMonthly(s: SparkSession, dir: String): String =
     Scratch.once(s, dir, "monthly") { base =>
       Tables(s, dir, "lineitem")
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
+        .hint("rebalance", col("ship_month"))
         .write.mode("overwrite").partitionBy("ship_month").parquet(base)
     }
 
@@ -95,10 +102,12 @@ object Layout {
         .write.mode("overwrite").parquet(base)
     }
 
-  /** One-time layouts built before a timed run (ingest cost, not query cost). */
-  def prewarm(s: SparkSession, dir: String): Unit = {
-    prepareMonthly(s, dir); prepareZorder(s, dir); prepareFragmented(s, dir)
-  }
+  /** One-time layouts built before a timed run (ingest cost, not query
+    * cost), the three independent writes at once.
+    */
+  def prewarm(s: SparkSession, dir: String): Unit =
+    Concurrently(
+      () => prepareMonthly(s, dir), () => prepareZorder(s, dir), () => prepareFragmented(s, dir))
 
   /** Memoized child sessions carrying query-scoped SQL conf. `newSession()`
     * shares the SparkContext and cache but isolates SQLConf, so bloom-filter

@@ -109,7 +109,7 @@ class ContractSpec extends AnyFunSuite {
   }
 
   /** `body` on 8 pool threads released together; their results or failures. */
-  private def eightAtOnce(body: => DataFrame): Seq[Future[DataFrame]] = {
+  private def eightAtOnce[T](body: => T): Seq[Future[T]] = {
     val pool = Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val go = new CountDownLatch(1)
@@ -163,6 +163,47 @@ class ContractSpec extends AnyFunSuite {
     // the failed outer build left no entry behind
     assert(Cached.of(s, "contract-dir", key)(s.range(1).toDF()).count() == 1)
     Cached.evictKeySuffix(key)
+  }
+
+  test("Scratch.once is single-flight: concurrent callers of one layout write once and get its path") {
+    val s = TestSpark.spark
+    val writes = new AtomicInteger
+    val paths = eightAtOnce(Scratch.once(s, "contract-dir", "once.single") { _ =>
+      writes.incrementAndGet()
+      Thread.sleep(200)
+    }).map(Await.result(_, 1.second))
+    assert(writes.get == 1)
+    assert(paths.forall(_ == Scratch.path("once.single", "contract-dir")))
+  }
+
+  test("Scratch.once writes two different layouts at once") {
+    val s = TestSpark.spark
+    // each write waits for the other to start: serialized writes would
+    // time out on the latch
+    val started = new CountDownLatch(2)
+    val together = new AtomicInteger
+    def write(kind: String): Unit = Scratch.once(s, "contract-dir", kind) { _ =>
+      started.countDown()
+      if (started.await(30, java.util.concurrent.TimeUnit.SECONDS)) together.incrementAndGet()
+    }
+    Concurrently(() => write("once.a"), () => write("once.b"))
+    assert(together.get == 2, "the two layouts' writes were not in flight together")
+  }
+
+  test("Scratch.once: a failed write reaches its waiters and leaves no record, so the next call writes") {
+    val s = TestSpark.spark
+    eightAtOnce(Scratch.once(s, "contract-dir", "once.failed") { _ =>
+      Thread.sleep(200)
+      throw new IllegalStateException("write failed")
+    }).foreach { f =>
+      val e = intercept[IllegalStateException](Await.result(f, 1.second))
+      assert(e.getMessage == "write failed")
+    }
+    val writes = new AtomicInteger
+    val base = Scratch.once(s, "contract-dir", "once.failed")(_ => writes.incrementAndGet())
+    assert(writes.get == 1)
+    assert(base == Scratch.path("once.failed", "contract-dir"))
+    assert(Scratch.once(s, "contract-dir", "once.failed")(_ => fail("written twice")) == base)
   }
 
   test("Fixpoint.run stops at the first no-change round, or reports the budget binding") {

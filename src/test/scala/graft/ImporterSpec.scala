@@ -82,6 +82,33 @@ class ImporterSpec extends AnyFunSuite {
     assert(res2.rowsImported == 5)
   }
 
+  test("importParquet counts the rows its own write wrote, with no count action") {
+    val out = java.nio.file.Files.createTempDirectory("graft_imp_count").toString
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        actions.add(f)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        actions.add(f)
+    }
+    spark.listenerManager.register(l)
+    val li = s"${TestSpark.sf}/lineitem.parquet"
+    var first, appended: graft.ingest.ImportResult = null
+    // jobsOf waits for the listener bus to settle before the check below
+    try TestSpark.jobsOf {
+      first = Importer.importParquet(spark, li, "li", truncate = true,
+        normalizeValues = true, copyDir = Some(s"$out/copy"), sinkDir = Some(s"$out/parquet"))
+      appended = Importer.importParquet(spark, li, "li", sinkDir = Some(s"$out/parquet"))
+    } finally spark.listenerManager.unregister(l)
+    assert(!actions.contains("count"), s"actions run: $actions")
+    val n = spark.read.parquet(li).count()
+    assert(first.rowsImported == n)
+    assert(spark.read.text(s"$out/copy/li").count() == n)
+    // the append reports its own rows, not the sink's
+    assert(appended.rowsImported == n)
+    assert(spark.read.parquet(s"$out/parquet/li").count() == 2 * n)
+  }
+
   test("importParquet rejects an import with no sink") {
     val e = intercept[IllegalArgumentException] {
       Importer.importParquet(spark, s"${TestSpark.sf}/region.parquet", "region_none")

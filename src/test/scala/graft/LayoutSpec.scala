@@ -28,6 +28,20 @@ class LayoutSpec extends AnyFunSuite {
       s"no dynamic partition pruning in fact scan:\n$p")
   }
 
+  test("the monthly layout holds exactly one file per ship_month directory") {
+    // the suite's lineitem as four files, so the scan runs four tasks that
+    // would each write a file per month if the write did not cluster
+    val corpus = java.nio.file.Files.createTempDirectory("graft_monthly").toString
+    Tables(s, dir, "lineitem").repartition(4)
+      .write.mode("overwrite").parquet(s"$corpus/lineitem.parquet")
+    val base = new java.io.File(operators.Layout.prepareMonthly(s, corpus))
+    val months = base.listFiles().filter(_.getName.startsWith("ship_month="))
+    assert(months.length > 12, s"too few ship_month= directories under $base")
+    val files = months.map(m => m.getName -> m.list().count(_.endsWith(".parquet"))).toMap
+    assert(files.values.forall(_ == 1), s"months with other than one file: ${files.filter(_._2 != 1)}")
+    assert(Tables.read(s, base.getPath).count() == Tables(s, dir, "lineitem").count())
+  }
+
   test("join_bloom_runtime injects might_contain into the fact side of a shuffle join") {
     val df = operators.Layout.queries("join_bloom_runtime")(s, dir)
     val p = planString(df)

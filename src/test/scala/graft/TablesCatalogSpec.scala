@@ -81,4 +81,19 @@ class TablesCatalogSpec extends AnyFunSuite {
       Seq(1L, micros))
     assert(tsMicros() == Seq(micros))
   }
+
+  test("a table read before the first events read is not inferred again after it") {
+    // a fresh copy of the corpus, so no earlier suite's entry serves, read
+    // with nanosAsLong unset as in a new session
+    val dir = tmpDir()
+    Tables.all.foreach { t =>
+      Files.copy(java.nio.file.Paths.get(s"${TestSpark.sf}/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    }
+    s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    Tables.all.filter(_ != "events").foreach(t => Tables(s, dir, t))
+    Tables(s, dir, "events")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(jobsOf(Tables(s, dir, "lineitem")) == 0)
+  }
 }
