@@ -1,26 +1,35 @@
 #!/usr/bin/env python3
-"""Fail on a parquet read outside the one read path. `graft.Tables.read`
-resolves each input's schema (and its drift check) once per session; a
-raw `read.parquet(` elsewhere in the program infers the schema again on
-every call, one Spark job each, before the query's own work starts, and
-a raw `read.schema(...).parquet(` skips the drift check.
+"""Fail on two ways a query can reach past its own plan.
+
+1. A parquet read outside the one read path. `graft.Tables.read`
+   resolves each input's schema (and its drift check) once per session;
+   a raw `read.parquet(` elsewhere in the program infers the schema again
+   on every call, one Spark job each, before the query's own work starts,
+   and a raw `read.schema(...).parquet(` skips the drift check.
+2. A use of the session catalog: a temp view (`createTempView(` and its
+   three siblings), SQL text run through `.sql(`, or `udf.register(`.
+   Each one changes or reads state that every query on the session
+   shares. SQL text binds to frames through `PlanUtil.bind` instead.
 
 Usage: python3 scripts/lint_reads.py [root ...]   (default: src/main)
-Prints one `file:line` per raw read (the line `read` is on) and exits 1
-if there is any. Comments and string literals are skipped; a read split
-over lines is found.
+Prints one `file:line` per hit (the line the call's name is on) and
+exits 1 if there is any. Comments and string literals are skipped; a
+call split over lines is found.
 """
 import pathlib
 import re
 import sys
 
-# path suffix -> why that file may read parquet itself
+# path suffix -> why that file may read parquet itself (rule 1 only)
 ALLOWED = {
     "graft/Tables.scala": "the read path itself",
 }
 
 READ = re.compile(r"\bread\s*\.\s*(parquet|schema)\s*\(")
 THEN_PARQUET = re.compile(r"\s*\.\s*parquet\s*\(")
+CATALOG = re.compile(
+    r"\b(createTempView|createOrReplaceTempView|createGlobalTempView"
+    r"|createOrReplaceGlobalTempView)\s*\(|\.\s*sql\s*\(|\budf\s*\.\s*register\s*\(")
 
 
 def code_only(text):
@@ -78,19 +87,29 @@ def raw_reads(text):
         yield code.count("\n", 0, m.start()) + 1
 
 
+def catalog_uses(text):
+    """Yield the 1-based line of every session-catalog use in `text`."""
+    code = code_only(text)
+    for m in CATALOG.finditer(code):
+        yield code.count("\n", 0, m.start()) + 1
+
+
 def main(argv):
     roots = [pathlib.Path(a) for a in argv] or [pathlib.Path("src/main")]
-    bad = []
+    reads, uses = [], []
     for root in roots:
         files = [root] if root.is_file() else sorted(root.rglob("*.scala"))
         for f in files:
-            if any(f.as_posix().endswith(a) for a in ALLOWED):
-                continue
-            bad += [f"{f}:{line}" for line in raw_reads(f.read_text(encoding="utf-8"))]
-    for b in bad:
+            text = f.read_text(encoding="utf-8")
+            if not any(f.as_posix().endswith(a) for a in ALLOWED):
+                reads += [f"{f}:{line}" for line in raw_reads(text)]
+            uses += [f"{f}:{line}" for line in catalog_uses(text)]
+    for b in reads:
         print(f"raw parquet read (use graft.Tables.read): {b}")
-    print(f"[lint_reads] {len(bad)} raw read(s)")
-    return 1 if bad else 0
+    for b in uses:
+        print(f"session catalog use (bind SQL text with PlanUtil.bind): {b}")
+    print(f"[lint_reads] {len(reads)} raw read(s), {len(uses)} catalog use(s)")
+    return 1 if reads or uses else 0
 
 
 if __name__ == "__main__":

@@ -2,7 +2,8 @@
 # Snapshot guardrail (r14 verdict ask #8, after the r13 red round): a
 # mechanical gate that MUST be green before any substantial commit —
 # lint the scaladoc (no doc block stacked on another) and the reads (no
-# parquet read outside graft.Tables.read), compile the
+# parquet read outside graft.Tables.read, no temp view, `.sql(` or
+# `udf.register(` in the program), compile the
 # program with its specs and the perfbench harness (both reference
 # program names, so a deletion that breaks either fails here), full
 # test suite skipped by design, and Verify -> DuckDB compare at sf0.001
@@ -15,7 +16,7 @@ SF_DIR="${1:-/root/testdata/sf0.001}"
 OUT_DIR="$(mktemp -d /tmp/preflight.XXXXXX)"
 echo "[preflight] lint: no orphaned scaladoc"
 python3 scripts/lint_scaladoc.py src perfbench/src
-echo "[preflight] lint: parquet reads only through graft.Tables.read"
+echo "[preflight] lint: parquet reads only through graft.Tables.read; no session-catalog use"
 python3 scripts/lint_reads.py src/main
 echo "[preflight] compile program + specs"
 sbt -batch Test/compile

@@ -4,6 +4,7 @@ import graft.{Det, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanUtil.bind
 import org.apache.spark.sql.types.DecimalType
 
 /** Window-function pack (SURVEY.md §2.2 `win_*`): ranking, analytic
@@ -88,19 +89,15 @@ object Analytic {
     * features) — distinct from the row-count and integer-range frames
     * win_frame covers.
     */
-  private val winRangeInterval: Q = (s, dir) => {
-    val e = Tables(s, dir, "events")
-    e.createOrReplaceTempView("g_events_wri")
-    s.sql(
-      """SELECT event_id, user_id,
-        |  date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS t,
-        |  COUNT(*) OVER w AS n_1h,
-        |  CAST(SUM(CAST(value AS DECIMAL(25,6))) OVER w AS DOUBLE) AS sum_1h
-        |FROM g_events_wri
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin)
-  }
+  private val winRangeInterval: Q = (s, dir) =>
+    bind(s, """SELECT event_id, user_id,
+      |  date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS t,
+      |  COUNT(*) OVER w AS n_1h,
+      |  CAST(SUM(CAST(value AS DECIMAL(25,6))) OVER w AS DOUBLE) AS sum_1h
+      |FROM events
+      |WINDOW w AS (PARTITION BY user_id ORDER BY ts
+      |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+      |ORDER BY event_id""".stripMargin)("events" -> Tables(s, dir, "events"))
 
   /** Deterministic mode: most frequent value per group with an explicit
     * (count DESC, value ASC) tie-break — built-in mode() is free to pick

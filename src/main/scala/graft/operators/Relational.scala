@@ -4,6 +4,7 @@ import graft.{Det, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanUtil.bind
 import org.apache.spark.sql.graft.VecFunctions.kmv_distinct
 
 /** Core relational operator pack: scans+filters, all join shapes,
@@ -484,19 +485,19 @@ object Relational {
       .orderBy("g_rf", "g_ls", "rf", "ls")
   }
 
-  /** GROUPING SETS via the SQL surface (also exercises spark.sql + views). */
-  private val aggGroupingSets: Q = (s, dir) => {
-    Tables(s, dir, "orders").createOrReplaceTempView("orders_gs")
-    s.sql(s"""
+  /** GROUPING SETS via the SQL surface (SQL text bound to the table's
+    * frame by [[org.apache.spark.sql.graft.PlanUtil.bind]]).
+    */
+  private val aggGroupingSets: Q = (s, dir) =>
+    bind(s, s"""
       SELECT grouping(o_orderstatus) AS g_status,
              grouping(o_custkey)     AS g_cust,
              coalesce(o_orderstatus, '(all)') AS status,
              coalesce(CAST(o_custkey AS STRING), '(all)') AS custkey,
              count(1) AS n, ${Det.oSum("o_totalprice")} AS sum_price
-      FROM orders_gs
+      FROM orders
       GROUP BY GROUPING SETS ((o_orderstatus), (o_custkey), ())
-      ORDER BY g_status, g_cust, status, custkey""")
-  }
+      ORDER BY g_status, g_cust, status, custkey""")("orders" -> Tables(s, dir, "orders"))
 
   // --------------------------------------------------------- sort / limit
 
@@ -544,16 +545,14 @@ object Relational {
     * The inner average goes through the decimal route so the comparison
     * boundary is identical in both engines.
     */
-  private val sqlCorrelatedSubquery: Q = (s, dir) => {
-    Tables(s, dir, "orders").createOrReplaceTempView("orders_sq")
-    s.sql(s"""
+  private val sqlCorrelatedSubquery: Q = (s, dir) =>
+    bind(s, s"""
       SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders_sq o
+      FROM orders o
       WHERE o_totalprice > 2 * (
         SELECT ${Det.oAvg("o2.o_totalprice")}
-        FROM orders_sq o2 WHERE o2.o_custkey = o.o_custkey)
-      ORDER BY o_orderkey""")
-  }
+        FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
+      ORDER BY o_orderkey""")("orders" -> Tables(s, dir, "orders"))
 
   /** collect_list / collect_set surfaced deterministically: sorted and
     * re-joined to strings so the compare is representation-free.

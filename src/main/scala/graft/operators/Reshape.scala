@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanUtil.bind
 import org.apache.spark.sql.types.{LongType, MapType, StringType}
 
 /** Shape/semantics operators: unpivot (wide→long melt), map/struct
@@ -106,18 +107,15 @@ object Reshape {
   /** SQL FILTER clause on aggregates: per-group conditional aggregation
     * without CASE scaffolding (one pass, many conditions).
     */
-  private val filterClause: Q = (s, dir) => {
-    val li = Tables(s, dir, "lineitem")
-    li.createOrReplaceTempView("g_lineitem_fc")
-    s.sql(
-      s"""SELECT l_returnflag,
-         |  COUNT(*) AS n,
-         |  COUNT(*) FILTER (WHERE l_quantity > 25) AS n_heavy,
-         |  COUNT(*) FILTER (WHERE l_discount >= 0.05) AS n_discounted,
-         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6)))
-         |       FILTER (WHERE l_quantity > 25) AS DOUBLE) AS heavy_revenue
-         |FROM g_lineitem_fc GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-  }
+  private val filterClause: Q = (s, dir) =>
+    bind(s, """SELECT l_returnflag,
+      |  COUNT(*) AS n,
+      |  COUNT(*) FILTER (WHERE l_quantity > 25) AS n_heavy,
+      |  COUNT(*) FILTER (WHERE l_discount >= 0.05) AS n_discounted,
+      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6)))
+      |       FILTER (WHERE l_quantity > 25) AS DOUBLE) AS heavy_revenue
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)(
+      "lineitem" -> Tables(s, dir, "lineitem"))
 
   /** Long→wide pivot with MULTIPLE aggregates per pivot value (count +
     * token sum per language): Spark expands this into one hash

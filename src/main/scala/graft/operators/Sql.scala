@@ -3,33 +3,19 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanUtil.bind
 
 /** Modern SQL-surface pack (Spark 4 features): VARIANT semi-structured
-  * access, LATERAL correlated subqueries, and recursive CTEs — the SQL
-  * entry points a user of the engine gets beyond the DataFrame API.
-  * All run through `spark.sql` over temp views of the shared tables.
+  * access, LATERAL correlated subqueries, recursive CTEs, PIVOT/UNPIVOT
+  * and GROUP BY ALL — the SQL entry points a user of the engine gets
+  * beyond the DataFrame API — plus the TPC-H shapes as DataFrame plans.
+  * SQL text names its tables plainly, and
+  * [[org.apache.spark.sql.graft.PlanUtil.bind]] binds each name to the
+  * corpus's frame, so no query reads or changes the session catalog.
   */
 object Sql {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong
-
-  /** `query`, given the names of call-unique temp views over `tables` (in
-    * order), run through `s.sql`. The views are dropped once `s.sql` has
-    * analyzed the query: its analyzed plan already holds the tables'
-    * relations, so no view outlives the call and two corpora on one
-    * session never read each other's view.
-    */
-  private def sqlOver(s: SparkSession, dir: String, tables: String*)(
-      query: Seq[String] => String): DataFrame = {
-    val names = tables.map { t =>
-      val name = s"g_${t}_${viewSeq.incrementAndGet()}"
-      Tables(s, dir, t).createTempView(name)
-      name
-    }
-    try s.sql(query(names)) finally names.foreach(s.catalog.dropTempView)
-  }
 
   /** VARIANT (Spark 4 native semi-structured type): parse once, extract
     * typed fields — the open-schema path for event payloads. At scale
@@ -37,42 +23,38 @@ object Sql {
     * access), which is exactly what an events pipeline wants.
     */
   private val variant: Q = (s, dir) =>
-    sqlOver(s, dir, "events") { case Seq(ev) =>
-      s"""SELECT event_id,
-         |  variant_get(pv, '$$.k', 'bigint') AS k_val,
-         |  variant_get(pv, '$$.k', 'bigint') * 2 AS k_doubled,
-         |  variant_get(pv, '$$.missing', 'bigint') AS absent
-         |FROM (SELECT event_id, try_parse_json(props) AS pv
-         |      FROM $ev WHERE event_id % 20 = 0)
-         |ORDER BY event_id""".stripMargin
-    }
+    bind(s, """SELECT event_id,
+      |  variant_get(pv, '$.k', 'bigint') AS k_val,
+      |  variant_get(pv, '$.k', 'bigint') * 2 AS k_doubled,
+      |  variant_get(pv, '$.missing', 'bigint') AS absent
+      |FROM (SELECT event_id, try_parse_json(props) AS pv
+      |      FROM events WHERE event_id % 20 = 0)
+      |ORDER BY event_id""".stripMargin)("events" -> Tables(s, dir, "events"))
 
   /** LATERAL correlated subquery: each customer's single most expensive
     * order — the per-row top-1 idiom SQL users reach for. (Catalyst
     * decorrelates this into a join, so it stays distributed.)
     */
   private val lateralTopk: Q = (s, dir) =>
-    sqlOver(s, dir, "customer", "orders") { case Seq(c, o) =>
-      s"""SELECT c_custkey, t.o_orderkey, t.o_totalprice
-         |FROM $c, LATERAL (
-         |  SELECT o_orderkey, o_totalprice FROM $o
-         |  WHERE o_custkey = c_custkey
-         |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-         |ORDER BY c_custkey""".stripMargin
-    }
+    bind(s, """SELECT c_custkey, t.o_orderkey, t.o_totalprice
+      |FROM customer, LATERAL (
+      |  SELECT o_orderkey, o_totalprice FROM orders
+      |  WHERE o_custkey = c_custkey
+      |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
+      |ORDER BY c_custkey""".stripMargin)(
+      "customer" -> Tables(s, dir, "customer"), "orders" -> Tables(s, dir, "orders"))
 
   /** Recursive CTE (Spark 4): a generated key spine joined back to real
     * tables with a correlated count per step.
     */
   private val recursiveCte: Q = (s, dir) =>
-    sqlOver(s, dir, "nation", "customer") { case Seq(n, c) =>
-      s"""WITH RECURSIVE r(k) AS (
-         |  SELECT 0 UNION ALL SELECT k + 1 FROM r WHERE k < 24)
-         |SELECT k, n_name,
-         |  (SELECT COUNT(*) FROM $c WHERE c_nationkey = k) AS n_cust
-         |FROM r JOIN $n ON n_nationkey = k
-         |ORDER BY k""".stripMargin
-    }
+    bind(s, """WITH RECURSIVE r(k) AS (
+      |  SELECT 0 UNION ALL SELECT k + 1 FROM r WHERE k < 24)
+      |SELECT k, n_name,
+      |  (SELECT COUNT(*) FROM customer WHERE c_nationkey = k) AS n_cust
+      |FROM r JOIN nation ON n_nationkey = k
+      |ORDER BY k""".stripMargin)(
+      "nation" -> Tables(s, dir, "nation"), "customer" -> Tables(s, dir, "customer"))
 
   /** TPC-H Q5-shaped star join: revenue per nation for one region and one
     * order year, across customer ⨝ orders ⨝ lineitem ⨝ supplier ⨝ nation ⨝
@@ -147,36 +129,34 @@ object Sql {
     * threshold and output sums hash cross-engine.
     */
   private val q18BigOrders: Q = (s, dir) =>
-    sqlOver(s, dir, "customer", "orders", "lineitem") { case Seq(c, o, li) =>
-      s"""SELECT c_custkey, o_orderkey,
-         |  date_format(o_orderdate, 'yyyy-MM-dd') AS order_date,
-         |  cast(round(o_totalprice * 100, 0) as bigint) AS total_cents,
-         |  sum(cast(round(l_quantity * 100, 0) as bigint)) AS sum_qty_c,
-         |  cast(count(*) as bigint) AS n_lines
-         |FROM $c JOIN $o ON c_custkey = o_custkey
-         |        JOIN $li ON o_orderkey = l_orderkey
-         |WHERE o_orderkey IN (
-         |  SELECT l_orderkey FROM $li
-         |  GROUP BY l_orderkey
-         |  HAVING sum(cast(round(l_quantity * 100, 0) as bigint)) > 20000)
-         |GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
-         |ORDER BY total_cents DESC, o_orderkey
-         |LIMIT 20""".stripMargin
-    }
+    bind(s, """SELECT c_custkey, o_orderkey,
+      |  date_format(o_orderdate, 'yyyy-MM-dd') AS order_date,
+      |  cast(round(o_totalprice * 100, 0) as bigint) AS total_cents,
+      |  sum(cast(round(l_quantity * 100, 0) as bigint)) AS sum_qty_c,
+      |  cast(count(*) as bigint) AS n_lines
+      |FROM customer JOIN orders ON c_custkey = o_custkey
+      |              JOIN lineitem ON o_orderkey = l_orderkey
+      |WHERE o_orderkey IN (
+      |  SELECT l_orderkey FROM lineitem
+      |  GROUP BY l_orderkey
+      |  HAVING sum(cast(round(l_quantity * 100, 0) as bigint)) > 20000)
+      |GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
+      |ORDER BY total_cents DESC, o_orderkey
+      |LIMIT 20""".stripMargin)(
+      "customer" -> Tables(s, dir, "customer"), "orders" -> Tables(s, dir, "orders"),
+      "lineitem" -> Tables(s, dir, "lineitem"))
 
   /** GROUP BY ALL / ORDER BY ALL — the modern SQL shorthand (every
     * non-aggregate select item becomes a grouping key). Pure parser
     * surface; the plan is the identical hash aggregate, so the oracle is
     * the explicit form.
     */
-  private val groupByAll: Q = (s, dir) => {
-    Tables(s, dir, "orders").createOrReplaceTempView("orders_gba")
-    s.sql(
-      """SELECT o_orderstatus, o_orderpriority,
-        |  count(1) AS n,
-        |  cast(sum(cast(round(o_totalprice * 100, 0) as bigint)) as bigint) AS cents
-        |FROM orders_gba GROUP BY ALL ORDER BY ALL""".stripMargin)
-  }
+  private val groupByAll: Q = (s, dir) =>
+    bind(s, """SELECT o_orderstatus, o_orderpriority,
+      |  count(1) AS n,
+      |  cast(sum(cast(round(o_totalprice * 100, 0) as bigint)) as bigint) AS cents
+      |FROM orders GROUP BY ALL ORDER BY ALL""".stripMargin)(
+      "orders" -> Tables(s, dir, "orders"))
 
   /** Spark 4 collations: grouping under UTF8_LCASE is case-insensitive
     * at the COLLATION level (no expression rewrites). Mixed-case keys
@@ -204,17 +184,15 @@ object Sql {
     * out — so the syntax is free at scale.
     */
   private val sqlUnpivot: Q = (s, dir) =>
-    sqlOver(s, dir, "orders") { case Seq(o) =>
-      s"""SELECT o_orderstatus, metric, val
-         |FROM (
-         |  SELECT o_orderstatus,
-         |    CAST(COUNT(*) AS BIGINT) AS n_total,
-         |    CAST(COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS n_urgent,
-         |    CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust
-         |  FROM $o GROUP BY o_orderstatus)
-         |UNPIVOT (val FOR metric IN (n_total, n_urgent, n_cust))
-         |ORDER BY o_orderstatus, metric""".stripMargin
-    }
+    bind(s, """SELECT o_orderstatus, metric, val
+      |FROM (
+      |  SELECT o_orderstatus,
+      |    CAST(COUNT(*) AS BIGINT) AS n_total,
+      |    CAST(COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS n_urgent,
+      |    CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust
+      |  FROM orders GROUP BY o_orderstatus)
+      |UNPIVOT (val FOR metric IN (n_total, n_urgent, n_cust))
+      |ORDER BY o_orderstatus, metric""".stripMargin)("orders" -> Tables(s, dir, "orders"))
 
   /** SQL PIVOT clause with MULTIPLE aggregates per cell — long → wide in
     * the parser. Money pivots in exact integer cents (a double SUM per
@@ -224,18 +202,16 @@ object Sql {
     * distinct-values pre-scan a dynamic pivot pays at 100 TB.
     */
   private val sqlPivot: Q = (s, dir) =>
-    sqlOver(s, dir, "orders") { case Seq(o) =>
-      s"""SELECT o_orderstatus,
-         |  coalesce(urgent_n, 0L) AS urgent_n,
-         |  coalesce(urgent_cents, 0L) AS urgent_cents,
-         |  coalesce(high_n, 0L) AS high_n,
-         |  coalesce(high_cents, 0L) AS high_cents
-         |FROM (SELECT o_orderstatus, o_orderpriority,
-         |        CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents FROM $o)
-         |PIVOT (COUNT(*) AS n, SUM(cents) AS cents
-         |       FOR o_orderpriority IN ('1-URGENT' AS urgent, '2-HIGH' AS high))
-         |ORDER BY o_orderstatus""".stripMargin
-    }
+    bind(s, """SELECT o_orderstatus,
+      |  coalesce(urgent_n, 0L) AS urgent_n,
+      |  coalesce(urgent_cents, 0L) AS urgent_cents,
+      |  coalesce(high_n, 0L) AS high_n,
+      |  coalesce(high_cents, 0L) AS high_cents
+      |FROM (SELECT o_orderstatus, o_orderpriority,
+      |        CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents FROM orders)
+      |PIVOT (COUNT(*) AS n, SUM(cents) AS cents
+      |       FOR o_orderpriority IN ('1-URGENT' AS urgent, '2-HIGH' AS high))
+      |ORDER BY o_orderstatus""".stripMargin)("orders" -> Tables(s, dir, "orders"))
 
   /** TPC-H Q21 shape ("suppliers who kept orders waiting"), adapted to
     * this corpus (no l_receiptdate/l_commitdate columns — lateness is

@@ -30,12 +30,10 @@ object Udf {
     else s.toLowerCase.replaceAll("[^a-z0-9]+", "-").stripPrefix("-").stripSuffix("-")
   }
 
-  private val udfScalar: Q = (s, dir) => {
-    s.udf.register("graft_slug", slug) // registered surface, SQL-callable
+  private val udfScalar: Q = (s, dir) =>
     Tables(s, dir, "part")
       .select(col("p_partkey"), col("p_name"), slug(col("p_name")).as("slug"))
       .orderBy("p_partkey")
-  }
 
   // ------------------------------------------------------------ typed UDAF
 

@@ -3,7 +3,9 @@
   */
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 
 object PlanUtil {
@@ -33,5 +35,25 @@ object PlanUtil {
     val ds = df.asInstanceOf[Dataset[Row]]
     val session = ds.sparkSession.asInstanceOf[ClassicSession]
     session.internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema)
+  }
+
+  /** SQL `text` run over the given frames, each bound to its name: a
+    * one-part table name that `frames` binds reads that frame's plan
+    * (in FROM clauses, CTE bodies and IN/EXISTS/scalar/LATERAL subqueries
+    * alike), so the query never looks at the session catalog and leaves
+    * nothing in it. Unbound names pass through, so CTE names resolve as
+    * CTEs. A frame referenced twice is re-instanced by the analyzer.
+    */
+  def bind(s: SparkSession, text: String)(frames: (String, DataFrame)*): DataFrame = {
+    val byName = frames.toMap
+    def bound(plan: LogicalPlan): LogicalPlan = plan.transformDownWithSubqueries {
+      case UnresolvedRelation(Seq(name), _, _) if byName.contains(name) =>
+        SubqueryAlias(name, byName(name).queryExecution.analyzed)
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, d, depth) =>
+          (n, bound(d).asInstanceOf[SubqueryAlias], depth) })
+    }
+    val session = s.asInstanceOf[ClassicSession]
+    Dataset.ofRows(session, bound(session.sessionState.sqlParser.parsePlan(text)))
   }
 }

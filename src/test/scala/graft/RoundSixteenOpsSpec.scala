@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanUtil.bind
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 pins: the incremental-dedup artifact-read planner
@@ -129,22 +130,20 @@ class RoundSixteenOpsSpec extends AnyFunSuite {
     // and the rewrite IS the textbook form: run the doubly-quantified
     // original through Spark SQL and compare (the oracle already proves
     // this cross-engine in DuckDB; this keeps the proof in CI)
-    Tables(s, dir, "lineitem").createOrReplaceTempView("q21_l")
-    Tables(s, dir, "orders").createOrReplaceTempView("q21_o")
-    Tables(s, dir, "supplier").createOrReplaceTempView("q21_s")
-    val textbook = s.sql(
+    val textbook = bind(s,
       """SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-        |FROM q21_s, q21_l l1, q21_o
+        |FROM supplier, lineitem l1, orders
         |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
         |  AND o_orderstatus = 'F'
         |  AND l1.l_shipdate > o_orderdate + INTERVAL 75 DAYS
-        |  AND EXISTS (SELECT 1 FROM q21_l l2
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
         |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM q21_l l3
-        |    JOIN q21_o o3 ON o3.o_orderkey = l3.l_orderkey
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |    JOIN orders o3 ON o3.o_orderkey = l3.l_orderkey
         |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
         |      AND l3.l_shipdate > o3.o_orderdate + INTERVAL 75 DAYS)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin)
+        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin)(
+      Seq("lineitem", "orders", "supplier").map(n => n -> Tables(s, dir, n)): _*)
     assert(rows(q).nonEmpty, "vacuous: no waiting suppliers at the gate sf")
     assert(rows(q) == rows(textbook),
       "the single-scan rewrite drifted from the textbook correlated form")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanUtil.bind
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 second SQL pack (13 shapes: TPC-H Q2/Q4/Q6/Q7/Q8/Q9/Q10/
@@ -18,6 +19,9 @@ class SqlPackTwoSpec extends AnyFunSuite {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** Each named table of the corpus, bound under its own name. */
+  private def tables(names: String*) = names.map(n => n -> Tables(s, dir, n))
 
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
@@ -41,16 +45,15 @@ class SqlPackTwoSpec extends AnyFunSuite {
     val q = SparkEntry.queries("sql_q4_priority")(s, dir)
     assert(scanCount(q, "lineitem") == 1 && scanCount(q, "orders") == 1,
       "the late-candidate COUNT(DISTINCT) rewrite reads each table exactly once")
-    Tables(s, dir, "lineitem").createOrReplaceTempView("q4_l")
-    Tables(s, dir, "orders").createOrReplaceTempView("q4_o")
-    val textbook = s.sql(
+    val textbook = bind(s,
       """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-        |FROM q4_o
+        |FROM orders
         |WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM q4_l
+        |  AND EXISTS (SELECT 1 FROM lineitem
         |    WHERE l_orderkey = o_orderkey
         |      AND l_shipdate > o_orderdate + INTERVAL 75 DAYS)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)(
+      tables("lineitem", "orders"): _*)
     assert(rows(q).nonEmpty, "vacuous: no late orders at the gate sf")
     assert(rows(q) == rows(textbook),
       "the one-join rewrite drifted from the textbook EXISTS form")
@@ -61,20 +64,18 @@ class SqlPackTwoSpec extends AnyFunSuite {
     assert(scanCount(q, "lineitem") == 1,
       "the window-over-distinct-pairs rewrite reads the fact table exactly once")
     assert(!finalPlan(q).contains("CartesianProduct"))
-    Tables(s, dir, "lineitem").createOrReplaceTempView("q2_l")
-    Tables(s, dir, "part").createOrReplaceTempView("q2_p")
-    Tables(s, dir, "supplier").createOrReplaceTempView("q2_s")
-    val textbook = s.sql(
-      """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM q2_l)
+    val textbook = bind(s,
+      """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
         |SELECT p_partkey, p_name, s_suppkey, s_name,
         |  CAST(round(s_acctbal * 100) AS BIGINT) AS bal_cents
-        |FROM q2_p JOIN ps ON p_partkey = l_partkey
-        |          JOIN q2_s ON s_suppkey = l_suppkey
+        |FROM part JOIN ps ON p_partkey = l_partkey
+        |          JOIN supplier ON s_suppkey = l_suppkey
         |WHERE p_size = 15 AND p_type = 'STANDARD'
         |  AND s_acctbal = (SELECT MIN(s2.s_acctbal)
-        |    FROM q2_s s2 JOIN ps ps2 ON s2.s_suppkey = ps2.l_suppkey
+        |    FROM supplier s2 JOIN ps ps2 ON s2.s_suppkey = ps2.l_suppkey
         |    WHERE ps2.l_partkey = p_partkey)
-        |ORDER BY bal_cents, p_partkey, s_suppkey""".stripMargin)
+        |ORDER BY bal_cents, p_partkey, s_suppkey""".stripMargin)(
+      tables("lineitem", "part", "supplier"): _*)
     assert(rows(q).nonEmpty, "vacuous: no qualifying parts at the gate sf")
     assert(rows(q) == rows(textbook),
       "the window rewrite drifted from the textbook correlated-MIN form")
@@ -163,22 +164,20 @@ class SqlPackTwoSpec extends AnyFunSuite {
     val q = SparkEntry.queries("sql_q20_surplus_share")(s, dir)
     assert(scanCount(q, "lineitem") == 1,
       "the window-total rewrite must read the fact table exactly once")
-    Tables(s, dir, "lineitem").createOrReplaceTempView("q20_l")
-    Tables(s, dir, "part").createOrReplaceTempView("q20_p")
-    Tables(s, dir, "supplier").createOrReplaceTempView("q20_s")
-    val textbook = s.sql(
+    val textbook = bind(s,
       """WITH sq AS (
         |  SELECT l_partkey, l_suppkey,
         |    CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_c
-        |  FROM q20_l
+        |  FROM lineitem
         |  WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
         |  GROUP BY 1, 2)
         |SELECT DISTINCT s_suppkey, s_name
-        |FROM q20_s JOIN sq ON s_suppkey = l_suppkey
-        |JOIN q20_p ON p_partkey = l_partkey
+        |FROM supplier JOIN sq ON s_suppkey = l_suppkey
+        |JOIN part ON p_partkey = l_partkey
         |WHERE p_name LIKE '%blue%'
         |  AND 2 * qty_c > (SELECT SUM(sq2.qty_c) FROM sq sq2 WHERE sq2.l_partkey = sq.l_partkey)
-        |ORDER BY s_suppkey""".stripMargin)
+        |ORDER BY s_suppkey""".stripMargin)(
+      tables("lineitem", "part", "supplier"): _*)
     assert(rows(q).nonEmpty, "vacuous: no majority-share suppliers at the gate sf")
     assert(rows(q) == rows(textbook),
       "the window rewrite drifted from the textbook correlated half-sum")
