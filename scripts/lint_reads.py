@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Fail on two ways a query can reach past its own plan.
+"""Fail on three ways a query can reach past its own plan.
 
 1. A parquet read outside the one read path. `graft.Tables.read`
    resolves each input's schema (and its drift check) once per session;
@@ -10,6 +10,12 @@
    three siblings), SQL text run through `.sql(`, or `udf.register(`.
    Each one changes or reads state that every query on the session
    shares. SQL text binds to frames through `PlanUtil.bind` instead.
+3. A fixed width on a data path: an integer literal as the first
+   argument of `repartition(`, `repartitionByRange(` or `coalesce(`.
+   A width written into the program stays the same when the data grows
+   a thousandfold; the session's width (`spark.sql.shuffle.partitions`,
+   which AQE may coalesce) grows with the cluster. `coalesce(1)` is
+   exempt: it writes a single-file sidecar or dump.
 
 Usage: python3 scripts/lint_reads.py [root ...]   (default: src/main)
 Prints one `file:line` per hit (the line the call's name is on) and
@@ -25,11 +31,18 @@ ALLOWED = {
     "graft/Tables.scala": "the read path itself",
 }
 
+# path suffix -> why that file may fix a width itself (rule 3 only)
+WIDTH_ALLOWED = {
+    "graft/operators/Layout.scala":
+        "a fixture layout: its file count is what the fixture is",
+}
+
 READ = re.compile(r"\bread\s*\.\s*(parquet|schema)\s*\(")
 THEN_PARQUET = re.compile(r"\s*\.\s*parquet\s*\(")
 CATALOG = re.compile(
     r"\b(createTempView|createOrReplaceTempView|createGlobalTempView"
     r"|createOrReplaceGlobalTempView)\s*\(|\.\s*sql\s*\(|\budf\s*\.\s*register\s*\(")
+WIDTH = re.compile(r"\b(repartition|repartitionByRange|coalesce)\s*\(\s*(\d[\d_]*)L?\s*[,)]")
 
 
 def code_only(text):
@@ -94,9 +107,17 @@ def catalog_uses(text):
         yield code.count("\n", 0, m.start()) + 1
 
 
+def fixed_widths(text):
+    """Yield the 1-based line of every integer-literal width in `text`."""
+    code = code_only(text)
+    for m in WIDTH.finditer(code):
+        if not (m.group(1) == "coalesce" and m.group(2) == "1"):
+            yield code.count("\n", 0, m.start()) + 1
+
+
 def main(argv):
     roots = [pathlib.Path(a) for a in argv] or [pathlib.Path("src/main")]
-    reads, uses = [], []
+    reads, uses, widths = [], [], []
     for root in roots:
         files = [root] if root.is_file() else sorted(root.rglob("*.scala"))
         for f in files:
@@ -104,12 +125,17 @@ def main(argv):
             if not any(f.as_posix().endswith(a) for a in ALLOWED):
                 reads += [f"{f}:{line}" for line in raw_reads(text)]
             uses += [f"{f}:{line}" for line in catalog_uses(text)]
+            if not any(f.as_posix().endswith(a) for a in WIDTH_ALLOWED):
+                widths += [f"{f}:{line}" for line in fixed_widths(text)]
     for b in reads:
         print(f"raw parquet read (use graft.Tables.read): {b}")
     for b in uses:
         print(f"session catalog use (bind SQL text with PlanUtil.bind): {b}")
-    print(f"[lint_reads] {len(reads)} raw read(s), {len(uses)} catalog use(s)")
-    return 1 if reads or uses else 0
+    for b in widths:
+        print(f"fixed width (take the session's width): {b}")
+    print(f"[lint_reads] {len(reads)} raw read(s), {len(uses)} catalog use(s), "
+          f"{len(widths)} fixed width(s)")
+    return 1 if reads or uses or widths else 0
 
 
 if __name__ == "__main__":

@@ -3,7 +3,8 @@
 # mechanical gate that MUST be green before any substantial commit —
 # lint the scaladoc (no doc block stacked on another) and the reads (no
 # parquet read outside graft.Tables.read, no temp view, `.sql(` or
-# `udf.register(` in the program), compile the
+# `udf.register(` in the program, no integer-literal width on
+# `repartition(`, `repartitionByRange(` or `coalesce(`), compile the
 # program with its specs and the perfbench harness (both reference
 # program names, so a deletion that breaks either fails here), full
 # test suite skipped by design, and Verify -> DuckDB compare at sf0.001
@@ -16,7 +17,7 @@ SF_DIR="${1:-/root/testdata/sf0.001}"
 OUT_DIR="$(mktemp -d /tmp/preflight.XXXXXX)"
 echo "[preflight] lint: no orphaned scaladoc"
 python3 scripts/lint_scaladoc.py src perfbench/src
-echo "[preflight] lint: parquet reads only through graft.Tables.read; no session-catalog use"
+echo "[preflight] lint: parquet reads only through graft.Tables.read; no session-catalog use; no fixed width"
 python3 scripts/lint_reads.py src/main
 echo "[preflight] compile program + specs"
 sbt -batch Test/compile

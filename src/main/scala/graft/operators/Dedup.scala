@@ -88,20 +88,23 @@ object Dedup {
     */
   private def shingles(s: SparkSession, dir: String): DataFrame =
     corpusCached(s, dir, "dedup_sh64") {
-      // The driver-generated parquet is one row group per file, so the scan
-      // is a single task; shingling is the most expensive per-row expression
-      // in the engine (~1 ms/doc), so spread the rows BEFORE computing it.
-      // On a real cluster the scan already has thousands of splits — this
-      // repartition recreates that parallelism for the local single-file
-      // layout at the cost of shuffling the raw text once (tiny, and the
-      // result is persisted).
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        .select(col("doc_id"), md5(col("text")).as("ckey"), expr(shingleExpr).as("sh"))
-        .select(col("doc_id"), col("ckey"),
-          expr("transform(sh, s0 -> xxhash64(s0))").as("sh64"))
+      shingleRows(Tables(s, dir, "documents").select(col("doc_id"), col("text")))
     }
+
+  /** (doc_id, ckey = md5(text), sh64) for every row of `docs`
+    * (doc_id, text). The driver-generated parquet is one row group per
+    * file, so the scan is a single task; shingling is the most expensive
+    * per-row expression in the engine (~1 ms/doc), so the rows spread
+    * BEFORE it. On a real cluster the scan already has thousands of
+    * splits — this repartition recreates that parallelism for the local
+    * single-file layout at the cost of shuffling the raw text once (tiny,
+    * and the result is persisted).
+    */
+  private def shingleRows(docs: DataFrame): DataFrame =
+    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+      .select(col("doc_id"), md5(col("text")).as("ckey"), expr(shingleExpr).as("sh"))
+      .select(col("doc_id"), col("ckey"),
+        expr("transform(sh, s0 -> xxhash64(s0))").as("sh64"))
 
   /** One representative per distinct content (`ckey` = md5(text)): all
     * similarity pair generation below runs on representatives, never raw
@@ -736,13 +739,8 @@ object Dedup {
   private def batchShingles(s: SparkSession, dir: String): DataFrame =
     if (graft.IndexStore.active.isDefined)
       graft.Cached.of(s, dir, "dedup.incr.batchsh") {
-        Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text"))
-          .filter(expr(isBatchExpr))
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"), md5(col("text")).as("ckey"), expr(shingleExpr).as("sh"))
-          .select(col("doc_id"), col("ckey"),
-            expr("transform(sh, s0 -> xxhash64(s0))").as("sh64"))
+        shingleRows(Tables(s, dir, "documents")
+          .select(col("doc_id"), col("text")).filter(expr(isBatchExpr)))
       }
     else shingles(s, dir).filter(expr(isBatchExpr))
 
@@ -1128,18 +1126,14 @@ object Dedup {
     */
   private val clusters: Q = (s, dir) => graft.NoAqe.during(s) {
     val pairs = minhashPairs(s, dir).select(col("doc_a"), col("doc_b"))
-    // the pair graph is tiny relative to the corpus (near-dup pairs only):
-    // collapse it to a few partitions so each propagation round schedules
-    // a handful of tasks, not shuffle.partitions of them. localCheckpoint
-    // (not persist) CUTS THE LINEAGE: every loop action would otherwise
-    // re-run Catalyst analysis/optimization over the whole LSH pair plan
-    // — 2 converged rounds were spending seconds per action on plan
-    // compilation alone. At 100 TB the coalesce factor scales with
-    // |edges|, not corpus size.
+    // localCheckpoint (not persist) CUTS THE LINEAGE: every loop action
+    // would otherwise re-run Catalyst analysis/optimization over the
+    // whole LSH pair plan — 2 converged rounds were spending seconds per
+    // action on plan compilation alone
     val adj = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       // lazy: the loop's first action materializes the checkpoint
-      .coalesce(4).localCheckpoint(false)
+      .localCheckpoint(false)
     val lab = Graph.hashMinLabels("dedup_clusters", adj, 25).state
       .select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
     val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Dataflow-pipeline operators: CDC upsert (MERGE-style apply-changes),
@@ -93,7 +94,6 @@ object Flow {
     * integers/timestamps: no float accumulation to drift across engines.
     */
   private val sessionize: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -126,7 +126,6 @@ object Flow {
     * partition.
     */
   private val scd2: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -225,7 +224,6 @@ object Flow {
     * order by event_id on both engines.
     */
   private val lastTouch: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val attributed = Tables(s, dir, "events")
@@ -265,7 +263,6 @@ object Flow {
     * windows — embarrassingly parallel across users.
     */
   private val attributionLinear: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val ev = Tables(s, dir, "events")
     // value >= 0 is ENFORCED, not assumed: the credit split uses integer
     // div/% which truncates in Spark but floors in DuckDB (`//`), so a
@@ -356,7 +353,6 @@ object Flow {
     * (user, day) distinct collapsing map-side first.
     */
   private val gapsIslands: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("day")
     Tables(s, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
@@ -403,7 +399,6 @@ object Flow {
     * both engines without decimal routing.
     */
   private val markov: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     Tables(s, dir, "events")
       .withColumn("prev_type", lag(col("event_type"), 1).over(byUser))
@@ -428,7 +423,6 @@ object Flow {
     * range join because SCD2 validity is gapless by construction.
     */
   private val pitScd2: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables(s, dir, "events")
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val dim = e.filter(col("event_type").isin("signup", "error"))
@@ -466,7 +460,6 @@ object Flow {
     * streams ending mid-pattern simply do not match (lead NULLs).
     */
   private val cepPattern: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     Tables(s, dir, "events")
       .withColumn("t1", lead(col("event_type"), 1).over(w))
@@ -523,7 +516,6 @@ object Flow {
     * collect_list struct fold (same discipline as text_span_scrub).
     */
   private val pathTopk: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val paths = Tables(s, dir, "events")
       .withColumn("rn", row_number().over(byUser))
@@ -546,39 +538,64 @@ object Flow {
       .orderBy("rk")
   }
 
-  /** Exact global rank WITHOUT a global sort — the distributed ntile
-    * substrate: range-repartition on the sort key (each partition holds
-    * a contiguous key range), count rows per partition (32 numbers),
-    * prefix-sum those counts into per-partition offsets (a window over
-    * 32 rows — bounded by partition COUNT, not data), broadcast them
-    * back, and add each row's PARTITION-LOCAL row_number to its
-    * partition's offset. The result is the same total-order rank a
-    * global row_number window would produce — ranks are a function of
-    * the total order alone, so range-boundary sampling can place the
-    * cut anywhere without changing a single rank — but every sort is
-    * per-partition and the driver never sees a row. The sort key must
-    * be total (include a unique tiebreak) so ranks are well-defined.
+  /** The range-prefix kernel — the two-pass scan (Blelloch 1990) that
+    * lets a total-order window run without a single-task global sort:
+    * range-partition on `sort` (each range holds a contiguous key span),
+    * reduce each range to `summary`, scan those per-range values with
+    * `carry` over a window ordered by range (one row per range, never the
+    * data), broadcast each range's carry back, and set `out` to
+    * `row(carry, w)` where `w` orders the rows of one range by `sort`.
+    * The width is the session's: `repartitionByRange` with no count takes
+    * `spark.sql.shuffle.partitions`, and AQE may merge adjacent ranges —
+    * merged ranges stay contiguous and in order, so every carry holds.
+    * Results are a function of the total order alone, so range-boundary
+    * sampling can put the cuts anywhere; `sort` must be total (end in a
+    * unique tiebreak) wherever ties would make `row` ambiguous.
     */
-  private[graft] def globalRank(df: DataFrame, rankCol: String, sort: Column*): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // localCheckpoint pins ONE materialization of the range exchange:
-    // both consumers below (the offsets aggregate and the join probe)
-    // read the same partitions, so spark_partition_id() is consistent
-    // even if the optimizer would otherwise re-plan the exchange with
-    // fresh range-boundary samples per branch.
-    val part = df.repartitionByRange(32, sort: _*)
+  private[graft] def rangePrefix(df: DataFrame, out: String, sort: Column*)(
+      summary: Column, carry: (Column, WindowSpec) => Column)(
+      row: (Column, WindowSpec) => Column): DataFrame = {
+    // the lazy local checkpoint pins ONE materialization of the range
+    // exchange: both consumers below (the per-range summary and the
+    // rows) read the same RDD, so spark_partition_id() agrees between
+    // them, and no job runs before the query's own action needs it
+    val part = df.repartitionByRange(sort: _*)
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offs = part.groupBy("_pid").agg(count(lit(1)).as("_pn"))
-      .withColumn("_off", coalesce(
-        sum(col("_pn")).over(Window.orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pid", "_off")
-    part.join(broadcast(offs), "_pid")
-      .withColumn(rankCol, col("_off") +
-        row_number().over(Window.partitionBy("_pid").orderBy(sort: _*)))
-      .drop("_pid", "_off")
+      .localCheckpoint(false)
+    val carries = part.groupBy("_pid").agg(summary.as("_sum"))
+      .select(col("_pid"), carry(col("_sum"), Window.orderBy("_pid")).as("_carry"))
+    part.join(broadcast(carries), "_pid")
+      .withColumn(out, row(col("_carry"), Window.partitionBy("_pid").orderBy(sort: _*)))
+      .drop("_pid", "_carry")
   }
+
+  /** [[rangePrefix]]'s carry for a running total: the exclusive prefix
+    * sum of the per-range totals, i.e. each range's offset.
+    */
+  private[graft] def exclusiveSum(total: Column, ranges: WindowSpec): Column =
+    coalesce(sum(total).over(ranges.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+
+  /** Exact global rank WITHOUT a global sort — the distributed ntile
+    * substrate: a range's offset is the row count of every range before
+    * it, plus each row's range-local row_number. The sort key must be
+    * total (include a unique tiebreak) so ranks are well-defined.
+    */
+  private[graft] def globalRank(df: DataFrame, rankCol: String, sort: Column*): DataFrame =
+    rangePrefix(df, rankCol, sort: _*)(count(lit(1)), exclusiveSum)(
+      (off, w) => off + row_number().over(w))
+
+  /** NTILE(k)'s closed form over a 1-based total-order `rank` and the row
+    * count in column `_n`: q = n div k tiles of q rows, plus one row for
+    * each of the first n % k tiles. Uncast (callers pick the type). The
+    * first branch also covers q = 0 (n < k), where every rank is its own
+    * tile.
+    */
+  private[graft] def ntileOf(rank: String, k: Int): Column = expr(
+    s"""CASE
+       |  WHEN $rank <= (_n % $k) * ((_n div $k) + 1)
+       |    THEN ($rank + (_n div $k)) div ((_n div $k) + 1)
+       |  ELSE (_n % $k) + ($rank - (_n % $k) * ((_n div $k) + 1) + (_n div $k) - 1) div (_n div $k)
+       |END""".stripMargin)
 
   /** RFM segmentation — the classic customer-value cut: per user,
     * Recency (days since last purchase, against the corpus max day so
@@ -605,15 +622,6 @@ object Flow {
       .withColumn("recency_days", datediff(col("maxd"), col("lastd")).cast("bigint"))
       .drop("maxd", "lastd")
     val n = u.agg(count(lit(1)).as("_n"))
-    // ntile(5) closed form: q = n div 5 tiles of size q (+1 for the
-    // first n%5 tiles); guard the q=0 (n<5) case where every rank is
-    // its own tile.
-    def tile(rank: String): Column = expr(
-      s"""cast(CASE
-         |  WHEN $rank <= (_n % 5) * ((_n div 5) + 1)
-         |    THEN ($rank + (_n div 5)) div ((_n div 5) + 1)
-         |  ELSE (_n % 5) + ($rank - (_n % 5) * ((_n div 5) + 1) + (_n div 5) - 1) div (_n div 5)
-         |END as int)""".stripMargin)
     val ranked =
       globalRank(
         globalRank(
@@ -621,9 +629,9 @@ object Flow {
           "_fr", col("frequency").desc, col("user_id")),
         "_mr", col("monetary_c").desc, col("user_id"))
     val scored = ranked.crossJoin(broadcast(n))
-      .withColumn("r_score", tile("_rr"))
-      .withColumn("f_score", tile("_fr"))
-      .withColumn("m_score", tile("_mr"))
+      .withColumn("r_score", ntileOf("_rr", 5).cast("int"))
+      .withColumn("f_score", ntileOf("_fr", 5).cast("int"))
+      .withColumn("m_score", ntileOf("_mr", 5).cast("int"))
     scored.select(col("user_id"), col("recency_days"), col("frequency"), col("monetary_c"),
         col("r_score"), col("f_score"), col("m_score"),
         expr("concat(cast(r_score as string), cast(f_score as string), cast(m_score as string))")
@@ -642,7 +650,6 @@ object Flow {
     * map-side-combining daily count underneath.
     */
   private val cusum: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val daily = Tables(s, dir, "events")
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("n"))
@@ -670,7 +677,6 @@ object Flow {
     * daily count underneath.
     */
   private val autocorr: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val daily = Tables(s, dir, "events")
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("n"))
@@ -706,7 +712,6 @@ object Flow {
     * `median()` so the interpolation arithmetic is identical in DuckDB.
     */
   private val theilsen: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val daily = Tables(s, dir, "events")
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("n"))
@@ -756,7 +761,6 @@ object Flow {
     * is the map-side-combining daily count underneath.
     */
   private val stlDecompose: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val daily = Tables(s, dir, "events")
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("y"))
@@ -788,31 +792,21 @@ object Flow {
     * start, −1 at end), and the running sum over the TOTAL order
     * (t, delta, event_id — ends sort before starts at the same instant,
     * so touching intervals never overlap) is the live concurrency. The
-    * cumulative sum uses the same distributed substrate as
-    * [[globalRank]]: range-partition on the sort key, per-partition
-    * prefix sums, and a broadcast 32-row offset table of per-partition
-    * delta TOTALS — no single-task global window, which is what a naive
-    * `SUM OVER (ORDER BY t)` would plan, and what dies first on a
-    * 100 TB event stream.
+    * cumulative sum runs on [[rangePrefix]]: range-partition on the sort
+    * key, per-range prefix sums, and a broadcast offset table of per-range
+    * delta TOTALS, one row per range — no single-task global window,
+    * which is what a naive `SUM OVER (ORDER BY t)` would plan, and what
+    * dies first on a 100 TB event stream.
     */
   private val maxConcurrency: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val ev = Tables(s, dir, "events")
     val sweep = ev.select(col("event_id"), col("ts").as("t"), lit(1L).as("delta"))
       .unionAll(ev.select(col("event_id"),
         (col("ts") + expr("INTERVAL 10 MINUTES")).as("t"), lit(-1L).as("delta")))
-    val part = sweep.repartitionByRange(32, col("t"), col("delta"), col("event_id"))
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offs = part.groupBy("_pid").agg(sum(col("delta")).as("_pd"))
-      .withColumn("_off", coalesce(sum(col("_pd")).over(
-        Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pid", "_off")
-    part.join(broadcast(offs), "_pid")
-      .withColumn("running", col("_off") + sum(col("delta")).over(
-        Window.partitionBy("_pid")
-          .orderBy(col("t"), col("delta"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    rangePrefix(sweep, "running", col("t"), col("delta"), col("event_id"))(
+        sum(col("delta")), exclusiveSum)(
+        (off, w) => off + sum(col("delta")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(date_trunc("day", col("t")).cast("date").as("d"))
       .agg(max(col("running")).as("max_concurrency"), count(lit(1)).as("n_points"))
       .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
@@ -889,7 +883,6 @@ object Flow {
     * adds its three map-side-combining scans over the gap column.
     */
   private val gapPercentiles: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val gaps = Tables(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("ts"),

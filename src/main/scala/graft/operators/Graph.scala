@@ -253,7 +253,7 @@ object Graph {
       r = r.select(col("x")).join(incoming, col("x") === col("dst"), "left")
         .select(col("x"),
           (lit(150000000000L) + expr("(85 * coalesce(sin, 0L)) div 100")).as("r"))
-        .coalesce(4).localCheckpoint(false)
+        .localCheckpoint(false)
     }
     r.orderBy(col("r").desc, col("x"))
       .limit(100)
@@ -280,14 +280,14 @@ object Graph {
     // computed once — instead of four eager materialize jobs + the final
     var dist = degrees(s, dir).filter(col("src") % 97 === 0)
       .select(col("src").as("x"), lit(0L).as("dist"))
-      .coalesce(4).localCheckpoint(false)
+      .localCheckpoint(false)
     for (h <- 1 to 3) {
       val frontier = dist.filter(col("dist") === (h - 1))
       val nxt = adj.join(frontier, adj("src") === frontier("x"))
         .select(col("dst").as("x"), lit(h.toLong).as("dist"))
       dist = dist.unionAll(nxt)
         .groupBy("x").agg(min(col("dist")).as("dist"))
-        .coalesce(4).localCheckpoint(false)
+        .localCheckpoint(false)
     }
     dist.select(col("x").as("part"), col("dist").as("hops")).orderBy("part")
   }

@@ -342,35 +342,21 @@ object Ingest {
     *
     * The successor lookup is NOT one global lead() window (a single-task
     * sort of the distinct-key table, which grows linearly with the fact
-    * table): the keys range-repartition on k, each partition runs its
-    * own lead() in parallel, and the one row per partition whose
-    * successor lives across the boundary takes it from a 32-row
-    * per-partition-minimum table computed with one bounded window — the
-    * globalRank boundary-handoff discipline (Flow.globalRank).
-    * localCheckpoint pins one materialization of the range exchange so
-    * both consumers (the boundary minima and the per-partition windows)
-    * see consistent spark_partition_id values.
+    * table): it runs on [[Flow.rangePrefix]] — each key range runs its
+    * own lead() in parallel, and the one row per range whose successor
+    * lives across the boundary takes the NEXT non-empty range's minimum
+    * from a table of one row per range (an empty range has no row, so it
+    * is skipped).
     */
   private val dqSequenceGaps: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val keys = Tables(s, dir, "orders")
       .filter(col("o_orderkey") % 32 === 1)
       .select(expr("(o_orderkey - 1) div 32").as("k"))
       .distinct()
       .filter(col("k") % 5 =!= 3)
-    val part = keys.repartitionByRange(32, col("k"))
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
-    // per-partition minima → each partition's boundary successor is the
-    // NEXT non-empty partition's min (empty partitions simply don't
-    // appear); the window runs over ≤32 rows
-    val bounds = part.groupBy("_pid").agg(min(col("k")).as("_minK"))
-      .withColumn("_bnext", lead(col("_minK"), 1).over(Window.orderBy("_pid")))
-      .select("_pid", "_bnext")
-    part.join(broadcast(bounds), "_pid")
-      .withColumn("nxt", coalesce(
-        lead(col("k"), 1).over(Window.partitionBy("_pid").orderBy("k")),
-        col("_bnext")))
+    Flow.rangePrefix(keys, "nxt", col("k"))(
+        min(col("k")), (lo, ranges) => lead(lo, 1).over(ranges))(
+        (next, w) => coalesce(lead(col("k"), 1).over(w), next))
       .filter(col("nxt").isNotNull && col("nxt") - col("k") > 1)
       .select(col("k").as("gap_after"), col("nxt").as("resume_at"),
         (col("nxt") - col("k") - 1).as("n_missing"))

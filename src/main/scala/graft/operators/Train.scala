@@ -496,14 +496,8 @@ object Train {
       .select(col("doc_id"), expr(s"cast(size($toksExpr) as bigint)").as("n_tok"))
     val ranked = Flow.globalRank(d, "rk", col("n_tok"), col("doc_id"))
     val n = d.agg(count(lit(1)).as("_n"))
-    val phase = expr(
-      """cast(CASE
-        |  WHEN rk <= (_n % 4) * ((_n div 4) + 1)
-        |    THEN (rk + (_n div 4)) div ((_n div 4) + 1)
-        |  ELSE (_n % 4) + (rk - (_n % 4) * ((_n div 4) + 1) + (_n div 4) - 1) div (_n div 4)
-        |END as bigint)""".stripMargin)
     ranked.crossJoin(broadcast(n))
-      .withColumn("phase", phase)
+      .withColumn("phase", Flow.ntileOf("rk", 4).cast("bigint"))
       .groupBy("phase")
       .agg(count(lit(1)).as("n_docs"),
         min(col("n_tok")).as("min_tok"), max(col("n_tok")).as("max_tok"),

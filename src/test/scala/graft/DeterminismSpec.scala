@@ -85,6 +85,9 @@ class DeterminismSpec extends AnyFunSuite {
     "emb_centroid_drift",  // integer sums + dim-ordered Δ² fold
     "graph_truss_support", // exact triangle explode + hash agg
     "sim_ivfpq_residual_recall", // trained codebook from integer-exact Lloyd rounds
+    "dq_sequence_gaps",    // range-prefix successor across empty ranges
+    "text_lm_ppl_filter",  // range-prefix rank + decimal-routed xent
+    "graph_bfs_khop",      // min-dist hops at the session's width
   )
 
   underTest.foreach { name =>

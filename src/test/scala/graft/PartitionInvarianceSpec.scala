@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -175,6 +176,93 @@ class PartitionInvarianceSpec extends AnyFunSuite {
         .select("k", "tb", "rk")
         .orderBy("tb").collect().map(_.toString).toSeq
       assert(got == truth, s"rank drift at seed $i ($parts partitions)")
+    }
+  }
+
+  /** The range-prefix kernel's other two shapes (Flow.rangePrefix), each
+    * against its global-window truth under the same 20 input
+    * partitionings: a running sum of signed deltas whose sort key ties
+    * heavily (flow_max_concurrency's shape), and a successor lookup over
+    * keys with wide gaps (dq_sequence_gaps' shape). The successor keys
+    * are 37 values repeated, so at 64 ranges the range bounds run out of
+    * distinct keys (38 ranges, the last one empty) and most ranges hold
+    * one key each: every successor there is a boundary carry.
+    *
+    * The kernel's width is the session's `spark.sql.shuffle.partitions`,
+    * and AQE merges this little data into one range, where no carry is
+    * ever read. So these cases run in child sessions (the shared
+    * session's conf stays as it is) with AQE's partition coalescing off:
+    * the width is then the real range count.
+    */
+  private lazy val deltas = s.range(5000)
+    .selectExpr("id % 97 AS t", "CASE WHEN id % 3 = 0 THEN -(id % 5) ELSE id % 7 END AS d", "id")
+    .localCheckpoint(true)
+  private lazy val gapKeys = s.range(5000)
+    .selectExpr("(id % 37) * (id % 37) * 1000 AS k").localCheckpoint(true)
+
+  /** `df`'s rows in a child session whose kernel width is `width` ranges. */
+  private def atWidth(width: Int, df: DataFrame): DataFrame = {
+    val c = s.newSession()
+    c.conf.set("spark.sql.shuffle.partitions", width.toString)
+    c.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    c.createDataFrame(df.rdd, df.schema)
+  }
+
+  private def ranks(df: DataFrame): Seq[String] =
+    operators.Flow.globalRank(df, "rk", col("k"), col("tb"))
+      .select("k", "tb", "rk").orderBy("tb").collect().map(_.toString).toSeq
+
+  private def runningSums(df: DataFrame): Seq[String] =
+    operators.Flow.rangePrefix(df, "run", col("t"), col("d"), col("id"))(
+        sum(col("d")), operators.Flow.exclusiveSum)(
+        (off, w) => off + sum(col("d")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select("id", "run").orderBy("id").collect().map(_.toString).toSeq
+
+  private def successors(df: DataFrame): Seq[String] =
+    operators.Flow.rangePrefix(df, "nxt", col("k"))(
+        min(col("k")), (lo, ranges) => lead(lo, 1).over(ranges))(
+        (next, w) => coalesce(lead(col("k"), 1).over(w), next))
+      .select("k", "nxt").orderBy("k", "nxt").collect().map(_.toString).toSeq
+
+  private lazy val runningTruth =
+    deltas.withColumn("run", sum(col("d")).over(Window.orderBy("t", "d", "id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select("id", "run").orderBy("id").collect().map(_.toString).toSeq
+
+  private lazy val successorTruth =
+    gapKeys.withColumn("nxt", lead(col("k"), 1).over(Window.orderBy("k")))
+      .select("k", "nxt").orderBy("k", "nxt").collect().map(_.toString).toSeq
+
+  test("rangePrefix running sum equals the global-window running sum under 20 random input partitionings") {
+    val input = atWidth(16, deltas)
+    (1 to 20).foreach { i =>
+      val parts = 1 + (i * 7) % 40
+      val got = runningSums(input.repartition(parts, expr(s"pmod(hash(id, $i), 16)")))
+      assert(got == runningTruth, s"running-sum drift at seed $i ($parts partitions)")
+    }
+  }
+
+  test("rangePrefix successor equals the global lead under 20 random input partitionings") {
+    val input = atWidth(64, gapKeys)
+    (1 to 20).foreach { i =>
+      val parts = 1 + (i * 7) % 40
+      val got = successors(input.repartition(parts, expr(s"pmod(hash(k, $i), 16)")))
+      assert(got == successorTruth, s"successor drift at seed $i ($parts partitions)")
+    }
+  }
+
+  test("rangePrefix's three shapes hold at shuffle widths 1, 3 and 64") {
+    val rankInput = s.range(5000).selectExpr("id % 97 AS k", "id AS tb").localCheckpoint(true)
+    val rankTruth = rankInput
+      .withColumn("rk", row_number().over(Window.orderBy("k", "tb")).cast("long"))
+      .select("k", "tb", "rk").orderBy("tb").collect().map(_.toString).toSeq
+    Seq(1, 3, 64).foreach { width =>
+      assert(ranks(atWidth(width, rankInput)) == rankTruth, s"rank drift at width $width")
+      assert(runningSums(atWidth(width, deltas)) == runningTruth,
+        s"running-sum drift at width $width")
+      assert(successors(atWidth(width, gapKeys)) == successorTruth,
+        s"successor drift at width $width")
     }
   }
 
